@@ -323,6 +323,180 @@ class ServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  // minimal protobuf framing for hand-assembled OTLP bodies
+  private def varint(v: Long): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    var x = v
+    while ((x & ~0x7fL) != 0L) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
+    out.write(x.toInt)
+    out.toByteArray
+  }
+  private def ld(field: Int, body: Array[Byte]): Array[Byte] =
+    varint((field << 3 | 2).toLong) ++ varint(body.length.toLong) ++ body
+  private def f64(field: Int, v: Long): Array[Byte] =
+    varint((field << 3 | 1).toLong) ++ java.nio.ByteBuffer.allocate(8)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(v).array()
+  private def kv(k: String, v: String): Array[Byte] =
+    ld(1, k.getBytes("UTF-8")) ++ ld(2, ld(1, v.getBytes("UTF-8")))
+
+  /** The ScopeMetrics fields of a one-resource request encoded with no
+    * resource attributes: strip the ResourceMetrics frame and its empty
+    * Resource, keep the rest verbatim.
+    */
+  private def scopesOf(req: Array[Byte]): Array[Byte] = {
+    var i = 1 // past the ResourceMetrics tag
+    while ((req(i) & 0x80) != 0) i += 1
+    i += 1 // past the length varint
+    assert(req(i) == 0x0a && req(i + 1) == 0x00, "expected an empty Resource")
+    req.drop(i + 2)
+  }
+
+  /** One ResourceMetrics: `attrs` as its Resource, sent before or (as some
+    * exporters do) after its ScopeMetrics.
+    */
+  private def resourceMetrics(attrs: Seq[(String, String)],
+                              resourceLast: Boolean,
+                              scopes: Array[Byte]*): Array[Byte] = {
+    val resource = ld(1, attrs.flatMap { case (k, v) => ld(1, kv(k, v)) }.toArray)
+    val body = scopes.reduce(_ ++ _)
+    ld(1, if (resourceLast) body ++ resource else resource ++ body)
+  }
+
+  test("serve: /otlp/v1/metrics stores one mixed OTLP body identically " +
+       "under every target-info × convert-delta setting") {
+    import graft.codec.Otlp
+    val t0 = 1700000000000L
+    def ns(dtSec: Int): Long = (t0 + dtSec * 1000L) * 1000000L
+    // a gauge point with an exemplar (span/trace id bytes, one attribute)
+    val gaugeExemplar = ld(5, f64(2, ns(0)) ++
+      f64(3, java.lang.Double.doubleToLongBits(21.0)) ++
+      ld(4, Array[Byte](1)) ++ ld(5, Array[Byte](10, 11)) ++
+      ld(7, kv("room", "r1")))
+    val gauge = ld(2, ld(2, ld(1, "temp".getBytes("UTF-8")) ++
+      ld(5, ld(1, f64(3, ns(0)) ++
+        f64(4, java.lang.Double.doubleToLongBits(21.5)) ++
+        gaugeExemplar ++ ld(7, kv("room", "r1"))))))
+    val resA = Seq("service.name" -> "api", "service.namespace" -> "shop",
+      "service.instance.id" -> "h1", "region" -> "eu")
+    val resB = Seq("service.name" -> "db", "host.arch" -> "amd64")
+    val body =
+      resourceMetrics(resA, resourceLast = false,
+        gauge,
+        scopesOf(Otlp.encodeSumRequestExemplars(Nil, Seq(("reqs",
+          Seq("code" -> "200"), ns(0), 10.0,
+          Seq((Seq("user" -> "u1"), "abcd", ns(0), 1.0)))))),
+        scopesOf(Otlp.encodeSumRequestExemplars(Nil, Seq(
+          ("dreqs", Seq("code" -> "200"), ns(0), 5.0,
+            Seq((Nil, "ef01", ns(0), 5.0))),
+          ("dreqs", Seq("code" -> "200"), ns(1), 2.0, Nil)),
+          temporality = 1)),
+        scopesOf(Otlp.encodeHistogramRequest(Nil, "lat", Seq(1.0),
+          Seq((Seq("path" -> "/"), ns(0), Seq(3L, 1L), 4.5)))),
+        scopesOf(Otlp.encodeHistogramRequest(Nil, "dlat", Seq(1.0),
+          Seq((Nil, ns(0), Seq(2L, 1L), 3.0),
+            (Nil, ns(1), Seq(1L, 0L), 0.5)), temporality = 1))) ++
+      resourceMetrics(resB, resourceLast = true,
+        scopesOf(Otlp.encodeSummaryRequest(Nil, "rpc",
+          Seq((Seq("m" -> "get"), ns(0), 4L, 2.0, Seq(0.5 -> 0.4))))),
+        scopesOf(Otlp.encodeExpHistogramRequest(Nil, "size",
+          Seq((Nil, ns(0), 3L, 6.0, 0, 0L, 0, Seq(1L, 2L))))),
+        scopesOf(Otlp.encodeExpHistogramRequest(Nil, "dsize",
+          Seq((Nil, ns(0), 2L, 3.0, 0, 0L, 0, Seq(2L)),
+            (Nil, ns(1), 1L, 4.0, 0, 0L, 1, Seq(1L))), temporality = 1)))
+
+    def render(tags: Iterable[String], rest: Any*): String =
+      (tags.toSeq.sorted.mkString("{", ",", "}") +: rest.map(_.toString))
+        .mkString(" ")
+    def row(name: String, labels: Map[String, String], v: Double,
+            dtSec: Int): String =
+      render((labels + ("__name__" -> name)).map { case (k, x) => s"$k=$x" },
+        v, dtSec)
+
+    for (ti <- Seq(false, true); delta <- Seq(false, true)) {
+      val a: Map[String, String] =
+        if (ti) Map("job" -> "shop/api", "instance" -> "h1") else resA.toMap
+      val b: Map[String, String] =
+        if (ti) Map("job" -> "db") else resB.toMap
+      def classic(name: String, labels: Map[String, String], dt: Int,
+                  buckets: Seq[(String, Double)], count: Double,
+                  sum: Double): Seq[String] =
+        buckets.map { case (le, c) =>
+          row(name + "_bucket", labels + ("le" -> le), c, dt) } ++ Seq(
+          row(name + "_bucket", labels + ("le" -> "+Inf"), count, dt),
+          row(name + "_count", labels, count, dt),
+          row(name + "_sum", labels, sum, dt))
+      val cumulative = Seq(
+        row("temp", a + ("room" -> "r1"), 21.5, 0),
+        row("reqs", a + ("code" -> "200"), 10.0, 0),
+        row("rpc", b + ("m" -> "get") + ("quantile" -> "0.5"), 0.4, 0),
+        row("rpc_count", b + ("m" -> "get"), 4.0, 0),
+        row("rpc_sum", b + ("m" -> "get"), 2.0, 0)) ++
+        classic("lat", a + ("path" -> "/"), 0, Seq("1" -> 3.0), 4.0, 4.5) ++
+        classic("size", b, 0, Seq("2" -> 1.0, "4" -> 3.0), 3.0, 6.0)
+      val targetInfo =
+        if (!ti) Nil
+        else Seq(row("target_info", a + ("region" -> "eu"), 1.0, 0),
+          row("target_info", b + ("host.arch" -> "amd64"), 1.0, 0))
+      val deltas =
+        if (!delta) Nil
+        else Seq(row("dreqs", a + ("code" -> "200"), 5.0, 0),
+          row("dreqs", a + ("code" -> "200"), 7.0, 1)) ++
+          classic("dlat", a, 0, Seq("1" -> 2.0), 3.0, 3.0) ++
+          classic("dlat", a, 1, Seq("1" -> 3.0), 4.0, 3.5) ++
+          classic("dsize", b, 0, Seq("2" -> 2.0), 2.0, 3.0) ++
+          classic("dsize", b, 1, Seq("2" -> 2.0, "4" -> 3.0), 3.0, 7.0) ++
+          (if (ti) Seq(row("target_info", a + ("region" -> "eu"), 1.0, 1))
+           else Nil)
+      def hist(name: String, dt: Int, count: Long, sum: Double,
+               buckets: Seq[(Int, Long)]): String =
+        render((b + ("__name__" -> name)).map { case (k, x) => s"$k=$x" },
+          dt, count, sum, 0L, buckets.mkString("[", ",", "]"))
+      val hists = Seq(hist("size", 0, 3L, 6.0, Seq(1 -> 1L, 2 -> 2L))) ++
+        (if (!delta) Nil
+         else Seq(hist("dsize", 0, 2L, 3.0, Seq(1 -> 2L)),
+           hist("dsize", 1, 3L, 7.0, Seq(1 -> 2L, 2 -> 1L))))
+      def json(labels: Map[String, String]): String =
+        labels.toSeq.sortBy { case (k, x) => s"$k=$x" }
+          .map { case (k, x) => s""""$k":"$x"""" }.mkString("{", ",", "}")
+      val exemplars = Seq(
+        json(a + ("__name__" -> "reqs") + ("code" -> "200")) ->
+          """[{"labels":{"trace_id":"abcd","user":"u1"},"value":"1","timestamp":1700000000}]""",
+        json(a + ("__name__" -> "temp") + ("room" -> "r1")) ->
+          """[{"labels":{"room":"r1","span_id":"01","trace_id":"0a0b"},"value":"21","timestamp":1700000000}]""")
+        .sortBy(_._1)
+        .map { case (s, e) => s"""{"seriesLabels":$s,"exemplars":$e}""" }
+        .mkString("""{"status":"success","data":[""", ",", "]}")
+
+      val table = Files.createTempDirectory("graft_srvotlpmix").toString +
+        "/metrics"
+      val server = new Server(spark, table, otlpTargetInfo = ti,
+        otlpConvertDelta = delta).start()
+      val base = s"http://localhost:${server.boundPort}"
+      try {
+        assert(post(s"$base/otlp/v1/metrics", body)._1 == 200)
+        val stored = spark.read.parquet(table)
+          .selectExpr("tags", "val", "CAST(unix_seconds(ts) - 1700000000 AS INT) AS dt")
+          .collect().map(r => render(
+            r.getAs[scala.collection.Seq[String]](0), r.getDouble(1), r.getInt(2)))
+        assert(stored.sorted.toSeq ==
+          (cumulative ++ targetInfo ++ deltas).sorted, s"ti=$ti delta=$delta")
+        val storedHists = spark.read.parquet(table + "_hist")
+          .selectExpr("tags", "CAST(ts - 1700000000 AS INT) AS dt",
+            "h_count", "h_sum", "h_zero",
+            "transform(h_buckets, x -> concat('(', x.idx, ',', x.cnt, ')'))")
+          .collect().map(r => render(
+            r.getAs[scala.collection.Seq[String]](0), r.getInt(1),
+            r.getLong(2), r.getDouble(3), r.getLong(4),
+            r.getAs[scala.collection.Seq[String]](5).mkString("[", ",", "]")))
+        assert(storedHists.sorted.toSeq == hists.sorted, s"ti=$ti delta=$delta")
+        val q = java.net.URLEncoder.encode(
+          """{__name__=~"temp|reqs|dreqs"}""", "UTF-8")
+        assert(getAny(s"$base/api/v1/query_exemplars?query=$q") ==
+          (200, exemplars), s"ti=$ti delta=$delta")
+      } finally server.stop()
+    }
+  }
+
   test("serve: /read?downsample= reduces each series to extreme (minmax) " +
        "or shape-preserving (lttb) points with original values") {
     val table = Files.createTempDirectory("graft_srvds").toString + "/metrics"
