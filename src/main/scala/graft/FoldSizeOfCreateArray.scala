@@ -29,8 +29,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Semantics: `size(array(e1..en))` is `n` for every input — CreateArray
   * never returns null and its arity is fixed at plan time — so the
-  * rewrite is exact, including under ANSI mode (size inspects only the
-  * container, never the element values).
+  * folded VALUE is exact. Folding does skip evaluating the elements,
+  * though: an element that would raise at runtime (an ANSI-mode
+  * arithmetic or cast failure, a throwing UDF) no longer raises. Spark's
+  * own SimplifyExtractValueOps drops element evaluation the same way.
+  * The rule is session-wide (injected through [[GraftExtensions]]), so
+  * this applies to user queries as well as to the inferred filter.
   */
 object FoldSizeOfCreateArray extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

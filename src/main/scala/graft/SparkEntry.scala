@@ -967,7 +967,7 @@ object SparkEntry {
     val wires = expHistDayWires(s, dir, temporality = 2)
     val rows = for {
       wire <- wires
-      p <- graft.codec.Otlp.decodeExpHistograms(wire)
+      p <- graft.codec.Otlp.decode(wire).expHistograms
       name = p.labels.find(_.name == "__name__").get.value
       day = java.time.Instant.ofEpochMilli(p.tsNano / 1000000L)
         .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
@@ -1656,7 +1656,7 @@ object SparkEntry {
       import spark.implicits._
       payloads.toDF("content").select(col("content")).as[Array[Byte]]
         .flatMap { bytes =>
-          val wr = graft.codec.Otlp.decodeToV1(bytes)
+          val wr = graft.codec.Otlp.decode(bytes).cumulative
           for (ts <- wr.timeseries; sm <- ts.samples) yield {
             val labels = ts.labels.map(l => l.name -> l.value).toMap
             graft.model.Schema.Sample(labels.getOrElse("__name__", ""),
@@ -2103,7 +2103,7 @@ object SparkEntry {
         }(org.apache.spark.sql.Encoders.BINARY)
       payloads.toDF("content").as[Array[Byte]]
         .flatMap { bytes =>
-          val wr = graft.codec.Otlp.decodeToV1(bytes)
+          val wr = graft.codec.Otlp.decode(bytes).cumulative
           for (ts <- wr.timeseries; sm <- ts.samples) yield {
             val labels = ts.labels.map(l => l.name -> l.value).toMap
             (labels.getOrElse("__name__", ""), labels.getOrElse("le", ""),
@@ -2165,7 +2165,7 @@ object SparkEntry {
         }(org.apache.spark.sql.Encoders.BINARY)
       val buckets = payloads.toDF("content").as[Array[Byte]]
         .flatMap { bytes =>
-          val wr = graft.codec.Otlp.decodeToV1(bytes)
+          val wr = graft.codec.Otlp.decode(bytes).cumulative
           for (ts <- wr.timeseries; sm <- ts.samples
                if ts.labels.exists(l => l.name == "le")) yield {
             val labels = ts.labels.map(l => l.name -> l.value).toMap
@@ -8846,7 +8846,7 @@ object SparkEntry {
         }(org.apache.spark.sql.Encoders.BINARY)
       payloads.toDF("content").as[Array[Byte]]
         .flatMap { bytes =>
-          val wr = graft.codec.Otlp.decodeToV1(bytes)
+          val wr = graft.codec.Otlp.decode(bytes).cumulative
           for (ts <- wr.timeseries; sm <- ts.samples) yield {
             val labels = ts.labels.map(l => l.name -> l.value).toMap
             (labels.getOrElse("__name__", ""),

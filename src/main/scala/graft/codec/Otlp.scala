@@ -1,27 +1,36 @@
 package graft.codec
 
 import graft.codec.Prompb.{PLabel, PSample, PTimeSeries, PWriteRequest}
+import scala.collection.mutable.ArrayBuffer
 
 /** Minimal OTLP metrics ingest — `opentelemetry.proto.collector.metrics
   * .v1.ExportMetricsServiceRequest` (the OTLP/HTTP protobuf body), the
-  * OTHER wire protocol production fleets feed a metrics store with. The
-  * decoder covers what a Prometheus-shaped store can represent losslessly:
-  * Gauge and Sum metrics with NumberDataPoints (double or int values),
-  * data-point attributes and resource attributes flattened into labels
-  * (point attributes win on key collision, the OTel→Prom mapping rule),
-  * metric name as `__name__`. Sums carry aggregation_temporality:
-  * only CUMULATIVE sums ingest (DELTA would corrupt counter semantics;
-  * the Prometheus OTLP receiver rejects it too). Explicit-bucket
-  * Histograms flatten to the Prometheus classic-histogram series family
-  * — cumulative `le`-labeled `<name>_bucket` counters plus
-  * `<name>_count`/`<name>_sum` (exactly the shape
-  * [[graft.operators.TimeSeriesOps.histogramQuantile]] then reads).
-  * Summaries (what legacy OTel SDKs still emit) flatten to
-  * `quantile`-labeled series on the base name plus `<name>_count` /
-  * `<name>_sum` — the Prometheus OTLP-receiver convention.
-  * ExponentialHistograms decode through [[decodeExpHistograms]] (the
-  * sparse-bucket edge); non-scalar attribute values are SKIPPED
-  * structurally — the store's canonical row is a scalar sample.
+  * OTHER wire protocol production fleets feed a metrics store with.
+  *
+  * [[decode]] walks the body ONCE and returns one [[Decoded]] record
+  * holding every facet a receiver consumes, all under one resource
+  * mapping and one label rule (resource labels, overridden by point
+  * attributes, plus `__name__`; non-scalar attribute values are SKIPPED
+  * structurally — the store's canonical row is a scalar sample):
+  *   - `cumulative`: Gauge and CUMULATIVE Sum NumberDataPoints (double or
+  *     int values); CUMULATIVE explicit-bucket Histograms flattened to
+  *     the Prometheus classic family — cumulative `le`-labeled
+  *     `<name>_bucket` counters plus `<name>_count`/`<name>_sum`, exactly
+  *     the shape [[graft.operators.TimeSeriesOps.histogramQuantile]]
+  *     reads; Summaries flattened to `quantile`-labeled series plus
+  *     `<name>_count`/`<name>_sum` (the Prometheus OTLP-receiver
+  *     convention); and, under the target-info mapping, each resource's
+  *     `target_info` series. Store-ready.
+  *   - `deltas`: DELTA sums and histograms, flattened the same way, as
+  *     per-interval INCREMENTS; `deltaTargetInfo` is their resources'
+  *     `target_info` (a level, never converted).
+  *   - `expHistograms` / `deltaExpHistograms`: ExponentialHistogram
+  *     points in their sparse-bucket form, by temporality.
+  *   - `exemplars`: span context on gauge and cumulative-sum points.
+  * UNSPECIFIED temporality is skipped everywhere. Delta facets are NOT
+  * store-ready: the Prometheus OTLP receiver rejects delta temporality,
+  * so callers either drop them or run them through a delta→cumulative
+  * conversion first.
   *
   * Field layout (trimmed to the decoded subset):
   *   ExportMetricsServiceRequest { repeated ResourceMetrics = 1 }
@@ -29,36 +38,232 @@ import graft.codec.Prompb.{PLabel, PSample, PTimeSeries, PWriteRequest}
   *   Resource { repeated KeyValue attributes = 1 }
   *   ScopeMetrics { repeated Metric metrics = 2 }
   *   Metric { string name = 1; Gauge gauge = 5; Sum sum = 7;
-  *            Histogram histogram = 9; Summary summary = 11 }
-  *   Summary { repeated SummaryDataPoint data_points = 1 }
+  *            Histogram histogram = 9;
+  *            ExponentialHistogram exponential_histogram = 10;
+  *            Summary summary = 11 }
+  *   Gauge, Summary { repeated data_points = 1 }
+  *   Sum, Histogram, ExponentialHistogram { repeated data_points = 1;
+  *         AggregationTemporality aggregation_temporality = 2 }
+  *   NumberDataPoint { fixed64 time_unix_nano = 3; double as_double = 4;
+  *                     repeated Exemplar exemplars = 5;
+  *                     sfixed64 as_int = 6; repeated KeyValue attrs = 7 }
+  *   HistogramDataPoint { fixed64 time_unix_nano = 3; fixed64 count = 4;
+  *                        double sum = 5; repeated fixed64 bucket_counts = 6;
+  *                        repeated double explicit_bounds = 7;
+  *                        repeated KeyValue attributes = 9 }
+  *   ExponentialHistogramDataPoint { repeated KeyValue attributes = 1;
+  *                        fixed64 time_unix_nano = 3; fixed64 count = 4;
+  *                        double sum = 5; sint32 scale = 6;
+  *                        fixed64 zero_count = 7; Buckets positive = 8;
+  *                        Buckets negative = 9 }
+  *   Buckets { sint32 offset = 1; repeated uint64 bucket_counts = 2 }
   *   SummaryDataPoint { fixed64 time_unix_nano = 3; fixed64 count = 4;
   *                      double sum = 5;
   *                      repeated ValueAtQuantile quantile_values = 6;
   *                      repeated KeyValue attributes = 7 }
   *   ValueAtQuantile { double quantile = 1; double value = 2 }
-  *   Gauge { repeated NumberDataPoint data_points = 1 }
-  *   Sum { repeated NumberDataPoint data_points = 1;
-  *         AggregationTemporality aggregation_temporality = 2;
-  *         bool is_monotonic = 3 }
-  *   Histogram { repeated HistogramDataPoint data_points = 1;
-  *               AggregationTemporality aggregation_temporality = 2 }
-  *   HistogramDataPoint { fixed64 time_unix_nano = 3; fixed64 count = 4;
-  *                        double sum = 5; repeated fixed64 bucket_counts = 6;
-  *                        repeated double explicit_bounds = 7;
-  *                        repeated KeyValue attributes = 9 }
-  *   NumberDataPoint { fixed64 time_unix_nano = 3; double as_double = 4;
-  *                     sfixed64 as_int = 6; repeated KeyValue attrs = 7 }
+  *   Exemplar { fixed64 time_unix_nano = 2; double as_double = 3;
+  *              bytes span_id = 4; bytes trace_id = 5; sfixed64 as_int = 6;
+  *              repeated KeyValue filtered_attributes = 7 }
   *   KeyValue { string key = 1; AnyValue value = 2 }
   *   AnyValue { string = 1 | bool = 2 | int = 3 | double = 4 } (scalars)
   *
   * Timestamps narrow from nanos to the engine's milliseconds (floor
   * division — OTLP nano precision below the ms is sub-scrape noise).
-  * The output is the canonical [[Prompb.PWriteRequest]] shape, so OTLP
-  * is a third interchangeable edge beside remote-write v1/v2.
+  * The scalar facets are the canonical [[Prompb.PWriteRequest]] shape,
+  * so OTLP is a third interchangeable edge beside remote-write v1/v2.
   */
 object Otlp {
 
+  private type Attrs = Seq[(String, String)]
+
+  /** AggregationTemporality values; gauges and summaries are cumulative
+    * by definition. */
+  private val Delta = 1L
+  private val Cumulative = 2L
+
+  /** One ExportMetricsServiceRequest, every facet from one walk (see the
+    * object doc for what each holds).
+    */
+  case class Decoded(cumulative: PWriteRequest, deltas: PWriteRequest,
+                     deltaTargetInfo: Seq[PTimeSeries],
+                     expHistograms: Seq[ExpHistPoint],
+                     deltaExpHistograms: Seq[ExpHistPoint],
+                     exemplars: Seq[WriteWire.PExemplarSeries])
+
+  /** One decoded ExponentialHistogramDataPoint with its resolved label
+    * set. Bucket counts are DENSE from `posOffset` (the OTLP Buckets
+    * shape: offset + count array, zeros included), positive side only —
+    * the store's non-negative-measurement contract; negative buckets
+    * and the zero bucket travel in `zeroCount`/`negOffset`/`negCounts`
+    * for callers that need them.
+    *
+    * OTLP index convention: bucket i covers (base^i, base^(i+1)] with
+    * base = 2^(2^-scale) — one LOWER than the Prometheus native
+    * convention (idx covers (base^(idx−1), base^idx]); bridging callers
+    * add 1 (the s1_otlp_exphist entries pin both edges landing on
+    * identical rows).
+    */
+  case class ExpHistPoint(labels: Seq[PLabel], tsNano: Long, count: Long,
+                          sum: Double, hasSum: Boolean, scale: Int,
+                          zeroCount: Long, posOffset: Int,
+                          posCounts: Seq[Long], negOffset: Int,
+                          negCounts: Seq[Long])
+
   // ---------------------------------------------------------------- decode
+
+  /** ExportMetricsServiceRequest bytes → every facet, in one walk. With
+    * `targetInfo` the resource mapping is the Prometheus OTLP receiver's
+    * instead of the flatten (see [[mapResource]]); it applies to every
+    * facet alike, so a resource's cumulative, delta-converted and
+    * exponential series and its exemplars share one label schema.
+    */
+  def decode(buf: Array[Byte], targetInfo: Boolean = false): Decoded = {
+    val cumulative, deltas = ArrayBuffer.empty[PTimeSeries]
+    val deltaInfo = Seq.newBuilder[PTimeSeries]
+    val exp, deltaExp = Seq.newBuilder[ExpHistPoint]
+    val exemplars = Seq.newBuilder[WriteWire.PExemplarSeries]
+
+    def walkMetric(s: Int, e: Int, res: Attrs): Unit = {
+      val r = new Prompb.Reader(buf, s, e)
+      var name = ""
+      val nums = Seq.newBuilder[(Long, Seq[Point])]
+      val hists = Seq.newBuilder[(Long, Seq[HistPoint])]
+      val exps = Seq.newBuilder[(Long, Seq[(Attrs, ExpHistPoint)])]
+      val summaries = Seq.newBuilder[SummaryPoint]
+      while (r.hasMore) {
+        val k = r.varint(); (k >> 3, (k & 7).toInt) match {
+          case (1, 2) => name = r.utf8()
+          case (5, 2) => nums += decData(buf, r, pointInTime = true)(decPoint)
+          case (7, 2) => nums += decData(buf, r)(decPoint)
+          case (9, 2) => hists += decData(buf, r)(decHistPoint)
+          case (10, 2) => exps += decData(buf, r)(decExpHistPoint)
+          case (11, 2) =>
+            summaries ++= decData(buf, r, pointInTime = true)(decSummaryPoint)._2
+          case (_, w) => r.skip(w)
+        }
+      }
+      // the name may follow the data fields: series resolve after the walk
+      def facet(t: Long) = if (t == Cumulative) cumulative else deltas
+      for ((t, pts) <- nums.result(); p <- pts) {
+        val labels = labelsOf(res, p.attrs, name)
+        facet(t) += scalar(labels, p.value, p.tsNano)
+        if (t == Cumulative && p.exemplars.nonEmpty)
+          exemplars += WriteWire.PExemplarSeries(labels, p.exemplars)
+      }
+      for ((t, pts) <- hists.result(); h <- pts)
+        facet(t) ++= histSeries(res, name, h)
+      cumulative ++= summaries.result().flatMap(summarySeries(res, name, _))
+      for ((t, pts) <- exps.result(); (attrs, p) <- pts)
+        (if (t == Cumulative) exp else deltaExp) +=
+          p.copy(labels = labelsOf(res, attrs, name))
+    }
+
+    def walkResource(s: Int, e: Int): Unit = {
+      val r = new Prompb.Reader(buf, s, e)
+      var attrs: Attrs = Nil
+      val scopes = Seq.newBuilder[(Int, Int)]
+      while (r.hasMore) {
+        val k = r.varint(); (k >> 3, (k & 7).toInt) match {
+          case (1, 2) => val (a, b) = r.lenDelimited(); attrs = decResource(buf, a, b)
+          case (2, 2) => scopes += r.lenDelimited()
+          case (_, w) => r.skip(w)
+        }
+      }
+      // resource may arrive after scope_metrics in the stream: resolve last
+      val (res, info) = mapResource(attrs, targetInfo)
+      val (c0, d0) = (cumulative.length, deltas.length)
+      scopes.result().foreach { case (a, b) =>
+        val sr = new Prompb.Reader(buf, a, b)
+        while (sr.hasMore) {
+          val k = sr.varint(); (k >> 3, (k & 7).toInt) match {
+            case (2, 2) => val (c, d) = sr.lenDelimited(); walkMetric(c, d, res)
+            case (_, w) => sr.skip(w)
+          }
+        }
+      }
+      // one target_info per resource and facet, stamped at that facet's
+      // newest point from this resource
+      def infoAt(added: Iterable[PTimeSeries]): Option[PTimeSeries] =
+        for (ts <- added.flatMap(_.samples.map(_.timestampMs)).maxOption
+             if info.nonEmpty)
+          yield PTimeSeries(labelsOf(res, info, "target_info"),
+            Seq(PSample(1.0, ts)))
+      val cumInfo = infoAt(cumulative.view.drop(c0)) // before the append
+      cumulative ++= cumInfo
+      deltaInfo ++= infoAt(deltas.view.drop(d0))
+    }
+
+    val r = new Prompb.Reader(buf, 0, buf.length)
+    while (r.hasMore) {
+      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
+        case (1, 2) => val (a, b) = r.lenDelimited(); walkResource(a, b)
+        case (_, w) => r.skip(w)
+      }
+    }
+    Decoded(PWriteRequest(cumulative.toSeq), PWriteRequest(deltas.toSeq),
+      deltaInfo.result(), exp.result(), deltaExp.result(), exemplars.result())
+  }
+
+  private val IdentResourceAttrs =
+    Set("service.name", "service.namespace", "service.instance.id")
+
+  /** The resource mapping → (labels every series of the resource carries,
+    * attributes for its `target_info` series; empty = none). Default:
+    * flatten every resource attribute into every series — simple and
+    * lossless, but it inflates series identity with deploy-time
+    * attributes. `targetInfo`: the Prometheus OTLP receiver's mapping —
+    * `service.name` promotes to `job` (prefixed `service.namespace/`
+    * when a namespace is present), `service.instance.id` to `instance`,
+    * and the REMAINING attributes become one value-1 `target_info`
+    * series, exactly the shape PromQL's `info()` joins back on.
+    */
+  private def mapResource(attrs: Attrs, targetInfo: Boolean): (Attrs, Attrs) =
+    if (!targetInfo) (attrs, Nil)
+    else {
+      val m = attrs.toMap
+      val job = m.get("service.name").map(n =>
+        m.get("service.namespace").map(_ + "/" + n).getOrElse(n))
+      (job.map("job" -> _).toSeq ++ m.get("service.instance.id").map("instance" -> _),
+        attrs.filterNot(kv => IdentResourceAttrs.contains(kv._1)))
+    }
+
+  /** Series identity: resource labels, overridden by point attributes
+    * (the OTel→Prom collision rule), then by `extra`, plus `__name__`.
+    */
+  private def labelsOf(res: Attrs, attrs: Attrs, name: String,
+                       extra: Attrs = Nil): Seq[PLabel] =
+    ((res.toMap ++ attrs.toMap) ++ extra.toMap + ("__name__" -> name))
+      .toSeq.sortBy(_._1).map { case (k, v) => PLabel(k, v) }
+
+  private def scalar(labels: Seq[PLabel], v: Double,
+                     tsNano: Long): PTimeSeries =
+    PTimeSeries(labels, Seq(PSample(v, Math.floorDiv(tsNano, 1000000L))))
+
+  /** A Gauge/Sum/Histogram/ExponentialHistogram/Summary body — all share
+    * { repeated data_points = 1; aggregation_temporality = 2 }, where
+    * gauges and summaries (`pointInTime`) have no temporality and count
+    * as cumulative — read from `outer`'s next length-delimited field.
+    * Points decode only for CUMULATIVE or DELTA temporality.
+    */
+  private def decData[P](buf: Array[Byte], outer: Prompb.Reader,
+                         pointInTime: Boolean = false)
+                        (point: (Array[Byte], Int, Int) => P): (Long, Seq[P]) = {
+    val (s, e) = outer.lenDelimited()
+    val r = new Prompb.Reader(buf, s, e)
+    var temporality = if (pointInTime) Cumulative else 0L
+    val spans = Seq.newBuilder[(Int, Int)]
+    while (r.hasMore) {
+      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
+        case (1, 2) => spans += r.lenDelimited()
+        case (2, 0) if !pointInTime => temporality = r.varint()
+        case (_, w) => r.skip(w)
+      }
+    }
+    val kept = temporality == Cumulative || temporality == Delta
+    (temporality,
+      if (kept) spans.result().map { case (a, b) => point(buf, a, b) } else Nil)
+  }
 
   private def decAnyValue(buf: Array[Byte], s: Int, e: Int): Option[String] = {
     val r = new Prompb.Reader(buf, s, e)
@@ -91,17 +296,33 @@ object Otlp {
     value.map(key -> _)
   }
 
-  private case class Point(tsNano: Long, value: Double,
-                           attrs: Seq[(String, String)])
+  private def decResource(buf: Array[Byte], s: Int, e: Int): Attrs = {
+    val r = new Prompb.Reader(buf, s, e)
+    val attrs = Seq.newBuilder[(String, String)]
+    while (r.hasMore) {
+      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
+        case (1, 2) =>
+          val (a, b) = r.lenDelimited()
+          decKeyValue(buf, a, b).foreach(attrs += _)
+        case (_, w) => r.skip(w)
+      }
+    }
+    attrs.result()
+  }
+
+  private case class Point(tsNano: Long, value: Double, attrs: Attrs,
+                           exemplars: Seq[WriteWire.PExemplar])
 
   private def decPoint(buf: Array[Byte], s: Int, e: Int): Point = {
     val r = new Prompb.Reader(buf, s, e)
     var ts = 0L; var v = 0.0
     val attrs = Seq.newBuilder[(String, String)]
+    val exs = Seq.newBuilder[WriteWire.PExemplar]
     while (r.hasMore) {
       val k = r.varint(); (k >> 3, (k & 7).toInt) match {
         case (3, 1) => ts = r.fixed64()
         case (4, 1) => v = java.lang.Double.longBitsToDouble(r.fixed64())
+        case (5, 2) => val (a, b) = r.lenDelimited(); exs += decExemplar(buf, a, b)
         case (6, 1) => v = r.fixed64().toDouble // sfixed64 as_int
         case (7, 2) =>
           val (a, b) = r.lenDelimited()
@@ -109,53 +330,55 @@ object Otlp {
         case (_, w) => r.skip(w)
       }
     }
-    Point(ts, v, attrs.result())
+    Point(ts, v, attrs.result(), exs.result())
   }
 
-  private def decPoints(buf: Array[Byte], s: Int, e: Int): Seq[Point] = {
-    val r = new Prompb.Reader(buf, s, e)
-    val pts = Seq.newBuilder[Point]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) => val (a, b) = r.lenDelimited(); pts += decPoint(buf, a, b)
-        case (_, w) => r.skip(w)
-      }
-    }
-    pts.result()
+  private def hexOf(buf: Array[Byte], s: Int, e: Int): String = {
+    val sb = new java.lang.StringBuilder((e - s) * 2)
+    var i = s
+    while (i < e) { sb.append(f"${buf(i) & 0xff}%02x"); i += 1 }
+    sb.toString
   }
 
-  /** Sum { data_points = 1; aggregation_temporality = 2; is_monotonic = 3 }.
-    * DELTA-temporality sums (the default for several OTel SDK exporters)
-    * are NOT cumulative counters: ingesting them as-is corrupts
-    * rate/increase/reset detection downstream, so — mirroring the
-    * Prometheus OTLP receiver, which rejects delta temporality — only
-    * AGGREGATION_TEMPORALITY_CUMULATIVE (= 2) sums are decoded; DELTA
-    * (= 1) and UNSPECIFIED (= 0) are skipped structurally like
-    * histograms' unsupported shapes.
+  /** One OTLP Exemplar → the store's exemplar shape (the Prometheus
+    * receiver mapping): `trace_id`/`span_id` bytes render as lowercase
+    * hex labels, filtered attributes become labels as-is, the value is
+    * either float (3) or int (6), the timestamp ns→ms like samples.
+    * Only gauge and cumulative-sum points keep theirs (where OTel SDKs
+    * attach span context); histogram-point exemplars would need the
+    * per-bucket attachment rule.
     */
-  private def decSum(buf: Array[Byte], s: Int, e: Int,
-                     delta: Boolean = false): Seq[Point] = {
+  private def decExemplar(buf: Array[Byte], s: Int,
+                          e: Int): WriteWire.PExemplar = {
     val r = new Prompb.Reader(buf, s, e)
-    var temporality = 0L
-    val spans = Seq.newBuilder[(Int, Int)]
+    var ts = 0L; var v = 0.0
+    val labels = Seq.newBuilder[PLabel]
     while (r.hasMore) {
       val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) => spans += r.lenDelimited()
-        case (2, 0) => temporality = r.varint()
+        case (2, 1) => ts = r.fixed64()
+        case (3, 1) => v = java.lang.Double.longBitsToDouble(r.fixed64())
+        case (6, 1) => v = r.fixed64().toDouble
+        case (4, 2) =>
+          val (a, b) = r.lenDelimited()
+          labels += PLabel("span_id", hexOf(buf, a, b))
+        case (5, 2) =>
+          val (a, b) = r.lenDelimited()
+          labels += PLabel("trace_id", hexOf(buf, a, b))
+        case (7, 2) =>
+          val (a, b) = r.lenDelimited()
+          decKeyValue(buf, a, b).foreach { case (k2, v2) =>
+            labels += PLabel(k2, v2) }
         case (_, w) => r.skip(w)
       }
     }
-    // default walk: CUMULATIVE (2) only; the delta walk picks DELTA (1)
-    // points instead — the opt-in conversion path's input
-    if (temporality != (if (delta) 1L else 2L)) Seq.empty
-    else spans.result().map { case (a, b) => decPoint(buf, a, b) }
+    WriteWire.PExemplar(labels.result().sortBy(_.name), v,
+      Math.floorDiv(ts, 1000000L))
   }
 
   /** One explicit-bucket histogram data point. */
   private case class HistPoint(tsNano: Long, count: Long, sum: Double,
                                hasSum: Boolean, bucketCounts: Seq[Long],
-                               bounds: Seq[Double],
-                               attrs: Seq[(String, String)])
+                               bounds: Seq[Double], attrs: Attrs)
 
   private def decHistPoint(buf: Array[Byte], s: Int, e: Int): HistPoint = {
     val r = new Prompb.Reader(buf, s, e)
@@ -191,38 +414,42 @@ object Otlp {
       attrs.result())
   }
 
-  /** Histogram { data_points = 1; aggregation_temporality = 2 } →
-    * Prometheus classic-histogram series, the OTel→Prom compatibility
-    * mapping: per-bucket counts become CUMULATIVE `le`-labeled
-    * `<name>_bucket` counters (OTLP buckets are disjoint; Prometheus
-    * buckets nest), a `le="+Inf"` bucket equal to the total count, plus
-    * `<name>_count` and (when present) `<name>_sum` — exactly the input
-    * shape [[graft.operators.TimeSeriesOps.histogramQuantile]] consumes.
-    * CUMULATIVE temporality only, same policy as sums.
+  /** Explicit-bucket histogram point → Prometheus classic-histogram
+    * series, the OTel→Prom compatibility mapping: per-bucket counts
+    * become CUMULATIVE `le`-labeled `<name>_bucket` counters (OTLP
+    * buckets are disjoint; Prometheus buckets nest), a `le="+Inf"`
+    * bucket equal to the total count, plus `<name>_count` and (when
+    * present) `<name>_sum`.
     */
-  private def decHistogram(buf: Array[Byte], s: Int, e: Int,
-                           delta: Boolean = false): Seq[HistPoint] = {
-    val r = new Prompb.Reader(buf, s, e)
-    var temporality = 0L
-    val spans = Seq.newBuilder[(Int, Int)]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) => spans += r.lenDelimited()
-        case (2, 0) => temporality = r.varint()
-        case (_, w) => r.skip(w)
-      }
+  private def histSeries(res: Attrs, name: String,
+                         h: HistPoint): Seq[PTimeSeries] = {
+    def series(metric: String, extra: Attrs, v: Double) =
+      scalar(labelsOf(res, h.attrs, metric, extra), v, h.tsNano)
+    // bucket_counts has bounds.size + 1 entries (the overflow bucket)
+    var cum = 0L
+    val buckets = h.bounds.zipWithIndex.map { case (bound, i) =>
+      cum += (if (i < h.bucketCounts.size) h.bucketCounts(i) else 0L)
+      series(name + "_bucket", Seq("le" -> fmtLe(bound)), cum.toDouble)
     }
-    if (temporality != (if (delta) 1L else 2L)) Seq.empty
-    else spans.result().map { case (a, b) => decHistPoint(buf, a, b) }
+    buckets ++ Seq(
+      series(name + "_bucket", Seq("le" -> "+Inf"), h.count.toDouble),
+      series(name + "_count", Nil, h.count.toDouble)) ++
+      (if (h.hasSum) Seq(series(name + "_sum", Nil, h.sum)) else Nil)
   }
 
+  /** Bound → `le` label value, the Prometheus text form: integral bounds
+    * print without a trailing `.0` (0.5 → "0.5", 10.0 → "10").
+    */
+  private def fmtLe(bound: Double): String =
+    if (bound == bound.toLong.toDouble) bound.toLong.toString
+    else bound.toString
+
   /** One Summary data point: pre-computed quantile values plus the
-    * count/sum companions (no temporality field — summaries are
-    * cumulative by definition in the OTLP spec).
+    * count/sum companions.
     */
   private case class SummaryPoint(tsNano: Long, count: Long, sum: Double,
                                   quantiles: Seq[(Double, Double)],
-                                  attrs: Seq[(String, String)])
+                                  attrs: Attrs)
 
   private def decSummaryPoint(buf: Array[Byte], s: Int,
                               e: Int): SummaryPoint = {
@@ -256,171 +483,20 @@ object Otlp {
     SummaryPoint(ts, count, sum, qs.result(), attrs.result())
   }
 
-  /** Summary { data_points = 1 } — no temporality to police. */
-  private def decSummary(buf: Array[Byte], s: Int,
-                         e: Int): Seq[SummaryPoint] = {
-    val r = new Prompb.Reader(buf, s, e)
-    val pts = Seq.newBuilder[SummaryPoint]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) =>
-          val (a, b) = r.lenDelimited(); pts += decSummaryPoint(buf, a, b)
-        case (_, w) => r.skip(w)
-      }
-    }
-    pts.result()
-  }
-
-  private def decMetric(buf: Array[Byte], s: Int, e: Int,
-                        resourceAttrs: Seq[(String, String)],
-                        delta: Boolean = false)
-      : Seq[PTimeSeries] = {
-    val r = new Prompb.Reader(buf, s, e)
-    var name = ""
-    val pts = Seq.newBuilder[Point]
-    val hists = Seq.newBuilder[HistPoint]
-    val summaries = Seq.newBuilder[SummaryPoint]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        // gauges and summaries carry no temporality — they belong to the
-        // default walk only; the delta walk picks exactly the points the
-        // default walk skipped, so the two partitions never overlap
-        case (1, 2) => name = r.utf8()
-        case (5, 2) if !delta => // gauge: always point-in-time
-          val (a, b) = r.lenDelimited(); pts ++= decPoints(buf, a, b)
-        case (7, 2) => // sum, temporality-filtered (see decSum)
-          val (a, b) = r.lenDelimited(); pts ++= decSum(buf, a, b, delta)
-        case (9, 2) => // explicit-bucket histogram → le-bucket series
-          val (a, b) = r.lenDelimited()
-          hists ++= decHistogram(buf, a, b, delta)
-        case (11, 2) if !delta => // summary → quantile series + companions
-          val (a, b) = r.lenDelimited(); summaries ++= decSummary(buf, a, b)
-        case (_, w) => r.skip(w) // exp-histogram decoded separately
-      }
-    }
-    def series(metricName: String, attrs: Seq[(String, String)],
-               extra: Seq[(String, String)], tsNano: Long,
-               v: Double): PTimeSeries = {
-      // point attrs win over resource attrs on collision (OTel→Prom rule)
-      val labels = (resourceAttrs.toMap ++ attrs.toMap) ++ extra.toMap +
-        ("__name__" -> metricName)
-      PTimeSeries(
-        labels.toSeq.sortBy(_._1).map { case (k, v) => PLabel(k, v) },
-        Seq(PSample(v, Math.floorDiv(tsNano, 1000000L))))
-    }
-    val scalar = pts.result().map(p => series(name, p.attrs, Nil, p.tsNano,
-      p.value))
-    val hist = hists.result().flatMap { h =>
-      // cumulate the disjoint OTLP buckets into nested Prometheus ones;
-      // bucket_counts has bounds.size + 1 entries (the overflow bucket)
-      var cum = 0L
-      val buckets = h.bounds.zipWithIndex.map { case (bound, i) =>
-        cum += (if (i < h.bucketCounts.size) h.bucketCounts(i) else 0L)
-        series(name + "_bucket", h.attrs,
-          Seq("le" -> fmtLe(bound)), h.tsNano, cum.toDouble)
-      }
-      val inf = series(name + "_bucket", h.attrs, Seq("le" -> "+Inf"),
-        h.tsNano, h.count.toDouble)
-      val cnt = series(name + "_count", h.attrs, Nil, h.tsNano,
-        h.count.toDouble)
-      val sum = if (h.hasSum)
-        Seq(series(name + "_sum", h.attrs, Nil, h.tsNano, h.sum))
-      else Nil
-      buckets ++ Seq(inf, cnt) ++ sum
-    }
-    // Summary → the Prometheus OTLP-receiver mapping: each pre-computed
-    // quantile becomes a `quantile`-labeled gauge series on the base
-    // name, plus <name>_count / <name>_sum companions — the same
-    // flatten discipline as the histogram `le` family
-    val summ = summaries.result().flatMap { sp =>
-      val qs = sp.quantiles.map { case (q, v) =>
-        series(name, sp.attrs, Seq("quantile" -> fmtLe(q)), sp.tsNano, v)
-      }
-      qs ++ Seq(
-        series(name + "_count", sp.attrs, Nil, sp.tsNano, sp.count.toDouble),
-        series(name + "_sum", sp.attrs, Nil, sp.tsNano, sp.sum))
-    }
-    scalar ++ hist ++ summ
-  }
-
-  /** Bound → `le` label value, the Prometheus text form: integral bounds
-    * print without a trailing `.0` (0.5 → "0.5", 10.0 → "10").
+  /** Summary → the Prometheus OTLP-receiver mapping: each pre-computed
+    * quantile becomes a `quantile`-labeled gauge series on the base
+    * name, plus `<name>_count` / `<name>_sum` companions — the same
+    * flatten discipline as the histogram `le` family.
     */
-  private def fmtLe(bound: Double): String =
-    if (bound == bound.toLong.toDouble) bound.toLong.toString
-    else bound.toString
-
-  private def decScopeMetrics(buf: Array[Byte], s: Int, e: Int,
-                              resourceAttrs: Seq[(String, String)],
-                              delta: Boolean = false)
-      : Seq[PTimeSeries] = {
-    val r = new Prompb.Reader(buf, s, e)
-    val out = Seq.newBuilder[PTimeSeries]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (2, 2) =>
-          val (a, b) = r.lenDelimited()
-          out ++= decMetric(buf, a, b, resourceAttrs, delta)
-        case (_, w) => r.skip(w)
-      }
-    }
-    out.result()
+  private def summarySeries(res: Attrs, name: String,
+                            sp: SummaryPoint): Seq[PTimeSeries] = {
+    def series(metric: String, extra: Attrs, v: Double) =
+      scalar(labelsOf(res, sp.attrs, metric, extra), v, sp.tsNano)
+    sp.quantiles.map { case (q, v) =>
+      series(name, Seq("quantile" -> fmtLe(q)), v)
+    } ++ Seq(series(name + "_count", Nil, sp.count.toDouble),
+      series(name + "_sum", Nil, sp.sum))
   }
-
-  private def decResource(buf: Array[Byte], s: Int,
-                          e: Int): Seq[(String, String)] = {
-    val r = new Prompb.Reader(buf, s, e)
-    val attrs = Seq.newBuilder[(String, String)]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) =>
-          val (a, b) = r.lenDelimited()
-          decKeyValue(buf, a, b).foreach(attrs += _)
-        case (_, w) => r.skip(w)
-      }
-    }
-    attrs.result()
-  }
-
-  private def decResourceMetrics(buf: Array[Byte], s: Int, e: Int,
-                                 delta: Boolean = false): Seq[PTimeSeries] = {
-    val r = new Prompb.Reader(buf, s, e)
-    var resourceAttrs = Seq.empty[(String, String)]
-    val scopes = Seq.newBuilder[(Int, Int)]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) =>
-          val (a, b) = r.lenDelimited(); resourceAttrs = decResource(buf, a, b)
-        case (2, 2) => scopes += r.lenDelimited()
-        case (_, w) => r.skip(w)
-      }
-    }
-    // resource may arrive after scope_metrics in the stream: resolve last
-    scopes.result().flatMap { case (a, b) =>
-      decScopeMetrics(buf, a, b, resourceAttrs, delta)
-    }
-  }
-
-  // ------------------------------------------- exponential histograms
-
-  /** One decoded ExponentialHistogramDataPoint with its resolved label
-    * set. Bucket counts are DENSE from `posOffset` (the OTLP Buckets
-    * shape: offset + count array, zeros included), positive side only —
-    * the store's non-negative-measurement contract; negative buckets
-    * and the zero bucket travel in `zeroCount`/`negOffset`/`negCounts`
-    * for callers that need them.
-    *
-    * OTLP index convention: bucket i covers (base^i, base^(i+1)] with
-    * base = 2^(2^-scale) — one LOWER than the Prometheus native
-    * convention (idx covers (base^(idx−1), base^idx]); bridging callers
-    * add 1 (the s1_otlp_exphist entries pin both edges landing on
-    * identical rows).
-    */
-  case class ExpHistPoint(labels: Seq[PLabel], tsNano: Long, count: Long,
-                          sum: Double, hasSum: Boolean, scale: Int,
-                          zeroCount: Long, posOffset: Int,
-                          posCounts: Seq[Long], negOffset: Int,
-                          negCounts: Seq[Long])
 
   private def decExpBuckets(buf: Array[Byte], s: Int,
                             e: Int): (Int, Seq[Long]) = {
@@ -442,9 +518,10 @@ object Otlp {
     (offset, counts.result())
   }
 
-  private def decExpHistPoint(buf: Array[Byte], s: Int, e: Int)
-      : (Long, Long, Double, Boolean, Int, Long, (Int, Seq[Long]),
-         (Int, Seq[Long]), Seq[(String, String)]) = {
+  /** One exponential-histogram point and its attributes; the labels
+    * resolve once the metric name is known. */
+  private def decExpHistPoint(buf: Array[Byte], s: Int,
+                              e: Int): (Attrs, ExpHistPoint) = {
     val r = new Prompb.Reader(buf, s, e)
     var ts = 0L; var count = 0L; var sum = 0.0; var hasSum = false
     var scale = 0; var zeroCount = 0L
@@ -467,27 +544,9 @@ object Otlp {
         case (_, w) => r.skip(w)
       }
     }
-    (ts, count, sum, hasSum, scale, zeroCount, pos, neg, attrs.result())
+    (attrs.result(), ExpHistPoint(Nil, ts, count, sum, hasSum, scale,
+      zeroCount, pos._1, pos._2, neg._1, neg._2))
   }
-
-  /** Decode every CUMULATIVE ExponentialHistogram data point in an
-    * ExportMetricsServiceRequest (Metric field 10; DELTA skipped
-    * structurally, the same receiver policy as sums/histograms). Labels
-    * resolve exactly as the scalar path: resource attrs overridden by
-    * point attrs plus `__name__`.
-    */
-  def decodeExpHistograms(buf: Array[Byte]): Seq[ExpHistPoint] =
-    decodeExpHistogramsT(buf, temporality = 2L)
-
-  /** The DELTA-temporality exponential-histogram points — exactly what
-    * [[decodeExpHistograms]] skips; each point's count/sum/zero/buckets
-    * are per-interval INCREMENTS. Callers run them through the
-    * delta→cumulative conversion (the receiver's keyed state, or
-    * [[graft.streaming.DeltaToCumulative]]'s exp-histogram twins)
-    * before anything store-facing.
-    */
-  def decodeDeltaExpHistograms(buf: Array[Byte]): Seq[ExpHistPoint] =
-    decodeExpHistogramsT(buf, temporality = 1L)
 
   /** One decoded (cumulative) exp-histogram point as a native-histogram
     * series: OTLP bucket i covers (base^i, base^(i+1)] — one LOWER than
@@ -505,389 +564,6 @@ object Otlp {
     NativeHist.PHistSeries(p.labels, Seq(NativeHist.PHistogram(
       p.count, p.sum, p.scale, 0.0, p.zeroCount, spans, deltas, Nil, Nil,
       Math.floorDiv(p.tsNano, 1000000L))))
-  }
-
-  private def decodeExpHistogramsT(buf: Array[Byte], temporality: Long,
-                                   targetInfoMapping: Boolean = false)
-      : Seq[ExpHistPoint] = {
-    val wantTemporality = temporality
-    val out = Seq.newBuilder[ExpHistPoint]
-    def walkMetric(s: Int, e: Int,
-                   resourceAttrs: Seq[(String, String)]): Unit = {
-      val r = new Prompb.Reader(buf, s, e)
-      var name = ""
-      val pts = Seq.newBuilder[(Int, Int)]
-      var temporality = 0L
-      while (r.hasMore) {
-        val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-          case (1, 2) => name = r.utf8()
-          case (10, 2) => // ExponentialHistogram
-            val (a, b) = r.lenDelimited()
-            val hr = new Prompb.Reader(buf, a, b)
-            while (hr.hasMore) {
-              val hk = hr.varint(); (hk >> 3, (hk & 7).toInt) match {
-                case (1, 2) => pts += hr.lenDelimited()
-                case (2, 0) => temporality = hr.varint()
-                case (_, w) => hr.skip(w)
-              }
-            }
-          case (_, w) => r.skip(w)
-        }
-      }
-      if (temporality == wantTemporality) pts.result().foreach {
-        case (a, b) =>
-          val (ts, count, sum, hasSum, scale, zc, pos, neg, attrs) =
-            decExpHistPoint(buf, a, b)
-          val labels = (resourceAttrs.toMap ++ attrs.toMap) +
-            ("__name__" -> name)
-          out += ExpHistPoint(
-            labels.toSeq.sortBy(_._1).map { case (k, v) => PLabel(k, v) },
-            ts, count, sum, hasSum, scale, zc, pos._1, pos._2,
-            neg._1, neg._2)
-      }
-    }
-    def walkScope(s: Int, e: Int,
-                  resourceAttrs: Seq[(String, String)]): Unit = {
-      val r = new Prompb.Reader(buf, s, e)
-      while (r.hasMore) {
-        val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-          case (2, 2) =>
-            val (a, b) = r.lenDelimited(); walkMetric(a, b, resourceAttrs)
-          case (_, w) => r.skip(w)
-        }
-      }
-    }
-    def walkResourceMetrics(s: Int, e: Int): Unit = {
-      val r = new Prompb.Reader(buf, s, e)
-      var resourceAttrs = Seq.empty[(String, String)]
-      val scopes = Seq.newBuilder[(Int, Int)]
-      while (r.hasMore) {
-        val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-          case (1, 2) =>
-            val (a, b) = r.lenDelimited()
-            resourceAttrs = decResource(buf, a, b)
-          case (2, 2) => scopes += r.lenDelimited()
-          case (_, w) => r.skip(w)
-        }
-      }
-      // target-info mode: the resource mapping applies uniformly across
-      // point families, so exp-histograms carry the promoted
-      // job/instance identity (the remaining attrs live in the
-      // cumulative walk's target_info series), never the flatten
-      val mapped =
-        if (!targetInfoMapping) resourceAttrs
-        else {
-          val attrMap = resourceAttrs.toMap
-          val job = attrMap.get("service.name").map(n =>
-            attrMap.get("service.namespace").map(_ + "/" + n).getOrElse(n))
-          job.map("job" -> _).toSeq ++
-            attrMap.get("service.instance.id").map("instance" -> _).toSeq
-        }
-      scopes.result().foreach { case (a, b) =>
-        walkScope(a, b, mapped)
-      }
-    }
-    val r = new Prompb.Reader(buf, 0, buf.length)
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) => val (a, b) = r.lenDelimited(); walkResourceMetrics(a, b)
-        case (_, w) => r.skip(w)
-      }
-    }
-    out.result()
-  }
-
-  /** [[decodeExpHistograms]] / [[decodeDeltaExpHistograms]] under the
-    * target-info resource mapping (job/instance promotion instead of
-    * the attribute flatten) — the uniform-schema walk the receiver uses
-    * when `--otlp.target-info` is on.
-    */
-  def decodeExpHistogramsTargetInfo(buf: Array[Byte],
-                                    delta: Boolean): Seq[ExpHistPoint] =
-    decodeExpHistogramsT(buf, if (delta) 1L else 2L,
-      targetInfoMapping = true)
-
-  /** ExportMetricsServiceRequest bytes → canonical write request. */
-  def decodeToV1(buf: Array[Byte]): PWriteRequest = {
-    val r = new Prompb.Reader(buf, 0, buf.length)
-    val out = Seq.newBuilder[PTimeSeries]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) =>
-          val (a, b) = r.lenDelimited(); out ++= decResourceMetrics(buf, a, b)
-        case (_, w) => r.skip(w)
-      }
-    }
-    PWriteRequest(out.result())
-  }
-
-  /** The Prometheus OTLP receiver's RESOURCE mapping, opt-in (the
-    * default walk flattens every resource attribute into every series —
-    * simpler and lossless, but it inflates series identity with
-    * deploy-time attributes): `service.name` promotes to `job`
-    * (prefixed `service.namespace/` when a namespace is present),
-    * `service.instance.id` to `instance`, and the REMAINING resource
-    * attributes become ONE `target_info` series per ResourceMetrics
-    * (value 1, stamped at the batch's newest point timestamp) — exactly
-    * the shape PromQL's `info()` joins back onto the samples.
-    */
-  def decodeToV1TargetInfo(buf: Array[Byte]): PWriteRequest = {
-    val r = new Prompb.Reader(buf, 0, buf.length)
-    val out = Seq.newBuilder[PTimeSeries]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) =>
-          val (a, b) = r.lenDelimited()
-          out ++= decResourceMetricsTargetInfo(buf, a, b)
-        case (_, w) => r.skip(w)
-      }
-    }
-    PWriteRequest(out.result())
-  }
-
-  private val IdentResourceAttrs =
-    Set("service.name", "service.namespace", "service.instance.id")
-
-  private def decResourceMetricsTargetInfo(buf: Array[Byte], s: Int,
-                                           e: Int, delta: Boolean = false)
-      : Seq[PTimeSeries] = {
-    val r = new Prompb.Reader(buf, s, e)
-    var resourceAttrs = Seq.empty[(String, String)]
-    val scopes = Seq.newBuilder[(Int, Int)]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) =>
-          val (a, b) = r.lenDelimited(); resourceAttrs = decResource(buf, a, b)
-        case (2, 2) => scopes += r.lenDelimited()
-        case (_, w) => r.skip(w)
-      }
-    }
-    val attrMap = resourceAttrs.toMap
-    val job = attrMap.get("service.name").map(n =>
-      attrMap.get("service.namespace").map(_ + "/" + n).getOrElse(n))
-    val instance = attrMap.get("service.instance.id")
-    val ident = job.map("job" -> _).toSeq ++
-      instance.map("instance" -> _).toSeq
-    val series = scopes.result().flatMap { case (a, b) =>
-      decScopeMetrics(buf, a, b, ident, delta)
-    }
-    val dataAttrs = resourceAttrs.filterNot(kv =>
-      IdentResourceAttrs.contains(kv._1))
-    val maxTs = series.flatMap(_.samples.map(_.timestampMs)).maxOption
-    val targetInfo =
-      for (ts <- maxTs.toSeq if dataAttrs.nonEmpty) yield PTimeSeries(
-        ((ident ++ dataAttrs).toMap + ("__name__" -> "target_info"))
-          .toSeq.sortBy(_._1).map { case (k, v) => PLabel(k, v) },
-        Seq(PSample(1.0, ts)))
-    series ++ targetInfo
-  }
-
-  /** The DELTA-temporality sums and histograms of an
-    * ExportMetricsServiceRequest as PER-INTERVAL INCREMENT samples —
-    * exactly the points [[decodeToV1]] skips, flattened with the
-    * identical label/series mapping (for histograms every flattened
-    * `le`-bucket/_count/_sum series is itself a delta). These are NOT
-    * store-ready: a delta sample is an increment, not a counter level —
-    * callers run them through the delta→cumulative conversion
-    * ([[graft.streaming.DeltaToCumulative]], or the receiver's in-memory
-    * state on the /otlp endpoint) before the canonical ingest tail.
-    */
-  def decodeDeltaToV1(buf: Array[Byte]): PWriteRequest = {
-    val r = new Prompb.Reader(buf, 0, buf.length)
-    val out = Seq.newBuilder[PTimeSeries]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) =>
-          val (a, b) = r.lenDelimited()
-          out ++= decResourceMetrics(buf, a, b, delta = true)
-        case (_, w) => r.skip(w)
-      }
-    }
-    PWriteRequest(out.result())
-  }
-
-  /** [[decodeDeltaToV1]] under the TARGET-INFO resource mapping: delta
-    * points carry the promoted job/instance identity instead of the
-    * flattened resource attributes, so a resource's delta-converted and
-    * cumulative series land under ONE label schema (the upstream
-    * receiver applies the resource mapping uniformly BEFORE temporality
-    * conversion). Emits the resource's `target_info` series too (stamped
-    * at the delta batch's newest point), so a delta-only resource is
-    * still info()-joinable — callers must pass target_info through
-    * UNCONVERTED (its value-1 samples are levels, not increments).
-    */
-  def decodeDeltaToV1TargetInfo(buf: Array[Byte]): PWriteRequest = {
-    val r = new Prompb.Reader(buf, 0, buf.length)
-    val out = Seq.newBuilder[PTimeSeries]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) =>
-          val (a, b) = r.lenDelimited()
-          out ++= decResourceMetricsTargetInfo(buf, a, b, delta = true)
-        case (_, w) => r.skip(w)
-      }
-    }
-    PWriteRequest(out.result())
-  }
-
-  // ------------------------------------------------------------- exemplars
-
-  private def hexOf(buf: Array[Byte], s: Int, e: Int): String = {
-    val sb = new java.lang.StringBuilder((e - s) * 2)
-    var i = s
-    while (i < e) { sb.append(f"${buf(i) & 0xff}%02x"); i += 1 }
-    sb.toString
-  }
-
-  /** One OTLP Exemplar → the store's exemplar shape (the Prometheus
-    * receiver mapping): `trace_id`/`span_id` bytes render as lowercase
-    * hex labels, filtered attributes become labels as-is, the value is
-    * either float (3) or int (6), the timestamp ns→ms like samples.
-    */
-  private def decExemplar(buf: Array[Byte], s: Int,
-                          e: Int): WriteWire.PExemplar = {
-    val r = new Prompb.Reader(buf, s, e)
-    var ts = 0L; var v = 0.0
-    val labels = Seq.newBuilder[PLabel]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (2, 1) => ts = r.fixed64()
-        case (3, 1) => v = java.lang.Double.longBitsToDouble(r.fixed64())
-        case (6, 1) => v = r.fixed64().toDouble
-        case (4, 2) =>
-          val (a, b) = r.lenDelimited()
-          labels += PLabel("span_id", hexOf(buf, a, b))
-        case (5, 2) =>
-          val (a, b) = r.lenDelimited()
-          labels += PLabel("trace_id", hexOf(buf, a, b))
-        case (7, 2) =>
-          val (a, b) = r.lenDelimited()
-          decKeyValue(buf, a, b).foreach { case (k2, v2) =>
-            labels += PLabel(k2, v2) }
-        case (_, w) => r.skip(w)
-      }
-    }
-    WriteWire.PExemplar(labels.result().sortBy(_.name), v,
-      Math.floorDiv(ts, 1000000L))
-  }
-
-  /** NumberDataPoint walk for the exemplar pass: point attrs (7) +
-    * exemplar spans (5). */
-  private def decPointExemplars(buf: Array[Byte], s: Int, e: Int)
-      : (Seq[(String, String)], Seq[WriteWire.PExemplar]) = {
-    val r = new Prompb.Reader(buf, s, e)
-    val attrs = Seq.newBuilder[(String, String)]
-    val exs = Seq.newBuilder[WriteWire.PExemplar]
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (5, 2) =>
-          val (a, b) = r.lenDelimited(); exs += decExemplar(buf, a, b)
-        case (7, 2) =>
-          val (a, b) = r.lenDelimited()
-          decKeyValue(buf, a, b).foreach(attrs += _)
-        case (_, w) => r.skip(w)
-      }
-    }
-    (attrs.result(), exs.result())
-  }
-
-  /** The exemplars of an ExportMetricsServiceRequest, resolved to the
-    * SAME series identity the sample walk produces (flatten mode:
-    * resource attrs + point attrs + name; target-info mode: the
-    * promoted job/instance identity instead) so a stored exemplar's
-    * seriesLabels match its series' stored labels and
-    * /api/v1/query_exemplars selector-matches both alike. A separate
-    * single pass over the bytes, the [[decodeExpHistograms]]
-    * discipline: gauge and CUMULATIVE-sum number points (where OTel
-    * SDKs attach span context); histogram-point exemplars are not yet
-    * mapped (they would need the per-bucket attachment rule).
-    */
-  def decodeExemplars(buf: Array[Byte], targetInfo: Boolean = false)
-      : Seq[WriteWire.PExemplarSeries] = {
-    val out = Seq.newBuilder[WriteWire.PExemplarSeries]
-    def walkMetric(s: Int, e: Int, resLabels: Seq[(String, String)]): Unit = {
-      val r = new Prompb.Reader(buf, s, e)
-      var name = ""
-      val pts = Seq.newBuilder[(Int, Int)]
-      while (r.hasMore) {
-        val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-          case (1, 2) => name = r.utf8()
-          case (5, 2) => // gauge: every point
-            val (a, b) = r.lenDelimited()
-            val rr = new Prompb.Reader(buf, a, b)
-            while (rr.hasMore) {
-              val kk = rr.varint(); (kk >> 3, (kk & 7).toInt) match {
-                case (1, 2) => pts += rr.lenDelimited()
-                case (_, w) => rr.skip(w)
-              }
-            }
-          case (7, 2) => // sum: cumulative points only (decSum's rule)
-            val (a, b) = r.lenDelimited()
-            val rr = new Prompb.Reader(buf, a, b)
-            var temporality = 0L
-            val spans = Seq.newBuilder[(Int, Int)]
-            while (rr.hasMore) {
-              val kk = rr.varint(); (kk >> 3, (kk & 7).toInt) match {
-                case (1, 2) => spans += rr.lenDelimited()
-                case (2, 0) => temporality = rr.varint()
-                case (_, w) => rr.skip(w)
-              }
-            }
-            if (temporality == 2L) pts ++= spans.result()
-          case (_, w) => r.skip(w)
-        }
-      }
-      pts.result().foreach { case (a, b) =>
-        val (attrs, exs) = decPointExemplars(buf, a, b)
-        if (exs.nonEmpty) {
-          val labels = (resLabels.toMap ++ attrs.toMap) + ("__name__" -> name)
-          out += WriteWire.PExemplarSeries(
-            labels.toSeq.sortBy(_._1).map { case (k, v) => PLabel(k, v) },
-            exs)
-        }
-      }
-    }
-    def walkResource(s: Int, e: Int): Unit = {
-      val r = new Prompb.Reader(buf, s, e)
-      var resourceAttrs = Seq.empty[(String, String)]
-      val scopes = Seq.newBuilder[(Int, Int)]
-      while (r.hasMore) {
-        val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-          case (1, 2) =>
-            val (a, b) = r.lenDelimited()
-            resourceAttrs = decResource(buf, a, b)
-          case (2, 2) => scopes += r.lenDelimited()
-          case (_, w) => r.skip(w)
-        }
-      }
-      val resLabels =
-        if (!targetInfo) resourceAttrs
-        else {
-          val attrMap = resourceAttrs.toMap
-          val job = attrMap.get("service.name").map(n =>
-            attrMap.get("service.namespace").map(_ + "/" + n).getOrElse(n))
-          job.map("job" -> _).toSeq ++
-            attrMap.get("service.instance.id").map("instance" -> _).toSeq
-        }
-      scopes.result().foreach { case (a, b) =>
-        val rr = new Prompb.Reader(buf, a, b)
-        while (rr.hasMore) {
-          val kk = rr.varint(); (kk >> 3, (kk & 7).toInt) match {
-            case (2, 2) =>
-              val (c, d) = rr.lenDelimited(); walkMetric(c, d, resLabels)
-            case (_, w) => rr.skip(w)
-          }
-        }
-      }
-    }
-    val r = new Prompb.Reader(buf, 0, buf.length)
-    while (r.hasMore) {
-      val k = r.varint(); (k >> 3, (k & 7).toInt) match {
-        case (1, 2) => val (a, b) = r.lenDelimited(); walkResource(a, b)
-        case (_, w) => r.skip(w)
-      }
-    }
-    out.result()
   }
 
   // ---------------------------------------------------------------- encode
@@ -928,18 +604,7 @@ object Otlp {
         m.message(5, gauge.toBytes)
         m.toBytes
     }
-    val scope = new Prompb.Writer
-    metrics.foreach(m => scope.message(2, m))
-    val resource = new Prompb.Writer
-    resourceAttrs.foreach { case (k, v) =>
-      resource.message(1, encKeyValue(k, v))
-    }
-    val rm = new Prompb.Writer
-    rm.message(1, resource.toBytes)
-    rm.message(2, scope.toBytes)
-    val req = new Prompb.Writer
-    req.message(1, rm.toBytes)
-    req.toBytes
+    wrapRequest(resourceAttrs, metrics)
   }
 
   private def wrapRequest(resourceAttrs: Seq[(String, String)],
@@ -1004,22 +669,10 @@ object Otlp {
     */
   def encodeSumRequest(resourceAttrs: Seq[(String, String)],
                        points: Seq[(String, Seq[(String, String)], Long, Double)],
-                       temporality: Int = 2): Array[Byte] = {
-    val metrics = points.groupBy(_._1).toSeq.sortBy(_._1).map {
-      case (name, pts) =>
-        val sum = new Prompb.Writer
-        pts.foreach { case (_, attrs, tsNano, v) =>
-          sum.message(1, encPoint(tsNano, v, attrs))
-        }
-        sum.int64(2, temporality.toLong)
-        sum.int64(3, 1L) // is_monotonic
-        val m = new Prompb.Writer
-        m.string(1, name)
-        m.message(7, sum.toBytes)
-        m.toBytes
-    }
-    wrapRequest(resourceAttrs, metrics)
-  }
+                       temporality: Int = 2): Array[Byte] =
+    encodeSumRequestExemplars(resourceAttrs,
+      points.map { case (name, attrs, tsNano, v) => (name, attrs, tsNano, v, Nil) },
+      temporality)
 
   /** One request carrying one explicit-bucket Histogram metric: one data
     * point per (attrs, tsNano) entry, each with disjoint per-bucket

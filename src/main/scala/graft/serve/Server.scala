@@ -245,66 +245,52 @@ class Server(spark: SparkSession, tablePath: String,
         return ingestDecoded(ex, req)
       }
       val body = Prompb.snappyUncompress(readBody(ex))
-      var written: Option[(Long, Long, Long)] = None
-      var nativeHists: Seq[graft.codec.NativeHist.PHistSeries] = Nil
-      val (wr, exemplars, metadata) =
-        if (ctype.contains("io.prometheus.write.v2.Request")) {
-          val req = graft.codec.Prompb2.decodeRequest(body)
-          val scalar = graft.codec.Prompb2.toV1(req)
-          val hists = graft.codec.Prompb2.histogramsToV1(req)
-          nativeHists = hists
-          val merged =
-            if (hists.isEmpty) scalar
-            else scalar.copy(timeseries = scalar.timeseries ++
-              hists.flatMap(graft.codec.NativeHist.toClassicSeries))
-          val withCt =
-            if (!ctZeroIngestion) merged
-            else merged.copy(timeseries =
-              ctZeroFilter(graft.codec.Prompb2.ctZeroSeries(req),
-                merged.timeseries) ++ merged.timeseries)
-          // RW 2.0 spec: receivers respond to v2 requests with the
-          // written-stats headers so senders can detect partial writes
-          // (ingest here is all-or-nothing per request, so written =
-          // the request's own counts ON SUCCESS and 0 on a storage
-          // failure — set inside ingestDecoded AFTER the append, else
-          // a 400 would advertise the full counts as written and
-          // defeat the header's purpose; CT-zero injections are
-          // synthetic and not counted)
-          written = Some((
-            scalar.timeseries.map(_.samples.size).sum.toLong,
-            graft.codec.Prompb2.histogramsToV1(req)
-              .map(_.histograms.size).sum.toLong,
-            graft.codec.Prompb2.exemplarsToV1(req)
-              .map(_.exemplars.size).sum.toLong))
-          (withCt, graft.codec.Prompb2.exemplarsToV1(req),
-            graft.codec.Prompb2.metadataToV1(req))
-        } else {
-          // ONE walk decodes scalars, native histograms (field 4 —
-          // flattened to their classic le-bucket view, the scalar
-          // store's representation), exemplars (field 3), and
-          // request-level metadata in a single pass over the bytes
-          val dec = graft.codec.WriteWire.decode(body)
-          nativeHists = dec.histograms
-          val merged =
-            if (dec.histograms.isEmpty) dec.scalars
-            else dec.scalars.copy(timeseries = dec.scalars.timeseries ++
-              dec.histograms.flatMap(graft.codec.NativeHist.toClassicSeries))
-          (merged, dec.exemplars, dec.metadata)
-        }
-      metadata.foreach(md =>
+      // both generations resolve to ONE decoded record: v1 in a single
+      // walk over the bytes, v2 through its symbol-table resolvers
+      val v2 =
+        if (ctype.contains("io.prometheus.write.v2.Request"))
+          Some(graft.codec.Prompb2.decodeRequest(body))
+        else None
+      val dec = v2.fold(graft.codec.WriteWire.decode(body))(req =>
+        graft.codec.WriteWire.DecodedWrite(graft.codec.Prompb2.toV1(req),
+          graft.codec.Prompb2.histogramsToV1(req),
+          graft.codec.Prompb2.exemplarsToV1(req),
+          graft.codec.Prompb2.metadataToV1(req)))
+      // native histograms also flatten to their classic le-bucket view,
+      // the scalar store's representation
+      val merged = dec.scalars.timeseries ++
+        dec.histograms.flatMap(graft.codec.NativeHist.toClassicSeries)
+      val series = v2 match {
+        case Some(req) if ctZeroIngestion =>
+          ctZeroFilter(graft.codec.Prompb2.ctZeroSeries(req), merged) ++ merged
+        case _ => merged
+      }
+      dec.metadata.foreach(md =>
         if (md.familyName.nonEmpty) metadataStore.put(md.familyName, md))
-      if (exemplars.nonEmpty) appendExemplars(exemplars)
-      if (nativeHists.nonEmpty) appendNativeHist(nativeHists)
-      ingestDecoded(ex, wr, written)
+      if (dec.exemplars.nonEmpty) appendExemplars(dec.exemplars)
+      if (dec.histograms.nonEmpty) appendNativeHist(dec.histograms)
+      // RW 2.0 spec: receivers respond to v2 requests with the
+      // written-stats headers so senders can detect partial writes
+      // (ingest here is all-or-nothing per request, so written = the
+      // request's own counts ON SUCCESS and 0 on a storage failure —
+      // set inside ingestDecoded AFTER the append, else a 400 would
+      // advertise the full counts as written and defeat the header's
+      // purpose; CT-zero injections are synthetic and not counted)
+      val written = v2.map(_ => (
+        dec.scalars.timeseries.map(_.samples.size).sum.toLong,
+        dec.histograms.map(_.histograms.size).sum.toLong,
+        dec.exemplars.map(_.exemplars.size).sum.toLong))
+      ingestDecoded(ex, Prompb.PWriteRequest(series), written)
     } catch {
       case e: Throwable =>
         respond(ex, 400, Option(e.getMessage).getOrElse("decode error").getBytes("UTF-8"))
     }
 
   /** OTLP/HTTP metrics receiver (`POST /otlp/v1/metrics`, plain protobuf
-    * body — OTLP does not snappy-frame): gauge/sum number points resolve
-    * through [[graft.codec.Otlp]] to the same canonical stream as both
-    * remote-write generations, then ride the identical ingest tail.
+    * body — OTLP does not snappy-frame): one [[graft.codec.Otlp.decode]]
+    * resolves the body to the same canonical stream as both
+    * remote-write generations, which then rides the identical ingest
+    * tail.
     */
   private def handleOtlp(ex: HttpExchange): Unit =
     try {
@@ -317,63 +303,33 @@ class Server(spark: SparkSession, tablePath: String,
             new java.io.ByteArrayInputStream(raw))
           try in.readAllBytes() finally in.close()
         } else raw
-      // target-info mode promotes service.name/instance.id to job/
-      // instance and collects the remaining resource attrs into a
-      // target_info series (the Prometheus receiver mapping, the shape
-      // info() joins); default mode flattens resource attrs into every
-      // series. The DELTA walk follows the SAME mapping — the upstream
-      // receiver applies the resource mapping uniformly before
-      // temporality conversion, so one resource's delta-converted and
-      // cumulative series share one label schema (and one conversion
-      // state key). The delta walk's target_info series bypasses
+      // ONE walk decodes every facet. Target-info mode promotes
+      // service.name/instance.id to job/instance and collects the
+      // remaining resource attrs into a target_info series (the
+      // Prometheus receiver mapping, the shape info() joins); default
+      // mode flattens resource attrs into every series. Every facet
+      // follows the SAME mapping — the upstream receiver applies it
+      // before temporality conversion, so one resource's
+      // delta-converted and cumulative series share one label schema
+      // (and one conversion state key), and exemplars land under their
+      // samples' identity. The delta target_info series bypasses
       // conversion: its value-1 samples are levels, not increments.
-      val cumulative =
-        if (otlpTargetInfo) graft.codec.Otlp.decodeToV1TargetInfo(body)
-        else graft.codec.Otlp.decodeToV1(body)
-      val merged =
-        if (!otlpConvertDelta) cumulative
-        else {
-          val deltas =
-            if (otlpTargetInfo) graft.codec.Otlp.decodeDeltaToV1TargetInfo(body)
-            else graft.codec.Otlp.decodeDeltaToV1(body)
-          if (deltas.timeseries.isEmpty) cumulative
-          else {
-            val (info, pts) = deltas.timeseries.partition(
-              _.labels.exists(l =>
-                l.name == "__name__" && l.value == "target_info"))
-            Prompb.PWriteRequest(cumulative.timeseries ++ info ++
-              convertDeltaSeries(pts))
-          }
-        }
-      // EXPONENTIAL HISTOGRAMS (Metric field 10): cumulative points
-      // land directly; DELTA points (opt-in) run per-bucket cumulation
-      // through the same gap-reset/out-of-order state discipline as the
-      // scalar conversion, THEN both flatten to the classic le view —
-      // the /write endpoint's native-histogram ingest discipline
-      val expCum =
-        if (otlpTargetInfo)
-          graft.codec.Otlp.decodeExpHistogramsTargetInfo(body, delta = false)
-        else graft.codec.Otlp.decodeExpHistograms(body)
-      val expConv =
-        if (!otlpConvertDelta) Nil
-        else convertDeltaExpHist(
-          if (otlpTargetInfo)
-            graft.codec.Otlp.decodeExpHistogramsTargetInfo(body, delta = true)
-          else graft.codec.Otlp.decodeDeltaExpHistograms(body))
-      val expNative = (expCum ++ expConv)
-        .map(graft.codec.Otlp.expHistToNative)
+      val dec = graft.codec.Otlp.decode(body, otlpTargetInfo)
+      val converted =
+        if (!otlpConvertDelta || dec.deltas.timeseries.isEmpty) Nil
+        else dec.deltaTargetInfo ++ convertDeltaSeries(dec.deltas.timeseries)
+      // EXPONENTIAL HISTOGRAMS: cumulative points land directly; DELTA
+      // points (opt-in) run per-bucket cumulation through the same
+      // gap-reset/out-of-order state discipline as the scalar
+      // conversion, THEN both flatten to the classic le view — the
+      // /write endpoint's native-histogram ingest discipline
+      val expNative = (dec.expHistograms ++
+        (if (otlpConvertDelta) convertDeltaExpHist(dec.deltaExpHistograms)
+         else Nil)).map(graft.codec.Otlp.expHistToNative)
       if (expNative.nonEmpty) appendNativeHist(expNative)
-      val expSeries = expNative
-        .flatMap(graft.codec.NativeHist.toClassicSeries)
-      val withExp =
-        if (expSeries.isEmpty) merged
-        else Prompb.PWriteRequest(merged.timeseries ++ expSeries)
-      // exemplars (span context on gauge/cumulative-sum points) land in
-      // the shared side table under the SAME series identity as their
-      // samples — the resource mapping applies to both walks alike
-      val exemplars = graft.codec.Otlp.decodeExemplars(body, otlpTargetInfo)
-      if (exemplars.nonEmpty) appendExemplars(exemplars)
-      ingestDecoded(ex, withExp)
+      if (dec.exemplars.nonEmpty) appendExemplars(dec.exemplars)
+      ingestDecoded(ex, Prompb.PWriteRequest(dec.cumulative.timeseries ++
+        converted ++ expNative.flatMap(graft.codec.NativeHist.toClassicSeries)))
     } catch {
       case e: Throwable =>
         respond(ex, 400, Option(e.getMessage).getOrElse("decode error").getBytes("UTF-8"))

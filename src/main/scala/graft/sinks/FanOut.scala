@@ -52,8 +52,10 @@ object FanOut {
     // computing it eagerly costs one full job per ingest batch that the
     // success path throws away — lazy keeps the failure contract intact
     // at zero cost to the happy path (optimization guide §1.2: don't
-    // compute things you discard)
-    lazy val total = batch.count()
+    // compute things you discard). The count itself can throw too (the
+    // sink failure may BE a lineage/executor failure); memoizing the Try
+    // keeps k failing sinks from re-running a throwing count k times.
+    lazy val total = scala.util.Try(batch.count())
     try {
       val outcomes = sinks.map { case (name, write) =>
         Future {
@@ -64,13 +66,11 @@ object FanOut {
             SinkOutcome(name, st.sent, st.failed, st.error, secs)
           } catch {
             case e: Throwable =>
-              // the count itself can throw too (the sink failure may BE a
-              // lineage/executor failure) — a second throw here would
-              // escape the Future and fail the whole fan-out, losing the
-              // other sinks' outcomes and breaking the error-isolation
-              // contract (reference main.go:396-406). -1 = size unknown.
-              val failedTotal = scala.util.Try(total).getOrElse(-1L)
-              SinkOutcome(name, 0L, failedTotal,
+              // a throwing count must not escape the Future and fail the
+              // whole fan-out, losing the other sinks' outcomes and
+              // breaking the error-isolation contract (reference
+              // main.go:396-406). -1 = size unknown.
+              SinkOutcome(name, 0L, total.getOrElse(-1L),
                 Some(Option(e.getMessage).getOrElse(e.getClass.getName)), secs)
           }
         }

@@ -29,18 +29,8 @@ object RemoteWriteStream {
     val spark = payloads.sparkSession
     import spark.implicits._
     payloads.select(col("content")).as[Array[Byte]].flatMap { bytes =>
-      val raw = Prompb.snappyUncompress(bytes)
-      val wr = Prompb.decodeWriteRequest(raw)
-      // native-histogram series flatten to their classic le view — the
-      // same rule as the HTTP front door, so the streaming and serving
-      // edges stay interchangeable
-      val hists = graft.codec.NativeHist.decodeWriteRequest(raw)
-        .flatMap(graft.codec.NativeHist.toClassicSeries)
-      for (ts <- wr.timeseries ++ hists; s <- ts.samples) yield {
-        val labels = ts.labels.map(l => l.name -> l.value).toMap
-        Schema.Sample(labels.getOrElse(Schema.MetricNameLabel, ""),
-          labels, s.value, s.timestampMs)
-      }
+      val dec = graft.codec.WriteWire.decode(Prompb.snappyUncompress(bytes))
+      flatten(dec.scalars, dec.histograms)
     }.toDF()
   }
 
@@ -55,14 +45,26 @@ object RemoteWriteStream {
     val spark = payloads.sparkSession
     import spark.implicits._
     payloads.select(col("content")).as[Array[Byte]].flatMap { bytes =>
-      val wr = graft.codec.Prompb2.decodeToV1(Prompb.snappyUncompress(bytes))
-      for (ts <- wr.timeseries; s <- ts.samples) yield {
-        val labels = ts.labels.map(l => l.name -> l.value).toMap
-        Schema.Sample(labels.getOrElse(Schema.MetricNameLabel, ""),
-          labels, s.value, s.timestampMs)
-      }
+      val req = graft.codec.Prompb2.decodeRequest(Prompb.snappyUncompress(bytes))
+      flatten(graft.codec.Prompb2.toV1(req),
+        graft.codec.Prompb2.histogramsToV1(req))
     }.toDF()
   }
+
+  /** Scalar samples plus native-histogram series flattened to their
+    * classic le view — the same rule as the HTTP front door, so the
+    * streaming and serving edges stay interchangeable.
+    */
+  private def flatten(scalars: Prompb.PWriteRequest,
+                      hists: Seq[graft.codec.NativeHist.PHistSeries])
+      : Seq[Schema.Sample] =
+    for (ts <- scalars.timeseries ++
+           hists.flatMap(graft.codec.NativeHist.toClassicSeries);
+         s <- ts.samples) yield {
+      val labels = ts.labels.map(l => l.name -> l.value).toMap
+      Schema.Sample(labels.getOrElse(Schema.MetricNameLabel, ""),
+        labels, s.value, s.timestampMs)
+    }
 
   /** Full streaming ingest: watch `inDir` for payload files (each file =
     * one remote-write POST body), decode, filter non-finite, append to the

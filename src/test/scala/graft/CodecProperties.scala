@@ -72,6 +72,53 @@ object CodecProperties extends Properties("codecs") {
     Prompb.decodeReadRequest(Prompb.encodeReadRequest(rr)) == rr
   }
 
+  // ---- OTLP: fixture encoders → the one-walk decode, flatten mapping ----
+
+  private def upTo[T](n: Int, g: Gen[T]): Gen[List[T]] =
+    Gen.choose(0, n).flatMap(Gen.listOfN(_, g))
+
+  // a small shared key pool makes resource/point/`__name__` collisions
+  // and repeated keys common; `str` adds the empty and unicode keys
+  private val otlpAttrs: Gen[List[(String, String)]] = upTo(5, for {
+    k <- Gen.frequency(2 -> str, 3 -> Gen.oneOf("", "job", "k", "__name__", "日本"))
+    v <- str
+  } yield k -> v)
+
+  private val otlpPoints: Gen[List[(String, Seq[(String, String)], Long, Double)]] =
+    upTo(8, for {
+      name <- Gen.frequency(1 -> str, 2 -> Gen.oneOf("", "m", "n"))
+      attrs <- otlpAttrs
+      tsNano <- Gen.choose(0L, Long.MaxValue / 2)
+      v <- Gen.frequency(4 -> Gen.choose(-1e9, 1e9), 1 -> Gen.const(Double.NaN),
+        1 -> Gen.const(java.lang.Double.longBitsToDouble(0x7ff0000000000002L)))
+    } yield (name, attrs, tsNano, v))
+
+  property("otlp gauge / cumulative-sum requests decode back to the same " +
+    "label-sorted series") =
+    forAll(otlpAttrs, otlpPoints, Gen.oneOf(true, false)) { (res, pts, gauge) =>
+      import graft.codec.Otlp
+      val wire =
+        if (gauge) Otlp.encodeGaugeRequest(res, pts)
+        else Otlp.encodeSumRequest(res, pts)
+      // the encoder, like proto3, writes no empty string, so an empty
+      // attribute value arrives unset and the attribute is skipped
+      def valued(kvs: Seq[(String, String)]) = kvs.filter(_._2.nonEmpty).toMap
+      // flatten mapping: point attributes override resource ones, the
+      // metric name overrides both; NaN payloads compare by their bits
+      val expected = pts.map { case (name, attrs, tsNano, v) =>
+        (((valued(res) ++ valued(attrs)) + ("__name__" -> name)).toSeq.sortBy(_._1),
+          Seq(java.lang.Double.doubleToRawLongBits(v) ->
+            Math.floorDiv(tsNano, 1000000L)))
+      }
+      val dec = Otlp.decode(wire)
+      val got = dec.cumulative.timeseries.map { ts =>
+        (ts.labels.map(l => l.name -> l.value), ts.samples.map(s =>
+          java.lang.Double.doubleToRawLongBits(s.value) -> s.timestampMs))
+      }
+      got.sortBy(_.toString) == expected.sortBy(_.toString) &&
+        dec.deltas.timeseries.isEmpty && dec.exemplars.isEmpty
+    }
+
   // ---- native-expression kernels (pure: ArrayData/UTF8String in-out) ----
 
   import graft.expressions.Kernels

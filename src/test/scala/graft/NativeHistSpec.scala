@@ -121,7 +121,7 @@ class NativeHistSpec extends AnyFunSuite {
       -3, Seq(2L, 0L, 3L, 5L)))
     val wire = graft.codec.Otlp.encodeExpHistogramRequest(
       Seq("env" -> "prod"), "lat", pts)
-    val got = graft.codec.Otlp.decodeExpHistograms(wire)
+    val got = graft.codec.Otlp.decode(wire).expHistograms
     assert(got.length == 1)
     val h = got.head
     assert(h.labels.map(l => l.name -> l.value) ==
@@ -132,9 +132,9 @@ class NativeHistSpec extends AnyFunSuite {
     // DELTA temporality: structurally skipped, same policy as sums
     val delta = graft.codec.Otlp.encodeExpHistogramRequest(
       Nil, "lat", pts, temporality = 1)
-    assert(graft.codec.Otlp.decodeExpHistograms(delta).isEmpty)
+    assert(graft.codec.Otlp.decode(delta).expHistograms.isEmpty)
     // scalar decode ignores the exponential payload entirely
-    assert(graft.codec.Otlp.decodeToV1(wire).timeseries.isEmpty)
+    assert(graft.codec.Otlp.decode(wire).cumulative.timeseries.isEmpty)
   }
 
   test("expHistogramQuantile ranks the zero bucket below every positive") {

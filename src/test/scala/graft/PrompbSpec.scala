@@ -95,7 +95,7 @@ class PrompbSpec extends AnyFunSuite {
         "service.instance.id" -> "i1", "k8s.cluster" -> "us-east"),
       Seq(("reqs", Seq("code" -> "200"), 1000L * 1000000L, 5.0),
         ("reqs", Seq("code" -> "500"), 2000L * 1000000L, 1.0)))
-    val out = Otlp.decodeToV1TargetInfo(bytes)
+    val out = Otlp.decode(bytes, targetInfo = true).cumulative
     val reqs = out.timeseries.filter(_.labels
       .contains(PLabel("__name__", "reqs")))
     assert(reqs.size == 2)
@@ -114,13 +114,13 @@ class PrompbSpec extends AnyFunSuite {
     // value 1 at the batch's newest point timestamp
     assert(ti.head.samples == Seq(PSample(1.0, 2000L)))
     // no namespace → bare service.name; no data attrs → no target_info
-    val bare = Otlp.decodeToV1TargetInfo(Otlp.encodeGaugeRequest(
+    val bare = Otlp.decode(Otlp.encodeGaugeRequest(
       Seq("service.name" -> "api", "service.instance.id" -> "i2"),
-      Seq(("reqs", Nil, 1000L * 1000000L, 5.0))))
+      Seq(("reqs", Nil, 1000L * 1000000L, 5.0))), targetInfo = true).cumulative
     assert(bare.timeseries.size == 1)
     assert(bare.timeseries.head.labels.contains(PLabel("job", "api")))
     // the default walk is untouched: resource attrs still flatten
-    assert(Otlp.decodeToV1(bytes).timeseries.forall(
+    assert(Otlp.decode(bytes).cumulative.timeseries.forall(
       _.labels.exists(_.name == "k8s.cluster")))
   }
 
@@ -206,7 +206,7 @@ class PrompbSpec extends AnyFunSuite {
         ("http_requests", Seq("method" -> "POST", "env" -> "canary"),
           1700000000123000000L, 7.5),
         ("cpu_usage", Seq(), 1700000001000000000L, 0.93)))
-    val wr = Otlp.decodeToV1(bytes)
+    val wr = Otlp.decode(bytes).cumulative
     assert(wr.timeseries.size == 3)
     val byName = wr.timeseries.groupBy(
       _.labels.find(_.name == "__name__").get.value)
@@ -231,18 +231,21 @@ class PrompbSpec extends AnyFunSuite {
     import graft.codec.Otlp
     val pts = Seq(("req_total", Seq("method" -> "GET"),
       1700000000000000000L, 10.0))
-    val cumulative = Otlp.decodeToV1(
-      Otlp.encodeSumRequest(Seq("job" -> "api"), pts, temporality = 2))
+    val cumulative = Otlp.decode(
+      Otlp.encodeSumRequest(Seq("job" -> "api"), pts, temporality = 2)).cumulative
     assert(cumulative.timeseries.size == 1)
     assert(cumulative.timeseries.head.samples ==
       Seq(PSample(10.0, 1700000000000L)))
-    val delta = Otlp.decodeToV1(
+    val delta = Otlp.decode(
       Otlp.encodeSumRequest(Seq("job" -> "api"), pts, temporality = 1))
-    assert(delta.timeseries.isEmpty,
+    assert(delta.cumulative.timeseries.isEmpty,
       "DELTA-temporality sum must not ingest as a cumulative counter")
-    val unspec = Otlp.decodeToV1(
+    // it lands in the delta facet instead, as the same series
+    assert(delta.deltas == cumulative)
+    val unspec = Otlp.decode(
       Otlp.encodeSumRequest(Seq("job" -> "api"), pts, temporality = 0))
-    assert(unspec.timeseries.isEmpty)
+    assert(unspec.cumulative.timeseries.isEmpty &&
+      unspec.deltas.timeseries.isEmpty)
   }
 
   test("otlp: explicit-bucket histogram flattens to cumulative le-bucket " +
@@ -252,7 +255,7 @@ class PrompbSpec extends AnyFunSuite {
       Seq("job" -> "api"), "latency", bounds = Seq(0.5, 2.0, 10.0),
       points = Seq((Seq("method" -> "GET"), 1700000000000000000L,
         Seq(3L, 4L, 2L, 1L), 12.5)))
-    val wr = Otlp.decodeToV1(bytes)
+    val wr = Otlp.decode(bytes).cumulative
     def series(name: String, le: Option[String]) =
       wr.timeseries.find { ts =>
         ts.labels.contains(PLabel("__name__", name)) &&
@@ -272,9 +275,9 @@ class PrompbSpec extends AnyFunSuite {
     // integral bounds print without a trailing .0 (Prometheus text form)
     assert(!wr.timeseries.exists(_.labels.exists(l =>
       l.name == "le" && l.value == "2.0")))
-    val delta = Otlp.decodeToV1(Otlp.encodeHistogramRequest(
+    val delta = Otlp.decode(Otlp.encodeHistogramRequest(
       Seq("job" -> "api"), "latency", Seq(0.5),
-      Seq((Nil, 1700000000000000000L, Seq(1L, 1L), 1.0)), temporality = 1))
+      Seq((Nil, 1700000000000000000L, Seq(1L, 1L), 1.0)), temporality = 1)).cumulative
     assert(delta.timeseries.isEmpty)
   }
 
@@ -302,7 +305,7 @@ class PrompbSpec extends AnyFunSuite {
     val bytes = Otlp.encodeSummaryRequest(Seq("job" -> "api"), "rpc",
       Seq((Seq("method" -> "GET"), 1700000000000000000L, 40L, 12.5,
         Seq(0.5 -> 0.2, 0.99 -> 1.75))))
-    val wr = Otlp.decodeToV1(bytes)
+    val wr = Otlp.decode(bytes).cumulative
     def one(name: String, q: Option[String]): PSample = {
       val ts = wr.timeseries.filter(t =>
         t.labels.contains(PLabel("__name__", name)) &&
@@ -319,8 +322,8 @@ class PrompbSpec extends AnyFunSuite {
     assert(wr.timeseries.forall(_.labels.contains(PLabel("method", "GET"))))
     assert(wr.timeseries.forall(_.samples.head.timestampMs == 1700000000000L))
     // quantile label prints integral values without a trailing .0
-    val b2 = Otlp.decodeToV1(Otlp.encodeSummaryRequest(Nil, "x",
-      Seq((Nil, 0L, 1L, 1.0, Seq(1.0 -> 3.0)))))
+    val b2 = Otlp.decode(Otlp.encodeSummaryRequest(Nil, "x",
+      Seq((Nil, 0L, 1L, 1.0, Seq(1.0 -> 3.0))))).cumulative
     assert(b2.timeseries.exists(_.labels.contains(PLabel("quantile", "1"))))
   }
 
@@ -388,7 +391,7 @@ class PrompbSpec extends AnyFunSuite {
       Seq(("rq", Seq("code" -> "200"), 2000000000L, 7.0,
         Seq((Seq("lane" -> "slow"), "00ff", 1000000000L, 3.5)))))
     // flatten mode: resource attrs join the series labels
-    val flat = Otlp.decodeExemplars(bytes)
+    val flat = Otlp.decode(bytes).exemplars
     assert(flat == Seq(WriteWire.PExemplarSeries(
       Seq(PLabel("__name__", "rq"), PLabel("code", "200"),
         PLabel("region", "eu"), PLabel("service.name", "api")),
@@ -397,7 +400,7 @@ class PrompbSpec extends AnyFunSuite {
         3.5, 1000L)))))
     // target-info mode: the promoted job identity instead — matching
     // the sample walk, so stored exemplars selector-match their series
-    val ti = Otlp.decodeExemplars(bytes, targetInfo = true)
+    val ti = Otlp.decode(bytes, targetInfo = true).exemplars
     assert(ti.head.seriesLabels ==
       Seq(PLabel("__name__", "rq"), PLabel("code", "200"),
         PLabel("job", "api")))
@@ -405,6 +408,6 @@ class PrompbSpec extends AnyFunSuite {
     val delta = Otlp.encodeSumRequestExemplars(Nil,
       Seq(("rq", Nil, 2000000000L, 7.0,
         Seq((Nil, "aa", 1000000000L, 1.0)))), temporality = 1)
-    assert(Otlp.decodeExemplars(delta).isEmpty)
+    assert(Otlp.decode(delta).exemplars.isEmpty)
   }
 }

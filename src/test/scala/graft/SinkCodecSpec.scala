@@ -111,4 +111,26 @@ class SinkCodecSpec extends SparkSpec {
     assert(byName("boom").error.exists(_.contains("sink down")))
     assert(okWrites == 1)
   }
+
+  test("S3: a batch whose count throws is counted once, however many " +
+       "sinks fail") {
+    val failing = udf[Boolean, Long] { _ =>
+      SinkCodecSpec.countAttempts.incrementAndGet()
+      throw new IllegalStateException("lineage down")
+    }.asNondeterministic()
+    val batch = spark.range(1).toDF().filter(failing(col("id")))
+    SinkCodecSpec.countAttempts.set(0)
+    val outcomes = FanOut.fanOut(batch,
+      Seq("a", "b", "c").map(n => n -> { (_: org.apache.spark.sql.DataFrame) =>
+        throw new RuntimeException(s"$n down") }))
+    assert(outcomes.map(o => (o.sink, o.sent, o.failed)) ==
+      Seq(("a", 0L, -1L), ("b", 0L, -1L), ("c", 0L, -1L)))
+    assert(SinkCodecSpec.countAttempts.get() == 1)
+  }
+}
+
+object SinkCodecSpec {
+  /** Evaluations of the throwing filter (local mode: one JVM, no task
+    * retries), i.e. count jobs attempted. */
+  val countAttempts = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -142,6 +142,32 @@ class StreamIngestSpec extends SparkSpec {
     }
   }
 
+  test("S1: an RW2 payload's native histograms flatten exactly as the " +
+       "same payload's v1 encoding does") {
+    import graft.codec.{NativeHist, Prompb2}
+    import spark.implicits._
+    val up = Seq(PLabel("__name__", "up"), PLabel("job", "t"))
+    val lat = Seq(PLabel("__name__", "lat"), PLabel("job", "t"))
+    val h = NativeHist.PHistogram(3L, 4.5, 0, 0.0, 1L,
+      Seq(NativeHist.BucketSpan(1, 2)), Seq(1L, 0L), Nil, Nil, 123456789000L)
+    val v1 = Prompb.encodeWriteRequest(PWriteRequest(Seq(
+      PTimeSeries(up, Seq(PSample(1.0, 123456789000L)))))) ++
+      NativeHist.encodeWriteRequest(Seq(NativeHist.PHistSeries(lat, Seq(h))))
+    val v2 = Prompb2.encodeRequest(Prompb2.P2Request(
+      Seq("", "__name__", "up", "job", "t", "lat"),
+      Seq(Prompb2.P2TimeSeries(Seq(1, 2, 3, 4), Seq(PSample(1.0, 123456789000L))),
+        Prompb2.P2TimeSeries(Seq(1, 5, 3, 4), Nil, histograms = Seq(h)))))
+    def flat(decode: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+             wire: Array[Byte]): Seq[String] =
+      decode(Seq(Prompb.snappyCompress(wire)).toDF("content"))
+        .as[graft.model.Schema.Sample].collect().map(_.toString).toSeq.sorted
+    val fromV1 = flat(RemoteWriteStream.decodeFlat, v1)
+    // the scalar sample plus lat's classic family: two le buckets, +Inf,
+    // _count and _sum
+    assert(fromV1.size == 6 && fromV1.count(_.contains("lat_bucket")) == 3)
+    assert(flat(RemoteWriteStream.decodeFlatV2, v2) == fromV1)
+  }
+
   test("S11: response edge emits decodable snappy+proto wire bytes") {
     import spark.implicits._
     import graft.compile.Matchers._
