@@ -113,9 +113,58 @@ object WritePipeline {
           col("date"), col("name"), col("tags"))
       else metricRows
         .repartitionByRange(col("date"), col("name"), col("tags"))
-    parted
-      .sortWithinPartitions(col("name"), col("tags"), col("ts"))
+    writeSorted(parted, path)
+  }
+
+  /** Each partition (name, tags, ts)-sorted into one file per date it
+    * holds: the write [[append]] and [[appendGroup]] share, so a group
+    * leaves the files its members' appends would. */
+  private def writeSorted(parted: DataFrame, path: String): Unit =
+    parted.sortWithinPartitions(col("name"), col("tags"), col("ts"))
       .write.mode("append").partitionBy("date").parquet(path)
+
+  /** Whether a batch of `rows` samples commits through one task (its
+    * [[rangeWidth]] is 1, as for every remote-write-sized batch): only
+    * such batches share an [[appendGroup]] job. */
+  def groupable(spark: SparkSession, rows: Long): Boolean =
+    rangeWidth(spark, rows) == 1
+
+  /** One request's flat samples and the frame over them
+    * (`samples.toDF()`, built outside the commit lock). */
+  final case class Batch(samples: Seq[Schema.Sample], frame: DataFrame)
+
+  /** Commit a group of flat-sample batches to the metrics table in ONE
+    * job, writing exactly the files the batches' sequential [[append]]s
+    * would. A job commits all of its files or none, so the group lands
+    * atomically.
+    *
+    * Each batch must be [[groupable]] and becomes its own RDD
+    * partition, so the group is one narrow job of one task per batch and
+    * each batch still lands in its own sorted file per date. Batches do
+    * not share files on purpose: a merged file mixes shards of several
+    * writers, which widens the `tags` dictionary's bit-packed indexes
+    * and breaks each series' run, costing more bytes per sample than the
+    * footers it saves. The job evaluates `current_timestamp()` once, so
+    * the batches share `updated`. A lone batch commits through its own
+    * [[append]], as before groups: a wider one keeps its data-derived
+    * range split, and a narrow one reuses its frame instead of shipping
+    * its samples inside a task to be encoded again.
+    */
+  def appendGroup(spark: SparkSession, members: Seq[Batch],
+                  path: String): Unit = {
+    import spark.implicits._
+    members match {
+      case Seq(b) =>
+        append(toMetricRows(dropNonFinite(b.frame)), path,
+          rowsHint = b.samples.size.toLong)
+      case _ =>
+        require(members.forall(b => groupable(spark, b.samples.size.toLong)),
+          "a batch wider than one task commits alone")
+        // parallelize slices a k-element Seq into k one-element slices
+        val rows = spark.sparkContext
+          .parallelize(members.map(_.samples), members.size).flatMap(m => m)
+        writeSorted(toMetricRows(dropNonFinite(rows.toDF())), path)
+    }
   }
 
   /** S5 DDL bootstrap ≙ CREATE TABLE IF NOT EXISTS

@@ -5,7 +5,7 @@ import graft.codec.Prompb
 import graft.codec.Prompb._
 import graft.compile.Matchers
 import graft.compile.Matchers.{EQ, LabelMatcher, NEQ, NRE, PromQuery, RE}
-import graft.engine.{Observability, ReadPipeline, ResponseEdge, WritePipeline}
+import graft.engine.{GroupCommit, Observability, ReadPipeline, ResponseEdge, WritePipeline}
 import graft.sinks.FanOut
 import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicLong
@@ -109,20 +109,88 @@ class Server(spark: SparkSession, tablePath: String,
 
   /** Plan-cached stored table: /read requests reuse one resolved parquet
     * relation (schema inference + file listing happen once) instead of
-    * re-planning `spark.read.parquet` per request; /write invalidates it
-    * after each append so the next read lists the new files. The DATA is
-    * not pinned — only the relation — so executors still scan parquet
-    * with full predicate pushdown per query.
+    * re-planning `spark.read.parquet` per request. It is invalidated
+    * once per commit — once per /write group commit, however many POSTs
+    * the group holds, and after each admin or scrape commit — so the
+    * next read lists the new files. The DATA is not pinned — only the
+    * relation — so executors still scan parquet with full predicate
+    * pushdown per query.
+    *
+    * Invalidating swaps in a fresh empty [[TableSlot]] without taking
+    * the Server monitor, so a commit never waits for a read that is
+    * rebuilding the relation; the rebuild installs its relation only if
+    * its slot is still current, so one that listed the files before a
+    * commit is never cached past it.
     */
-  @volatile private var cachedTable: Option[DataFrame] = None
+  private val cachedTable =
+    new java.util.concurrent.atomic.AtomicReference(new TableSlot(None))
 
-  /** Serializes parquet COMMITS to the main table (see the append site:
-    * concurrent append jobs to one path share the Hadoop staging dir).
+  /** One generation of [[cachedTable]]; compared by identity. */
+  private final class TableSlot(val table: Option[DataFrame])
+
+  /** Serializes every parquet COMMIT to the store and its side tables:
+    * concurrent append jobs to one path share the Hadoop staging dir
+    * (`_temporary/0`) and silently LOSE rows when they overlap (exposed
+    * by the s3_remote_write_chain entry — concurrent remote-write
+    * senders are the normal case, not the edge). /write commits through
+    * [[committer]], which holds this lock for a whole group; the admin
+    * rewrites, the scraper and the side-table appends take it directly.
     */
-  private val appendLock = new Object
+  private[graft] val appendLock = new Object
+
+  /** /write parquet write jobs that landed
+    * (`graft_parquet_commits_total`); fewer than the POSTs acknowledged
+    * when concurrent POSTs shared a commit. */
+  private val parquetCommits = new AtomicLong(0)
+
+  /** The /write committer. Each POST builds its samples outside the
+    * lock and submits them; whichever POST takes [[appendLock]] commits
+    * every queued POST's rows in ONE write job (each POST still in its
+    * own file per date, as sequential appends would leave them), then
+    * runs one retention sweep and one [[invalidateTable]], in that
+    * order, before any member is answered. A POST wider than one write
+    * task commits alone. When the shared job fails, each POST is
+    * committed again alone, so a POST whose own samples fail the write
+    * fails only itself; a store failure fails every member.
+    *
+    * `updated`: members of one group share the commit's
+    * `current_timestamp()`. Only POSTs in flight together share a group,
+    * and those had no defined commit order before either; a closed-loop
+    * sender never has two in flight, so last-write-wins dedup
+    * ([[graft.engine.Rollup.dedupLatest]]) resolves every ordering a
+    * client can observe as before.
+    */
+  private val committer = new GroupCommit[WritePipeline.Batch](
+    appendLock,
+    write = { members =>
+      WritePipeline.appendGroup(spark, members, tablePath)
+      parquetCommits.incrementAndGet()
+    },
+    alone = b => !WritePipeline.groupable(spark, b.samples.size.toLong),
+    settle = () =>
+      // the retention sweep is a directory listing + partition drops —
+      // cheap enough to run on every commit, like Prometheus's
+      // head-truncation cadence. The SIDE tables age on the same
+      // horizon: exemplars and stale markers past retention are as
+      // unreadable as the samples they annotate, and would otherwise
+      // grow forever.
+      try {
+        if (retentionSec > 0) {
+          val now = System.currentTimeMillis() / 1000
+          graft.engine.Admin.enforceRetention(tablePath, retentionSec, now)
+          Seq(exemplarPath, stalePath, histPath).foreach { p =>
+            if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
+              graft.engine.Admin.enforceRetention(p, retentionSec, now)
+          }
+        }
+      } finally invalidateTable())
+
+  /** Queued /write members not yet drained into a commit. */
+  private[graft] def queuedWrites: Int = committer.queued
 
   private[graft] def storedTable(): DataFrame = synchronized {
-    cachedTable.getOrElse {
+    val slot = cachedTable.get
+    slot.table.getOrElse {
       // recorded tombstones mask deleted samples on EVERY read surface
       // (a residual filter — admin-API-sized, never series-sized); both
       // admin endpoints invalidate this cache, so the masked view is
@@ -130,7 +198,7 @@ class Server(spark: SparkSession, tablePath: String,
       val df = graft.engine.Tombstones.suppress(
         spark.read.parquet(tablePath),
         graft.engine.Tombstones.load(spark, tablePath))
-      cachedTable = Some(df)
+      cachedTable.compareAndSet(slot, new TableSlot(Some(df)))
       df
     }
   }
@@ -146,7 +214,7 @@ class Server(spark: SparkSession, tablePath: String,
     storedTable() +: extraReaderPaths.map(spark.read.parquet(_))
   }
 
-  private def invalidateTable(): Unit = synchronized { cachedTable = None }
+  private def invalidateTable(): Unit = cachedTable.set(new TableSlot(None))
 
   /** The PromQL evaluator's store view: the raw table, with any stale
     * markers unioned in as flagged rows ([[graft.promql.Eval
@@ -673,39 +741,14 @@ class Server(spark: SparkSession, tablePath: String,
       val flat = samples.toDF()
       val table: (String, DataFrame => graft.sinks.Transport.WriteStats) =
         "parquet" -> { df =>
-          val rows = WritePipeline.toMetricRows(WritePipeline.dropNonFinite(df))
-          // CONCURRENT writers share one Hadoop staging dir
-          // (_temporary/0) per output path: two unserialized append
-          // jobs clobber each other's staging and silently LOSE rows
-          // (exposed by the s3_remote_write_chain entry — concurrent
-          // remote-write senders are the normal case, not the edge).
-          // Only the commit serializes; decode and row prep above stay
-          // concurrent, and executors parallelize within each append.
-          appendLock.synchronized {
-            WritePipeline.append(rows, tablePath,
-              rowsHint = samples.size.toLong)
-            // the retention sweep is a directory listing + partition
-            // drops — cheap enough to run on every committed batch,
-            // like Prometheus's head-truncation cadence. The SIDE
-            // tables age on the same horizon: exemplars and stale
-            // markers past retention are as unreadable as the samples
-            // they annotate, and would otherwise grow forever.
-            if (retentionSec > 0) {
-              val now = System.currentTimeMillis() / 1000
-              graft.engine.Admin.enforceRetention(tablePath, retentionSec,
-                now)
-              Seq(exemplarPath, stalePath, histPath).foreach { p =>
-                if (java.nio.file.Files.isDirectory(
-                    java.nio.file.Paths.get(p)))
-                  graft.engine.Admin.enforceRetention(p, retentionSec, now)
-              }
-            }
-          }
-          invalidateTable()
-          // The decoded request size IS the row count of `df` — counting
-          // it again would launch a second Spark job per micro-batch
-          // purely for the stat (the reference likewise reports
-          // len(samples), reference main.go:sendSamples).
+          // decode and the frame above stay concurrent; the commit
+          // (shared with whichever POSTs are queued with this one) runs
+          // under appendLock, and executors parallelize within it
+          committer.submit(WritePipeline.Batch(samples, df))
+          // The decoded request size IS the row count of `df` —
+          // counting it again would launch a second Spark job per
+          // micro-batch purely for the stat (the reference likewise
+          // reports len(samples), reference main.go:sendSamples).
           graft.sinks.Transport.WriteStats(samples.size.toLong, 0L, None)
         }
       val outcomes = FanOut.fanOutStats(flat, table +: extraSinks)
@@ -1858,7 +1901,8 @@ class Server(spark: SparkSession, tablePath: String,
         (sent.asScala.toSeq.sorted(Ordering.by((x: (String, AtomicLong)) => x._1))
           .map { case (k, v) => ("sent_samples_total", Map("remote" -> k), v.get()) } ++
           failed.asScala.toSeq.sorted(Ordering.by((x: (String, AtomicLong)) => x._1))
-            .map { case (k, v) => ("failed_samples_total", Map("remote" -> k), v.get()) })
+            .map { case (k, v) => ("failed_samples_total", Map("remote" -> k), v.get()) }) :+
+        ("graft_parquet_commits_total", Map.empty[String, String], parquetCommits.get())
     val histograms = sendDuration.asScala.toSeq.sortBy(_._1)
       .map { case (k, h) => h.text("sent_batch_duration_seconds", Map("remote" -> k)) }
     respond(ex, 200,

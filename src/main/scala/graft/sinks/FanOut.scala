@@ -62,7 +62,12 @@ object FanOut {
           val begin = System.nanoTime()
           def secs: Double = (System.nanoTime() - begin) / 1e9
           try {
-            val st = write(batch)
+            // a sink may block for long (the server's parquet sink waits
+            // for the commit lock): `blocking` lets the global pool add
+            // a worker meanwhile, so more than nproc concurrent batches
+            // reach their sinks (and can share one commit) instead of
+            // queueing unseen behind nproc blocked workers
+            val st = scala.concurrent.blocking(write(batch))
             SinkOutcome(name, st.sent, st.failed, st.error, secs)
           } catch {
             case e: Throwable =>

@@ -127,6 +127,32 @@ class SinkCodecSpec extends SparkSpec {
       Seq(("a", 0L, -1L), ("b", 0L, -1L), ("c", 0L, -1L)))
     assert(SinkCodecSpec.countAttempts.get() == 1)
   }
+
+  test("S3: blocked sinks do not cap concurrent fan-outs at the global " +
+       "pool's width") {
+    // nproc + 2 single-sink fan-outs whose sinks all wait for each
+    // other: they finish only if every sink is running at once, i.e. a
+    // sink blocked in its write does not pin one of the global pool's
+    // nproc workers
+    val n = Runtime.getRuntime.availableProcessors() + 2
+    val allIn = new java.util.concurrent.CountDownLatch(n)
+    val batch = spark.range(1).toDF()
+    val callers = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val results = (1 to n).map { _ =>
+        callers.submit(new java.util.concurrent.Callable[Seq[FanOut.SinkOutcome]] {
+          def call(): Seq[FanOut.SinkOutcome] = FanOut.fanOut(batch, Seq(
+            "parquet" -> { _ =>
+              allIn.countDown()
+              if (allIn.await(30, java.util.concurrent.TimeUnit.SECONDS)) 1L
+              else throw new IllegalStateException("sinks never ran together")
+            }))
+        })
+      }
+      val outcomes = results.flatMap(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(outcomes.map(o => (o.sent, o.error)) == Seq.fill(n)((1L, None)))
+    } finally callers.shutdownNow()
+  }
 }
 
 object SinkCodecSpec {
