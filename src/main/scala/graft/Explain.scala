@@ -1,15 +1,31 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Plan-audit main: prints `explain("formatted")` for representative
   * queries so scan pushdown (PushedFilters/ReadSchema), broadcast choices,
-  * and exchange counts can be inspected per round. Not part of the driver
-  * contract — a development tool.
+  * and exchange counts can be inspected per round, preceded by one
+  * `[plan-size]` line per entry with the analyzed and optimized
+  * [[exprNodes]] counts, so a per-row formula blowing up shows without
+  * reading plan text. A development tool, not one of the verified or
+  * benchmarked mains.
   *
   * Usage: runMain graft.Explain [sfDir] [queryName ...]
   */
 object Explain {
+
+  /** Expression nodes in a logical plan: every node of every expression
+    * tree its operators hold (subquery plans not included). A Column
+    * `val` used k times counts k times — the copies the analyzer,
+    * optimizer and AQE each walk.
+    */
+  def exprNodes(plan: LogicalPlan): Int = {
+    var n = 0
+    plan.foreach(_.expressions.foreach(_.foreach(_ => n += 1)))
+    n
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names =
@@ -24,7 +40,11 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      val qe = df.queryExecution
+      println(s"[plan-size] $n analyzed=${exprNodes(qe.analyzed)} " +
+        s"optimized=${exprNodes(qe.optimizedPlan)}")
+      df.explain("formatted")
     }
     spark.stop()
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{BottomK, MisraGries, MjpegFrames, CdcChunks, ColumnBridge, DeflateLen, DHashBmp, DHashPng, GraphiteEscape, GraphitePath, GunzipAll, HtmlLinks, HtmlText, HttpBody, MultiPatternCount, NfcNormalize, OpenTsdbMarshal, OpenTsdbUnmarshal, PcmFrameFeatures, RobotsCrawlDelay, RobotsMatchLen, RobotsRules, UnigramExpected, UnigramSegment, VecCosine, VecDot, VecL2Norm, WarcRecords, WinnowFingerprints}
+import org.apache.spark.sql.graft.{BottomK, MisraGries, MjpegFrames, CdcChunks, ColumnBridge, DeflateLen, DHashBmp, DHashPng, ExtrapolatedIncrease, GraphiteEscape, GraphitePath, GunzipAll, HtmlLinks, HtmlText, HttpBody, MultiPatternCount, NfcNormalize, OpenTsdbMarshal, OpenTsdbUnmarshal, PcmFrameFeatures, RobotsCrawlDelay, RobotsMatchLen, RobotsRules, UnigramExpected, UnigramSegment, VecCosine, VecDot, VecL2Norm, WarcRecords, WinnowFingerprints}
 
 /** Engine extension point, wired the idiomatic Spark way: set
   * `spark.sql.extensions=graft.GraftExtensions` (or `.withExtensions`)
@@ -81,6 +81,17 @@ object GraftExtensions {
     ColumnBridge.col(VecCosine(ColumnBridge.expr(a), ColumnBridge.expr(b)))
   def vecL2Norm(a: Column): Column =
     ColumnBridge.col(VecL2Norm(ColumnBridge.expr(a)))
+  /** Prometheus's extrapolated increase per range window (see
+    * [[graft.expressions.Kernels.extrapolatedIncrease]]); Column-only, like
+    * pcm_features, because `counter` is a plan-time constant.
+    */
+  def extrapolatedIncrease(n: Column, firstTs: Column, lastTs: Column,
+                           firstFp: Column, rawFp: Column, rangeStart: Column,
+                           rangeEnd: Column, counter: Boolean): Column =
+    ColumnBridge.col(ExtrapolatedIncrease(ColumnBridge.expr(n),
+      ColumnBridge.expr(firstTs), ColumnBridge.expr(lastTs),
+      ColumnBridge.expr(firstFp), ColumnBridge.expr(rawFp),
+      ColumnBridge.expr(rangeStart), ColumnBridge.expr(rangeEnd), counter))
   def cdcChunks(text: Column, w: Int, divisor: Int): Column =
     ColumnBridge.col(CdcChunks(ColumnBridge.expr(text), w, divisor))
   def nfcNormalize(text: Column): Column =

@@ -107,6 +107,66 @@ object Kernels {
     if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
 
+  // ---- extrapolated increase (reference: Prometheus
+  //      promql/functions.go extrapolatedRate) ----
+
+  /** Prometheus's extrapolated increase over one range
+    * [rangeStart, rangeEnd], from the per-window aggregate: sample count,
+    * first/last sample second, first value and summed adjusted
+    * differences (both 1e-6 fixed-point). The one definition behind
+    * PromQL `rate`/`increase`/`delta` and
+    * `TimeSeriesOps.extrapolatedRate`:
+    *
+    *   si = lastTs − firstTs;  avg = si / (n − 1)
+    *   ds = firstTs − rangeStart, clamped for counters (raw > 0, first
+    *        value ≥ 0) to least(ds, si · (first / raw)): no extrapolation
+    *        below zero
+    *   ds, de (= rangeEnd − lastTs) become avg / 2 where ≥ 1.1 · avg
+    *   increase = raw · ((si + ds) + de) / si
+    *
+    * NULL when n < 2 or lastTs ≤ firstTs (Prometheus emits nothing). A
+    * NULL `firstFp` skips the counter clamp (its condition is unknown).
+    *
+    * Bit-identity: these are the IEEE double operations, in the same
+    * order, of the Column expression they replaced, so results match it
+    * and the DuckDB oracle's spelling exactly. Comparisons use Spark's
+    * double ordering (`least` keeps `ds` on a tie), each division keeps
+    * its zero-divisor guard (NULL, as the evaluator's ANSI-safe division
+    * gives), and the second differences are exact, as the session's
+    * ANSI long arithmetic is.
+    */
+  def extrapolatedIncrease(n: Long, firstTs: Long, lastTs: Long,
+                           firstFp: java.lang.Long, rawFp: Long,
+                           rangeStart: Long, rangeEnd: Long,
+                           counter: Boolean): java.lang.Double = {
+    if (n < 2) return null
+    val span = Math.subtractExact(lastTs, firstTs)
+    if (span <= 0) return null
+    val si = span.toDouble
+    val rawD = rawFp / 1000000.0
+    val nm1 = (n - 1).toDouble
+    if (nm1 == 0.0) return null
+    val avgS = si / nm1
+    val ds0 = Math.subtractExact(firstTs, rangeStart).toDouble
+    val de0 = Math.subtractExact(rangeEnd, lastTs).toDouble
+    var ds1 = ds0
+    if (counter && firstFp != null) {
+      val fvD = firstFp.longValue / 1000000.0
+      if (cmp(rawD, 0.0) > 0 && cmp(fvD, 0.0) >= 0) {
+        val toZero = si * (fvD / rawD)
+        if (cmp(ds0, toZero) > 0) ds1 = toZero
+      }
+    }
+    val thr = avgS * 1.1
+    val ds = if (cmp(ds1, thr) >= 0) avgS / 2.0 else ds1
+    val de = if (cmp(de0, thr) >= 0) avgS / 2.0 else de0
+    if (si == 0.0) return null
+    java.lang.Double.valueOf(rawD * ((si + ds + de) / si))
+  }
+
+  private def cmp(a: Double, b: Double): Int =
+    org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
+
   // ---- content-defined chunking (Rabin/LBFS shape, md5-windowed) ----
 
   private val HexChars = "0123456789abcdef".toCharArray

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -995,19 +996,18 @@ object TimeSeriesOps {
     *              the post-reset value, the [[counterIncrease]] rule);
     *              with `isCounter = false` this is PromQL `delta()`:
     *              plain differences, telescoping to last − first
-    *   si       = lastTs − firstTs;  avg = si / (n−1)
-    *   dStart   = firstTs − rangeStart;  dEnd = rangeEnd − lastTs
-    *   dStart   = min(dStart, si·(firstVal/raw))   [counter, raw>0, fv≥0]
-    *   dX       = avg/2 where dX ≥ 1.1·avg
-    *   increase = raw · ((si + dStart + dEnd) / si);  rate = increase/bucketSec
-    * Buckets with n < 2 or si ≤ 0 yield NULL (Prometheus emits nothing).
+    *   increase = [[graft.expressions.Kernels.extrapolatedIncrease]] over
+    *              range [b·bucketSec, (b+1)·bucketSec] — the one
+    *              definition of the rule, shared with PromQL
+    *              rate/increase/delta;  rate = increase/bucketSec
+    * Buckets with n < 2 or lastTs ≤ firstTs yield NULL (Prometheus emits
+    * nothing).
     *
-    * Determinism: the float tree is ONE fixed IEEE expression —
-    * identical literals, identical parenthesization, least/CASE
-    * branches — spelled the same in the DuckDB oracle, inputs entering
-    * as exact longs (fp values, second timestamps); both engines
-    * produce bit-identical doubles, floored onto the 1e-6 grid at the
-    * end. One exchange total: the delta window partitions by
+    * Determinism: the kernel performs one fixed sequence of IEEE double
+    * operations, spelled the same in the DuckDB oracle, over inputs
+    * entering as exact longs (fp values, second timestamps); both
+    * engines produce bit-identical doubles, floored onto the 1e-6 grid
+    * at the end. One exchange total: the delta window partitions by
     * (keys, bucket) — the same key the final groupBy uses.
     */
   def extrapolatedRate(samples: DataFrame, keys: Seq[String],
@@ -1041,26 +1041,21 @@ object TimeSeriesOps {
         min(t).as("_ft"), max(t).as("_lt"),
         min(ordStruct).as("_first"),
         coalesce(sum(col("_adj")), lit(0L)).as("_raw_fp"))
-    val si = (col("_lt") - col("_ft")).cast("double")
-    val rawD = col("_raw_fp") / lit(1000000.0)
-    val fvD = col("_first").getField("v") / lit(1000000.0)
-    val avg = si / (col("n_samples") - 1).cast("double")
-    val ds0 = (col("_ft") - col("bucket") * bucketSec).cast("double")
-    val de0 = ((col("bucket") + 1) * bucketSec - col("_lt")).cast("double")
-    val ds1 = if (isCounter) {
-      when(rawD > 0.0 && fvD >= 0.0, least(ds0, si * (fvD / rawD)))
-        .otherwise(ds0)
-    } else ds0
-    val thr = avg * 1.1
-    val ds = when(ds1 >= thr, avg / 2.0).otherwise(ds1)
-    val de = when(de0 >= thr, avg / 2.0).otherwise(de0)
-    val inc = rawD * ((si + ds + de) / si)
-    val ok = col("n_samples") >= 2 && si > 0.0
+    extrapolatedFps(grouped, bucketSec, isCounter)
+  }
+
+  /** `increase_fp`/`rate_fp` (NULL below two samples or on a zero span)
+    * from [[extrapolatedRate]]'s per-(keys, bucket) aggregate:
+    * `n_samples`, `_ft`, `_lt`, `_first.v`, `_raw_fp`, `bucket`.
+    */
+  private[graft] def extrapolatedFps(grouped: DataFrame, bucketSec: Long,
+                                     isCounter: Boolean): DataFrame = {
+    val inc = GraftExtensions.extrapolatedIncrease(col("n_samples"),
+      col("_ft"), col("_lt"), col("_first").getField("v"), col("_raw_fp"),
+      col("bucket") * bucketSec, (col("bucket") + 1) * bucketSec, isCounter)
     grouped
-      .withColumn("increase_fp",
-        when(ok, floor(inc * 1000000.0)).otherwise(lit(null)))
-      .withColumn("rate_fp",
-        when(ok, floor(inc / bucketSec * 1000000.0)).otherwise(lit(null)))
+      .withColumn("increase_fp", floor(inc * 1000000.0))
+      .withColumn("rate_fp", floor(inc / bucketSec * 1000000.0))
       .drop("_ft", "_lt", "_first", "_raw_fp")
   }
 

@@ -1,5 +1,6 @@
 package graft.promql
 
+import graft.GraftExtensions
 import graft.model.Schema
 import graft.operators.LabelOps
 import org.apache.spark.sql.{Column, DataFrame}
@@ -36,6 +37,14 @@ import org.apache.spark.sql.functions._
   *    as map-side rows feeding one exchange, never held in memory.
   *  - binary ops are ONE equi-join on (match key, T); aggregations ONE
   *    groupBy on (grouping labels, T) — both partial-combined.
+  *  - A PER-ROW FORMULA IS ONE KERNEL. A Column `val` used k times is k
+  *    copies of its tree, and filter pushdown copies guarded results
+  *    again; the analyzer walks the tree at every DataFrame step, the
+  *    optimizer once, AQE after every shuffle stage. rate/increase/delta
+  *    spelled as Column DSL planned 1,279 expression nodes against 168
+  *    for sum_over_time on the same plan shape; as
+  *    [[graft.expressions.Kernels.extrapolatedIncrease]] it plans 270.
+  *    Result guards reference their argument once for the same reason.
   *
   * Determinism contract (the repo-wide fixed-point discipline): values
   * travel as 1e-6 fixed-point longs; sums/counts are exact under any
@@ -984,21 +993,7 @@ object Eval {
           .agg(count(lit(1)).as("n"), min(col("te")).as("ft"),
             max(col("te")).as("lt"), min(ord).as("_first"),
             coalesce(sum(col("_adj")), lit(0L)).as("raw_fp"))
-        val si = (col("lt") - col("ft")).cast("double")
-        val rawD = col("raw_fp") / FPD
-        val fvD = col("_first").getField("v") / FPD
-        val avgS = sdiv(si, (col("n") - 1).cast("double"))
-        val ds0 = (col("ft") - (col("_gt") - wSec)).cast("double")
-        val de0 = (col("_gt") - col("lt")).cast("double")
-        val ds1 = if (fn == "delta") ds0
-          else when(rawD > 0.0 && fvD >= 0.0, least(ds0, si * (fvD / rawD)))
-            .otherwise(ds0)
-        val thr = avgS * 1.1
-        val ds = when(ds1 >= thr, avgS / 2.0).otherwise(ds1)
-        val de = when(de0 >= thr, avgS / 2.0).otherwise(de0)
-        val inc = rawD * sdiv(si + ds + de, si)
-        val out = if (fn == "rate") inc / wSec else inc
-        finish(g, floor(out * FP), col("n") >= 2 && si > 0.0)
+        finish(g, extrapolatedFp(fn, wSec))
       case "irate" | "idelta" =>
         // the row holding the window's LAST sample carries its own lag
         val pick = struct(col("te").as("a"), col("v_fp").as("v"),
@@ -1795,6 +1790,19 @@ object Eval {
 
   // ------------------------------------------------------------ helpers
 
+  /** `rate`/`increase`/`delta` on the 1e-6 grid from the per-(series, T)
+    * aggregate (`n`, `ft`, `lt`, `_first.v`, `raw_fp`, `_gt`): one
+    * [[graft.expressions.Kernels.extrapolatedIncrease]] call over the
+    * window (T − w, T]. NULL, which [[finiteFp]] drops, below two samples
+    * or on a zero span.
+    */
+  private[graft] def extrapolatedFp(fn: String, wSec: Long): Column = {
+    val inc = GraftExtensions.extrapolatedIncrease(col("n"), col("ft"),
+      col("lt"), col("_first").getField("v"), col("raw_fp"),
+      col("_gt") - wSec, col("_gt"), counter = fn != "delta")
+    floor((if (fn == "rate") inc / wSec else inc) * FP)
+  }
+
   /** ANSI-safe double division: null (dropped downstream) instead of the
     * ANSI DIVIDE_BY_ZERO error — the finite-store contract's spelling of
     * x/0, and what keeps the evaluator runnable under the session's ANSI
@@ -1808,13 +1816,18 @@ object Eval {
   private def dropName(tags: Column): Column =
     filter(tags, x => !x.startsWith(Schema.MetricNameLabel + "="))
 
-  /** Finite-result guard on a double column (NaN and ±Inf drop). */
-  private def finiteD(c: Column): Column =
-    !isnan(c) && c > Double.NegativeInfinity && c < Double.PositiveInfinity
-  /** Same, applied before the long cast of a floored fp expression. */
-  private def finiteFp(c: Column): Column =
-    c.isNotNull && !isnan(c.cast("double")) &&
-      c.cast("double") > -9.2e18 && c.cast("double") < 9.2e18
+  /** Finite-result guard on a double column: NULL, NaN (Spark orders it
+    * above every double) and ±Inf drop. Filter-only (NULL, not false, on
+    * a NULL input), and it references `c` once, so filter pushdown
+    * inlines one copy of the guarded expression, not one per comparison.
+    */
+  private[graft] def finiteD(c: Column): Column =
+    abs(c) < Double.PositiveInfinity
+  /** Same, applied before the long cast of a floored fp expression:
+    * |x| ≥ 9.2e18 drops too (it would not fit the long).
+    */
+  private[graft] def finiteFp(c: Column): Column =
+    abs(c.cast("double")) < 9.2e18
 
   /** Fixed-point long printed as PromQL prints the double: up to six
     * decimals, trailing zeros (and a bare dot) trimmed. Sign handled

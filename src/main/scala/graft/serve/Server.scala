@@ -1059,6 +1059,22 @@ class Server(spark: SparkSession, tablePath: String,
     } else fromUrl
   }
 
+  /** Prometheus's limit on a range query's grid: (end − start) / step. */
+  private val MaxPointsPerSeries = 11000L
+
+  /** A PromQL API time parameter (epoch seconds, fractional allowed),
+    * floored to the store's second grain. Malformed and non-finite
+    * values are client errors: NaN would floor to epoch 0 and ±Inf to
+    * the ends of the long range.
+    */
+  private def apiTimeSec(k: String, v: String): Long = {
+    val d = try v.toDouble catch { case _: NumberFormatException => Double.NaN }
+    if (d.isNaN || d.isInfinite)
+      throw new IllegalArgumentException(
+        s"""invalid parameter "$k": cannot parse "$v" to a valid timestamp""")
+    math.floor(d).toLong
+  }
+
   private def handleQueryRange(ex: HttpExchange): Unit = {
     def jsonErr(code: Int, errorType: String, msg: String): Unit = {
       ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -1071,21 +1087,27 @@ class Server(spark: SparkSession, tablePath: String,
       def need(k: String): String = java.net.URLDecoder.decode(
         raw.getOrElse(k, throw new IllegalArgumentException(
           s"missing parameter '$k'")), "UTF-8")
-      def timeSec(k: String): Long = {
-        val v = need(k)
-        try math.floor(v.toDouble).toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"malformed time '$v'") }
-      }
       val query = need("query")
-      val start = timeSec("start")
-      val end = timeSec("end")
+      val start = apiTimeSec("start", need("start"))
+      val end = apiTimeSec("end", need("end"))
       val step = graft.promql.Parser.durationSec(need("step"))
       val lookback = raw.get("lookback")
         .map(v => graft.promql.Parser.durationSec(
           java.net.URLDecoder.decode(v, "UTF-8"))).getOrElse(300L)
       if (end < start)
         throw new IllegalArgumentException("end is before start")
+      if (step <= 0)
+        throw new IllegalArgumentException("zero or negative query " +
+          "resolution step widths are not accepted. Try a positive integer")
+      // Prometheus's per-series resolution cap: the grid is planned as
+      // spark.range over every instant, so one request must not ask for
+      // ~1e18 of them (a span past the long range counts as too many)
+      val span = try Math.subtractExact(end, start)
+        catch { case _: ArithmeticException => Long.MaxValue }
+      if (span / step > MaxPointsPerSeries)
+        throw new IllegalArgumentException("exceeded maximum resolution " +
+          "of 11,000 points per timeseries. Try decreasing the query " +
+          "resolution (?step=XX)")
       // auto-resolution, the same routing rule as /read: long ranges
       // answer from the coarsest downsampled tier still yielding enough
       // points (?resolution=raw|auto|<sec> overrides). The tier view
@@ -1169,7 +1191,7 @@ class Server(spark: SparkSession, tablePath: String,
       def need(k: String): String = java.net.URLDecoder.decode(
         raw.getOrElse(k, throw new IllegalArgumentException(
           s"missing parameter '$k'")), "UTF-8")
-      val t = math.floor(need("time").toDouble).toLong
+      val t = apiTimeSec("time", need("time"))
       val lookback = raw.get("lookback")
         .map(v => graft.promql.Parser.durationSec(
           java.net.URLDecoder.decode(v, "UTF-8"))).getOrElse(300L)

@@ -1219,4 +1219,50 @@ class PromqlSpec extends SparkSpec {
       .as[(String, Long, Double)].collect().sorted.toSeq ==
       Seq(("__name__=up,job=b", 40L, 5.0)))
   }
+
+  test("plan size: rate's extrapolation is one kernel node, not a " +
+       "per-use copy of its formula") {
+    // the same plan shape (scan, lag, grid explode, two groupBys) with
+    // and without the extrapolation rule: a Column spelling inlines each
+    // intermediate at every use (1,279 nodes against 168), one kernel
+    // node plus its inputs gives 270 against 159. The store is a file
+    // scan, as served: over a local relation the optimizer folds the
+    // projections and filters away, formula and all.
+    val dir = java.nio.file.Files.createTempDirectory("graft_plansize")
+      .toString + "/m"
+    Seq(
+      ("m", Seq("__name__=m", "job=a"), 1.0, 100L),
+      ("m", Seq("__name__=m", "job=a"), 4.0, 160L),
+      ("m", Seq("__name__=m", "job=b"), 2.0, 130L))
+      .toDF("name", "tags", "val", "ts").write.parquet(dir)
+    val store = spark.read.parquet(dir)
+    def nodes(q: String): Int = graft.Explain.exprNodes(
+      Eval.rangeQuery(store, q, Eval.RangeSpec(0, 3600, 60, 300L))
+        .queryExecution.optimizedPlan)
+    val rate = nodes("sum by (job) (rate(m[5m]))")
+    val plain = nodes("sum by (job) (sum_over_time(m[5m]))")
+    info(s"optimized plan nodes: rate $rate, sum_over_time $plain")
+    assert(rate <= 2 * plain, s"rate plan $rate nodes vs $plain")
+  }
+
+  test("finite guards drop NULL, NaN, ±Inf and |x| ≥ 9.2e18; keep the " +
+       "values just inside") {
+    val edge = 9.2e18
+    val inner = Seq(0.0, -1.5, Math.nextDown(edge), Math.nextUp(-edge))
+    val large = Seq(edge, -edge, Double.MaxValue, -Double.MaxValue)
+    val nonFinite = Seq(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    val df = ((inner ++ large ++ nonFinite).map(Option(_)) :+ None).toDF("x")
+    def kept(guard: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+      df.filter(guard(col("x"))).as[Double].collect().toSeq.sorted
+    assert(kept(Eval.finiteD) == (inner ++ large).sorted)
+    assert(kept(Eval.finiteFp) == inner.sorted)
+    // a long column (the floored fp every rate path guards): the edge
+    // compares after the double cast, so 9.2e18 − 1 rounds onto it
+    val inside = 9199999999999998976L // the last double below 9.2e18
+    val longs = Seq(Long.MaxValue, Long.MinValue, 0L, 9200000000000000000L,
+      9199999999999999999L, inside, -inside).toDF("x")
+    assert(longs.filter(Eval.finiteFp(col("x"))).as[Long].collect().toSeq
+      .sorted == Seq(-inside, 0L, inside))
+  }
 }

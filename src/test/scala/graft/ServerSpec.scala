@@ -873,6 +873,49 @@ class ServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("serve: the PromQL API bounds its grid — non-finite times and " +
+      "more than 11,000 steps are 400 bad_data; exactly 11,000 answers") {
+    val table = Files.createTempDirectory("graft_srvgrid").toString +
+      "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    try {
+      val wr = PWriteRequest(Seq(PTimeSeries(
+        Seq(PLabel("__name__", "reqs"), PLabel("job", "a")),
+        Seq(PSample(1.0, 100000L), PSample(4.0, 200000L)))))
+      assert(post(s"$base/write",
+        Prompb.snappyCompress(Prompb.encodeWriteRequest(wr)))._1 == 200)
+      val q = java.net.URLEncoder.encode("sum by (job) (reqs)", "UTF-8")
+      def range(start: String, end: String, step: String): (Int, String) =
+        getAny(s"$base/api/v1/query_range?query=$q&start=$start&end=$end" +
+          s"&step=$step")
+      def badData(r: (Int, String), msg: String): Unit = {
+        assert(r._1 == 400, r)
+        assert(r._2.contains(""""errorType":"bad_data"""") &&
+          r._2.contains(msg), r)
+      }
+      // NaN used to floor to epoch 0, Inf to the end of the long range
+      badData(range("NaN", "100", "1"), """invalid parameter \"start\"""")
+      badData(range("0", "Inf", "1"), """invalid parameter \"end\"""")
+      badData(range("0", "-Infinity", "1"), """invalid parameter \"end\"""")
+      badData(getAny(s"$base/api/v1/query?query=$q&time=NaN"),
+        """invalid parameter \"time\"""")
+      // Prometheus's resolution cap on (end − start) / step
+      val tooMany = "exceeded maximum resolution of 11,000 points per " +
+        "timeseries. Try decreasing the query resolution (?step=XX)"
+      badData(range("0", "11001", "1"), tooMany)
+      badData(range("0", "1e18", "1"), tooMany)
+      badData(range("-1e30", "1e30", "1"), tooMany)
+      val (okCode, okBody) = range("0", "11000", "1")
+      assert(okCode == 200, okBody)
+      // samples at t=100 and t=200 under the 5 m lookback: T = 100 … 499
+      assert(okBody.contains("""[100,"1"]""") &&
+        okBody.contains("""[499,"4"]""") && !okBody.contains("[500,"),
+        okBody.take(200))
+      assert(range("0", "22000", "2")._1 == 200)
+    } finally server.stop()
+  }
+
   test("serve: the PromQL API's series budget is enforced IN-PLAN — " +
       "over-budget queries 413 on all three collecting endpoints") {
     val table = Files.createTempDirectory("graft_srvbud").toString + "/metrics"
