@@ -1,5 +1,6 @@
 package graft
 
+import graft.promql.AstJson.jsonStr
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
@@ -262,30 +263,23 @@ object Bench {
         }
       }
 
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, (sec, _)) => s"${jstr(k)}:$sec" }
+    val qs = results.map { case (k, (sec, _)) => s"${jsonStr(k)}:$sec" }
       .mkString("{", ",", "}")
-    val errs = results.collect { case (k, (_, Some(e))) => s"${jstr(k)}:${jstr(e)}" }
+    val errs = results.collect { case (k, (_, Some(e))) => s"${jsonStr(k)}:${jsonStr(e)}" }
       .mkString("{", ",", "}")
     // an erroring re-run is NOT a measurement: it leaves the headline
     // isolated map (its trials + error still ship below)
     val iso = isolated.filter(_._6.isEmpty)
-      .map { case (k, ts, _, _, _, _) => s"${jstr(k)}:${ts.min}" }
+      .map { case (k, ts, _, _, _, _) => s"${jsonStr(k)}:${ts.min}" }
       .mkString("{", ",", "}")
     val isoTrials = isolated.map { case (k, ts, _, _, _, _) =>
-      s"${jstr(k)}:${ts.mkString("[", ",", "]")}" }
+      s"${jsonStr(k)}:${ts.mkString("[", ",", "]")}" }
       .mkString("{", ",", "}")
     val isoCanary = isolated.map { case (k, _, c, _, _, _) =>
-      s"${jstr(k)}:$c" }
+      s"${jsonStr(k)}:$c" }
       .mkString("{", ",", "}")
     val isoShufCanary = isolated.map { case (k, _, _, sc, _, _) =>
-      s"${jstr(k)}:$sc" }
+      s"${jsonStr(k)}:$sc" }
       .mkString("{", ",", "}")
     // per-trial metric deltas, aligned index-for-index with
     // isolated_trials; bytes scaled to MB (3 decimals) to keep the
@@ -295,14 +289,14 @@ object Bench {
       val rows = ms.map(m => s"""{"gc_ms":${m(0)},"shuffle_read_mb":${
         mb(m(1))},"shuffle_write_mb":${mb(m(2))},"spill_mem_mb":${
         mb(m(3))},"spill_disk_mb":${mb(m(4))}}""")
-      s"${jstr(k)}:${rows.mkString("[", ",", "]")}"
+      s"${jsonStr(k)}:${rows.mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
     val isoErrs = isolated.collect { case (k, _, _, _, _, Some(e)) =>
-      s"${jstr(k)}:${jstr(e)}" }
+      s"${jsonStr(k)}:${jsonStr(e)}" }
       .mkString("{", ",", "}")
     val total = results.map(_._2._1).sum
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"isolated":$iso,"isolated_trials":$isoTrials,"isolated_canary":$isoCanary,"isolated_shuffle_canary":$isoShufCanary,"isolated_metrics":$isoMetrics,"isolated_errors":$isoErrs,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"isolated":$iso,"isolated_trials":$isoTrials,"isolated_canary":$isoCanary,"isolated_shuffle_canary":$isoShufCanary,"isolated_metrics":$isoMetrics,"isolated_errors":$isoErrs,"sf":${jsonStr(sfDir)}}"""
 
     Files.writeString(Paths.get("/tmp/bench.json"), json + "\n")
     println(json)

@@ -13,7 +13,10 @@ import graft.promql.Ast._
   */
 object AstJson {
 
-  private def js(s: String): String =
+  /** A JSON string literal: quote, backslash and every control
+    * character (< 0x20) escaped. The one escaper every JSON body in
+    * the project goes through. */
+  def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -49,12 +52,12 @@ object AstJson {
     case NumberLit(v) =>
       s"""{"type":"numberLiteral","val":${num(v)}}"""
     case StringLit(v) =>
-      s"""{"type":"stringLiteral","val":${js(v)}}"""
+      s"""{"type":"stringLiteral","val":${jsonStr(v)}}"""
     case s: Selector =>
       val ms = s.matchers.map(m =>
-        s"""{"name":${js(m.label)},"type":"${matchOp(m.op)}","value":${
-          js(m.value)}}""").mkString("[", ",", "]")
-      val base = s""""name":${s.name.map(js).getOrElse("\"\"")},""" +
+        s"""{"name":${jsonStr(m.label)},"type":"${matchOp(m.op)}","value":${
+          jsonStr(m.value)}}""").mkString("[", ",", "]")
+      val base = s""""name":${s.name.map(jsonStr).getOrElse("\"\"")},""" +
         s""""matchers":$ms,"offset":${s.offsetSec}${atFields(s.atSec)}"""
       s.rangeSec match {
         case Some(r) => s"""{"type":"matrixSelector","range":$r,$base}"""
@@ -64,22 +67,22 @@ object AstJson {
       s"""{"type":"subquery","expr":${toJson(inner)},"range":$range,""" +
         s""""step":${step.getOrElse(0L)},"offset":$offset}"""
     case Call(fn, args) =>
-      s"""{"type":"call","func":{"name":${js(fn)}},"args":${
+      s"""{"type":"call","func":{"name":${jsonStr(fn)}},"args":${
         args.map(toJson).mkString("[", ",", "]")}}"""
     case Agg(op, body, param, labels, without) =>
-      s"""{"type":"aggregation","op":${js(op)},"expr":${toJson(body)},""" +
+      s"""{"type":"aggregation","op":${jsonStr(op)},"expr":${toJson(body)},""" +
         s""""param":${param.map(toJson).getOrElse("null")},""" +
-        s""""grouping":${labels.map(js).mkString("[", ",", "]")},""" +
+        s""""grouping":${labels.map(jsonStr).mkString("[", ",", "]")},""" +
         s""""without":$without}"""
     case BinOp(op, lhs, rhs, boolMod, matching) =>
       val m = matching.map { mm =>
         s""","matching":{"on":${mm.on},"labels":${
-          mm.labels.map(js).mkString("[", ",", "]")},"include":${
-          mm.include.map(js).mkString("[", ",", "]")},"side":${
+          mm.labels.map(jsonStr).mkString("[", ",", "]")},"include":${
+          mm.include.map(jsonStr).mkString("[", ",", "]")},"side":${
           if (mm.side == 1) "\"left\""
           else if (mm.side == 2) "\"right\"" else "\"none\""}}"""
       }.getOrElse("")
-      s"""{"type":"binaryExpr","op":${js(op)},"lhs":${toJson(lhs)},""" +
+      s"""{"type":"binaryExpr","op":${jsonStr(op)},"lhs":${toJson(lhs)},""" +
         s""""rhs":${toJson(rhs)},"bool":$boolMod$m}"""
     case Unary(neg, inner) =>
       s"""{"type":"unaryExpr","op":"${if (neg) "-" else "+"}","expr":${

@@ -1,5 +1,6 @@
 package graft.promql
 
+import graft.promql.AstJson.jsonStr
 import org.apache.spark.sql.DataFrame
 
 /** Alertmanager notification — the half of Prometheus's rule loop the
@@ -21,14 +22,6 @@ object Notifier {
     * spec and the entry pin the exact JSON that goes on the wire. */
   def alertsJson(store: DataFrame, group: Rules.RuleGroup, atSec: Long,
                  lookbackSec: Long = 300L): String = {
-    def js(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val alerts = group.alerts.flatMap { rule =>
       Rules.alertStatesAt(store, rule, atSec, group.intervalSec,
           lookbackSec)
@@ -41,7 +34,7 @@ object Notifier {
               kv.substring(0, i) -> kv.substring(i + 1)
             }
           val labels = kvs
-            .map { case (k, v) => js(k) + ":" + js(v) }
+            .map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
             .mkString("{", ",", "}")
           // annotations expand PER INSTANCE: {{ $labels.x }}/{{ $value }}
           // against this alert's label set and current value
@@ -49,12 +42,12 @@ object Notifier {
           val value = r.getAs[Double]("value")
           val annotations = rule.annotations.sortBy(_._1)
             .map { case (k, tmpl) =>
-              js(k) + ":" + js(Rules.expandTemplate(tmpl, labelMap, value))
+              jsonStr(k) + ":" + jsonStr(Rules.expandTemplate(tmpl, labelMap, value))
             }.mkString("{", ",", "}")
           val startsAt = java.time.Instant
             .ofEpochSecond(r.getAs[Long]("activeAt")).toString
           s"""{"labels":$labels,"annotations":$annotations,""" +
-            s""""startsAt":${js(startsAt)},"generatorURL":""}"""
+            s""""startsAt":${jsonStr(startsAt)},"generatorURL":""}"""
         }
     }
     alerts.sorted.mkString("[", ",", "]")

@@ -6,6 +6,8 @@ import graft.codec.Prompb._
 import graft.compile.Matchers
 import graft.compile.Matchers.{EQ, LabelMatcher, NEQ, NRE, PromQuery, RE}
 import graft.engine.{GroupCommit, Observability, ReadPipeline, ResponseEdge, WritePipeline}
+import graft.promql.AstJson.jsonStr
+import graft.serve.ApiEdge._
 import graft.sinks.FanOut
 import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicLong
@@ -235,21 +237,6 @@ class Server(spark: SparkSession, tablePath: String,
 
   /** The bound port (useful when constructed with port 0). */
   def boundPort: Int = http.getAddress.getPort
-
-  private def readBody(ex: HttpExchange): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    val in = ex.getRequestBody
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
-  }
-
-  private def respond(ex: HttpExchange, code: Int, body: Array[Byte]): Unit = {
-    ex.sendResponseHeaders(code, if (body.isEmpty) -1 else body.length.toLong)
-    if (body.nonEmpty) ex.getResponseBody.write(body)
-    ex.close()
-  }
 
   private[serve] def toPromQuery(q: PQuery): PromQuery =
     PromQuery(q.startMs, q.endMs, q.matchers.map { m =>
@@ -784,28 +771,19 @@ class Server(spark: SparkSession, tablePath: String,
     * URL param lets a dashboard proxy opt in per request without
     * breaking protocol-conformant callers.
     */
-  private[serve] def queryParams(query: String): Map[String, String] =
-    Option(query).getOrElse("").split("&").iterator
-      .map(_.split("=", 2)).collect {
-        case Array(k, v) => k -> v
-      }.toMap
-
-  private[serve] def parseDownsample(query: String)
-      : DataFrame => DataFrame = {
-    val params = queryParams(query)
-    params.get("downsample") match {
+  private[serve] def parseDownsample(p: Params): DataFrame => DataFrame =
+    p.one("downsample") match {
       case Some("minmax") =>
-        val step = params.get("step").map(_.toLong).getOrElse(3600L)
+        val step = p.one("step").map(_.toLong).getOrElse(3600L)
         ReadPipeline.minmaxDownsample(_, step)
       case Some("lttb") =>
-        val points = params.get("points").map(_.toInt).getOrElse(200)
+        val points = p.one("points").map(_.toInt).getOrElse(200)
         ReadPipeline.lttbDownsample(_, points)
       case Some(other) =>
         throw new IllegalArgumentException(
           s"unknown downsample '$other' (supported: minmax, lttb)")
       case None => identity
     }
-  }
 
   /** Resolution routing for one query (the Thanos auto-downsampling
     * rule the reference gets for free from GraphiteMergeTree,
@@ -905,124 +883,121 @@ class Server(spark: SparkSession, tablePath: String,
   }
 
   private def handleRead(ex: HttpExchange): Unit =
-    try {
+    plain(ex, form = false) { params =>
       val rr = Prompb.decodeReadRequest(Prompb.snappyUncompress(readBody(ex)))
-      val params = queryParams(ex.getRequestURI.getQuery)
       // ?response_type=streamed_xor_chunks&source=chunks — raw samples
       // straight from the at-rest chunk tier (the Prometheus/Thanos
       // remote-read semantic; day-aligned queries forward stored bytes
       // verbatim), as opposed to the default aggregating read below
-      if (params.get("source").contains("chunks")) {
-        if (!params.get("response_type").contains("streamed_xor_chunks"))
-          throw new IllegalArgumentException(
-            "source=chunks requires response_type=streamed_xor_chunks")
-        if (chunkTierPath.isEmpty && histChunkTierPath.isEmpty)
-          throw new IllegalArgumentException(
-            "no chunk tier configured (chunkTierPath)")
-        val force = params.get("chunk_path").contains("reencode")
-        val pqs = rr.queries.map(toPromQuery)
-        val (body, modes) = chunkTierPath match {
-          case Some(path) => ResponseEdge.encodeChunkedFromStore(
-            spark.read.parquet(path), pqs, readMaxSeries,
-            forceReencode = force)
-          case None => (Array.empty[Byte], Nil)
-        }
-        // the native-histogram tier serves beside the scalar one: same
-        // zero-copy day-aligned forwarding, FLOAT_HISTOGRAM frames
-        val (histBody, histModes) = histChunkTierPath match {
-          case Some(path) => ResponseEdge.encodeChunkedHistFromStore(
-            spark.read.parquet(path), pqs, readMaxSeries,
-            forceReencode = force)
-          case None => (Array.empty[Byte], Nil)
-        }
-        ex.getResponseHeaders.set("X-Graft-Chunk-Source",
-          (modes ++ histModes).mkString(","))
-        ex.getResponseHeaders.set("Content-Type",
-          "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
-        respond(ex, 200, body ++ histBody)
-        return
-      }
-      val transform = parseDownsample(ex.getRequestURI.getQuery)
-      val resParam = params.get("resolution")
-      val readers = storedReaders()
-      val resolutions = Seq.newBuilder[Long]
-      val steps = Seq.newBuilder[Long]
-      val perQuery = rr.queries.map { q =>
-        val pq = toPromQuery(q)
-        // prompb.ReadHints: a stock Prometheus sends its evaluation step
-        // in the proto — routing needs no graft-specific ?resolution=
-        // param (which still overrides when present)
-        val hintMs = q.hints.map(_.stepMs).getOrElse(0L)
-        val hintFunc = q.hints.map(_.func).getOrElse("")
-        chooseTier(pq, resParam, hintMs, hintFunc) match {
-          case Some((tierSec, tier)) =>
-            val outSec = tierStep(pq, tierSec, hintMs)
-            resolutions += tierSec; steps += outSec
-            ReadPipeline.assembleSeries(transform(
-              ReadPipeline.tierBucketAgg(tier, pq, tierSec, outSec)))
-          case None =>
-            resolutions += 0L; steps += Matchers.divStep(pq)
-            ReadPipeline.readMulti(readers, pq, exact = exactQuantiles,
-              bucketTransform = transform)
-        }
-      }
-      // routing audit, per query in request order: 0 = raw, else tier sec
-      ex.getResponseHeaders.set("X-Graft-Resolution",
-        resolutions.result().mkString(","))
-      ex.getResponseHeaders.set("X-Graft-Step", steps.result().mkString(","))
-      // STREAMED_XOR_CHUNKS negotiation (Remote-Read spec): the server
-      // answers with the FIRST type in the request proto's
-      // accepted_response_types it supports; an empty list is the legacy
-      // SAMPLES contract. The explicit ?response_type= param overrides
-      // in both directions so plain HTTP clients can opt in (or a
-      // debugging client can force SAMPLES from a chunk-capable setup).
-      // Chunked responses are framed ChunkedReadResponse messages with
-      // Gorilla-compressed sample chunks, uncompressed outer body per
-      // the spec.
-      val wantChunks = params.get("response_type") match {
-        case Some(t) => t == "streamed_xor_chunks"
-        case None => rr.acceptedResponseTypes
-          .find(t => t == Prompb.ResponseType.SAMPLES ||
-            t == Prompb.ResponseType.STREAMED_XOR_CHUNKS)
-          .contains(Prompb.ResponseType.STREAMED_XOR_CHUNKS)
-      }
-      if (wantChunks) {
-        val scalarBody = ResponseEdge.encodeChunked(perQuery, readMaxSeries)
-        // native-histogram series ride FLOAT_HISTOGRAM chunk frames
-        // from the sparse side table — the native representation
-        // survives streamed_xor_chunks instead of answering only
-        // through the classic le-flatten (whose *_bucket/_count/_sum
-        // names don't collide with the native series' own name, so
-        // the two frame sets are disjoint by construction)
-        val histBody =
-          if (java.nio.file.Files.isDirectory(
-              java.nio.file.Paths.get(histPath)))
-            ResponseEdge.encodeChunkedHist(spark.read.parquet(histPath),
-              rr.queries.map(toPromQuery), readMaxSeries)
-          else Array.empty[Byte]
-        ex.getResponseHeaders.set("Content-Type",
-          "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
-        respond(ex, 200, scalarBody ++ histBody)
-      } else {
-        val body = Prompb.snappyCompress(Prompb.encodeReadResponse(
-          ResponseEdge.toReadResponse(perQuery, readMaxSeries)))
-        ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-        ex.getResponseHeaders.set("Content-Encoding", "snappy")
-        respond(ex, 200, body)
-      }
-    } catch {
-      // over-budget reads are the CLIENT's query being too broad, not a
-      // server fault: 413 with the actionable message, never a 500
-      case e: ResponseEdge.SeriesLimitExceeded =>
-        respond(ex, 413, e.getMessage.getBytes("UTF-8"))
-      // malformed client input — unknown ?downsample= value, non-numeric
-      // step/points — is the CLIENT's error: 400, never a 500
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        respond(ex, 400,
-          Option(e.getMessage).getOrElse("bad request").getBytes("UTF-8"))
-      case e: Throwable =>
-        respond(ex, 500, Option(e.getMessage).getOrElse("read error").getBytes("UTF-8"))
+      if (params.one("source").contains("chunks")) readChunkTier(ex, rr, params)
+      else readStore(ex, rr, params)
     }
+
+  private def readChunkTier(ex: HttpExchange, rr: Prompb.PReadRequest,
+                            params: Params): Unit = {
+    if (!params.one("response_type").contains("streamed_xor_chunks"))
+      throw new IllegalArgumentException(
+        "source=chunks requires response_type=streamed_xor_chunks")
+    if (chunkTierPath.isEmpty && histChunkTierPath.isEmpty)
+      throw new IllegalArgumentException(
+        "no chunk tier configured (chunkTierPath)")
+    val force = params.one("chunk_path").contains("reencode")
+    val pqs = rr.queries.map(toPromQuery)
+    val (body, modes) = chunkTierPath match {
+      case Some(path) => ResponseEdge.encodeChunkedFromStore(
+        spark.read.parquet(path), pqs, readMaxSeries,
+        forceReencode = force)
+      case None => (Array.empty[Byte], Nil)
+    }
+    // the native-histogram tier serves beside the scalar one: same
+    // zero-copy day-aligned forwarding, FLOAT_HISTOGRAM frames
+    val (histBody, histModes) = histChunkTierPath match {
+      case Some(path) => ResponseEdge.encodeChunkedHistFromStore(
+        spark.read.parquet(path), pqs, readMaxSeries,
+        forceReencode = force)
+      case None => (Array.empty[Byte], Nil)
+    }
+    ex.getResponseHeaders.set("X-Graft-Chunk-Source",
+      (modes ++ histModes).mkString(","))
+    ex.getResponseHeaders.set("Content-Type",
+      "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
+    respond(ex, 200, body ++ histBody)
+  }
+
+  private def readStore(ex: HttpExchange, rr: Prompb.PReadRequest,
+                        params: Params): Unit = {
+    val transform = parseDownsample(params)
+    val resParam = params.one("resolution")
+    val readers = storedReaders()
+    val resolutions = Seq.newBuilder[Long]
+    val steps = Seq.newBuilder[Long]
+    val perQuery = rr.queries.map { q =>
+      val pq = toPromQuery(q)
+      // prompb.ReadHints: a stock Prometheus sends its evaluation step
+      // in the proto — routing needs no graft-specific ?resolution=
+      // param (which still overrides when present)
+      val hintMs = q.hints.map(_.stepMs).getOrElse(0L)
+      val hintFunc = q.hints.map(_.func).getOrElse("")
+      chooseTier(pq, resParam, hintMs, hintFunc) match {
+        case Some((tierSec, tier)) =>
+          val outSec = tierStep(pq, tierSec, hintMs)
+          resolutions += tierSec; steps += outSec
+          ReadPipeline.assembleSeries(transform(
+            ReadPipeline.tierBucketAgg(tier, pq, tierSec, outSec)))
+        case None =>
+          resolutions += 0L; steps += Matchers.divStep(pq)
+          ReadPipeline.readMulti(readers, pq, exact = exactQuantiles,
+            bucketTransform = transform)
+      }
+    }
+    // routing audit, per query in request order: 0 = raw, else tier sec
+    ex.getResponseHeaders.set("X-Graft-Resolution",
+      resolutions.result().mkString(","))
+    ex.getResponseHeaders.set("X-Graft-Step", steps.result().mkString(","))
+    // STREAMED_XOR_CHUNKS negotiation (Remote-Read spec): the server
+    // answers with the FIRST type in the request proto's
+    // accepted_response_types it supports; an empty list is the legacy
+    // SAMPLES contract. The explicit ?response_type= param overrides
+    // in both directions so plain HTTP clients can opt in (or a
+    // debugging client can force SAMPLES from a chunk-capable setup).
+    // Chunked responses are framed ChunkedReadResponse messages with
+    // Gorilla-compressed sample chunks, uncompressed outer body per
+    // the spec.
+    val wantChunks = params.one("response_type") match {
+      case Some(t) => t == "streamed_xor_chunks"
+      case None => rr.acceptedResponseTypes
+        .find(t => t == Prompb.ResponseType.SAMPLES ||
+          t == Prompb.ResponseType.STREAMED_XOR_CHUNKS)
+        .contains(Prompb.ResponseType.STREAMED_XOR_CHUNKS)
+    }
+    if (wantChunks) {
+      val scalarBody = ResponseEdge.encodeChunked(perQuery, readMaxSeries)
+      // native-histogram series ride FLOAT_HISTOGRAM chunk frames
+      // from the sparse side table — the native representation
+      // survives streamed_xor_chunks instead of answering only
+      // through the classic le-flatten (whose *_bucket/_count/_sum
+      // names don't collide with the native series' own name, so
+      // the two frame sets are disjoint by construction)
+      val histBody =
+        if (java.nio.file.Files.isDirectory(
+            java.nio.file.Paths.get(histPath)))
+          ResponseEdge.encodeChunkedHist(spark.read.parquet(histPath),
+            rr.queries.map(toPromQuery), readMaxSeries)
+        else Array.empty[Byte]
+      ex.getResponseHeaders.set("Content-Type",
+        "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
+      respond(ex, 200, scalarBody ++ histBody)
+    } else {
+      val body = Prompb.snappyCompress(Prompb.encodeReadResponse(
+        ResponseEdge.toReadResponse(perQuery, readMaxSeries)))
+      ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
+      ex.getResponseHeaders.set("Content-Encoding", "snappy")
+      respond(ex, 200, body)
+    }
+  }
+
+  /** Prometheus's limit on a range query's grid: (end − start) / step. */
+  private val MaxPointsPerSeries = 11000L
 
   /** `GET /api/v1/query_range?query=…&start=…&end=…&step=…` — the
     * Prometheus HTTP API's range query, answered by the in-engine PromQL
@@ -1043,57 +1018,13 @@ class Server(spark: SparkSession, tablePath: String,
     * (413 over `readMaxSeries`). Malformed queries/params are the
     * client's fault: 400 with errorType=bad_data, per the API spec.
     */
-  /** Request params for the API endpoints: the URL query string,
-    * merged with a form-encoded POST body when present (Grafana sends
-    * long PromQL via POST application/x-www-form-urlencoded; body
-    * values win on collision, matching Prometheus).
-    */
-  private def apiParams(ex: HttpExchange): Map[String, String] = {
-    val fromUrl = queryParams(ex.getRequestURI.getRawQuery)
-    val ctype = Option(ex.getRequestHeaders.getFirst("Content-Type"))
-      .getOrElse("")
-    if (ex.getRequestMethod == "POST" &&
-        ctype.contains("application/x-www-form-urlencoded")) {
-      val body = new String(readBody(ex), "UTF-8")
-      fromUrl ++ queryParams(body)
-    } else fromUrl
-  }
-
-  /** Prometheus's limit on a range query's grid: (end − start) / step. */
-  private val MaxPointsPerSeries = 11000L
-
-  /** A PromQL API time parameter (epoch seconds, fractional allowed),
-    * floored to the store's second grain. Malformed and non-finite
-    * values are client errors: NaN would floor to epoch 0 and ±Inf to
-    * the ends of the long range.
-    */
-  private def apiTimeSec(k: String, v: String): Long = {
-    val d = try v.toDouble catch { case _: NumberFormatException => Double.NaN }
-    if (d.isNaN || d.isInfinite)
-      throw new IllegalArgumentException(
-        s"""invalid parameter "$k": cannot parse "$v" to a valid timestamp""")
-    math.floor(d).toLong
-  }
-
-  private def handleQueryRange(ex: HttpExchange): Unit = {
-    def jsonErr(code: Int, errorType: String, msg: String): Unit = {
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, code,
-        s"""{"status":"error","errorType":"$errorType","error":${jsonStr(msg)}}"""
-          .getBytes("UTF-8"))
-    }
-    try {
-      val raw = apiParams(ex)
-      def need(k: String): String = java.net.URLDecoder.decode(
-        raw.getOrElse(k, throw new IllegalArgumentException(
-          s"missing parameter '$k'")), "UTF-8")
-      val query = need("query")
-      val start = apiTimeSec("start", need("start"))
-      val end = apiTimeSec("end", need("end"))
-      val step = graft.promql.Parser.durationSec(need("step"))
-      val lookback = raw.get("lookback")
-        .map(v => graft.promql.Parser.durationSec(
-          java.net.URLDecoder.decode(v, "UTF-8"))).getOrElse(300L)
+  private def handleQueryRange(ex: HttpExchange): Unit =
+    api(ex) { p =>
+      val query = p.need("query")
+      val start = p.needTime("start")
+      val end = p.needTime("end")
+      val step = graft.promql.Parser.durationSec(p.need("step"))
+      val lookback = p.lookback
       if (end < start)
         throw new IllegalArgumentException("end is before start")
       if (step <= 0)
@@ -1120,8 +1051,7 @@ class Server(spark: SparkSession, tablePath: String,
       val ast = graft.promql.Parser.parse(query)
       val tier = chooseTier(
         PromQuery(start * 1000, end * 1000, Nil),
-        raw.get("resolution")
-          .map(java.net.URLDecoder.decode(_, "UTF-8")),
+        p.one("resolution"),
         hintFunc = if (usesCounterFn(ast)) "rate" else "")
       ex.getResponseHeaders.set("X-Graft-Resolution",
         tier.map(_._1).getOrElse(0L).toString)
@@ -1131,8 +1061,7 @@ class Server(spark: SparkSession, tablePath: String,
       }
       // ?slice=<dur> opts into skew-split evaluation (hot-series
       // deployments: one runaway series no longer sorts on one task)
-      val slice = raw.get("slice").map(v => graft.promql.Parser
-        .durationSec(java.net.URLDecoder.decode(v, "UTF-8")))
+      val slice = p.duration("slice")
       val res = graft.promql.Eval.rangeQuery(source, query,
         graft.promql.Eval.RangeSpec(start, end, step, lookback, slice))
       // the series budget rides INTO the plan (CollectLimit on the
@@ -1147,58 +1076,28 @@ class Server(spark: SparkSession, tablePath: String,
         }
         .sortBy(_._1.mkString(","))
         .map { case (tags, pts) =>
-          val metric = tags.map { kv =>
-            val i = kv.indexOf('=')
-            jsonStr(kv.substring(0, i)) + ":" + jsonStr(kv.substring(i + 1))
-          }.mkString("{", ",", "}")
           // points arrive t-sorted (sort_array over struct(t, value))
-          val values = pts.map { p =>
-            s"""[${p.getAs[Long]("t")},${
-              jsonStr(fmtValue(p.getAs[Double]("value")))}]"""
+          val values = pts.map { pt =>
+            s"""[${pt.getAs[Long]("t")},${
+              jsonStr(fmtValue(pt.getAs[Double]("value")))}]"""
           }.mkString("[", ",", "]")
-          s"""{"metric":$metric,"values":$values}"""
+          s"""{"metric":${labelsJson(tags)},"values":$values}"""
         }
-      val body =
-        s"""{"status":"success","data":{"resultType":"matrix","result":${
-          series.mkString("[", ",", "]")}}}"""
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, 200, body.getBytes("UTF-8"))
-    } catch {
-      case e: ResponseEdge.SeriesLimitExceeded =>
-        jsonErr(413, "bad_data", e.getMessage)
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        jsonErr(400, "bad_data",
-          Option(e.getMessage).getOrElse("bad request"))
-      case e: Throwable =>
-        jsonErr(500, "internal",
-          Option(e.getMessage).getOrElse("query error"))
+      ok(ex, s"""{"resultType":"matrix","result":${
+        series.mkString("[", ",", "]")}}""")
     }
-  }
 
   /** `GET /api/v1/query?query=…&time=…` — the instant query: one grid
     * step at `time`, resultType "vector". A thin wrapper over the same
     * evaluator as query_range (start = end = time, step 1).
     */
-  private def handleInstantQuery(ex: HttpExchange): Unit = {
-    def jsonErr(code: Int, errorType: String, msg: String): Unit = {
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, code,
-        s"""{"status":"error","errorType":"$errorType","error":${jsonStr(msg)}}"""
-          .getBytes("UTF-8"))
-    }
-    try {
-      val raw = apiParams(ex)
-      def need(k: String): String = java.net.URLDecoder.decode(
-        raw.getOrElse(k, throw new IllegalArgumentException(
-          s"missing parameter '$k'")), "UTF-8")
-      val t = apiTimeSec("time", need("time"))
-      val lookback = raw.get("lookback")
-        .map(v => graft.promql.Parser.durationSec(
-          java.net.URLDecoder.decode(v, "UTF-8"))).getOrElse(300L)
+  private def handleInstantQuery(ex: HttpExchange): Unit =
+    api(ex) { p =>
+      val t = p.needTime("time")
+      val lookback = p.lookback
       // ?slice= opts into skew-split evaluation, same as query_range
-      val slice = raw.get("slice").map(v => graft.promql.Parser
-        .durationSec(java.net.URLDecoder.decode(v, "UTF-8")))
-      val res = graft.promql.Eval.rangeQuery(promqlTable(), need("query"),
+      val slice = p.duration("slice")
+      val res = graft.promql.Eval.rangeQuery(promqlTable(), p.need("query"),
         graft.promql.Eval.RangeSpec(t, t, 1, lookback, slice))
       // one grid instant ⇒ one row per series: the budget is literally
       // limit(maxSeries + 1) pushed into the plan before the collect
@@ -1210,29 +1109,12 @@ class Server(spark: SparkSession, tablePath: String,
       val out = rows.sortBy(
         _.getAs[scala.collection.Seq[String]]("tags").mkString("\u0000"))
         .iterator.map { r =>
-        val metric = r.getAs[scala.collection.Seq[String]]("tags")
-          .map { kv =>
-            val i = kv.indexOf('=')
-            jsonStr(kv.substring(0, i)) + ":" + jsonStr(kv.substring(i + 1))
-          }.mkString("{", ",", "}")
-        s"""{"metric":$metric,"value":[${r.getAs[Long]("t")},${
+        s"""{"metric":${labelsJson(r.getAs[scala.collection.Seq[String]](
+          "tags"))},"value":[${r.getAs[Long]("t")},${
           jsonStr(fmtValue(r.getAs[Double]("value")))}]}"""
       }.mkString("[", ",", "]")
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, 200,
-        s"""{"status":"success","data":{"resultType":"vector","result":$out}}"""
-          .getBytes("UTF-8"))
-    } catch {
-      case e: ResponseEdge.SeriesLimitExceeded =>
-        jsonErr(413, "bad_data", e.getMessage)
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        jsonErr(400, "bad_data",
-          Option(e.getMessage).getOrElse("bad request"))
-      case e: Throwable =>
-        jsonErr(500, "internal",
-          Option(e.getMessage).getOrElse("query error"))
+      ok(ex, s"""{"resultType":"vector","result":$out}""")
     }
-  }
 
   /** Metadata endpoints — /api/v1/labels, /api/v1/label/<n>/values,
     * /api/v1/series: what a Grafana datasource calls to populate
@@ -1241,65 +1123,44 @@ class Server(spark: SparkSession, tablePath: String,
     * scan; distinct label/series sets are aggregate-sized by definition
     * (the series endpoint additionally enforces the series budget).
     */
-  private def handleMeta(ex: HttpExchange): Unit = {
-    def jsonErr(code: Int, errorType: String, msg: String): Unit = {
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, code,
-        s"""{"status":"error","errorType":"$errorType","error":${jsonStr(msg)}}"""
-          .getBytes("UTF-8"))
-    }
-    try {
+  private def handleMeta(ex: HttpExchange): Unit =
+    api(ex) { p =>
       import org.apache.spark.sql.functions._
       val path = ex.getRequestURI.getPath
-      // multi-valued params: match[] may repeat
-      val pairs = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-        .split("&").toSeq.filter(_.nonEmpty).map(_.split("=", 2)).collect {
-          case Array(k, v) =>
-            java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-        }
-      def one(k: String): Option[String] = pairs.find(_._1 == k).map(_._2)
-      val matches = pairs.filter(_._1 == "match[]").map(_._2)
-      val start = one("start").map(v => math.floor(v.toDouble).toLong)
-        .getOrElse(throw new IllegalArgumentException("missing 'start'"))
-      val end = one("end").map(v => math.floor(v.toDouble).toLong)
-        .getOrElse(throw new IllegalArgumentException("missing 'end'"))
+      // match[] may repeat: the selectors union
+      val matches = p.all("match[]")
+      val start = p.needTime("start")
+      val end = p.needTime("end")
       // ?limit= truncates deterministically (sort THEN limit, both
       // in-plan: TakeOrdered on the executors) — the Prometheus param
-      val userLimit = one("limit").map(_.toInt).filter(_ > 0)
+      val userLimit = p.one("limit").map(_.toInt).filter(_ > 0)
       def capped(df: DataFrame): DataFrame =
         userLimit.map(df.limit).getOrElse(df)
-      var df = storedTable()
-        .filter(col("ts") >= timestamp_seconds(lit(start)) &&
-          col("ts") <= timestamp_seconds(lit(end)))
-      if (df.columns.contains("date"))
-        df = df.filter(
-          col("date") >= to_date(timestamp_seconds(lit(start))) &&
-          col("date") <= to_date(timestamp_seconds(lit(end))))
+      var df = timeWindow(storedTable(), start, end)
       if (matches.nonEmpty)
         df = df.filter(matches.map(graft.promql.Eval.seriesPredicate)
           .reduce(_ || _))
-      val body: String =
+      val data: String =
         if (path.endsWith("/labels")) {
-          val names = capped(df
+          capped(df
             .select(explode(col("tags")).as("kv"))
             .select(substring_index(col("kv"), "=", 1).as("k"))
             .distinct().orderBy(col("k")))
             .collect().map(r => jsonStr(r.getString(0)))
-          s"""{"status":"success","data":${names.mkString("[", ",", "]")}}"""
+            .mkString("[", ",", "]")
         } else if (path.startsWith("/api/v1/label/") &&
             path.endsWith("/values")) {
           val label = path.stripPrefix("/api/v1/label/")
             .stripSuffix("/values")
           val prefix = label + "="
-          val vals = capped(df
+          capped(df
             .select(explode(col("tags")).as("kv"))
             .filter(col("kv").startsWith(prefix))
             .select(col("kv").substr(lit(prefix.length + 1),
               lit(Int.MaxValue)).as("v"))
             .distinct().orderBy(col("v")))
             .collect().map(r => jsonStr(r.getString(0)))
-          s"""{"status":"success","data":${vals.mkString("[", ",", "]")}}"""
+            .mkString("[", ",", "]")
         } else if (path.endsWith("/series")) {
           if (matches.isEmpty)
             throw new IllegalArgumentException(
@@ -1317,55 +1178,21 @@ class Server(spark: SparkSession, tablePath: String,
           }
           if (rows.length > readMaxSeries)
             throw new ResponseEdge.SeriesLimitExceeded(readMaxSeries)
-          val out = rows.sortBy(
-            _.getAs[scala.collection.Seq[String]]("tags").mkString(","))
-            .iterator.map { r =>
-            r.getAs[scala.collection.Seq[String]]("tags").map { kv =>
-              val i = kv.indexOf('=')
-              jsonStr(kv.substring(0, i)) + ":" +
-                jsonStr(kv.substring(i + 1))
-            }.mkString("{", ",", "}")
-          }.mkString("[", ",", "]")
-          s"""{"status":"success","data":$out}"""
+          rows.map(_.getAs[scala.collection.Seq[String]]("tags"))
+            .sortBy(_.mkString(",")).map(labelsJson).mkString("[", ",", "]")
         } else throw new IllegalArgumentException(s"unknown path $path")
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, 200, body.getBytes("UTF-8"))
-    } catch {
-      case e: ResponseEdge.SeriesLimitExceeded =>
-        jsonErr(413, "bad_data", e.getMessage)
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        jsonErr(400, "bad_data",
-          Option(e.getMessage).getOrElse("bad request"))
-      case e: Throwable =>
-        jsonErr(500, "internal",
-          Option(e.getMessage).getOrElse("meta error"))
+      ok(ex, data)
     }
-  }
 
   /** `GET /api/v1/format_query?query=…` — parse + pretty-print (the
     * canonical, fully parenthesized form); a parse error is 400
     * bad_data with the parser's position message.
     */
-  private def handleFormatQuery(ex: HttpExchange): Unit = {
-    try {
-      val raw = queryParams(ex.getRequestURI.getRawQuery)
-      val q = java.net.URLDecoder.decode(
-        raw.getOrElse("query", throw new IllegalArgumentException(
-          "missing parameter 'query'")), "UTF-8")
-      val printed = graft.promql.Parser.print(graft.promql.Parser.parse(q))
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, 200,
-        s"""{"status":"success","data":${jsonStr(printed)}}"""
-          .getBytes("UTF-8"))
-    } catch {
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        respond(ex, 400,
-          s"""{"status":"error","errorType":"bad_data","error":${
-            jsonStr(Option(e.getMessage).getOrElse("bad request"))}}"""
-            .getBytes("UTF-8"))
+  private def handleFormatQuery(ex: HttpExchange): Unit =
+    api(ex) { p =>
+      ok(ex, jsonStr(graft.promql.Parser.print(
+        graft.promql.Parser.parse(p.need("query")))))
     }
-  }
 
   /** `GET/POST /api/v1/query_exemplars?query=…&start=…&end=…` — the
     * exemplars stored beside the main table, filtered by a plain series
@@ -1374,41 +1201,22 @@ class Server(spark: SparkSession, tablePath: String,
     * query endpoints. Returns the standard envelope: one object per
     * series with its exemplar list (labels, value, timestamp seconds).
     */
-  private def handleQueryExemplars(ex: HttpExchange): Unit = {
-    def jsonErr(code: Int, errorType: String, msg: String): Unit = {
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, code,
-        s"""{"status":"error","errorType":"$errorType","error":${jsonStr(msg)}}"""
-          .getBytes("UTF-8"))
-    }
-    try {
+  private def handleQueryExemplars(ex: HttpExchange): Unit =
+    api(ex) { p =>
       import org.apache.spark.sql.functions._
-      val raw = apiParams(ex)
-      def need(k: String): String = java.net.URLDecoder.decode(
-        raw.getOrElse(k, throw new IllegalArgumentException(
-          s"missing parameter '$k'")), "UTF-8")
-      val query = need("query")
+      val query = p.need("query")
       // start/end are OPTIONAL here (the Prometheus API's own contract
       // for this endpoint — absent bounds mean "all time")
-      def timeOr(k: String, dflt: Long): Long = raw.get(k)
-        .map(v => math.floor(java.net.URLDecoder.decode(v, "UTF-8")
-          .toDouble).toLong).getOrElse(dflt)
-      val start = timeOr("start", 0L)
-      val end = timeOr("end", 4102444800L) // year 2100: "unbounded"
-      val body: String =
+      val start = p.time("start").getOrElse(0L)
+      val end = p.time("end").getOrElse(4102444800L) // year 2100: "unbounded"
+      val data: String =
         if (!java.nio.file.Files.exists(
             java.nio.file.Paths.get(exemplarPath)))
-          """{"status":"success","data":[]}"""
+          "[]"
         else {
-          var df = spark.read.parquet(exemplarPath)
-            .filter(col("ts") >= timestamp_seconds(lit(start)) &&
-              col("ts") <= timestamp_seconds(lit(end)))
-          if (df.columns.contains("date"))
-            df = df.filter(
-              col("date") >= to_date(timestamp_seconds(lit(start))) &&
-              col("date") <= to_date(timestamp_seconds(lit(end))))
-          df = df.filter(graft.promql.Eval.seriesPredicate(query))
-          val perSeries = df
+          val perSeries = timeWindow(
+              spark.read.parquet(exemplarPath), start, end)
+            .filter(graft.promql.Eval.seriesPredicate(query))
             .groupBy(col("tags"))
             .agg(sort_array(collect_list(struct(
               unix_timestamp(col("ts")).as("t"),
@@ -1417,12 +1225,7 @@ class Server(spark: SparkSession, tablePath: String,
           val rows = perSeries.collect()
           if (rows.length > readMaxSeries)
             throw new ResponseEdge.SeriesLimitExceeded(readMaxSeries)
-          def kvJson(kvs: scala.collection.Seq[String]): String =
-            kvs.map { kv =>
-              val i = kv.indexOf('=')
-              jsonStr(kv.substring(0, i)) + ":" + jsonStr(kv.substring(i + 1))
-            }.mkString("{", ",", "}")
-          val data = rows.toSeq
+          rows.toSeq
             .map { r =>
               (r.getAs[scala.collection.Seq[String]]("tags"),
                 r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("exs"))
@@ -1430,58 +1233,26 @@ class Server(spark: SparkSession, tablePath: String,
             .sortBy(_._1.mkString(","))
             .map { case (tags, exs) =>
               val exJson = exs.map { e =>
-                s"""{"labels":${kvJson(
+                s"""{"labels":${labelsJson(
                   e.getAs[scala.collection.Seq[String]]("ex_tags"))},""" +
                   s""""value":${jsonStr(fmtValue(e.getAs[Double]("val")))},""" +
                   s""""timestamp":${e.getAs[Long]("t")}}"""
               }.mkString("[", ",", "]")
-              s"""{"seriesLabels":${kvJson(tags)},"exemplars":$exJson}"""
+              s"""{"seriesLabels":${labelsJson(tags)},"exemplars":$exJson}"""
             }.mkString("[", ",", "]")
-          s"""{"status":"success","data":$data}"""
         }
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, 200, body.getBytes("UTF-8"))
-    } catch {
-      case e: ResponseEdge.SeriesLimitExceeded =>
-        jsonErr(413, "bad_data", e.getMessage)
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        jsonErr(400, "bad_data",
-          Option(e.getMessage).getOrElse("bad request"))
-      case e: Throwable =>
-        jsonErr(500, "internal",
-          Option(e.getMessage).getOrElse("exemplar error"))
+      ok(ex, data)
     }
-  }
 
   /** `GET /api/v1/parse_query?query=…` — the AST as JSON (the endpoint
     * Prometheus 3.x exposes for editors/linters); a parse error is 400
     * with the offset-bearing message, like format_query.
     */
-  private def handleParseQuery(ex: HttpExchange): Unit = {
-    def jsonErr(code: Int, errorType: String, msg: String): Unit = {
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, code,
-        s"""{"status":"error","errorType":"$errorType","error":${jsonStr(msg)}}"""
-          .getBytes("UTF-8"))
+  private def handleParseQuery(ex: HttpExchange): Unit =
+    api(ex) { p =>
+      ok(ex, graft.promql.AstJson.toJson(
+        graft.promql.Parser.parse(p.need("query"))))
     }
-    try {
-      val raw = apiParams(ex)
-      val q = java.net.URLDecoder.decode(
-        raw.getOrElse("query", throw new IllegalArgumentException(
-          "missing parameter 'query'")), "UTF-8")
-      val ast = graft.promql.Parser.parse(q)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, 200,
-        s"""{"status":"success","data":${graft.promql.AstJson.toJson(ast)}}"""
-          .getBytes("UTF-8"))
-    } catch {
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        jsonErr(400, "bad_data", Option(e.getMessage).getOrElse("bad query"))
-      case e: Throwable =>
-        jsonErr(500, "internal",
-          Option(e.getMessage).getOrElse("parse error"))
-    }
-  }
 
   /** `GET /api/v1/metadata` — the metric-family metadata received on the
     * write path (v1 WriteRequest.metadata, RW2 per-series Metadata), in
@@ -1496,10 +1267,7 @@ class Server(spark: SparkSession, tablePath: String,
           s""""help":${jsonStr(md.help)},""" +
           s""""unit":${jsonStr(md.unit)}}]"""
     }
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    respond(ex, 200,
-      s"""{"status":"success","data":${entries.mkString("{", ",", "}")}}"""
-        .getBytes("UTF-8"))
+    ok(ex, entries.mkString("{", ",", "}"))
   }
 
   /** `GET /api/v1/rules` and `GET /api/v1/alerts` — the configured rule
@@ -1509,22 +1277,10 @@ class Server(spark: SparkSession, tablePath: String,
     * (epoch seconds; default: now) via [[graft.promql.Rules
     * .alertStatesAt]] — deterministic for tests, live for dashboards.
     */
-  private def handleRules(ex: HttpExchange): Unit = {
-    def jsonErr(code: Int, errorType: String, msg: String): Unit = {
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, code,
-        s"""{"status":"error","errorType":"$errorType","error":${jsonStr(msg)}}"""
-          .getBytes("UTF-8"))
-    }
-    try {
-      val raw = apiParams(ex)
-      val atSec = raw.get("time")
-        .map(v => math.floor(java.net.URLDecoder.decode(v, "UTF-8")
-          .toDouble).toLong)
-        .getOrElse(System.currentTimeMillis() / 1000L)
-      val lookback = raw.get("lookback")
-        .map(v => graft.promql.Parser.durationSec(
-          java.net.URLDecoder.decode(v, "UTF-8"))).getOrElse(300L)
+  private def handleRules(ex: HttpExchange): Unit =
+    api(ex) { p =>
+      val atSec = p.time("time").getOrElse(System.currentTimeMillis() / 1000L)
+      val lookback = p.lookback
       val alertsOnly = ex.getRequestURI.getPath.endsWith("/alerts")
       def rfc3339(t: Long): String =
         java.time.Instant.ofEpochSecond(t).toString
@@ -1565,13 +1321,12 @@ class Server(spark: SparkSession, tablePath: String,
         }
         (g, perAlert)
       }
-      val body =
+      val data =
         if (alertsOnly) {
           val alerts = evaluated.flatMap { case (_, perAlert) =>
             perAlert.flatMap(_._3)
           }
-          s"""{"status":"success","data":{"alerts":${
-            alerts.mkString("[", ",", "]")}}}"""
+          s"""{"alerts":${alerts.mkString("[", ",", "]")}}"""
         } else {
           val gs = evaluated.map { case (g, perAlert) =>
             val ruleJsons = g.recording.map { rr =>
@@ -1593,22 +1348,10 @@ class Server(spark: SparkSession, tablePath: String,
               s""""rules":${ruleJsons.mkString("[", ",", "]")},""" +
               s""""interval":${g.intervalSec},"limit":0}"""
           }
-          s"""{"status":"success","data":{"groups":${
-            gs.mkString("[", ",", "]")}}}"""
+          s"""{"groups":${gs.mkString("[", ",", "]")}}"""
         }
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, 200, body.getBytes("UTF-8"))
-    } catch {
-      case e: ResponseEdge.SeriesLimitExceeded =>
-        jsonErr(413, "bad_data", e.getMessage)
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        jsonErr(400, "bad_data",
-          Option(e.getMessage).getOrElse("bad request"))
-      case e: Throwable =>
-        jsonErr(500, "internal",
-          Option(e.getMessage).getOrElse("rules error"))
+      ok(ex, data)
     }
-  }
 
   /** `GET /federate?match[]=…&time=…` — hierarchical federation: the
     * latest sample (value + ITS OWN timestamp, ms) of every series
@@ -1622,34 +1365,19 @@ class Server(spark: SparkSession, tablePath: String,
     * second resolve to the max value, the store's dedup rule); the
     * series budget rides in-plan (`limit(maxSeries+1)` before collect).
     */
-  private def handleFederate(ex: HttpExchange): Unit = {
-    import org.apache.spark.sql.functions._
-    try {
-      val pairs = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-        .split("&").toSeq.filter(_.nonEmpty).map(_.split("=", 2)).collect {
-          case Array(k, v) =>
-            java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-        }
-      val matches = pairs.filter(_._1 == "match[]").map(_._2)
+  private def handleFederate(ex: HttpExchange): Unit =
+    plain(ex, form = true) { p =>
+      import org.apache.spark.sql.functions._
+      val matches = p.all("match[]")
       if (matches.isEmpty)
         throw new IllegalArgumentException(
           "federate requires at least one match[]")
-      val timeSec = pairs.find(_._1 == "time")
-        .map(v => math.floor(v._2.toDouble).toLong)
-        .getOrElse(System.currentTimeMillis() / 1000)
-      val lookback = pairs.find(_._1 == "lookback")
-        .map(v => graft.promql.Parser.durationSec(v._2)).getOrElse(300L)
-      var df = storedTable()
-        .filter(col("ts") > timestamp_seconds(lit(timeSec - lookback)) &&
-          col("ts") <= timestamp_seconds(lit(timeSec)))
-      if (df.columns.contains("date"))
-        df = df.filter(
-          col("date") >= to_date(timestamp_seconds(lit(timeSec - lookback))) &&
-          col("date") <= to_date(timestamp_seconds(lit(timeSec))))
-      df = df.filter(matches.map(graft.promql.Eval.seriesPredicate)
-        .reduce(_ || _))
-      val rows = df.groupBy(col("name"), col("tags"))
+      val timeSec = p.time("time").getOrElse(System.currentTimeMillis() / 1000)
+      val lookback = p.lookback
+      val rows = timeWindow(storedTable(), timeSec - lookback, timeSec,
+          loOpen = true)
+        .filter(matches.map(graft.promql.Eval.seriesPredicate).reduce(_ || _))
+        .groupBy(col("name"), col("tags"))
         .agg(max(struct(col("ts"), col("val"))).as("last"))
         .select(col("name"), col("tags"),
           unix_millis(col("last.ts")).as("t_ms"), col("last.val").as("v"))
@@ -1700,17 +1428,7 @@ class Server(spark: SparkSession, tablePath: String,
         if (om) "application/openmetrics-text; version=1.0.0; charset=utf-8"
         else "text/plain; version=0.0.4; charset=utf-8")
       respond(ex, 200, sb.toString.getBytes("UTF-8"))
-    } catch {
-      case e: ResponseEdge.SeriesLimitExceeded =>
-        respond(ex, 413, e.getMessage.getBytes("UTF-8"))
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        respond(ex, 400,
-          Option(e.getMessage).getOrElse("bad request").getBytes("UTF-8"))
-      case e: Throwable =>
-        respond(ex, 500,
-          Option(e.getMessage).getOrElse("federate error").getBytes("UTF-8"))
     }
-  }
 
   /** `GET /api/v1/status/tsdb` — cardinality statistics (what the
     * Prometheus UI's TSDB-status page and cardinality dashboards read):
@@ -1725,11 +1443,10 @@ class Server(spark: SparkSession, tablePath: String,
     * — `?limit=` overrides the 10, and ties break lexicographically so
     * the cut is deterministic.
     */
-  private def handleStatusTsdb(ex: HttpExchange): Unit = {
-    import org.apache.spark.sql.functions._
-    try {
-      val raw = apiParams(ex)
-      val topN = raw.get("limit").map(_.toInt).getOrElse(10)
+  private def handleStatusTsdb(ex: HttpExchange): Unit =
+    api(ex) { p =>
+      import org.apache.spark.sql.functions._
+      val topN = p.one("limit").map(_.toInt).getOrElse(10)
       val store = storedTable()
       val series = store.select(col("name"), col("tags")).distinct()
         .cache()
@@ -1774,8 +1491,7 @@ class Server(spark: SparkSession, tablePath: String,
         def sec(xs: Seq[(String, Long)]): String = xs.map { case (n, v) =>
           s"""{"name":${jsonStr(n)},"value":$v}"""
         }.mkString("[", ",", "]")
-        val body =
-          s"""{"status":"success","data":{"headStats":{""" +
+        ok(ex, s"""{"headStats":{""" +
             s""""numSeries":$numSeries,"numLabelPairs":$numPairs,""" +
             s""""chunkCount":${totals.getAs[Long]("samples")},""" +
             s""""minTime":${totals.getAs[Long]("minT")},""" +
@@ -1783,19 +1499,9 @@ class Server(spark: SparkSession, tablePath: String,
             s""""seriesCountByMetricName":${sec(byMetric)},""" +
             s""""labelValueCountByLabelName":${sec(valueCount)},""" +
             s""""memoryInBytesByLabelName":${sec(memBytes)},""" +
-            s""""seriesCountByLabelValuePair":${sec(byPair)}}}"""
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        respond(ex, 200, body.getBytes("UTF-8"))
+            s""""seriesCountByLabelValuePair":${sec(byPair)}}""")
       } finally series.unpersist()
-    } catch {
-      case e: Throwable =>
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        respond(ex, 500,
-          s"""{"status":"error","errorType":"internal","error":${
-            jsonStr(Option(e.getMessage).getOrElse("tsdb status error"))
-          }}""".getBytes("UTF-8"))
     }
-  }
 
   /** TSDB admin API — `/api/v1/admin/tsdb/delete_series` records
     * tombstones (selector + time range; reads mask immediately),
@@ -1805,42 +1511,21 @@ class Server(spark: SparkSession, tablePath: String,
     * `--web.enable-admin-api` (403 when off); both accept POST and PUT
     * (the Prometheus contract).
     */
-  private def handleAdmin(ex: HttpExchange): Unit = {
-    def jsonErr(code: Int, errorType: String, msg: String): Unit = {
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      respond(ex, code,
-        s"""{"status":"error","errorType":"$errorType","error":${jsonStr(msg)}}"""
-          .getBytes("UTF-8"))
-    }
-    try {
+  private def handleAdmin(ex: HttpExchange): Unit =
+    api(ex) { p =>
       if (!enableAdminApi)
-        return jsonErr(403, "unavailable", "admin APIs disabled")
+        throw new Status(403, "unavailable", "admin APIs disabled")
       if (ex.getRequestMethod != "POST" && ex.getRequestMethod != "PUT")
-        return jsonErr(405, "method_not_allowed", "use POST or PUT")
+        throw new Status(405, "method_not_allowed", "use POST or PUT")
       val path = ex.getRequestURI.getPath
-      // match[] repeats — parse the raw query (+ form body) by hand
-      val ctype = Option(ex.getRequestHeaders.getFirst("Content-Type"))
-        .getOrElse("")
-      val rawPairs = Option(ex.getRequestURI.getRawQuery).getOrElse("") +
-        (if (ctype.contains("application/x-www-form-urlencoded"))
-          "&" + new String(readBody(ex), "UTF-8") else "")
-      val pairs = rawPairs.split("&").toSeq.filter(_.nonEmpty)
-        .map(_.split("=", 2)).collect {
-          case Array(k, v) =>
-            java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-        }
       if (path.endsWith("/delete_series")) {
-        val matches = pairs.filter(_._1 == "match[]").map(_._2)
+        val matches = p.all("match[]")
         if (matches.isEmpty)
           throw new IllegalArgumentException(
             "delete_series requires at least one match[]")
-        def timeOr(k: String, dflt: Long): Long =
-          pairs.find(_._1 == k).map(v => math.floor(v._2.toDouble).toLong)
-            .getOrElse(dflt)
         // Prometheus defaults to all of time (minTime/maxTime)
-        val start = timeOr("start", -2208988800L)  // 1900-01-01
-        val end = timeOr("end", 32503680000L)      // 3000-01-01
+        val start = p.time("start").getOrElse(-2208988800L) // 1900-01-01
+        val end = p.time("end").getOrElse(32503680000L)     // 3000-01-01
         if (end < start)
           throw new IllegalArgumentException("end is before start")
         // the tombstone table is parquet too — concurrent admin calls
@@ -1862,7 +1547,7 @@ class Server(spark: SparkSession, tablePath: String,
         invalidateTable()
         respond(ex, 204, Array.emptyByteArray)
       } else if (path.endsWith("/snapshot")) {
-        val name = pairs.find(_._1 == "name").map(_._2)
+        val name = p.one("name")
           .getOrElse(s"graft-${System.currentTimeMillis()}")
         // hardlink walk must not race an in-flight append's _temporary
         // staging files (they'd be linked into the snapshot or vanish
@@ -1870,20 +1555,9 @@ class Server(spark: SparkSession, tablePath: String,
         appendLock.synchronized {
           graft.engine.Admin.snapshot(tablePath, name)
         }
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        respond(ex, 200,
-          s"""{"status":"success","data":{"name":${jsonStr(name)}}}"""
-            .getBytes("UTF-8"))
-      } else jsonErr(404, "bad_data", s"unknown admin path $path")
-    } catch {
-      case e @ (_: IllegalArgumentException | _: NumberFormatException) =>
-        jsonErr(400, "bad_data",
-          Option(e.getMessage).getOrElse("bad request"))
-      case e: Throwable =>
-        jsonErr(500, "internal",
-          Option(e.getMessage).getOrElse("admin error"))
+        ok(ex, s"""{"name":${jsonStr(name)}}""")
+      } else throw new Status(404, "bad_data", s"unknown admin path $path")
     }
-  }
 
   /** A downsampled tier as a PromQL-readable store view: one sample per
     * (series, window) at the window start, value = the window's
@@ -1904,17 +1578,6 @@ class Server(spark: SparkSession, tablePath: String,
     */
   private def fmtValue(v: Double): String =
     java.math.BigDecimal.valueOf(v).stripTrailingZeros.toPlainString
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def handleMetrics(ex: HttpExchange): Unit = {
     import scala.jdk.CollectionConverters._
@@ -2012,11 +1675,8 @@ class Server(spark: SparkSession, tablePath: String,
           s""""lastScrape":${jsonStr(last)},"lastError":${jsonStr(err)},""" +
           s""""labels":{},"discoveredLabels":{}}"""
     }
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    respond(ex, 200,
-      s"""{"status":"success","data":{"activeTargets":${
-        actives.mkString("[", ",", "]")},"droppedTargets":[]}}"""
-        .getBytes("UTF-8"))
+    ok(ex, s"""{"activeTargets":${actives.mkString("[", ",", "]")},""" +
+      """"droppedTargets":[]}""")
   }
 
   @volatile private var scraper: Option[Thread] = None
@@ -2070,45 +1730,29 @@ class Server(spark: SparkSession, tablePath: String,
     http.createContext("/api/v1/alerts",
       (ex: HttpExchange) => handleRules(ex))
     http.createContext("/api/v1/status/buildinfo",
-      (ex: HttpExchange) => {
-        // the probe Grafana uses to detect a Prometheus-flavored API
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        respond(ex, 200,
-          ("""{"status":"success","data":{"version":"2.53.0",""" +
-            """"application":"graft","features":{}}}""").getBytes("UTF-8"))
-      })
+      // the probe Grafana uses to detect a Prometheus-flavored API
+      (ex: HttpExchange) => ok(ex,
+        """{"version":"2.53.0","application":"graft","features":{}}"""))
     http.createContext("/api/v1/alertmanagers",
       (ex: HttpExchange) => {
         // the discovery view of the notification fan-out: the configured
         // receiver as activeAlertmanagers (Prometheus appends its POST
         // path to each discovered URL), none dropped
-        ex.getResponseHeaders.set("Content-Type", "application/json")
         val active = alertmanagerUrl.toSeq.map(u => s"""{"url":${jsonStr(
           u.stripSuffix("/") + "/api/v2/alerts")}}""").mkString(",")
-        respond(ex, 200,
-          (s"""{"status":"success","data":{"activeAlertmanagers":""" +
-            s"""[$active],"droppedAlertmanagers":[]}}""").getBytes("UTF-8"))
+        ok(ex, s"""{"activeAlertmanagers":[$active],""" +
+          """"droppedAlertmanagers":[]}""")
       })
     http.createContext("/api/v1/status/flags",
-      (ex: HttpExchange) => {
-        // the one flag clients act on is the admin-API gate
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        respond(ex, 200,
-          (s"""{"status":"success","data":{""" +
-            s""""web.enable-admin-api":"$enableAdminApi",""" +
-            s""""storage.tsdb.retention.time":"${retentionSec}s"}}""")
-            .getBytes("UTF-8"))
-      })
+      // the one flag clients act on is the admin-API gate
+      (ex: HttpExchange) => ok(ex,
+        s"""{"web.enable-admin-api":"$enableAdminApi",""" +
+          s""""storage.tsdb.retention.time":"${retentionSec}s"}"""))
     http.createContext("/api/v1/status/runtimeinfo",
-      (ex: HttpExchange) => {
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        respond(ex, 200,
-          (s"""{"status":"success","data":{""" +
-            s""""storagePath":${jsonStr(tablePath)},""" +
-            s""""reloadConfigSuccess":true,""" +
-            s""""goroutineCount":${Thread.activeCount()}}}""")
-            .getBytes("UTF-8"))
-      })
+      (ex: HttpExchange) => ok(ex,
+        s"""{"storagePath":${jsonStr(tablePath)},""" +
+          s""""reloadConfigSuccess":true,""" +
+          s""""goroutineCount":${Thread.activeCount()}}"""))
     http.createContext("/api/v1/format_query",
       (ex: HttpExchange) => handleFormatQuery(ex))
     http.createContext("/api/v1/parse_query",

@@ -877,7 +877,7 @@ class ServerSpec extends SparkSpec {
       "more than 11,000 steps are 400 bad_data; exactly 11,000 answers") {
     val table = Files.createTempDirectory("graft_srvgrid").toString +
       "/metrics"
-    val server = new Server(spark, table).start()
+    val server = new Server(spark, table, enableAdminApi = true).start()
     val base = s"http://localhost:${server.boundPort}"
     try {
       val wr = PWriteRequest(Seq(PTimeSeries(
@@ -900,6 +900,34 @@ class ServerSpec extends SparkSpec {
       badData(range("0", "-Infinity", "1"), """invalid parameter \"end\"""")
       badData(getAny(s"$base/api/v1/query?query=$q&time=NaN"),
         """invalid parameter \"time\"""")
+      // every other time parameter goes through the same parser
+      val m = "match[]=reqs"
+      for (ep <- Seq(s"series?$m&", "labels?", "label/job/values?")) {
+        val at = s"$base/api/v1/$ep"
+        badData(getAny(s"${at}start=NaN&end=100"),
+          """invalid parameter \"start\"""")
+        badData(getAny(s"${at}start=0&end=Inf"),
+          """invalid parameter \"end\"""")
+        badData(getAny(s"${at}start=0&end=-Infinity"),
+          """invalid parameter \"end\"""")
+      }
+      badData(getAny(s"$base/api/v1/query_exemplars?query=reqs&start=NaN"),
+        """invalid parameter \"start\"""")
+      badData(getAny(s"$base/api/v1/rules?time=NaN"),
+        """invalid parameter \"time\"""")
+      val (fc, fb) = getAny(s"$base/federate?$m&time=NaN")
+      assert(fc == 400 && fb.contains("""invalid parameter "time""""),
+        (fc, fb))
+      // a NaN start must not reach back to 1970: nothing is tombstoned
+      val (dc, db) = post(s"$base/api/v1/admin/tsdb/delete_series?$m" +
+        s"&start=NaN&end=${System.currentTimeMillis() / 1000}", Array.empty)
+      badData((dc, new String(db, "UTF-8")),
+        """invalid parameter \"start\"""")
+      assert(!Files.exists(java.nio.file.Paths.get(
+        graft.engine.Tombstones.path(table))))
+      assert(server.storedTable().count() == 2)
+      assert(getAny(s"$base/api/v1/series?$m&start=0&end=300")._2
+        .contains(""""job":"a""""))
       // Prometheus's resolution cap on (end − start) / step
       val tooMany = "exceeded maximum resolution of 11,000 points per " +
         "timeseries. Try decreasing the query resolution (?step=XX)"
@@ -913,6 +941,65 @@ class ServerSpec extends SparkSpec {
         okBody.contains("""[499,"4"]""") && !okBody.contains("[500,"),
         okBody.take(200))
       assert(range("0", "22000", "2")._1 == 200)
+    } finally server.stop()
+  }
+
+  test("serve: one request edge — form bodies and encoded keys on every " +
+      "endpoint, one decode, body before URL; failures map by one rule") {
+    val table = Files.createTempDirectory("graft_srvedge").toString +
+      "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    def enc(v: String): String = java.net.URLEncoder.encode(v, "UTF-8")
+    def form(url: String, body: String): (Int, String) = {
+      val (c, b) = post(url, body.getBytes("UTF-8"),
+        "application/x-www-form-urlencoded")
+      (c, new String(b, "UTF-8"))
+    }
+    try {
+      val wr = PWriteRequest(Seq(
+        PTimeSeries(Seq(PLabel("__name__", "reqs"), PLabel("job", "a")),
+          Seq(PSample(1.0, 100000L))),
+        PTimeSeries(Seq(PLabel("__name__", "mem"), PLabel("job", "b")),
+          Seq(PSample(5.0, 100000L)))))
+      assert(post(s"$base/write",
+        Prompb.snappyCompress(Prompb.encodeWriteRequest(wr)))._1 == 200)
+      // a form-encoded POST answers exactly as the GET
+      val args = s"match[]=${enc("reqs")}&start=0&end=200"
+      for (ep <- Seq("series", "labels")) {
+        val (gc, gb) = getAny(s"$base/api/v1/$ep?$args")
+        assert(gc == 200 && gb.contains("\"job\""), gb)
+        assert(form(s"$base/api/v1/$ep", args) == (gc, gb))
+      }
+      // the URL-encoded spelling of match[] is the same key
+      val (sc, sb) = getAny(
+        s"$base/api/v1/series?match%5B%5D=reqs&start=0&end=200")
+      assert(sc == 200 && sb.contains(""""job":"a"""") && !sb.contains("mem"))
+      val (fc, fb) = getAny(s"$base/federate?match%5B%5D=reqs&time=150")
+      assert(fc == 200 && fb.contains("""reqs{job="a"} 1 100000"""), fb)
+      // PromQL holding '+' and '%' is decoded exactly once:
+      // (1 + 10) % 7 = 4 (a second decode turns '+' into a space)
+      val mod = enc("(reqs + 10) % 7")
+      assert(mod.contains("%2B") && mod.contains("%25"))
+      val (mc, mb) = getAny(s"$base/api/v1/query_range?query=$mod" +
+        "&start=100&end=100&step=1")
+      assert(mc == 200 && mb.contains("""[100,"4"]"""), mb)
+      // query=a in the URL, query=b in the body: b is evaluated
+      val (bc, bb) = form(s"$base/api/v1/query?query=${enc("reqs")}" +
+        "&time=150", s"query=${enc("mem")}")
+      assert(bc == 200 && bb.contains(""""value":[150,"5"]""") &&
+        !bb.contains(""""job":"a""""), bb)
+      // a non-numeric limit is the client's error, not a 500
+      val (lc, lb) = getAny(s"$base/api/v1/status/tsdb?limit=abc")
+      assert(lc == 400 && lb.contains(""""errorType":"bad_data""""), lb)
+      // a failure that is no IllegalArgumentException still answers:
+      // the JSON envelope with 500, not a dropped connection
+      val deep = "(" * 100000 + "1" + ")" * 100000
+      val (dc, db) = form(s"$base/api/v1/format_query", s"query=${enc(deep)}")
+      assert(dc == 500 && db.contains(""""status":"error"""") &&
+        db.contains(""""errorType":"internal""""), (dc, db.take(200)))
+      val (oc, ob) = getAny(s"$base/api/v1/format_query?query=${enc("1+1")}")
+      assert(oc == 200 && ob.startsWith("""{"status":"success","data":"""), ob)
     } finally server.stop()
   }
 

@@ -25,6 +25,11 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def is_null(v):
+    """NULL as pandas materializes it: None or a float NaN."""
+    return v is None or (isinstance(v, float) and math.isnan(v))
+
+
 def cells_equal(a, b):
     if isinstance(a, float) or isinstance(b, float):
         if a is None or b is None or (isinstance(a, float) and math.isnan(a)):
@@ -74,7 +79,8 @@ def main():
         for cidx, c in enumerate(want.columns):
             wv, gv = want[c].tolist(), got[c].tolist()
             for i in range(len(wv)):
-                if wv[i] != gv[i]:
+                # NaN != NaN: a cell NULL on both sides is exact
+                if wv[i] != gv[i] and not (is_null(wv[i]) and is_null(gv[i])):
                     exact = False
                 if not cells_equal(wv[i], gv[i]):
                     if bad < 3:
