@@ -5354,11 +5354,14 @@ object SparkEntry {
       }
       val idxDir = Paths.get(s"$base/idx")
       JFiles.createDirectories(idxDir)
-      JFiles.list(Paths.get(idxTemplate)).toArray.map(_.toString).foreach {
-        f => JFiles.copy(Paths.get(f),
-          idxDir.resolve(Paths.get(f).getFileName),
-          java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-      }
+      // a flat copy: the index is one directory of files, no partitions
+      val listing = JFiles.list(Paths.get(idxTemplate))
+      val files = try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        finally listing.close()
+      require(files.forall(JFiles.isRegularFile(_)),
+        s"hash-index template $idxTemplate holds a directory")
+      files.foreach(f => JFiles.copy(f, idxDir.resolve(f.getFileName),
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES))
       val batches = Seq(
         d.filter(col("doc_id") % 6 === 0)
           .select((col("doc_id") + 80000).as("doc_id"),

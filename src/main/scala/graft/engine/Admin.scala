@@ -1,11 +1,13 @@
 package graft.engine
 
-/** Partition-level store administration: retention sweeps and snapshots
-  * (the rest of the Prometheus TSDB admin surface beside
-  * [[Tombstones]]).
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+
+/** Partition-level store administration: retention sweeps, snapshots and
+  * commit-file merges (the rest of the Prometheus TSDB admin surface
+  * beside [[Tombstones]]).
   *
-  * Both are PURE FILE OPERATIONS on the date-partitioned layout — no
-  * Spark job, no scan:
+  * All three are PURE FILE OPERATIONS on the date-partitioned layout —
+  * no Spark job, no scan:
   *  - retention drops a `date=` directory only when EVERY sample in it
   *    is past the horizon (partition end ≤ now − retention), exactly
   *    Prometheus's block-granularity rule — at 100 TB a sweep is a
@@ -16,20 +18,28 @@ package graft.engine
   *    filesystem refuses links), Prometheus's snapshot trick: O(files)
   *    metadata writes, zero bytes copied, and immutable-once-written
   *    parquet makes the shared blocks safe (appends create NEW files;
-  *    clean_tombstones rewrites into new files and unlinks, never
-  *    mutates in place).
+  *    clean_tombstones and merges write new files and unlink, never
+  *    mutate in place);
+  *  - a merge ([[mergeCommitFiles]]) concatenates small commit files of
+  *    one `date=` directory by copying their row groups byte for byte.
   */
 object Admin {
 
   import java.nio.file.{Files, Path, Paths}
+  import scala.jdk.CollectionConverters._
 
   case class Sweep(droppedDates: Long, keptDates: Long)
+
+  /** The entries of `dir`, with the directory stream closed. */
+  private def entries(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toVector finally s.close()
+  }
 
   private def dateDirs(tablePath: String): Seq[(java.time.LocalDate, Path)] = {
     val root = Paths.get(tablePath)
     if (!Files.isDirectory(root)) return Nil
-    import scala.jdk.CollectionConverters._
-    Files.list(root).iterator().asScala.toSeq
+    entries(root)
       .filter(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith("date="))
       .flatMap { p =>
@@ -67,9 +77,9 @@ object Admin {
     val dest = Paths.get(tablePath + "_snapshots", name)
     require(!Files.exists(dest), s"snapshot '$name' already exists")
     Files.createDirectories(dest)
-    import scala.jdk.CollectionConverters._
     var linked = 0L
-    Files.walk(root).iterator().asScala
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
       .filter(p => Files.isRegularFile(p) &&
         !p.getFileName.toString.startsWith("."))
       .foreach { p =>
@@ -82,12 +92,172 @@ object Admin {
           Files.copy(p, target) }
         linked += 1
       }
+    finally walk.close()
     linked
   }
 
-  private def rmTree(p: Path): Unit =
+  private[engine] def rmTree(p: Path): Unit =
     if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      val walk = Files.walk(p)
+      val all = try walk.iterator().asScala.toVector finally walk.close()
+      all.reverseIterator.foreach(Files.delete)
     }
+
+  // ------------------------------------------------------------ merges
+
+  /** Files a merge concatenates: four of one tier make one of the next.
+    * A fan-in of 4 copies each row group at most three times on its way
+    * to [[MergeCapRowGroups]] (log₄ 64), while a directory never holds
+    * more than three files per tier. */
+  val MergeFanIn = 4
+
+  /** Row groups at which a file stops merging: 64 commit files' worth.
+    * It bounds the copies per row group (above) and the merged footer,
+    * which every read of the file parses; larger files are the
+    * compactor's ([[Rollup]]), which re-sorts instead of concatenating. */
+  val MergeCapRowGroups = 64
+
+  /** Merged files carry their row-group count in their name, so the
+    * tiers are decided from a listing, without opening a footer. Any
+    * other file counts as one row group: a commit writes one per POST. */
+  private val MergedName = """merged-rg(\d+)-.*""".r
+
+  private def rowGroups(f: FileStatus): Int = f.getPath.getName match {
+    case MergedName(n) => n.toInt
+    case _ => 1
+  }
+
+  /** ⌊log₄ rowGroups⌋: a commit file is tier 0, four of them tier 1. */
+  private def tier(rowGroups: Int): Int =
+    (31 - Integer.numberOfLeadingZeros(rowGroups)) / 2
+
+  /** The parquet files of one `date=` directory that a read lists:
+    * names starting with `.` or `_` are skipped, as Spark's listing and
+    * [[snapshot]] skip them. Also the per-date byte count
+    * [[Rollup.compactDates]] sizes its rewrite from. */
+  def dataFiles(fs: FileSystem, dir: HPath): Seq[FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && n.endsWith(".parquet") &&
+        !n.startsWith(".") && !n.startsWith("_")
+    }
+
+  /** Merge the small files of one `date=` directory until no tier below
+    * [[MergeCapRowGroups]] holds [[MergeFanIn]] files. Each merge takes
+    * the four newest files of the lowest full tier and concatenates
+    * their row groups, in commit order, into one file: the bytes of each
+    * column chunk, its statistics, page indexes and bloom filter are
+    * copied, nothing is decoded, and the first input's key-value
+    * metadata (Spark's row schema) is kept, so a read infers the same
+    * schema and prunes the same row groups. Only inputs with one parquet
+    * schema are merged; a tier whose newest four disagree waits for more
+    * files.
+    *
+    * The merged file is written under a `.`-prefixed name, which no
+    * listing returns, then `swap` runs the rename into place and the
+    * deletion of the inputs: the caller wraps them in whatever lock its
+    * listings take, so no listing sees both. A failure before the swap
+    * deletes the hidden file and leaves every input; a crash between the
+    * rename and the deletes leaves duplicate rows, never lost ones (the
+    * at-least-once contract [[Rollup.dedupLatest]] resolves). Returns
+    * the number of merges that landed.
+    *
+    * All I/O goes through `fs`, so checksum sidecars (`.crc`) are
+    * written, renamed and deleted with their files.
+    */
+  def mergeCommitFiles(fs: FileSystem, dir: HPath,
+                       swap: (() => Unit) => Unit = f => f()): Int = {
+    @annotation.tailrec
+    def loop(landed: Int): Int = {
+      val tiers = dataFiles(fs, dir).filter(rowGroups(_) < MergeCapRowGroups)
+        .groupBy(f => tier(rowGroups(f))).toSeq.sortBy(_._1)
+      val merged = tiers.iterator.filter(_._2.size >= MergeFanIn)
+        .exists { case (_, files) =>
+          val newest = files.sortBy(f => (f.getModificationTime,
+            f.getPath.getName)).takeRight(MergeFanIn)
+          concat(fs, dir, newest, swap)
+        }
+      if (merged) loop(landed + 1) else landed
+    }
+    loop(0)
+  }
+
+  /** Whether a read failed because a file its plan listed was deleted
+    * under it, as a merge deletes its inputs: Spark reports a file gone
+    * before it was opened with a `FileNotFoundException`, and one gone
+    * after its footer was read with the `NoSuchFileException` of the
+    * local filesystem's vectored read, which opens the file again by
+    * name. Either way a re-planned read lists the merged file instead. */
+  def vanishedFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.FileNotFoundException |
+           _: java.nio.file.NoSuchFileException => true
+      case _ => false
+    }
+
+  /** Concatenate `inputs` into one new file of `dir` if they share one
+    * parquet schema; whether the merge landed. */
+  private def concat(fs: FileSystem, dir: HPath, inputs: Seq[FileStatus],
+                     swap: (() => Unit) => Unit): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.util.CompressionConverter.TransParquetFileReader
+    val conf = fs.getConf
+    val readers = Vector.newBuilder[TransParquetFileReader]
+    try {
+      inputs.foreach(f => readers += new TransParquetFileReader(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build()))
+      val rs = readers.result()
+      val first = rs.head.getFooter.getFileMetaData
+      val schema = first.getSchema
+      if (!rs.forall(_.getFooter.getFileMetaData.getSchema == schema)) false
+      else {
+        val groups = rs.map(_.getFooter.getBlocks.size).sum
+        val name = s"merged-rg$groups-${java.util.UUID.randomUUID()}.parquet"
+        val hidden = new HPath(dir, "." + name)
+        try {
+          val w = new ParquetFileWriter(new FsOutput(fs, hidden), schema,
+            ParquetFileWriter.Mode.CREATE, 0L, 0)
+          try {
+            w.start()
+            rs.foreach { r =>
+              r.getFooter.getBlocks.asScala.foreach { b =>
+                w.startBlock(b.getRowCount)
+                b.getColumns.asScala.foreach { c =>
+                  w.appendColumnChunk(
+                    schema.getColumnDescription(c.getPath.toArray),
+                    r.getStream, c, r.readBloomFilter(c),
+                    r.readColumnIndex(c), r.readOffsetIndex(c))
+                }
+                w.endBlock()
+              }
+            }
+            w.end(first.getKeyValueMetaData)
+          } finally w.close()
+        } catch {
+          case e: Throwable => fs.delete(hidden, false); throw e
+        }
+        swap { () =>
+          if (!fs.rename(hidden, new HPath(dir, name)))
+            throw new java.io.IOException(s"cannot rename $hidden into place")
+          inputs.foreach(f => fs.delete(f.getPath, false))
+        }
+        true
+      }
+    } finally readers.result().foreach(_.close())
+  }
+
+  /** A parquet output file created through `fs` (parquet's own
+    * `HadoopOutputFile` resolves the filesystem from the path). */
+  private final class FsOutput(fs: FileSystem, path: HPath)
+      extends org.apache.parquet.io.OutputFile {
+    import org.apache.parquet.hadoop.util.HadoopStreams
+    def create(blockSizeHint: Long) = HadoopStreams.wrap(fs.create(path, false))
+    def createOrOverwrite(blockSizeHint: Long) =
+      HadoopStreams.wrap(fs.create(path, true))
+    def supportsBlockSize = false
+    def defaultBlockSize = 0L
+    override def getPath: String = path.toString
+  }
 }

@@ -17,6 +17,9 @@ import org.apache.spark.sql.functions._
   * At scale: the single shuffle is on (t, name, tags) — high-cardinality and
   * uniform (series id × time bucket), so it spreads evenly across executors;
   * the matcher + time filters sit below it and reach the parquet scan.
+  * Every write batch is its own (name, tags, ts)-sorted row group, also
+  * once commit files are concatenated ([[Admin.mergeCommitFiles]]), so
+  * the scan skips row groups by their `name`/`ts` statistics.
   */
 object ReadPipeline {
 

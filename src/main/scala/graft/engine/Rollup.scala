@@ -197,9 +197,9 @@ object Rollup {
     * `ts` = bucket start; per-date partitioning and in-partition
     * (name, tags, ts) ordering are preserved so reads keep pruning.
     */
-  /** Rewrite width from facts the scan's file listing already produced
+  /** Rewrite width from facts the file listing already produced
     * (optimization guide §2: partitioning from data size, not a static
-    * constant): the input's ON-DISK bytes bound per-task data volume
+    * constant): the input's ON-DISK `bytes` bound per-task data volume
     * (post-rollup output never exceeds its input, so no counting pass is
     * needed), and the DATE-directory count bounds per-task output-file
     * juggling — a dynamic-partition write funnelled through one task
@@ -210,16 +210,29 @@ object Rollup {
     * stores) additionally skips RangePartitioner's bound-sampling job; a
     * 100 TB store saturates the session cap via the bytes term.
     */
-  private def rewriteWidth(df: org.apache.spark.sql.DataFrame,
-                           dateDirs: Int): Int = {
-    val spark = df.sparkSession
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+  private def rewriteWidth(spark: org.apache.spark.sql.SparkSession,
+                           bytes: BigInt, dateDirs: Int): Int = {
     val perTask = BigInt(spark.conf
       .getOption("spark.graft.compact.bytesPerTask")
       .map(_.toLong).getOrElse(64L << 20))
     val cap = BigInt(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     (((bytes / perTask + 1) max BigInt((dateDirs + 1) / 2))
       min cap max BigInt(1)).toInt
+  }
+
+  /** [[compactDates]]' rewrite width: the bytes of the selected `date=`
+    * directories, from the per-date listing the commit-file merge uses
+    * ([[Admin.dataFiles]]). A path-based read's plan statistics would
+    * report the whole table's bytes, since partition pruning only
+    * applies when the scan is planned. */
+  private[graft] def datesWidth(spark: org.apache.spark.sql.SparkSession,
+                                tablePath: String, dates: Seq[String]): Int = {
+    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ds = dates.distinct
+    val bytes = ds.map(d => Admin.dataFiles(fs,
+      new org.apache.hadoop.fs.Path(root, s"date=$d")).map(_.getLen).sum).sum
+    rewriteWidth(spark, BigInt(bytes), ds.length)
   }
 
   /** date= partition directories under a store path (one driver-side
@@ -249,7 +262,9 @@ object Rollup {
     // rationale; files per date hold disjoint (name, tags) ranges so
     // row-group skipping survives. Width from the store's on-disk size.
     rolled
-      .repartitionByRange(rewriteWidth(store, dateDirCount(spark, tablePath)),
+      .repartitionByRange(rewriteWidth(spark,
+          store.queryExecution.optimizedPlan.stats.sizeInBytes,
+          dateDirCount(spark, tablePath)),
         col("date"), col("name"), col("tags"))
       .sortWithinPartitions(col("name"), col("tags"), col("ts"))
       .write.mode("overwrite").partitionBy("date").parquet(staging)
@@ -285,10 +300,8 @@ object Rollup {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try
       rolled
-        // width from the SELECTED partitions' on-disk size (partition
-        // pruning has already shrunk the scan, so the stats are the
-        // pruned bytes, not the whole table's) and date count
-        .repartitionByRange(rewriteWidth(selected, dates.length),
+        // width from the SELECTED partitions' on-disk size and count
+        .repartitionByRange(datesWidth(spark, tablePath, dates),
           col("date"), col("name"), col("tags"))
         .sortWithinPartitions(col("name"), col("tags"), col("ts"))
         .write.mode("overwrite").partitionBy("date").parquet(tablePath)

@@ -127,7 +127,7 @@ object Tombstones {
       // directory cannot cross mounts).
       val rewrite = affectedDates.filterNot(emptyDates.contains)
       val scratch = tablePath + "_clean_tmp"
-      rmTree(java.nio.file.Paths.get(scratch))
+      Admin.rmTree(java.nio.file.Paths.get(scratch))
       // the affected-dates job already counted the survivors, so the
       // rewrite width derives from the DATA instead of the static
       // session width (WritePipeline.rangeWidth: an admin-API-sized
@@ -148,24 +148,17 @@ object Tombstones {
           .sortWithinPartitions(col("name"), col("tags"), col("ts"))
           .write.mode(SaveMode.Append).partitionBy("date").parquet(scratch)
       affectedDates.foreach { d =>
-        rmTree(java.nio.file.Paths.get(tablePath, s"date=$d"))
+        Admin.rmTree(java.nio.file.Paths.get(tablePath, s"date=$d"))
       }
       rewrite.foreach { d =>
         java.nio.file.Files.move(
           java.nio.file.Paths.get(scratch, s"date=$d"),
           java.nio.file.Paths.get(tablePath, s"date=$d"))
       }
-      rmTree(java.nio.file.Paths.get(scratch))
+      Admin.rmTree(java.nio.file.Paths.get(scratch))
     }
-    rmTree(java.nio.file.Paths.get(path(tablePath)))
+    Admin.rmTree(java.nio.file.Paths.get(path(tablePath)))
     CleanStats(affectedDates.length - emptyDates.length,
       emptyDates.length, stones.size)
   }
-
-  private def rmTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
 }

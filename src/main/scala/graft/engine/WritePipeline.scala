@@ -67,7 +67,10 @@ object WritePipeline {
     * sorted within partitions by (name, tags, ts) (≙ MergeTree primary key)
     * so parquet row-group min/max stats on `name`/`ts` prune like the
     * sparse index does. One atomic append per micro-batch ≙ one tx per
-    * write request (reference: clickhouse/client.go:121-150).
+    * write request (reference: clickhouse/client.go:121-150). A
+    * remote-write-sized batch is its own sorted row group per date; the
+    * server concatenates such files by row group
+    * ([[Admin.mergeCommitFiles]]), the small-part merge MergeTree runs.
     *
     * The exchange is a RANGE partition over (date, name, tags), NOT a
     * hash on date alone: hashing date funnels each day's entire batch
@@ -117,11 +120,26 @@ object WritePipeline {
   }
 
   /** Each partition (name, tags, ts)-sorted into one file per date it
-    * holds: the write [[append]] and [[appendGroup]] share, so a group
-    * leaves the files its members' appends would. */
+    * holds, one row group per file at remote-write sizes: the write
+    * [[append]] and [[appendGroup]] share, so a group leaves the files
+    * its members' appends would, and each member's rows stay its own
+    * sorted row group when [[Admin.mergeCommitFiles]] concatenates the
+    * files. */
   private def writeSorted(parted: DataFrame, path: String): Unit =
     parted.sortWithinPartitions(col("name"), col("tags"), col("ts"))
       .write.mode("append").partitionBy("date").parquet(path)
+
+  /** The `date` partitions [[toMetricRows]] puts `samples` in: its
+    * `to_date(timestamp_seconds(ms / 1000))`, in the session time zone.
+    * The server merges the commit files of exactly these directories
+    * after a commit. */
+  def partitionDates(spark: SparkSession,
+                     samples: Iterable[Schema.Sample]): Set[java.time.LocalDate] = {
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    samples.iterator.map(s => java.time.Instant
+      .ofEpochSecond((s.timestampMs / 1000.0).toLong).atZone(zone)
+      .toLocalDate).toSet
+  }
 
   /** Whether a batch of `rows` samples commits through one task (its
     * [[rangeWidth]] is 1, as for every remote-write-sized batch): only
@@ -140,11 +158,12 @@ object WritePipeline {
     *
     * Each batch must be [[groupable]] and becomes its own RDD
     * partition, so the group is one narrow job of one task per batch and
-    * each batch still lands in its own sorted file per date. Batches do
-    * not share files on purpose: a merged file mixes shards of several
-    * writers, which widens the `tags` dictionary's bit-packed indexes
-    * and breaks each series' run, costing more bytes per sample than the
-    * footers it saves. The job evaluates `current_timestamp()` once, so
+    * each batch still lands in its own sorted row group per date (its own
+    * file, until [[Admin.mergeCommitFiles]] concatenates files without
+    * touching their row groups). Batches do not share row groups on
+    * purpose: one that mixes shards of several writers widens the `tags`
+    * dictionary's bit-packed indexes and breaks each series' run,
+    * costing more bytes per sample than the footers it saves. The job evaluates `current_timestamp()` once, so
     * the batches share `updated`. A lone batch commits through its own
     * [[append]], as before groups: a wider one keeps its data-derived
     * range split, and a narrow one reuses its frame instead of shipping

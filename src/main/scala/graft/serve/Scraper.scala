@@ -37,6 +37,11 @@ object Scraper {
     } finally conn.disconnect()
   }
 
+  /** One scrape's decoded rows: samples for the table and inline
+    * exemplars for its `_exemplars` side table. */
+  final case class Scraped(samples: Seq[graft.model.Schema.Sample],
+                           exemplars: Seq[graft.codec.WriteWire.PExemplarSeries])
+
   /** One scrape: fetch, parse, append. Returns the sample count.
     * `openMetrics = true` negotiates the OM render (Accept header) and
     * parses under OM rules — seconds timestamps, required `# EOF`;
@@ -45,19 +50,28 @@ object Scraper {
     * context serves on /api/v1/query_exemplars like every push
     * protocol's.
     */
-  /** @param ctZeroGate the receiver's CT-zero admission rule
+  def scrapeInto(spark: SparkSession, url: String, tablePath: String,
+                 nowMs: Long = System.currentTimeMillis(),
+                 openMetrics: Boolean = false,
+                 ctZeroGate: Option[(Seq[graft.codec.Prompb.PTimeSeries],
+                     Seq[graft.codec.Prompb.PTimeSeries]) =>
+                     Seq[graft.codec.Prompb.PTimeSeries]] = None): Long =
+    append(spark, scrape(url, nowMs, openMetrics, ctZeroGate), tablePath)
+
+  /** Fetch and parse one page, writing nothing (the first half of
+    * [[scrapeInto]]).
+    * @param ctZeroGate the receiver's CT-zero admission rule
     *   (candidates, ingesting) → admitted zeros — the Server passes its
     *   no-earlier-sample filter here so a scraped OM page's `_created`
     *   companions inject synthetic zeros exactly like the /write text
     *   path (and stop ingesting as ordinary samples). None = historical
     *   behavior. OM pages only; classic 0.0.4 has no `_created`.
     */
-  def scrapeInto(spark: SparkSession, url: String, tablePath: String,
-                 nowMs: Long = System.currentTimeMillis(),
-                 openMetrics: Boolean = false,
-                 ctZeroGate: Option[(Seq[graft.codec.Prompb.PTimeSeries],
-                     Seq[graft.codec.Prompb.PTimeSeries]) =>
-                     Seq[graft.codec.Prompb.PTimeSeries]] = None): Long = {
+  def scrape(url: String, nowMs: Long = System.currentTimeMillis(),
+             openMetrics: Boolean = false,
+             ctZeroGate: Option[(Seq[graft.codec.Prompb.PTimeSeries],
+                 Seq[graft.codec.Prompb.PTimeSeries]) =>
+                 Seq[graft.codec.Prompb.PTimeSeries]] = None): Scraped = {
     // CONTENT NEGOTIATION, the Prometheus scrape discipline:
     // `openMetrics` states the PREFERENCE (the Accept header, OM
     // first with classic as fallback — the stock scraper's spelling);
@@ -98,6 +112,14 @@ object Scraper {
       graft.model.Schema.Sample(labels.getOrElse("__name__", ""),
         labels, s.value, s.timestampMs)
     }
+    Scraped(samples, exemplars)
+  }
+
+  /** Append a [[scrape]]'s rows (the second half of [[scrapeInto]]);
+    * returns the sample count. The caller serializes it with every other
+    * commit to `tablePath`. */
+  def append(spark: SparkSession, scraped: Scraped, tablePath: String): Long = {
+    val Scraped(samples, exemplars) = scraped
     import spark.implicits._
     if (samples.nonEmpty) {
       graft.engine.WritePipeline.append(

@@ -145,11 +145,23 @@ class Server(spark: SparkSession, tablePath: String,
     * when concurrent POSTs shared a commit. */
   private val parquetCommits = new AtomicLong(0)
 
+  /** Commit-file merges that landed (`graft_parquet_merges_total`). */
+  private val parquetMerges = new AtomicLong(0)
+
+  /** Reads re-planned because a file their plan listed had vanished
+    * (`graft_read_retries_total`). */
+  private val readRetries = new AtomicLong(0)
+
+  /** The `date` partitions the current /write group wrote into; filled
+    * by its writes and drained by its settle, both under [[appendLock]]. */
+  private val groupDates = scala.collection.mutable.Set[java.time.LocalDate]()
+
   /** The /write committer. Each POST builds its samples outside the
     * lock and submits them; whichever POST takes [[appendLock]] commits
     * every queued POST's rows in ONE write job (each POST still in its
     * own file per date, as sequential appends would leave them), then
-    * runs one retention sweep and one [[invalidateTable]], in that
+    * runs one retention sweep, the commit-file merges of the dates it
+    * wrote ([[mergeCommitted]]) and one [[invalidateTable]], in that
     * order, before any member is answered. A POST wider than one write
     * task commits alone. When the shared job fails, each POST is
     * committed again alone, so a POST whose own samples fail the write
@@ -167,6 +179,8 @@ class Server(spark: SparkSession, tablePath: String,
     write = { members =>
       WritePipeline.appendGroup(spark, members, tablePath)
       parquetCommits.incrementAndGet()
+      members.foreach(b =>
+        groupDates ++= WritePipeline.partitionDates(spark, b.samples))
     },
     alone = b => !WritePipeline.groupable(spark, b.samples.size.toLong),
     settle = () =>
@@ -185,10 +199,57 @@ class Server(spark: SparkSession, tablePath: String,
               graft.engine.Admin.enforceRetention(p, retentionSec, now)
           }
         }
-      } finally invalidateTable())
+        mergeCommitted(groupDates)
+      } finally { groupDates.clear(); invalidateTable() })
 
   /** Queued /write members not yet drained into a commit. */
   private[graft] def queuedWrites: Int = committer.queued
+
+  /** Concatenate the small commit files of each of `dates`' `date=`
+    * directories ([[graft.engine.Admin.mergeCommitFiles]]). Each merge
+    * renames its file into place and deletes its inputs under this
+    * Server's monitor, the one [[storedTable]] lists under, so no cached
+    * relation lists both; one listed before a merge re-plans through
+    * [[freshRead]]. A failed merge leaves its inputs and is logged, not
+    * raised: the commit it follows has landed. Caller holds
+    * [[appendLock]]. The side tables are not merged.
+    */
+  private def mergeCommitted(dates: Iterable[java.time.LocalDate]): Unit = {
+    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    dates.foreach { d =>
+      try graft.engine.Admin.mergeCommitFiles(fs,
+        new org.apache.hadoop.fs.Path(root, s"date=$d"),
+        swap = f => { synchronized(f()); parquetMerges.incrementAndGet() })
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] merge of date=$d failed: $e") }
+    }
+  }
+
+  /** Attempts [[freshRead]] makes: a read planned before one group's
+    * merges can lose a file to each of them, one per tier. */
+  private val ReadAttempts = 4
+
+  /** Evaluate a read of the main table, re-planning it against a fresh
+    * listing when a file its cached relation listed has been deleted
+    * since (a merge, `clean_tombstones`; see
+    * [[graft.engine.Admin.vanishedFile]]). Missing files are never
+    * ignored (`spark.sql.files.ignoreMissingFiles` would drop their rows
+    * silently); after [[ReadAttempts]] the failure stands.
+    */
+  private def freshRead[A](read: => A): A = {
+    var attempt = 1
+    var out: Option[A] = None
+    while (out.isEmpty)
+      try out = Some(read)
+      catch { case e: Exception if attempt < ReadAttempts &&
+                graft.engine.Admin.vanishedFile(e) =>
+        attempt += 1
+        readRetries.incrementAndGet()
+        invalidateTable()
+      }
+    out.get
+  }
 
   private[graft] def storedTable(): DataFrame = synchronized {
     val slot = cachedTable.get
@@ -890,7 +951,7 @@ class Server(spark: SparkSession, tablePath: String,
       // remote-read semantic; day-aligned queries forward stored bytes
       // verbatim), as opposed to the default aggregating read below
       if (params.one("source").contains("chunks")) readChunkTier(ex, rr, params)
-      else readStore(ex, rr, params)
+      else freshRead(readStore(ex, rr, params))
     }
 
   private def readChunkTier(ex: HttpExchange, rr: Prompb.PReadRequest,
@@ -1019,7 +1080,7 @@ class Server(spark: SparkSession, tablePath: String,
     * client's fault: 400 with errorType=bad_data, per the API spec.
     */
   private def handleQueryRange(ex: HttpExchange): Unit =
-    api(ex) { p =>
+    api(ex) { p => freshRead {
       val query = p.need("query")
       val start = p.needTime("start")
       val end = p.needTime("end")
@@ -1085,14 +1146,14 @@ class Server(spark: SparkSession, tablePath: String,
         }
       ok(ex, s"""{"resultType":"matrix","result":${
         series.mkString("[", ",", "]")}}""")
-    }
+    }}
 
   /** `GET /api/v1/query?query=…&time=…` — the instant query: one grid
     * step at `time`, resultType "vector". A thin wrapper over the same
     * evaluator as query_range (start = end = time, step 1).
     */
   private def handleInstantQuery(ex: HttpExchange): Unit =
-    api(ex) { p =>
+    api(ex) { p => freshRead {
       val t = p.needTime("time")
       val lookback = p.lookback
       // ?slice= opts into skew-split evaluation, same as query_range
@@ -1114,7 +1175,7 @@ class Server(spark: SparkSession, tablePath: String,
           jsonStr(fmtValue(r.getAs[Double]("value")))}]}"""
       }.mkString("[", ",", "]")
       ok(ex, s"""{"resultType":"vector","result":$out}""")
-    }
+    }}
 
   /** Metadata endpoints — /api/v1/labels, /api/v1/label/<n>/values,
     * /api/v1/series: what a Grafana datasource calls to populate
@@ -1124,7 +1185,7 @@ class Server(spark: SparkSession, tablePath: String,
     * (the series endpoint additionally enforces the series budget).
     */
   private def handleMeta(ex: HttpExchange): Unit =
-    api(ex) { p =>
+    api(ex) { p => freshRead {
       import org.apache.spark.sql.functions._
       val path = ex.getRequestURI.getPath
       // match[] may repeat: the selectors union
@@ -1182,7 +1243,7 @@ class Server(spark: SparkSession, tablePath: String,
             .sortBy(_.mkString(",")).map(labelsJson).mkString("[", ",", "]")
         } else throw new IllegalArgumentException(s"unknown path $path")
       ok(ex, data)
-    }
+    }}
 
   /** `GET /api/v1/format_query?query=…` — parse + pretty-print (the
     * canonical, fully parenthesized form); a parse error is 400
@@ -1278,7 +1339,7 @@ class Server(spark: SparkSession, tablePath: String,
     * .alertStatesAt]] — deterministic for tests, live for dashboards.
     */
   private def handleRules(ex: HttpExchange): Unit =
-    api(ex) { p =>
+    api(ex) { p => freshRead {
       val atSec = p.time("time").getOrElse(System.currentTimeMillis() / 1000L)
       val lookback = p.lookback
       val alertsOnly = ex.getRequestURI.getPath.endsWith("/alerts")
@@ -1351,7 +1412,7 @@ class Server(spark: SparkSession, tablePath: String,
           s"""{"groups":${gs.mkString("[", ",", "]")}}"""
         }
       ok(ex, data)
-    }
+    }}
 
   /** `GET /federate?match[]=…&time=…` — hierarchical federation: the
     * latest sample (value + ITS OWN timestamp, ms) of every series
@@ -1366,7 +1427,7 @@ class Server(spark: SparkSession, tablePath: String,
     * series budget rides in-plan (`limit(maxSeries+1)` before collect).
     */
   private def handleFederate(ex: HttpExchange): Unit =
-    plain(ex, form = true) { p =>
+    plain(ex, form = true) { p => freshRead {
       import org.apache.spark.sql.functions._
       val matches = p.all("match[]")
       if (matches.isEmpty)
@@ -1428,7 +1489,7 @@ class Server(spark: SparkSession, tablePath: String,
         if (om) "application/openmetrics-text; version=1.0.0; charset=utf-8"
         else "text/plain; version=0.0.4; charset=utf-8")
       respond(ex, 200, sb.toString.getBytes("UTF-8"))
-    }
+    }}
 
   /** `GET /api/v1/status/tsdb` — cardinality statistics (what the
     * Prometheus UI's TSDB-status page and cardinality dashboards read):
@@ -1444,7 +1505,7 @@ class Server(spark: SparkSession, tablePath: String,
     * the cut is deterministic.
     */
   private def handleStatusTsdb(ex: HttpExchange): Unit =
-    api(ex) { p =>
+    api(ex) { p => freshRead {
       import org.apache.spark.sql.functions._
       val topN = p.one("limit").map(_.toInt).getOrElse(10)
       val store = storedTable()
@@ -1501,7 +1562,7 @@ class Server(spark: SparkSession, tablePath: String,
             s""""memoryInBytesByLabelName":${sec(memBytes)},""" +
             s""""seriesCountByLabelValuePair":${sec(byPair)}}""")
       } finally series.unpersist()
-    }
+    }}
 
   /** TSDB admin API — `/api/v1/admin/tsdb/delete_series` records
     * tombstones (selector + time range; reads mask immediately),
@@ -1587,7 +1648,9 @@ class Server(spark: SparkSession, tablePath: String,
           .map { case (k, v) => ("sent_samples_total", Map("remote" -> k), v.get()) } ++
           failed.asScala.toSeq.sorted(Ordering.by((x: (String, AtomicLong)) => x._1))
             .map { case (k, v) => ("failed_samples_total", Map("remote" -> k), v.get()) }) :+
-        ("graft_parquet_commits_total", Map.empty[String, String], parquetCommits.get())
+        ("graft_parquet_commits_total", Map.empty[String, String], parquetCommits.get()) :+
+        ("graft_parquet_merges_total", Map.empty[String, String], parquetMerges.get()) :+
+        ("graft_read_retries_total", Map.empty[String, String], readRetries.get())
     val histograms = sendDuration.asScala.toSeq.sortBy(_._1)
       .map { case (k, h) => h.text("sent_batch_duration_seconds", Map("remote" -> k)) }
     respond(ex, 200,
@@ -1623,7 +1686,8 @@ class Server(spark: SparkSession, tablePath: String,
       atSec: Long = System.currentTimeMillis() / 1000): Int =
     alertmanagerUrl match {
       case Some(u) =>
-        graft.promql.Notifier.notifyOnce(promqlTable(), liveRules, u, atSec)
+        freshRead(graft.promql.Notifier.notifyOnce(promqlTable(), liveRules,
+          u, atSec))
       case None => 0
     }
 
@@ -1646,12 +1710,13 @@ class Server(spark: SparkSession, tablePath: String,
   def scrapeOnce(): Long = scrapeTargets.map { url =>
     val nowSec = System.currentTimeMillis() / 1000
     try {
-      val n = appendLock.synchronized {
-        Scraper.scrapeInto(spark, url, tablePath,
-          ctZeroGate =
-            if (ctZeroIngestion) Some(ctZeroFilter(_, _)) else None)
-      }
-      invalidateTable()
+      val n = try appendLock.synchronized {
+        val page = Scraper.scrape(url, ctZeroGate =
+          if (ctZeroIngestion) Some(ctZeroFilter(_, _)) else None)
+        val n = Scraper.append(spark, page, tablePath)
+        mergeCommitted(WritePipeline.partitionDates(spark, page.samples))
+        n
+      } finally invalidateTable()
       targetState.put(url, ("up", nowSec, ""))
       n
     } catch {

@@ -1508,6 +1508,69 @@ class ServerSpec extends SparkSpec {
       .collectFirst { case l if l.startsWith(k + " ") => l.drop(k.length + 1).toLong }
       .getOrElse(fail(s"no $k in /metrics"))
 
+  test("serve: commit files merge by tier after each commit, and a read " +
+       "whose cached relation lost its files to a merge re-plans and " +
+       "answers the exact rows") {
+    val table = Files.createTempDirectory("graft_srvmerge").toString + "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val midnight = 1700006400000L // 2023-11-15T00:00:00Z
+    // post i: its own series, 3 one-minute scrapes, all on 2023-11-14
+    def series(i: Int): Seq[PTimeSeries] = Seq(PTimeSeries(
+      Seq(PLabel("__name__", "mrg"), PLabel("post", s"p$i")),
+      (0 until 3).map(k =>
+        PSample(i * 10.0 + k, midnight - 7200000L + (i * 3 + k) * 60000L))))
+    val dir = java.nio.file.Paths.get(table, "date=2023-11-14")
+    def files(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toVector
+      finally s.close()
+    }
+    def read(): (Int, Seq[(String, Double, Long)]) = {
+      val rr = PReadRequest(Seq(PQuery(midnight - 7200000L, midnight,
+        Seq(PLabelMatcher(MatchType.EQ, "__name__", "mrg")))))
+      val (code, body) = post(s"$base/read",
+        Prompb.snappyCompress(Prompb.encodeReadRequest(rr)))
+      (code, if (code != 200) Nil else rowsOf(Prompb.decodeReadResponse(
+        Prompb.snappyUncompress(body)).results.flatMap(_.timeseries)))
+    }
+    try {
+      (0 until 8).foreach(i =>
+        assert(postWrite(base, series(i), v2 = i % 2 == 1)._1 == 200))
+      // 8 one-POST commits: a merge after the 4th and after the 8th
+      assert(files().size == 2 && files().forall(_.startsWith("merged-rg4-")))
+      val (_, m8) = get(s"$base/metrics")
+      assert(metricValue(m8, "graft_parquet_commits_total") == 8)
+      assert(metricValue(m8, "graft_parquet_merges_total") == 2)
+      assert(metricValue(m8, "graft_read_retries_total") == 0)
+      assert(read() == (200, rowsOf((0 until 8).flatMap(series))))
+
+      // the read above cached a relation listing the two merged files;
+      // eight commits the server does not see, then merges, delete both
+      import spark.implicits._
+      (8 until 16).foreach { i =>
+        val samples = series(i).flatMap(t => t.samples.map(sm =>
+          graft.model.Schema.Sample("mrg",
+            t.labels.map(l => l.name -> l.value).toMap, sm.value, sm.timestampMs)))
+        server.appendLock.synchronized {
+          graft.engine.WritePipeline.append(graft.engine.WritePipeline
+            .toMetricRows(samples.toDF()), table, rowsHint = 3L)
+        }
+      }
+      assert(graft.engine.Admin.mergeCommitFiles(
+        org.apache.hadoop.fs.FileSystem.getLocal(
+          spark.sparkContext.hadoopConfiguration),
+        new org.apache.hadoop.fs.Path(dir.toString)) == 3)
+      assert(files().size == 1 && files().head.startsWith("merged-rg16-"))
+      assert(read() == (200, rowsOf((0 until 16).flatMap(series))))
+      val (_, mr) = get(s"$base/metrics")
+      assert(metricValue(mr, "graft_read_retries_total") == 1)
+      assert(metricValue(mr, "graft_parquet_merges_total") == 2)
+    } finally server.stop()
+  }
+
   test("serve: 8 concurrent RW1/RW2 senders — each answered with its own " +
        "counts, the store holds exactly what was sent, commits ≤ POSTs") {
     val table = Files.createTempDirectory("graft_srvgc").toString + "/metrics"
