@@ -117,14 +117,24 @@ object Admin {
     * compactor's ([[Rollup]]), which re-sorts instead of concatenating. */
   val MergeCapRowGroups = 64
 
+  /** The largest file a merge takes for a commit file. A commit writes
+    * one file of one row group per POST, 15 KB on average at remote-write
+    * sizes (perfbench `ingest`); a larger file that no merge wrote is a
+    * rewrite (compaction, `clean_tombstones`, a bulk load), which a merge
+    * would copy under the commit lock up to three times, so it is left
+    * to [[Rollup]]. */
+  val CommitFileMaxBytes: Long = 1L << 20
+
   /** Merged files carry their row-group count in their name, so the
-    * tiers are decided from a listing, without opening a footer. Any
-    * other file counts as one row group: a commit writes one per POST. */
+    * tiers are decided from a listing, without opening a footer. */
   private val MergedName = """merged-rg(\d+)-.*""".r
 
-  private def rowGroups(f: FileStatus): Int = f.getPath.getName match {
-    case MergedName(n) => n.toInt
-    case _ => 1
+  /** The row groups of a merge input: a merged file's from its name, a
+    * commit file's 1; `None` for a file that is neither. */
+  private def rowGroups(f: FileStatus): Option[Int] = f.getPath.getName match {
+    case MergedName(n) => Some(n.toInt)
+    case _ if f.getLen <= CommitFileMaxBytes => Some(1)
+    case _ => None
   }
 
   /** ⌊log₄ rowGroups⌋: a commit file is tier 0, four of them tier 1. */
@@ -143,6 +153,63 @@ object Admin {
         !n.startsWith(".") && !n.startsWith("_")
     }
 
+  /** `spark.read.parquet(tablePath)` without the files `excluded` (the
+    * inputs of merges, still on disk while reads that listed them run).
+    * Spark's file listing applies Hadoop's input path filter, which the
+    * read's options configure; with nothing excluded it is the plain
+    * read. */
+  def readExcluding(spark: org.apache.spark.sql.SparkSession,
+                    tablePath: String,
+                    excluded: Seq[HPath]): org.apache.spark.sql.DataFrame =
+    if (excluded.isEmpty) spark.read.parquet(tablePath)
+    else spark.read
+      .option("mapreduce.input.pathFilter.class", classOf[Excluded].getName)
+      .option(Excluded.Key, excluded.map(_.toUri.getPath).mkString("\n"))
+      .parquet(tablePath)
+
+  /** The path filter of [[readExcluding]]: rejects the paths listed,
+    * one a line, under [[Excluded.Key]] of its configuration. */
+  final class Excluded extends org.apache.hadoop.fs.PathFilter
+      with org.apache.hadoop.conf.Configurable {
+    private var conf: org.apache.hadoop.conf.Configuration = _
+    private var paths = Set.empty[String]
+    def setConf(c: org.apache.hadoop.conf.Configuration): Unit = {
+      conf = c
+      paths = c.get(Excluded.Key, "").split("\n").filter(_.nonEmpty).toSet
+    }
+    def getConf: org.apache.hadoop.conf.Configuration = conf
+    def accept(p: HPath): Boolean = !paths(p.toUri.getPath)
+  }
+  object Excluded { val Key = "graft.read.excluded" }
+
+  /** How a merged file lands: `apply` runs `publish`, the rename into
+    * place, then removes the merge's inputs, at once or once no read can
+    * still open them; until then [[retired]] names them, so no later
+    * merge takes them again. */
+  trait Landing {
+    def apply(fs: FileSystem, publish: () => Unit, inputs: Seq[HPath]): Unit
+    def retired(p: HPath): Boolean
+  }
+
+  /** Publish and delete the inputs at once: for a store no read is
+    * scanning. */
+  object DirectLanding extends Landing {
+    def apply(fs: FileSystem, publish: () => Unit, inputs: Seq[HPath]): Unit = {
+      publish()
+      inputs.foreach(deleteInput(fs, _))
+    }
+    def retired(p: HPath) = false
+  }
+
+  /** Delete a merge input whose rows are already in the merged file. One
+    * that is still there afterwards holds duplicates of those rows, so
+    * that is a failure, not a no-op; one already gone (a retention
+    * sweep, `clean_tombstones`) is not. */
+  def deleteInput(fs: FileSystem, p: HPath): Unit =
+    if (!fs.delete(p, false) && fs.exists(p))
+      throw new java.io.IOException(
+        s"cannot delete merged input $p: its rows are duplicated")
+
   /** Merge the small files of one `date=` directory until no tier below
     * [[MergeCapRowGroups]] holds [[MergeFanIn]] files. Each merge takes
     * the four newest files of the lowest full tier and concatenates
@@ -152,31 +219,33 @@ object Admin {
     * metadata (Spark's row schema) is kept, so a read infers the same
     * schema and prunes the same row groups. Only inputs with one parquet
     * schema are merged; a tier whose newest four disagree waits for more
-    * files.
+    * files. Only commit files and merged files are inputs
+    * ([[CommitFileMaxBytes]]).
     *
     * The merged file is written under a `.`-prefixed name, which no
-    * listing returns, then `swap` runs the rename into place and the
-    * deletion of the inputs: the caller wraps them in whatever lock its
-    * listings take, so no listing sees both. A failure before the swap
-    * deletes the hidden file and leaves every input; a crash between the
-    * rename and the deletes leaves duplicate rows, never lost ones (the
-    * at-least-once contract [[Rollup.dedupLatest]] resolves). Returns
-    * the number of merges that landed.
+    * listing returns; `land` then renames it into place and retires the
+    * inputs: the caller wraps the rename in whatever lock its listings
+    * take, so no listing sees both. A failure before the rename deletes
+    * the hidden file and leaves every input; a crash between the rename
+    * and the deletes leaves duplicate rows, never lost ones (the
+    * at-least-once contract [[Rollup.dedupLatest]] resolves). Returns the
+    * number of merges that landed.
     *
     * All I/O goes through `fs`, so checksum sidecars (`.crc`) are
     * written, renamed and deleted with their files.
     */
   def mergeCommitFiles(fs: FileSystem, dir: HPath,
-                       swap: (() => Unit) => Unit = f => f()): Int = {
+                       land: Landing = DirectLanding): Int = {
     @annotation.tailrec
     def loop(landed: Int): Int = {
-      val tiers = dataFiles(fs, dir).filter(rowGroups(_) < MergeCapRowGroups)
-        .groupBy(f => tier(rowGroups(f))).toSeq.sortBy(_._1)
+      val tiers = dataFiles(fs, dir)
+        .filter(f => !land.retired(f.getPath))
+        .flatMap(f => rowGroups(f).filter(_ < MergeCapRowGroups).map(f -> _))
+        .groupBy { case (_, groups) => tier(groups) }.toSeq.sortBy(_._1)
       val merged = tiers.iterator.filter(_._2.size >= MergeFanIn)
         .exists { case (_, files) =>
-          val newest = files.sortBy(f => (f.getModificationTime,
-            f.getPath.getName)).takeRight(MergeFanIn)
-          concat(fs, dir, newest, swap)
+          concat(fs, dir, files.map(_._1).sortBy(f => (f.getModificationTime,
+            f.getPath.getName)).takeRight(MergeFanIn), land)
         }
       if (merged) loop(landed + 1) else landed
     }
@@ -199,7 +268,7 @@ object Admin {
   /** Concatenate `inputs` into one new file of `dir` if they share one
     * parquet schema; whether the merge landed. */
   private def concat(fs: FileSystem, dir: HPath, inputs: Seq[FileStatus],
-                     swap: (() => Unit) => Unit): Boolean = {
+                     land: Landing): Boolean = {
     import org.apache.parquet.hadoop.ParquetFileWriter
     import org.apache.parquet.hadoop.util.CompressionConverter.TransParquetFileReader
     val conf = fs.getConf
@@ -238,11 +307,11 @@ object Admin {
         } catch {
           case e: Throwable => fs.delete(hidden, false); throw e
         }
-        swap { () =>
-          if (!fs.rename(hidden, new HPath(dir, name)))
+        land(fs, () =>
+          if (!fs.rename(hidden, new HPath(dir, name))) {
+            fs.delete(hidden, false)
             throw new java.io.IOException(s"cannot rename $hidden into place")
-          inputs.foreach(f => fs.delete(f.getPath, false))
-        }
+          }, inputs.map(_.getPath))
         true
       }
     } finally readers.result().foreach(_.close())

@@ -14,7 +14,8 @@ import org.apache.spark.sql.DataFrame
   * `NumberFormatException` and the PromQL parser's errors) is 400
   * `bad_data`, a handler-chosen [[Status]] keeps its code, anything else
   * is 500 `internal`. `/api/v1` renders the mapping as the JSON error
-  * envelope ([[api]]); `/read` and `/federate` as plain text ([[plain]]).
+  * envelope ([[api]], [[json]]); `/read` and `/federate` as plain text
+  * ([[plain]]).
   */
 private[serve] object ApiEdge {
 
@@ -102,9 +103,20 @@ private[serve] object ApiEdge {
     }
   }
 
-  /** A `/api/v1` request: parameters parsed once; any failure answers
-    * the JSON error envelope. */
-  def api(ex: HttpExchange)(handle: Params => Unit): Unit =
+  /** How a handler's answer is read from the store ([[ReadGuard]]): the
+    * evaluation runs as one read, and the answer is sent after it. */
+  trait Reads { def apply[A](read: => A): A }
+
+  /** A `/api/v1` read: parameters parsed once, `answer` evaluated through
+    * `reads`, its JSON `data` sent in the success envelope; any failure
+    * answers the JSON error envelope. */
+  def api(ex: HttpExchange, reads: Reads)(answer: Params => String): Unit =
+    json(ex)(p => ok(ex, reads(answer(p))))
+
+  /** A `/api/v1` request that sends its own answer and reads nothing
+    * through [[Reads]] (the admin API, whose rewrites wait for reads);
+    * failures as in [[api]]. */
+  def json(ex: HttpExchange)(handle: Params => Unit): Unit =
     try handle(params(ex))
     catch {
       case e: Throwable =>

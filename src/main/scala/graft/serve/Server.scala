@@ -148,9 +148,13 @@ class Server(spark: SparkSession, tablePath: String,
   /** Commit-file merges that landed (`graft_parquet_merges_total`). */
   private val parquetMerges = new AtomicLong(0)
 
-  /** Reads re-planned because a file their plan listed had vanished
-    * (`graft_read_retries_total`). */
-  private val readRetries = new AtomicLong(0)
+  private val storeFs = new org.apache.hadoop.fs.Path(tablePath)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Every read of the main table runs through this: it re-plans a read
+    * whose listed file vanished and keeps the inputs of merges from being
+    * deleted under reads that may still open them. */
+  private[graft] val reads = new ReadGuard(storeFs, () => invalidateTable())
 
   /** The `date` partitions the current /write group wrote into; filled
     * by its writes and drained by its settle, both under [[appendLock]]. */
@@ -207,48 +211,29 @@ class Server(spark: SparkSession, tablePath: String,
 
   /** Concatenate the small commit files of each of `dates`' `date=`
     * directories ([[graft.engine.Admin.mergeCommitFiles]]). Each merge
-    * renames its file into place and deletes its inputs under this
-    * Server's monitor, the one [[storedTable]] lists under, so no cached
-    * relation lists both; one listed before a merge re-plans through
-    * [[freshRead]]. A failed merge leaves its inputs and is logged, not
-    * raised: the commit it follows has landed. Caller holds
-    * [[appendLock]]. The side tables are not merged.
+    * renames its file into place under this Server's monitor, the one
+    * [[storedTable]] lists under, and retires its inputs to [[reads]],
+    * which hides them from every later listing and deletes them once no
+    * read that listed them is in flight: a read never loses a file to a
+    * merge. A failed merge leaves its inputs and is logged, not raised:
+    * the commit it follows has landed. Caller holds [[appendLock]] and
+    * calls [[invalidateTable]] after. The side tables are not merged.
     */
   private def mergeCommitted(dates: Iterable[java.time.LocalDate]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val land = new graft.engine.Admin.Landing {
+      def apply(fs: org.apache.hadoop.fs.FileSystem, publish: () => Unit,
+                inputs: Seq[org.apache.hadoop.fs.Path]): Unit = {
+        Server.this.synchronized { publish(); reads.retire(inputs) }
+        parquetMerges.incrementAndGet()
+      }
+      def retired(p: org.apache.hadoop.fs.Path) = reads.retired(p)
+    }
     dates.foreach { d =>
-      try graft.engine.Admin.mergeCommitFiles(fs,
-        new org.apache.hadoop.fs.Path(root, s"date=$d"),
-        swap = f => { synchronized(f()); parquetMerges.incrementAndGet() })
+      try graft.engine.Admin.mergeCommitFiles(storeFs,
+        new org.apache.hadoop.fs.Path(tablePath, s"date=$d"), land)
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft] merge of date=$d failed: $e") }
     }
-  }
-
-  /** Attempts [[freshRead]] makes: a read planned before one group's
-    * merges can lose a file to each of them, one per tier. */
-  private val ReadAttempts = 4
-
-  /** Evaluate a read of the main table, re-planning it against a fresh
-    * listing when a file its cached relation listed has been deleted
-    * since (a merge, `clean_tombstones`; see
-    * [[graft.engine.Admin.vanishedFile]]). Missing files are never
-    * ignored (`spark.sql.files.ignoreMissingFiles` would drop their rows
-    * silently); after [[ReadAttempts]] the failure stands.
-    */
-  private def freshRead[A](read: => A): A = {
-    var attempt = 1
-    var out: Option[A] = None
-    while (out.isEmpty)
-      try out = Some(read)
-      catch { case e: Exception if attempt < ReadAttempts &&
-                graft.engine.Admin.vanishedFile(e) =>
-        attempt += 1
-        readRetries.incrementAndGet()
-        invalidateTable()
-      }
-    out.get
   }
 
   private[graft] def storedTable(): DataFrame = synchronized {
@@ -259,7 +244,8 @@ class Server(spark: SparkSession, tablePath: String,
       // admin endpoints invalidate this cache, so the masked view is
       // always current
       val df = graft.engine.Tombstones.suppress(
-        spark.read.parquet(tablePath),
+        graft.engine.Admin.readExcluding(spark, tablePath,
+          reads.retiredFiles),
         graft.engine.Tombstones.load(spark, tablePath))
       cachedTable.compareAndSet(slot, new TableSlot(Some(df)))
       df
@@ -277,7 +263,12 @@ class Server(spark: SparkSession, tablePath: String,
     storedTable() +: extraReaderPaths.map(spark.read.parquet(_))
   }
 
-  private def invalidateTable(): Unit = cachedTable.set(new TableSlot(None))
+  /** Drop the cached relation; then [[reads]] may delete the retired
+    * inputs only relations listed before this held. */
+  private def invalidateTable(): Unit = {
+    cachedTable.set(new TableSlot(None))
+    reads.advance()
+  }
 
   /** The PromQL evaluator's store view: the raw table, with any stale
     * markers unioned in as flagged rows ([[graft.promql.Eval
@@ -951,7 +942,7 @@ class Server(spark: SparkSession, tablePath: String,
       // remote-read semantic; day-aligned queries forward stored bytes
       // verbatim), as opposed to the default aggregating read below
       if (params.one("source").contains("chunks")) readChunkTier(ex, rr, params)
-      else freshRead(readStore(ex, rr, params))
+      else respond(ex, 200, reads(readStore(ex, rr, params)))
     }
 
   private def readChunkTier(ex: HttpExchange, rr: Prompb.PReadRequest,
@@ -985,8 +976,9 @@ class Server(spark: SparkSession, tablePath: String,
     respond(ex, 200, body ++ histBody)
   }
 
+  /** The default /read answer's body; its headers are set on `ex`. */
   private def readStore(ex: HttpExchange, rr: Prompb.PReadRequest,
-                        params: Params): Unit = {
+                        params: Params): Array[Byte] = {
     val transform = parseDownsample(params)
     val resParam = params.one("resolution")
     val readers = storedReaders()
@@ -1047,13 +1039,13 @@ class Server(spark: SparkSession, tablePath: String,
         else Array.empty[Byte]
       ex.getResponseHeaders.set("Content-Type",
         "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
-      respond(ex, 200, scalarBody ++ histBody)
+      scalarBody ++ histBody
     } else {
       val body = Prompb.snappyCompress(Prompb.encodeReadResponse(
         ResponseEdge.toReadResponse(perQuery, readMaxSeries)))
       ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
       ex.getResponseHeaders.set("Content-Encoding", "snappy")
-      respond(ex, 200, body)
+      body
     }
   }
 
@@ -1080,7 +1072,7 @@ class Server(spark: SparkSession, tablePath: String,
     * client's fault: 400 with errorType=bad_data, per the API spec.
     */
   private def handleQueryRange(ex: HttpExchange): Unit =
-    api(ex) { p => freshRead {
+    api(ex, reads) { p =>
       val query = p.need("query")
       val start = p.needTime("start")
       val end = p.needTime("end")
@@ -1144,16 +1136,16 @@ class Server(spark: SparkSession, tablePath: String,
           }.mkString("[", ",", "]")
           s"""{"metric":${labelsJson(tags)},"values":$values}"""
         }
-      ok(ex, s"""{"resultType":"matrix","result":${
-        series.mkString("[", ",", "]")}}""")
-    }}
+      s"""{"resultType":"matrix","result":${
+        series.mkString("[", ",", "]")}}"""
+    }
 
   /** `GET /api/v1/query?query=…&time=…` — the instant query: one grid
     * step at `time`, resultType "vector". A thin wrapper over the same
     * evaluator as query_range (start = end = time, step 1).
     */
   private def handleInstantQuery(ex: HttpExchange): Unit =
-    api(ex) { p => freshRead {
+    api(ex, reads) { p =>
       val t = p.needTime("time")
       val lookback = p.lookback
       // ?slice= opts into skew-split evaluation, same as query_range
@@ -1174,8 +1166,8 @@ class Server(spark: SparkSession, tablePath: String,
           "tags"))},"value":[${r.getAs[Long]("t")},${
           jsonStr(fmtValue(r.getAs[Double]("value")))}]}"""
       }.mkString("[", ",", "]")
-      ok(ex, s"""{"resultType":"vector","result":$out}""")
-    }}
+      s"""{"resultType":"vector","result":$out}"""
+    }
 
   /** Metadata endpoints — /api/v1/labels, /api/v1/label/<n>/values,
     * /api/v1/series: what a Grafana datasource calls to populate
@@ -1185,7 +1177,7 @@ class Server(spark: SparkSession, tablePath: String,
     * (the series endpoint additionally enforces the series budget).
     */
   private def handleMeta(ex: HttpExchange): Unit =
-    api(ex) { p => freshRead {
+    api(ex, reads) { p =>
       import org.apache.spark.sql.functions._
       val path = ex.getRequestURI.getPath
       // match[] may repeat: the selectors union
@@ -1242,17 +1234,17 @@ class Server(spark: SparkSession, tablePath: String,
           rows.map(_.getAs[scala.collection.Seq[String]]("tags"))
             .sortBy(_.mkString(",")).map(labelsJson).mkString("[", ",", "]")
         } else throw new IllegalArgumentException(s"unknown path $path")
-      ok(ex, data)
-    }}
+      data
+    }
 
   /** `GET /api/v1/format_query?query=…` — parse + pretty-print (the
     * canonical, fully parenthesized form); a parse error is 400
     * bad_data with the parser's position message.
     */
   private def handleFormatQuery(ex: HttpExchange): Unit =
-    api(ex) { p =>
-      ok(ex, jsonStr(graft.promql.Parser.print(
-        graft.promql.Parser.parse(p.need("query")))))
+    api(ex, reads) { p =>
+      jsonStr(graft.promql.Parser.print(
+        graft.promql.Parser.parse(p.need("query"))))
     }
 
   /** `GET/POST /api/v1/query_exemplars?query=…&start=…&end=…` — the
@@ -1263,7 +1255,7 @@ class Server(spark: SparkSession, tablePath: String,
     * series with its exemplar list (labels, value, timestamp seconds).
     */
   private def handleQueryExemplars(ex: HttpExchange): Unit =
-    api(ex) { p =>
+    api(ex, reads) { p =>
       import org.apache.spark.sql.functions._
       val query = p.need("query")
       // start/end are OPTIONAL here (the Prometheus API's own contract
@@ -1302,7 +1294,7 @@ class Server(spark: SparkSession, tablePath: String,
               s"""{"seriesLabels":${labelsJson(tags)},"exemplars":$exJson}"""
             }.mkString("[", ",", "]")
         }
-      ok(ex, data)
+      data
     }
 
   /** `GET /api/v1/parse_query?query=…` — the AST as JSON (the endpoint
@@ -1310,9 +1302,9 @@ class Server(spark: SparkSession, tablePath: String,
     * with the offset-bearing message, like format_query.
     */
   private def handleParseQuery(ex: HttpExchange): Unit =
-    api(ex) { p =>
-      ok(ex, graft.promql.AstJson.toJson(
-        graft.promql.Parser.parse(p.need("query"))))
+    api(ex, reads) { p =>
+      graft.promql.AstJson.toJson(
+        graft.promql.Parser.parse(p.need("query")))
     }
 
   /** `GET /api/v1/metadata` — the metric-family metadata received on the
@@ -1339,7 +1331,7 @@ class Server(spark: SparkSession, tablePath: String,
     * .alertStatesAt]] — deterministic for tests, live for dashboards.
     */
   private def handleRules(ex: HttpExchange): Unit =
-    api(ex) { p => freshRead {
+    api(ex, reads) { p =>
       val atSec = p.time("time").getOrElse(System.currentTimeMillis() / 1000L)
       val lookback = p.lookback
       val alertsOnly = ex.getRequestURI.getPath.endsWith("/alerts")
@@ -1411,8 +1403,8 @@ class Server(spark: SparkSession, tablePath: String,
           }
           s"""{"groups":${gs.mkString("[", ",", "]")}}"""
         }
-      ok(ex, data)
-    }}
+      data
+    }
 
   /** `GET /federate?match[]=…&time=…` — hierarchical federation: the
     * latest sample (value + ITS OWN timestamp, ms) of every series
@@ -1427,7 +1419,7 @@ class Server(spark: SparkSession, tablePath: String,
     * series budget rides in-plan (`limit(maxSeries+1)` before collect).
     */
   private def handleFederate(ex: HttpExchange): Unit =
-    plain(ex, form = true) { p => freshRead {
+    plain(ex, form = true) { p => respond(ex, 200, reads {
       import org.apache.spark.sql.functions._
       val matches = p.all("match[]")
       if (matches.isEmpty)
@@ -1488,8 +1480,8 @@ class Server(spark: SparkSession, tablePath: String,
       ex.getResponseHeaders.set("Content-Type",
         if (om) "application/openmetrics-text; version=1.0.0; charset=utf-8"
         else "text/plain; version=0.0.4; charset=utf-8")
-      respond(ex, 200, sb.toString.getBytes("UTF-8"))
-    }}
+      sb.toString.getBytes("UTF-8")
+    })}
 
   /** `GET /api/v1/status/tsdb` — cardinality statistics (what the
     * Prometheus UI's TSDB-status page and cardinality dashboards read):
@@ -1505,7 +1497,7 @@ class Server(spark: SparkSession, tablePath: String,
     * the cut is deterministic.
     */
   private def handleStatusTsdb(ex: HttpExchange): Unit =
-    api(ex) { p => freshRead {
+    api(ex, reads) { p =>
       import org.apache.spark.sql.functions._
       val topN = p.one("limit").map(_.toInt).getOrElse(10)
       val store = storedTable()
@@ -1552,7 +1544,7 @@ class Server(spark: SparkSession, tablePath: String,
         def sec(xs: Seq[(String, Long)]): String = xs.map { case (n, v) =>
           s"""{"name":${jsonStr(n)},"value":$v}"""
         }.mkString("[", ",", "]")
-        ok(ex, s"""{"headStats":{""" +
+        s"""{"headStats":{""" +
             s""""numSeries":$numSeries,"numLabelPairs":$numPairs,""" +
             s""""chunkCount":${totals.getAs[Long]("samples")},""" +
             s""""minTime":${totals.getAs[Long]("minT")},""" +
@@ -1560,9 +1552,9 @@ class Server(spark: SparkSession, tablePath: String,
             s""""seriesCountByMetricName":${sec(byMetric)},""" +
             s""""labelValueCountByLabelName":${sec(valueCount)},""" +
             s""""memoryInBytesByLabelName":${sec(memBytes)},""" +
-            s""""seriesCountByLabelValuePair":${sec(byPair)}}""")
+            s""""seriesCountByLabelValuePair":${sec(byPair)}}"""
       } finally series.unpersist()
-    }}
+    }
 
   /** TSDB admin API — `/api/v1/admin/tsdb/delete_series` records
     * tombstones (selector + time range; reads mask immediately),
@@ -1573,7 +1565,7 @@ class Server(spark: SparkSession, tablePath: String,
     * (the Prometheus contract).
     */
   private def handleAdmin(ex: HttpExchange): Unit =
-    api(ex) { p =>
+    json(ex) { p =>
       if (!enableAdminApi)
         throw new Status(403, "unavailable", "admin APIs disabled")
       if (ex.getRequestMethod != "POST" && ex.getRequestMethod != "PUT")
@@ -1602,7 +1594,10 @@ class Server(spark: SparkSession, tablePath: String,
         // swaps them — a /write committing into one of those dirs between
         // the scan and the swap would have its fresh files deleted, so
         // the admin rewrite serializes with every other commit path
+        // it reads the date directories directly, so retired merge
+        // inputs must be gone first (no merge retires more under the lock)
         appendLock.synchronized {
+          reads.awaitDrained()
           graft.engine.Tombstones.clean(spark, tablePath)
         }
         invalidateTable()
@@ -1614,6 +1609,7 @@ class Server(spark: SparkSession, tablePath: String,
         // staging files (they'd be linked into the snapshot or vanish
         // mid-walk), so it takes the same commit lock
         appendLock.synchronized {
+          reads.awaitDrained()
           graft.engine.Admin.snapshot(tablePath, name)
         }
         ok(ex, s"""{"name":${jsonStr(name)}}""")
@@ -1650,7 +1646,7 @@ class Server(spark: SparkSession, tablePath: String,
             .map { case (k, v) => ("failed_samples_total", Map("remote" -> k), v.get()) }) :+
         ("graft_parquet_commits_total", Map.empty[String, String], parquetCommits.get()) :+
         ("graft_parquet_merges_total", Map.empty[String, String], parquetMerges.get()) :+
-        ("graft_read_retries_total", Map.empty[String, String], readRetries.get())
+        ("graft_read_retries_total", Map.empty[String, String], reads.retries.get())
     val histograms = sendDuration.asScala.toSeq.sortBy(_._1)
       .map { case (k, h) => h.text("sent_batch_duration_seconds", Map("remote" -> k)) }
     respond(ex, 200,
@@ -1686,7 +1682,7 @@ class Server(spark: SparkSession, tablePath: String,
       atSec: Long = System.currentTimeMillis() / 1000): Int =
     alertmanagerUrl match {
       case Some(u) =>
-        freshRead(graft.promql.Notifier.notifyOnce(promqlTable(), liveRules,
+        reads(graft.promql.Notifier.notifyOnce(promqlTable(), liveRules,
           u, atSec))
       case None => 0
     }

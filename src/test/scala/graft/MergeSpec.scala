@@ -207,6 +207,62 @@ class MergeSpec extends SparkSpec {
     assert(parquetNames(dir).contains("part-odd.parquet"))
   }
 
+  test("merge: a file larger than a commit file that no merge wrote " +
+       "(a compacted rewrite) is never an input") {
+    val (table, _) = twoStores(3)
+    val dir = Paths.get(table, day)
+    val big = Files.createTempDirectory("graft_merge_big").toString
+    val rows = spark.range(200000).select(lit("m0").as("name"),
+      map(lit("__name__"), lit("m0"), lit("series"),
+        (col("id") % 50).cast("string")).as("labels"),
+      rand(7).as("value"),
+      (lit(midnight - 20 * 3600000L) + col("id") / 50 * 1000L).as("timestampMs"))
+    WritePipeline.append(WritePipeline.toMetricRows(rows).coalesce(1), big,
+      rowsHint = 200000L)
+    val bigFile = Paths.get(big, day).resolve(parquetNames(Paths.get(big, day)).head)
+    assert(Files.size(bigFile) > Admin.CommitFileMaxBytes)
+    Files.copy(bigFile, dir.resolve("part-compacted.parquet"))
+    Thread.sleep(20)
+    commit(table, 3)
+    // the newest four files hold it, yet the four commit files merge
+    assert(Admin.mergeCommitFiles(fs, new HPath(dir.toString)) == 1)
+    assert(parquetNames(dir).size == 2)
+    assert(parquetNames(dir).contains("part-compacted.parquet"))
+    assert(spark.read.parquet(table).count() == 4 * 24 + 200000)
+  }
+
+  test("merge: a failed rename leaves no hidden file and every input; a " +
+       "failed input delete is raised, not ignored") {
+    val (table, _) = twoStores(4)
+    val dir = Paths.get(table, day)
+    val before = names(dir)
+    val noRename = new org.apache.hadoop.fs.FilterFileSystem(fs) {
+      override def rename(src: HPath, dst: HPath) = false
+    }
+    intercept[java.io.IOException](
+      Admin.mergeCommitFiles(noRename, new HPath(dir.toString)))
+    assert(names(dir) == before)
+    val noDelete = new org.apache.hadoop.fs.FilterFileSystem(fs) {
+      override def delete(f: HPath, recursive: Boolean) =
+        f.getName.startsWith(".") && super.delete(f, recursive)
+    }
+    val e = intercept[java.io.IOException](
+      Admin.mergeCommitFiles(noDelete, new HPath(dir.toString)))
+    assert(e.getMessage.contains("duplicated"))
+  }
+
+  test("merge: readExcluding hides the excluded files from the listing " +
+       "and keeps the schema and the date column") {
+    val (table, plain) = twoStores(4)
+    val dir = Paths.get(table, day)
+    val gone = parquetNames(dir).take(2).map(n => new HPath(dir.resolve(n).toString))
+    val df = Admin.readExcluding(spark, table, gone)
+    assert(df.count() == 2 * 24)
+    assert(df.inputFiles.length == 2)
+    assert(df.schema == spark.read.parquet(plain).schema)
+    assert(Admin.readExcluding(spark, table, Nil).count() == 4 * 24)
+  }
+
   test("merge: a read failure counts as a vanished file whether the " +
        "file was gone at open or at a later vectored read") {
     def failed(cause: Throwable) =

@@ -1571,6 +1571,64 @@ class ServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("serve: a read held open across several merges of the files it " +
+       "listed reads exactly those rows, with no retry; the inputs are " +
+       "deleted once it ends") {
+    val table = Files.createTempDirectory("graft_srvhold").toString + "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val midnight = 1700006400000L // 2023-11-15T00:00:00Z
+    def series(i: Int): Seq[PTimeSeries] = Seq(PTimeSeries(
+      Seq(PLabel("__name__", "hold"), PLabel("post", s"p$i")),
+      (0 until 3).map(k =>
+        PSample(i * 10.0 + k, midnight - 7200000L + (i * 3 + k) * 60000L))))
+    val dir = java.nio.file.Paths.get(table, "date=2023-11-14")
+    def files(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toVector
+      finally s.close()
+    }
+    def read(): (Int, Seq[(String, Double, Long)]) = {
+      val rr = PReadRequest(Seq(PQuery(midnight - 7200000L, midnight,
+        Seq(PLabelMatcher(MatchType.EQ, "__name__", "hold")))))
+      val (code, body) = post(s"$base/read",
+        Prompb.snappyCompress(Prompb.encodeReadRequest(rr)))
+      (code, if (code != 200) Nil else rowsOf(Prompb.decodeReadResponse(
+        Prompb.snappyUncompress(body)).results.flatMap(_.timeseries)))
+    }
+    def values(posts: Range): Seq[Double] =
+      posts.flatMap(series).flatMap(_.samples.map(_.value)).sorted
+    try {
+      (0 until 3).foreach(i =>
+        assert(postWrite(base, series(i), v2 = i % 2 == 1)._1 == 200))
+      val (held, during) = server.reads {
+        // planned over the three commit files ...
+        val df = server.storedTable()
+        assert(df.inputFiles.length == 3)
+        // ... which 13 more commits merge into a file of 4 row groups,
+        // and that one, with three more, into one of 16
+        (3 until 16).foreach(i =>
+          assert(postWrite(base, series(i), v2 = i % 2 == 1)._1 == 200))
+        assert(files().count(_.startsWith("merged-rg16-")) == 1)
+        assert(files().size > 1) // the inputs, kept for this read
+        // a read planned now lists the merged file, never its inputs
+        // still on disk for the held read
+        assert(server.storedTable().count() == 16 * 3)
+        val now = read()
+        (df.select("val").collect().map(_.getDouble(0)).toSeq.sorted, now)
+      }
+      assert(held == values(0 until 3))
+      assert(during == (200, rowsOf((0 until 16).flatMap(series))))
+      assert(files().size == 1 && files().head.startsWith("merged-rg16-"))
+      val (_, m) = get(s"$base/metrics")
+      assert(metricValue(m, "graft_parquet_merges_total") == 5)
+      assert(metricValue(m, "graft_read_retries_total") == 0)
+      assert(read() == (200, rowsOf((0 until 16).flatMap(series))))
+    } finally server.stop()
+  }
+
   test("serve: 8 concurrent RW1/RW2 senders — each answered with its own " +
        "counts, the store holds exactly what was sent, commits ≤ POSTs") {
     val table = Files.createTempDirectory("graft_srvgc").toString + "/metrics"
