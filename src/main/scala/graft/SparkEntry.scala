@@ -8141,26 +8141,32 @@ object SparkEntry {
     // selector costs exactly ONE exchange (tags-hash serves dedup +
     // window), a full rate+sum pipeline costs TWO (the tags hash also
     // satisfies the by-label aggregation via the subset rule), and
-    // vector matching is an equi-join (never cartesian).
+    // vector matching is an equi-join (never cartesian). The claims are
+    // those of a read above the one-task bound (ReadPipeline.oneTask,
+    // spark.sql.files.openCostInBytes), so the plans are taken with the
+    // bound below any store's bytes; under it a read has no exchange.
     "promql_plan_audit" -> ((s, dir) => {
       import s.implicits._
       val base = autoresFixture(s, dir)
       val store = s.read.parquet(s"$base/metrics")
       val spec = Eval.RangeSpec(Jan05, Jan20, 21600L, 86400L)
-      def plan(q: String): String =
-        Eval.rangeQuery(store, q, spec)
+      def plan(q: String, sp: Eval.RangeSpec = spec): String =
+        Eval.rangeQuery(store, q, sp)
           .queryExecution.executedPlan.toString
       def exchanges(p: String): Long =
         p.linesIterator.count(l => l.contains("Exchange hashpartitioning")
           && !l.contains("ReusedExchange")).toLong
-      val rateP = plan("""sum by (user_id) (rate({__name__=~".+"}[2d]))""")
-      val saltedP = Eval.rangeQuery(store,
-          """sum by (user_id) (rate({__name__=~".+"}[2d]))""",
-          spec.copy(sliceSec = Some(172800L)))
-        .queryExecution.executedPlan.toString
-      val selP = plan("click")
-      val binP = plan("""error / on(user_id) group_left
-        | sum by (user_id) ({__name__=~"click|view"})""".stripMargin)
+      val bound = "spark.sql.files.openCostInBytes"
+      val prior = s.conf.getOption(bound)
+      s.conf.set(bound, "1")
+      val (rateP, saltedP, selP, binP) = try (
+        plan("""sum by (user_id) (rate({__name__=~".+"}[2d]))"""),
+        plan("""sum by (user_id) (rate({__name__=~".+"}[2d]))""",
+          spec.copy(sliceSec = Some(172800L))),
+        plan("click"),
+        plan("""error / on(user_id) group_left
+          | sum by (user_id) ({__name__=~"click|view"})""".stripMargin))
+      finally prior.fold(s.conf.unset(bound))(s.conf.set(bound, _))
       def b(x: Boolean): Long = if (x) 1L else 0L
       Seq(
         ("binop_no_cartesian", b(!binP.contains("Cartesian") &&
@@ -16673,7 +16679,7 @@ object SparkEntry {
     // ts bounds push to parquet, date partitions prune, name EQ pushes,
     // one exchange per selector, two for a full rate+sum pipeline (the
     // tags hash also satisfies the (tags, T) aggregation), equi-join
-    // vector matching
+    // vector matching; all for a read above the one-task bound
     "promql_plan_audit" ->
       """SELECT * FROM (VALUES
         |  ('binop_no_cartesian', CAST(1 AS BIGINT)),

@@ -252,6 +252,18 @@ object Admin {
     loop(0)
   }
 
+  /** Delete the hidden `.merged-*` files under `table`'s `date=`
+    * directories: a merge that crashed before its rename left them, and
+    * no listing returns them. Run only while no merge can be in flight
+    * (the server runs it before it serves). Returns the files deleted. */
+  def dropUnlandedMerges(fs: FileSystem, table: HPath): Int =
+    if (!fs.exists(table)) 0
+    else fs.listStatus(table).iterator
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("date="))
+      .flatMap(d => fs.listStatus(d.getPath))
+      .filter(f => f.isFile && f.getPath.getName.startsWith(".merged-"))
+      .count(f => fs.delete(f.getPath, false))
+
   /** Whether a read failed because a file its plan listed was deleted
     * under it, as a merge deletes its inputs: Spark reports a file gone
     * before it was opened with a `FileNotFoundException`, and one gone

@@ -3,8 +3,11 @@ package graft.engine
 import graft.compile.Matchers
 import graft.compile.Matchers.PromQuery
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** The remote-read query pipeline (SURVEY §2.3 A1-A6).
   *
@@ -17,6 +20,10 @@ import org.apache.spark.sql.functions._
   * At scale: the single shuffle is on (t, name, tags) — high-cardinality and
   * uniform (series id × time bucket), so it spreads evenly across executors;
   * the matcher + time filters sit below it and reach the parquet scan.
+  * A read whose selected parquet is smaller than what Spark counts for
+  * opening one file ([[oneTask]]) runs as one task instead: one partition
+  * satisfies every clustered distribution, so the plan has no exchange
+  * and the read is one job.
   * Every write batch is its own (name, tags, ts)-sorted row group, also
   * once commit files are concatenated ([[Admin.mergeCommitFiles]]), so
   * the scan skips row groups by their `name`/`ts` statistics.
@@ -52,10 +59,49 @@ object ReadPipeline {
     val quant =
       if (exact) percentile(col("val"), lit(Matchers.Quantile))
       else percentile_approx(col("val"), lit(Matchers.Quantile), lit(Matchers.MaxSample.toInt))
-    metrics
+    oneTask(metrics, q.startMs / 1000, q.endMs / 1000).getOrElse(metrics)
       .filter(Matchers.compile(q, strictCompat))
       .groupBy(bucket.as("t"), col("name"), col("tags"))
       .agg(count(lit(1)).as("cnt"), quant.as("value"))
+  }
+
+  /** `source` under `coalesce(1)` when the parquet a read of epoch
+    * seconds [loSec, hiSec] can select is at most
+    * `spark.sql.files.openCostInBytes`: Spark counts opening one file as
+    * that many scanned bytes, so a smaller read cannot pay for a second
+    * task, a shuffle and a stage. The bytes are those of the files under
+    * the `date=` directories the window selects, in the session time zone
+    * (a relation without a `date` partition counts every file), summed
+    * from the file index the relation already listed. `None`, for today's
+    * plan, above the bound or when a leaf of `source` is not a file
+    * relation. The filters above the coalesce still push into the scan.
+    * The read-side twin of [[WritePipeline.rangeWidth]].
+    */
+  def oneTask(source: DataFrame, loSec: Long, hiSec: Long): Option[DataFrame] = {
+    val conf = source.sparkSession.conf
+    val bound = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      conf.get("spark.sql.files.openCostInBytes"))
+    val zone = java.time.ZoneId.of(conf.get("spark.sql.session.timeZone"))
+    def day(sec: Long): Long =
+      java.time.Instant.ofEpochSecond(sec).atZone(zone).toLocalDate.toEpochDay
+    val (lo, hi) = (day(loSec), day(hiSec))
+    val leaves = source.queryExecution.analyzed.collectLeaves().map {
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation =>
+          val date = fs.partitionSchema.fields
+            .indexWhere(f => f.name == "date" && f.dataType == DateType)
+          def selected(v: InternalRow) = date < 0 || v.isNullAt(date) ||
+            (lo <= v.getInt(date) && v.getInt(date) <= hi)
+          Some(fs.location.listFiles(Nil, Nil).iterator
+            .filter(d => selected(d.values))
+            .map(_.files.iterator.map(_.getLen).sum).sum)
+        case _ => None
+      }
+      case _ => None
+    }
+    if (leaves.forall(_.isDefined) && leaves.flatten.sum <= bound)
+      Some(source.coalesce(1))
+    else None
   }
 
   /** The query's time-bucket start in epoch ms, from a `ts` column —

@@ -269,7 +269,8 @@ object Eval {
     val tCol = if (tsIsLong) col("ts") else unix_timestamp(col("ts"))
     val lo = spec.startSec - reachBackSec - s.offsetSec
     val hi = spec.endSec - s.offsetSec
-    var df = m
+    val one = graft.engine.ReadPipeline.oneTask(m, lo, hi)
+    var df = one.getOrElse(m)
     if (m.columns.contains("date"))
       df = df.filter(col("date") >= to_date(timestamp_seconds(lit(lo))) &&
         col("date") <= to_date(timestamp_seconds(lit(hi))))
@@ -291,24 +292,25 @@ object Eval {
     val vfp =
       if (m.columns.contains("val_fp")) col("val_fp")
       else floor(col("val") * FP).cast("long")
-    // ONE exchange for the whole selector: hash-partitioning by tags
-    // satisfies both the (tags, t) dedup's ClusteredDistribution (subset
-    // rule) and the series window that follows — without it Spark plans
-    // two sample-sized exchanges (dedup keys, then window keys)
+    // at most ONE exchange for the whole selector: hash-partitioning by
+    // tags satisfies both the (tags, t) dedup's ClusteredDistribution
+    // (subset rule) and the series window that follows — without it Spark
+    // plans two sample-sized exchanges (dedup keys, then window keys). A
+    // one-task read needs none: its single partition satisfies both
+    def bySeries(d: DataFrame): DataFrame =
+      if (one.isDefined) d else d.repartition(col("tags"))
     if (!m.columns.contains("stale"))
-      named.filter(pred)
-        .select(col("tags"), tCol.as("t"), vfp.as("v_fp"))
-        .repartition(col("tags"))
+      bySeries(named.filter(pred)
+        .select(col("tags"), tCol.as("t"), vfp.as("v_fp")))
         .groupBy(col("tags"), col("t"))
         .agg(max(col("v_fp")).as("v_fp"))
     else {
       // dedup rule with markers present: a LIVE sample at the same
       // (series, second) beats a marker (struct max orders live-first,
       // then greatest value) — a marker never shadows real data
-      val deduped = named.filter(pred)
+      val deduped = bySeries(named.filter(pred)
         .select(col("tags"), tCol.as("t"), vfp.as("v_fp"),
-          coalesce(col("stale"), lit(false)).as("_stale"))
-        .repartition(col("tags"))
+          coalesce(col("stale"), lit(false)).as("_stale")))
         .groupBy(col("tags"), col("t"))
         .agg(max(struct((!col("_stale")).as("live"),
           col("v_fp").as("v"))).as("_m"))

@@ -218,6 +218,13 @@ object Parser {
 
   def parse(input: String): Expr = new Parser(lex(input)).parseAll()
 
+  /** The deepest nesting [[parse]] accepts: parentheses, call and
+    * aggregation arguments, unary signs and `^` right operands each
+    * count one level. The parser, the printer and [[Eval]] all recurse
+    * once per level, so an unbounded query would overflow the handler
+    * thread's stack; past this it is a [[ParseException]]. */
+  val MaxDepth = 128
+
   /** Standalone duration parse for API parameters (`step=30s`,
     * `step=60`): the same compound-duration grammar range selectors use.
     */
@@ -339,6 +346,16 @@ private class Parser(toks: Vector[Lexer.Tok]) {
   private def atOp(op: String): Boolean = cur.kind == TOp && cur.text == op
   private def atKw(kw: String): Boolean = cur.kind == TIdent && cur.text == kw
 
+  private var depth = 0
+  /** `sub` one nesting level down, at most [[Parser.MaxDepth]] deep. */
+  private def nested(sub: => Expr): Expr = {
+    if (depth > Parser.MaxDepth)
+      throw new ParseException(
+        s"expression nested deeper than ${Parser.MaxDepth} levels", cur.pos)
+    depth += 1
+    try sub finally depth -= 1
+  }
+
   def parseAll(): Expr = {
     val e = parseOr()
     if (cur.kind != TEof)
@@ -346,7 +363,7 @@ private class Parser(toks: Vector[Lexer.Tok]) {
     e
   }
 
-  private def parseOr(): Expr = {
+  private def parseOr(): Expr = nested {
     var lhs = parseAnd()
     while (atKw("or")) {
       advance()
@@ -402,13 +419,13 @@ private class Parser(toks: Vector[Lexer.Tok]) {
     if (atOp("^")) {
       advance()
       val m = parseMatching(allowGroup = true)
-      BinOp("^", lhs, parsePow(), boolMod = false, m) // right-assoc
+      BinOp("^", lhs, nested(parsePow()), boolMod = false, m) // right-assoc
     } else lhs
   }
 
   private def parseUnary(): Expr =
-    if (atOp("-")) { advance(); Unary(neg = true, parseUnary()) }
-    else if (atOp("+")) { advance(); parseUnary() }
+    if (atOp("-")) { advance(); Unary(neg = true, nested(parseUnary())) }
+    else if (atOp("+")) { advance(); nested(parseUnary()) }
     else parsePostfix()
 
   /** `[range]` / `[range:step]` (subquery), `offset`, and `@` bind

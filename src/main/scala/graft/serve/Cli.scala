@@ -555,14 +555,14 @@ object Main {
         if (!err.startsWith("usage:")) System.err.println(CliConfig.usage())
         sys.exit(2)
       case Right(cfg) =>
-        val spark = SparkSession.builder()
-          .appName("graft-adapter")
-          // spark-submit provides the real master on a cluster; standalone
-          // runs (sbt runMain) fall back to all local cores
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
+        // the engine the serve bench measures (GraftSession.engineConfs:
+        // UTC session zone, extensions, codegen cache…); spark-submit
+        // provides the real master on a cluster, standalone runs (sbt
+        // runMain) fall back to all local cores
+        val spark = graft.GraftSession.builder(
+            sys.env.getOrElse("SPARK_MASTER", "local[*]"),
             sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.extensions", "graft.GraftExtensions")
+          .appName("graft-adapter")
           .getOrCreate()
         val server = Cli.buildServer(spark, cfg).start()
         println(s"listening on :${server.boundPort}, storing to ${cfg.tablePath}")

@@ -1743,6 +1743,10 @@ class Server(spark: SparkSession, tablePath: String,
   @volatile private var scraper: Option[Thread] = None
 
   def start(): Server = {
+    // no merge is in flight before the first commit: a hidden merge file
+    // now is one a crash left before its rename
+    graft.engine.Admin.dropUnlandedMerges(storeFs,
+      new org.apache.hadoop.fs.Path(tablePath))
     if (scrapeTargets.nonEmpty) {
       val t = new Thread(() => {
         try while (!Thread.interrupted()) {

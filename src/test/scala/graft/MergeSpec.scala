@@ -162,6 +162,25 @@ class MergeSpec extends SparkSpec {
     assert(spark.read.parquet(merged).count() == 2 * 24)
   }
 
+  test("merge: a server starting over a store deletes the hidden merge " +
+       "files a crash left before their rename, and nothing else") {
+    val (table, _) = twoStores(2)
+    val dir = Paths.get(table, day)
+    val before = names(dir)
+    // written through the checksummed local fs, as a merge writes it
+    val out = fs.create(new HPath(dir.resolve(".merged-rg2-crashed.parquet")
+      .toString))
+    try out.write(Files.readAllBytes(dir.resolve(parquetNames(dir).head)))
+    finally out.close()
+    assert(names(dir).size == before.size + 2) // the file and its .crc
+    val server = new graft.serve.Server(spark, table).start()
+    try {
+      assert(names(dir) == before)
+      assert(server.storedTable().count() == 2 * 24)
+    } finally server.stop()
+    assert(Admin.dropUnlandedMerges(fs, new HPath(table + "_absent")) == 0)
+  }
+
   test("merge: N ≤ 64 commits into one date leave at most 3·⌈log₄ N⌉ " +
        "files there, and 64 leave one") {
     val (table, _) = twoStores(1)

@@ -135,6 +135,23 @@ class PromqlSpec extends SparkSpec {
       Parser.parse("a and on(j) group_left b")) // group on set op
   }
 
+  test("parser: nesting is bounded — past MaxDepth a ParseException, " +
+       "never a stack overflow") {
+    val d = Parser.MaxDepth
+    def parens(n: Int) = "(" * n + "m" + ")" * n
+    assert(Parser.parse(parens(d)) == Parser.parse("m"))
+    Parser.parse("-" * d + "m")
+    Parser.parse(Seq.fill(d + 1)("2").mkString("^"))
+    Parser.parse("abs(" * (d - 1) + "m" + ")" * (d - 1))
+    Seq(parens(d + 1), "-" * (d + 1) + "m",
+      Seq.fill(d + 2)("2").mkString("^"),
+      "sum(" * (d + 1) + "m" + ")" * (d + 1),
+      parens(100000)).foreach { q =>
+      val e = intercept[ParseException](Parser.parse(q))
+      assert(e.getMessage.contains("nested deeper"), q.take(20))
+    }
+  }
+
   test("printer: parse(print(parse(q))) == parse(q) over the surface") {
     val queries = Seq(
       """topk(2, {__name__=~"click|error"})""",

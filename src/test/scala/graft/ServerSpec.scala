@@ -992,14 +992,32 @@ class ServerSpec extends SparkSpec {
       // a non-numeric limit is the client's error, not a 500
       val (lc, lb) = getAny(s"$base/api/v1/status/tsdb?limit=abc")
       assert(lc == 400 && lb.contains(""""errorType":"bad_data""""), lb)
-      // a failure that is no IllegalArgumentException still answers:
-      // the JSON envelope with 500, not a dropped connection
-      val deep = "(" * 100000 + "1" + ")" * 100000
-      val (dc, db) = form(s"$base/api/v1/format_query", s"query=${enc(deep)}")
-      assert(dc == 500 && db.contains(""""status":"error"""") &&
-        db.contains(""""errorType":"internal""""), (dc, db.take(200)))
+      // a query nested past the parser's bound is the client's error on
+      // every endpoint that parses PromQL, not a stack overflow
+      val deep = enc("(" * 100000 + "1" + ")" * 100000)
+      Seq("format_query", "parse_query", "query").foreach { ep =>
+        val (dc, db) = form(s"$base/api/v1/$ep", s"query=$deep&time=150")
+        assert(dc == 400 && db.contains(""""errorType":"bad_data"""") &&
+          db.contains("nested deeper"), (ep, dc, db.take(200)))
+      }
+      val (qc, qb) = form(s"$base/api/v1/query_range",
+        s"query=$deep&start=100&end=200&step=10")
+      assert(qc == 400 && qb.contains(""""errorType":"bad_data""""), qb.take(200))
       val (oc, ob) = getAny(s"$base/api/v1/format_query?query=${enc("1+1")}")
       assert(oc == 200 && ob.startsWith("""{"status":"success","data":"""), ob)
+      // a failure that is no IllegalArgumentException still answers: a
+      // store file damaged under the cached relation is the server's
+      // fault, the JSON envelope with 500, not a dropped connection
+      import scala.jdk.CollectionConverters._
+      val w = Files.walk(java.nio.file.Paths.get(table))
+      val stored = try w.iterator().asScala.filter(p =>
+          p.getFileName.toString.endsWith(".parquet")).toVector
+        finally w.close()
+      assert(stored.nonEmpty)
+      stored.foreach(Files.write(_, ("not parquet " * 100).getBytes("UTF-8")))
+      val (dc, db) = getAny(s"$base/api/v1/query?query=reqs&time=150")
+      assert(dc == 500 && db.contains(""""status":"error"""") &&
+        db.contains(""""errorType":"internal""""), (dc, db.take(200)))
     } finally server.stop()
   }
 
