@@ -1739,4 +1739,136 @@ class ServerSpec extends SparkSpec {
       assert(metricValue(metrics, "graft_parquet_commits_total") == 1)
     } finally server.stop()
   }
+
+  test("serve: every ingest front door — RW1, RW2, text, OpenMetrics, " +
+       "OTLP — lands its samples, side tables, metadata, written headers " +
+       "and counters") {
+    import graft.codec.{NativeHist, Otlp, Prompb2, WriteWire}
+    val table = Files.createTempDirectory("graft_srvdoors").toString + "/metrics"
+    val server = new Server(spark, table, ctZeroIngestion = true).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val t0 = 1700000000000L
+    val staleNaN = java.lang.Double.longBitsToDouble(0x7ff0000000000002L)
+    /** POST `body` as `ctype`: the status and the RW2 written headers. */
+    def send(path: String, body: Array[Byte], ctype: String): (Int, String) = {
+      val conn = java.net.URI.create(base + path).toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      if (ctype.nonEmpty) conn.setRequestProperty("Content-Type", ctype)
+      conn.getOutputStream.write(body)
+      val code = conn.getResponseCode
+      val written = Seq("Samples", "Histograms", "Exemplars").map(k =>
+        conn.getHeaderField(s"X-Prometheus-Remote-Write-$k-Written"))
+      conn.disconnect()
+      (code, written.mkString(","))
+    }
+    def tags(r: org.apache.spark.sql.Row, i: Int): String =
+      r.getAs[scala.collection.Seq[String]](i).mkString(",")
+    def dt(r: org.apache.spark.sql.Row, i: Int): Long =
+      r.getTimestamp(i).getTime / 1000 - t0 / 1000
+    try {
+      // RW1: a sample, a stale marker, an ordinary NaN, an exemplar, metadata
+      val rw1 = WriteWire.encodeWriteRequest(Seq(
+        (Seq(PLabel("__name__", "rw1_lat"), PLabel("job", "api")),
+          Seq(PSample(0.25, t0), PSample(staleNaN, t0 + 60000L)),
+          Seq(WriteWire.PExemplar(Seq(PLabel("trace_id", "abc")), 0.93, t0))),
+        (Seq(PLabel("__name__", "rw1_nan"), PLabel("job", "api")),
+          Seq(PSample(Double.NaN, t0)), Nil)),
+        metadata = Seq(WriteWire.PMetadata("rw1_lat", "gauge", "Latency.",
+          "seconds")))
+      assert(send("/write", Prompb.snappyCompress(rw1), "") == (200, "null,null,null"))
+      // RW2: samples with an exemplar and metadata, one native histogram
+      val syms = Seq("", "__name__", "rw2_m", "job", "api", "trace_id", "def",
+        "rw2_h", "RW2 help.", "bytes")
+      val rw2 = Prompb2.P2Request(syms, Seq(
+        Prompb2.P2TimeSeries(Seq(1, 2, 3, 4),
+          Seq(PSample(1.0, t0), PSample(2.0, t0 + 60000L)),
+          exemplars = Seq(Prompb2.P2Exemplar(Seq(5, 6), 1.5, t0 + 60000L)),
+          metadata = Some(Prompb2.P2Metadata(2, 8, 9))),
+        Prompb2.P2TimeSeries(Seq(1, 7, 3, 4), Nil,
+          histograms = Seq(NativeHist.PHistogram(3L, 6.0, 0, 0.0, 0L,
+            Seq(NativeHist.BucketSpan(1, 2)), Seq(1L, 1L), Nil, Nil, t0)))))
+      assert(send("/write", Prompb.snappyCompress(Prompb2.encodeRequest(rw2)),
+        "application/x-protobuf;proto=io.prometheus.write.v2.Request") ==
+        (200, "2,1,1"))
+      // text exposition with TYPE/HELP
+      val text = "# HELP txt_reqs Requests served.\n# TYPE txt_reqs counter\n" +
+        s"""txt_reqs_total{code="200"} 5 $t0\ntxt_temp 21.5 ${t0 + 120000L}\n"""
+      assert(send("/write", text.getBytes("UTF-8"),
+        "text/plain; version=0.0.4")._1 == 200)
+      // OpenMetrics: an exemplar and a `_created` series (CT-zero on)
+      val om = "# TYPE om_reqs counter\n# HELP om_reqs OM requests.\n" +
+        s"""om_reqs_total{code="200"} 7 ${t0 / 1000} # {trace_id="om1"} 1.0 ${t0 / 1000}\n""" +
+        s"""om_reqs_created{code="200"} ${t0 / 1000 - 10} ${t0 / 1000}\n# EOF\n"""
+      assert(send("/write", om.getBytes("UTF-8"),
+        "application/openmetrics-text; version=1.0.0; charset=utf-8")._1 == 200)
+      // OTLP: a gauge point and an exponential-histogram point
+      val otlp = Otlp.encodeGaugeRequest(Seq("job" -> "otel"),
+          Seq(("otlp_g", Seq("host" -> "h1"), t0 * 1000000L, 3.25))) ++
+        Otlp.encodeExpHistogramRequest(Seq("job" -> "otel"), "otlp_eh",
+          Seq((Nil, t0 * 1000000L, 3L, 6.0, 0, 0L, 0, Seq(1L, 2L))))
+      assert(send("/otlp/v1/metrics", otlp, "")._1 == 200)
+
+      val rows = spark.read.parquet(table).select("tags", "val", "ts").collect()
+        .map(r => s"${tags(r, 0)} ${r.getDouble(1)} ${dt(r, 2)}").toSeq.sorted
+      assert(rows == Seq(
+        "__name__=om_reqs_total,code=200 0.0 -10",
+        "__name__=om_reqs_total,code=200 7.0 0",
+        "__name__=otlp_eh_bucket,job=otel,le=+Inf 3.0 0",
+        "__name__=otlp_eh_bucket,job=otel,le=2 1.0 0",
+        "__name__=otlp_eh_bucket,job=otel,le=4 3.0 0",
+        "__name__=otlp_eh_count,job=otel 3.0 0",
+        "__name__=otlp_eh_sum,job=otel 6.0 0",
+        "__name__=otlp_g,host=h1,job=otel 3.25 0",
+        "__name__=rw1_lat,job=api 0.25 0",
+        "__name__=rw2_h_bucket,job=api,le=+Inf 3.0 0",
+        "__name__=rw2_h_bucket,job=api,le=2 1.0 0",
+        "__name__=rw2_h_bucket,job=api,le=4 3.0 0",
+        "__name__=rw2_h_count,job=api 3.0 0",
+        "__name__=rw2_h_sum,job=api 6.0 0",
+        "__name__=rw2_m,job=api 1.0 0",
+        "__name__=rw2_m,job=api 2.0 60",
+        "__name__=txt_reqs_total,code=200 5.0 0",
+        "__name__=txt_temp 21.5 120"))
+      val exemplars = spark.read.parquet(table + "_exemplars")
+        .select("name", "tags", "ex_tags", "val", "ts").collect()
+        .map(r => s"${r.getString(0)} ${tags(r, 1)} ${tags(r, 2)} " +
+          s"${r.getDouble(3)} ${dt(r, 4)}").toSeq.sorted
+      assert(exemplars == Seq(
+        "om_reqs_total __name__=om_reqs_total,code=200 trace_id=om1 1.0 0",
+        "rw1_lat __name__=rw1_lat,job=api trace_id=abc 0.93 0",
+        "rw2_m __name__=rw2_m,job=api trace_id=def 1.5 60"))
+      val hists = spark.read.parquet(table + "_hist")
+        .selectExpr("name", "tags", "ts - 1700000000", "h_count", "h_sum",
+          "h_zero", "transform(h_buckets, x -> concat(x.idx, ':', x.cnt))")
+        .collect()
+        .map(r => s"${r.getString(0)} ${tags(r, 1)} ${r.getLong(2)} " +
+          s"${r.getLong(3)} ${r.getDouble(4)} ${r.getLong(5)} ${tags(r, 6)}")
+        .toSeq.sorted
+      assert(hists == Seq(
+        "otlp_eh __name__=otlp_eh,job=otel 0 3 6.0 0 1:1,2:2",
+        "rw2_h __name__=rw2_h,job=api 0 3 6.0 0 1:1,2:2"))
+      val stale = spark.read.parquet(table + "_stale")
+        .select("name", "tags", "ts").collect()
+        .map(r => s"${r.getString(0)} ${tags(r, 1)} ${dt(r, 2)}").toSeq
+      assert(stale == Seq("rw1_lat __name__=rw1_lat,job=api 60"))
+
+      assert(getAny(s"$base/api/v1/metadata") == (200,
+        """{"status":"success","data":{""" +
+          """"om_reqs":[{"type":"counter","help":"OM requests.","unit":""}],""" +
+          """"rw1_lat":[{"type":"gauge","help":"Latency.","unit":"seconds"}],""" +
+          """"rw2_m":[{"type":"gauge","help":"RW2 help.","unit":"bytes"}],""" +
+          """"txt_reqs":[{"type":"counter","help":"Requests served.","unit":""}]}}"""))
+      val (_, metrics) = get(s"$base/metrics")
+      // received counts every decoded sample (stale marker, NaN and the
+      // CT zero included); the store's sink every one but the marker
+      assert(metricValue(metrics, "received_samples_total") == 20)
+      assert(metricValue(metrics, """sent_samples_total{remote="parquet"}""") == 19)
+      assert(metricValue(metrics, """failed_samples_total{remote="parquet"}""") == 0)
+      assert(metricValue(metrics,
+        """sent_batch_duration_seconds_count{remote="parquet"}""") == 5)
+      assert(metricValue(metrics, "graft_parquet_commits_total") == 5)
+    } finally server.stop()
+  }
 }
