@@ -15,7 +15,8 @@ import org.apache.spark.sql.DataFrame
   * `bad_data`, a handler-chosen [[Status]] keeps its code, anything else
   * is 500 `internal`. `/api/v1` renders the mapping as the JSON error
   * envelope ([[api]], [[json]]); `/read` and `/federate` as plain text
-  * ([[plain]]).
+  * ([[plain]]). The ingest POSTs map theirs through [[Ingest.failure]]
+  * ([[ingest]]).
   */
 private[serve] object ApiEdge {
 
@@ -133,6 +134,30 @@ private[serve] object ApiEdge {
     catch {
       case e: Throwable =>
         val (code, _, msg) = failure(e)
+        respond(ex, code, msg.getBytes("UTF-8"))
+    }
+
+  /** An ingest POST (`/write`, `/otlp`): `decode` its body, `land` the
+    * record (None when the store committed it, else the store's error)
+    * and answer 200. RW2 requests get the written-stats headers so
+    * senders can detect partial writes: the request's own counts once
+    * the store committed, zeros when it did not or anything after the
+    * decode failed. A failure answers [[Ingest.failure]] as plain text.
+    */
+  def ingest(ex: HttpExchange, land: Ingest => Option[String])
+            (decode: => Ingest): Unit =
+    try {
+      val rec = decode
+      def written(c: (Long, Long, Long)): Unit =
+        Seq("Samples" -> c._1, "Histograms" -> c._2, "Exemplars" -> c._3)
+          .foreach { case (k, n) => ex.getResponseHeaders
+            .set(s"X-Prometheus-Remote-Write-$k-Written", n.toString) }
+      rec.written.foreach(_ => written((0L, 0L, 0L)))
+      if (land(rec).isEmpty) rec.written.foreach(written)
+      respond(ex, 200, Array.empty)
+    } catch {
+      case e: Throwable =>
+        val (code, msg) = Ingest.failure(e)
         respond(ex, code, msg.getBytes("UTF-8"))
     }
 

@@ -112,8 +112,8 @@ class Server(spark: SparkSession, tablePath: String,
   /** Plan-cached stored table: /read requests reuse one resolved parquet
     * relation (schema inference + file listing happen once) instead of
     * re-planning `spark.read.parquet` per request. It is invalidated
-    * once per commit — once per /write group commit, however many POSTs
-    * the group holds, and after each admin or scrape commit — so the
+    * once per commit — once per ingest group commit, however many
+    * requests the group holds, and after each admin commit — so the
     * next read lists the new files. The DATA is not pinned — only the
     * relation — so executors still scan parquet with full predicate
     * pushdown per query.
@@ -134,15 +134,16 @@ class Server(spark: SparkSession, tablePath: String,
     * concurrent append jobs to one path share the Hadoop staging dir
     * (`_temporary/0`) and silently LOSE rows when they overlap (exposed
     * by the s3_remote_write_chain entry — concurrent remote-write
-    * senders are the normal case, not the edge). /write commits through
-    * [[committer]], which holds this lock for a whole group; the admin
-    * rewrites, the scraper and the side-table appends take it directly.
+    * senders are the normal case, not the edge). Every ingest front door
+    * commits through [[committer]], which holds this lock for a whole
+    * group; the admin rewrites and the side-table appends take it
+    * directly. Nothing holds it across a network fetch.
     */
   private[graft] val appendLock = new Object
 
-  /** /write parquet write jobs that landed
-    * (`graft_parquet_commits_total`); fewer than the POSTs acknowledged
-    * when concurrent POSTs shared a commit. */
+  /** Ingest parquet write jobs that landed
+    * (`graft_parquet_commits_total`); fewer than the requests acknowledged
+    * when concurrent requests shared a commit. */
   private val parquetCommits = new AtomicLong(0)
 
   /** Commit-file merges that landed (`graft_parquet_merges_total`). */
@@ -156,20 +157,21 @@ class Server(spark: SparkSession, tablePath: String,
     * deleted under reads that may still open them. */
   private[graft] val reads = new ReadGuard(storeFs, () => invalidateTable())
 
-  /** The `date` partitions the current /write group wrote into; filled
+  /** The `date` partitions the current ingest group wrote into; filled
     * by its writes and drained by its settle, both under [[appendLock]]. */
   private val groupDates = scala.collection.mutable.Set[java.time.LocalDate]()
 
-  /** The /write committer. Each POST builds its samples outside the
-    * lock and submits them; whichever POST takes [[appendLock]] commits
-    * every queued POST's rows in ONE write job (each POST still in its
-    * own file per date, as sequential appends would leave them), then
-    * runs one retention sweep, the commit-file merges of the dates it
-    * wrote ([[mergeCommitted]]) and one [[invalidateTable]], in that
-    * order, before any member is answered. A POST wider than one write
-    * task commits alone. When the shared job fails, each POST is
-    * committed again alone, so a POST whose own samples fail the write
-    * fails only itself; a store failure fails every member.
+  /** The ingest committer ([[ingest]]). Each request — a /write or
+    * /otlp POST, a scraped page — builds its samples outside the lock
+    * and submits them; whichever request takes [[appendLock]] commits
+    * every queued request's rows in ONE write job (each still in its own
+    * file per date, as sequential appends would leave them), then runs
+    * one retention sweep, the commit-file merges of the dates it wrote
+    * ([[mergeCommitted]]) and one [[invalidateTable]], in that order,
+    * before any member is answered. A request wider than one write task
+    * commits alone. When the shared job fails, each request is committed
+    * again alone, so one whose own samples fail the write fails only
+    * itself; a store failure fails every member.
     *
     * `updated`: members of one group share the commit's
     * `current_timestamp()`. Only POSTs in flight together share a group,
@@ -206,7 +208,7 @@ class Server(spark: SparkSession, tablePath: String,
         mergeCommitted(groupDates)
       } finally { groupDates.clear(); invalidateTable() })
 
-  /** Queued /write members not yet drained into a commit. */
+  /** Queued ingest members not yet drained into a commit. */
   private[graft] def queuedWrites: Int = committer.queued
 
   /** Concatenate the small commit files of each of `dates`' `date=`
@@ -302,145 +304,61 @@ class Server(spark: SparkSession, tablePath: String,
       LabelMatcher(t, m.name, m.value)
     })
 
-  private def handleWrite(ex: HttpExchange): Unit =
-    try {
-      // Remote-Write 2.0 senders declare the payload message in
-      // Content-Type (`application/x-protobuf;proto=io.prometheus.write
-      // .v2.Request`, per the RW2 spec); everything else decodes as the
-      // v1 WriteRequest the reference speaks. Both resolve to the same
-      // canonical stream before any pipeline stage runs.
-      val ctype = Option(ex.getRequestHeaders.getFirst("Content-Type"))
-        .getOrElse("")
-      // the text exposition format rides /write too (pushed pages,
-      // federation relays): plain text, never snappy-framed, TYPE/HELP
-      // comments land in the metadata store
-      if (ctype.startsWith("text/plain")) {
-        val dec = graft.codec.TextExposition.decode(
-          new String(readBody(ex), "UTF-8"), System.currentTimeMillis())
-        dec.metadata.foreach(md =>
-          if (md.familyName.nonEmpty) metadataStore.put(md.familyName, md))
-        return ingestDecoded(ex, dec.request)
-      }
-      // OpenMetrics 1.0 pages declare themselves in Content-Type
-      // (`application/openmetrics-text; version=1.0.0`): seconds
-      // timestamps, required # EOF, UNIT metadata, and inline
-      // exemplars — which land in the same side table the proto
-      // generations' exemplars use, so /api/v1/query_exemplars serves
-      // scraped and remote-written exemplars identically
-      if (ctype.startsWith("application/openmetrics-text")) {
-        val dec = graft.codec.TextExposition.decodeOpenMetrics(
-          new String(readBody(ex), "UTF-8"), System.currentTimeMillis())
-        dec.metadata.foreach(md =>
-          if (md.familyName.nonEmpty) metadataStore.put(md.familyName, md))
-        if (dec.exemplars.nonEmpty) appendExemplars(dec.exemplars)
-        // --ct-zero-ingestion, text twin of the RW2 created_timestamp
-        // path: `_created` samples become synthetic zeros at the
-        // creation instant for the family's component series (gated by
-        // the same no-earlier-sample rule) and stop ingesting as
-        // ordinary samples — upstream's created-timestamp ingestion.
-        // With the flag off, historical behavior: `_created` series
-        // ingest as the plain samples they textually are.
-        val req =
-          if (!ctZeroIngestion) dec.request
-          else {
-            val kept = dec.request.timeseries
-              .filterNot(graft.codec.TextExposition.isCreatedSeries)
-            val zeros = ctZeroFilter(
-              graft.codec.TextExposition.ctZeroSeries(dec.request), kept)
-            Prompb.PWriteRequest(zeros ++ kept)
-          }
-        return ingestDecoded(ex, req)
-      }
-      val body = Prompb.snappyUncompress(readBody(ex))
-      // both generations resolve to ONE decoded record: v1 in a single
-      // walk over the bytes, v2 through its symbol-table resolvers
-      val v2 =
-        if (ctype.contains("io.prometheus.write.v2.Request"))
-          Some(graft.codec.Prompb2.decodeRequest(body))
-        else None
-      val dec = v2.fold(graft.codec.WriteWire.decode(body))(req =>
-        graft.codec.WriteWire.DecodedWrite(graft.codec.Prompb2.toV1(req),
-          graft.codec.Prompb2.histogramsToV1(req),
-          graft.codec.Prompb2.exemplarsToV1(req),
-          graft.codec.Prompb2.metadataToV1(req)))
-      // native histograms also flatten to their classic le-bucket view,
-      // the scalar store's representation
-      val merged = dec.scalars.timeseries ++
-        dec.histograms.flatMap(graft.codec.NativeHist.toClassicSeries)
-      val series = v2 match {
-        case Some(req) if ctZeroIngestion =>
-          ctZeroFilter(graft.codec.Prompb2.ctZeroSeries(req), merged) ++ merged
-        case _ => merged
-      }
-      dec.metadata.foreach(md =>
-        if (md.familyName.nonEmpty) metadataStore.put(md.familyName, md))
-      if (dec.exemplars.nonEmpty) appendExemplars(dec.exemplars)
-      if (dec.histograms.nonEmpty) appendNativeHist(dec.histograms)
-      // RW 2.0 spec: receivers respond to v2 requests with the
-      // written-stats headers so senders can detect partial writes
-      // (ingest here is all-or-nothing per request, so written = the
-      // request's own counts ON SUCCESS and 0 on a storage failure —
-      // set inside ingestDecoded AFTER the append, else a 400 would
-      // advertise the full counts as written and defeat the header's
-      // purpose; CT-zero injections are synthetic and not counted)
-      val written = v2.map(_ => (
-        dec.scalars.timeseries.map(_.samples.size).sum.toLong,
-        dec.histograms.map(_.histograms.size).sum.toLong,
-        dec.exemplars.map(_.exemplars.size).sum.toLong))
-      ingestDecoded(ex, Prompb.PWriteRequest(series), written)
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, Option(e.getMessage).getOrElse("decode error").getBytes("UTF-8"))
-    }
+  /** `POST /write`: a snappy-framed remote-write body (RW1, or RW2 by
+    * Content-Type), or a text page (`text/plain`, OpenMetrics — pushed
+    * pages, federation relays; never snappy-framed), landed through
+    * [[ingest]]. */
+  private def handleWrite(ex: HttpExchange): Unit = ApiEdge.ingest(ex, ingest(_)._2) {
+    val ctype = Option(ex.getRequestHeaders.getFirst("Content-Type"))
+      .getOrElse("")
+    if (Ingest.isText(ctype))
+      Ingest.text(new String(readBody(ex), "UTF-8"), ctype,
+        System.currentTimeMillis(), ctZeroIngestion)
+    else Ingest.remoteWrite(Prompb.snappyUncompress(readBody(ex)), ctype,
+      ctZeroIngestion)
+  }
 
   /** OTLP/HTTP metrics receiver (`POST /otlp/v1/metrics`, plain protobuf
     * body — OTLP does not snappy-frame): one [[graft.codec.Otlp.decode]]
-    * resolves the body to the same canonical stream as both
-    * remote-write generations, which then rides the identical ingest
-    * tail.
+    * resolves the body to the same [[Ingest]] record as every other
+    * front door, landed through [[ingest]].
     */
-  private def handleOtlp(ex: HttpExchange): Unit =
-    try {
-      // OTel SDK HTTP exporters gzip by default — honor the header
-      val raw = readBody(ex)
-      val body =
-        if (Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
-            .exists(_.contains("gzip"))) {
-          val in = new java.util.zip.GZIPInputStream(
-            new java.io.ByteArrayInputStream(raw))
-          try in.readAllBytes() finally in.close()
-        } else raw
-      // ONE walk decodes every facet. Target-info mode promotes
-      // service.name/instance.id to job/instance and collects the
-      // remaining resource attrs into a target_info series (the
-      // Prometheus receiver mapping, the shape info() joins); default
-      // mode flattens resource attrs into every series. Every facet
-      // follows the SAME mapping — the upstream receiver applies it
-      // before temporality conversion, so one resource's
-      // delta-converted and cumulative series share one label schema
-      // (and one conversion state key), and exemplars land under their
-      // samples' identity. The delta target_info series bypasses
-      // conversion: its value-1 samples are levels, not increments.
-      val dec = graft.codec.Otlp.decode(body, otlpTargetInfo)
-      val converted =
-        if (!otlpConvertDelta || dec.deltas.timeseries.isEmpty) Nil
-        else dec.deltaTargetInfo ++ convertDeltaSeries(dec.deltas.timeseries)
-      // EXPONENTIAL HISTOGRAMS: cumulative points land directly; DELTA
-      // points (opt-in) run per-bucket cumulation through the same
-      // gap-reset/out-of-order state discipline as the scalar
-      // conversion, THEN both flatten to the classic le view — the
-      // /write endpoint's native-histogram ingest discipline
-      val expNative = (dec.expHistograms ++
-        (if (otlpConvertDelta) convertDeltaExpHist(dec.deltaExpHistograms)
-         else Nil)).map(graft.codec.Otlp.expHistToNative)
-      if (expNative.nonEmpty) appendNativeHist(expNative)
-      if (dec.exemplars.nonEmpty) appendExemplars(dec.exemplars)
-      ingestDecoded(ex, Prompb.PWriteRequest(dec.cumulative.timeseries ++
-        converted ++ expNative.flatMap(graft.codec.NativeHist.toClassicSeries)))
-    } catch {
-      case e: Throwable =>
-        respond(ex, 400, Option(e.getMessage).getOrElse("decode error").getBytes("UTF-8"))
-    }
+  private def handleOtlp(ex: HttpExchange): Unit = ApiEdge.ingest(ex, ingest(_)._2) {
+    // OTel SDK HTTP exporters gzip by default — honor the header
+    val raw = readBody(ex)
+    val body =
+      if (Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
+          .exists(_.contains("gzip"))) {
+        val in = new java.util.zip.GZIPInputStream(
+          new java.io.ByteArrayInputStream(raw))
+        try in.readAllBytes() finally in.close()
+      } else raw
+    // ONE walk decodes every facet. Target-info mode promotes
+    // service.name/instance.id to job/instance and collects the
+    // remaining resource attrs into a target_info series (the
+    // Prometheus receiver mapping, the shape info() joins); default
+    // mode flattens resource attrs into every series. Every facet
+    // follows the SAME mapping — the upstream receiver applies it
+    // before temporality conversion, so one resource's
+    // delta-converted and cumulative series share one label schema
+    // (and one conversion state key), and exemplars land under their
+    // samples' identity. The delta target_info series bypasses
+    // conversion: its value-1 samples are levels, not increments.
+    val dec = graft.codec.Otlp.decode(body, otlpTargetInfo)
+    val converted =
+      if (!otlpConvertDelta || dec.deltas.timeseries.isEmpty) Nil
+      else dec.deltaTargetInfo ++ convertDeltaSeries(dec.deltas.timeseries)
+    // EXPONENTIAL HISTOGRAMS: cumulative points land directly; DELTA
+    // points (opt-in) run per-bucket cumulation through the same
+    // gap-reset/out-of-order state discipline as the scalar
+    // conversion; both then land as native histograms
+    val expNative = (dec.expHistograms ++
+      (if (otlpConvertDelta) convertDeltaExpHist(dec.deltaExpHistograms)
+       else Nil)).map(graft.codec.Otlp.expHistToNative)
+    Ingest(graft.codec.WriteWire.DecodedWrite(
+      Prompb.PWriteRequest(dec.cumulative.timeseries ++ converted),
+      expNative, dec.exemplars, Nil))
+  }
 
   /** Receiver-side delta→cumulative state (the otlpConvertDelta opt-in,
     * Prometheus's otlp-deltatocumulative feature): per live delta
@@ -566,11 +484,12 @@ class Server(spark: SparkSession, tablePath: String,
     out.result()
   }
 
-  /** Per-series newest ingested sample timestamp, tracked only under
-    * --ct-zero-ingestion: a CT-zero candidate ingests ONLY when the
-    * receiver knows no sample at or after its creation instant —
-    * injecting a zero behind existing data would fabricate a counter
-    * reset (upstream's AppendCTZeroSample out-of-order refusal).
+  /** Per-series newest ingested sample timestamp, whichever front door
+    * it came through, tracked only under --ct-zero-ingestion: a CT-zero
+    * candidate ingests ONLY when the receiver knows no sample at or
+    * after its creation instant — injecting a zero behind existing data
+    * would fabricate a counter reset (upstream's AppendCTZeroSample
+    * out-of-order refusal).
     * Driver-memory, bounded by live series cardinality like
     * [[metadataStore]].
     */
@@ -603,44 +522,25 @@ class Server(spark: SparkSession, tablePath: String,
     */
   private val StaleNaNBits = 0x7ff0000000000002L
 
-  /** Exemplars → the side table, the main table's layout discipline
-    * (date-partitioned, range-split, (name, tags, ts)-sorted).
+  /** Exemplars → their side table, each counted toward its series'
+    * `maxExemplarsPerSeries` bound (Prometheus's max-exemplars
+    * circular-buffer discipline): a high-frequency exemplar producer
+    * must not grow the side table linearly between retention sweeps.
+    * Appends stay cheap — a driver-side counter per series triggers the
+    * rewrite only once some series doubles its budget, so the compaction
+    * cost amortizes over at least maxExemplarsPerSeries appends.
     */
   private def appendExemplars(
       series: Seq[graft.codec.WriteWire.PExemplarSeries]): Unit = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val rows = for (s <- series; e <- s.exemplars) yield {
-      val name = s.seriesLabels.find(_.name == "__name__")
-        .map(_.value).getOrElse("")
-      (name,
-        s.seriesLabels.map(l => s"${l.name}=${l.value}").sorted,
-        e.labels.map(l => s"${l.name}=${l.value}").sorted,
-        e.value, e.timestampMs)
-    }
-    val df = rows.toDF("name", "tags", "ex_tags", "val", "tsMs")
-      .select(
-        to_date(timestamp_seconds((col("tsMs") / 1000).cast("long")))
-          .as("date"),
-        col("name"), col("tags"), col("ex_tags"), col("val"),
-        timestamp_seconds((col("tsMs") / 1000).cast("long")).as("ts"))
-    appendLock.synchronized {
-      WritePipeline.append(df, exemplarPath, rowsHint = rows.size.toLong)
-      // per-series bound (Prometheus's max-exemplars circular-buffer
-      // discipline): a high-frequency exemplar producer must not grow
-      // the side table linearly between retention sweeps. Appends stay
-      // cheap — a driver-side counter per series triggers the rewrite
-      // only once some series doubles its budget, so the compaction
-      // cost amortizes over at least maxExemplarsPerSeries appends.
-      if (maxExemplarsPerSeries > 0) {
-        rows.groupBy(r => r._1 + "|" + r._2.mkString(",")).foreach {
-          case (k, rs) =>
-            exemplarCounts.merge(k, rs.size.toLong, _ + _)
-        }
-        val overBudget = exemplarCounts.values.stream()
-          .anyMatch(c => c > 2L * maxExemplarsPerSeries)
-        if (overBudget) compactExemplars()
+    val rows = Ingest.exemplarRows(series)
+    appendSide(exemplarPath, Ingest.exemplars(spark, rows))
+    if (maxExemplarsPerSeries > 0) appendLock.synchronized {
+      rows.groupBy(r => r._1 + "|" + r._2.mkString(",")).foreach {
+        case (k, rs) => exemplarCounts.merge(k, rs.size.toLong, _ + _)
       }
+      val overBudget = exemplarCounts.values.stream()
+        .anyMatch(c => c > 2L * maxExemplarsPerSeries)
+      if (overBudget) compactExemplars()
     }
   }
 
@@ -671,15 +571,10 @@ class Server(spark: SparkSession, tablePath: String,
     // kept-rows bound is a free driver-side fact (live exemplar series ×
     // the per-series cap), so the rewrite width derives from the data
     // like WritePipeline.append's rowsHint path
-    val keptBound = math.max(1L,
-      exemplarCounts.size.toLong * maxExemplarsPerSeries)
-    val perTask = spark.conf.getOption("spark.graft.append.rowsPerTask")
-      .map(_.toLong).getOrElse(262144L)
-    val nParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toLong,
-      (keptBound + perTask - 1) / perTask)).toInt
+    val keptBound = exemplarCounts.size.toLong * maxExemplarsPerSeries
     kept
-      .repartitionByRange(nParts, col("date"), col("name"), col("tags"))
+      .repartitionByRange(WritePipeline.rangeWidth(spark, keptBound),
+        col("date"), col("name"), col("tags"))
       .sortWithinPartitions(col("name"), col("tags"), col("ts"))
       .write.mode("overwrite").partitionBy("date").parquet(staging)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -696,122 +591,68 @@ class Server(spark: SparkSession, tablePath: String,
         r.getLong(2)))
   }
 
-  /** Native histograms → the sparse side table (same layout discipline
-    * as the main table: date-partitioned, range-split, (name, tags,
-    * ts)-sorted). Values keep their wire types — count/zero as longs,
-    * sum as double, positive buckets as (idx, cnt) structs.
+  /** Append a side table's rows under [[appendLock]]. */
+  private def appendSide(path: String, side: Ingest.Side): Unit =
+    appendLock.synchronized(side.appendTo(path))
+
+  /** The one ingest tail. Every front door — /write's RW1, RW2, text
+    * and OpenMetrics bodies, /otlp and the scrape loop — decodes its
+    * request to an [[Ingest]] record outside every lock and lands it
+    * here, each step once: metadata to the metadata store; exemplars to
+    * their side table under the per-series bound; native histograms to
+    * the sparse `_hist` table and, flattened to their classic `le`
+    * series, to the store; the CT-zero splice; stale markers diverted to
+    * the `_stale` table; then the fan-out, whose store sink submits the
+    * samples to [[committer]] (which holds [[appendLock]] only for the
+    * commit). Returns the samples received and, when the store did not
+    * commit them, its error; a failure of any other step throws.
     */
-  private def appendNativeHist(
-      series: Seq[graft.codec.NativeHist.PHistSeries]): Unit = {
+  private def ingest(rec: Ingest): (Long, Option[String]) = {
+    val dec = rec.write
+    dec.metadata.foreach(md =>
+      if (md.familyName.nonEmpty) metadataStore.put(md.familyName, md))
+    if (dec.exemplars.nonEmpty) appendExemplars(dec.exemplars)
+    if (dec.histograms.nonEmpty)
+      appendSide(histPath, Ingest.histograms(spark, dec.histograms))
+    val series = dec.scalars.timeseries ++
+      dec.histograms.flatMap(graft.codec.NativeHist.toClassicSeries)
+    // --ct-zero-ingestion: admitted candidates become synthetic zeros at
+    // the creation instant, and every ingested series updates what the
+    // no-earlier-sample rule knows
+    val zeros = if (ctZeroIngestion) ctZeroFilter(rec.ctZero, series) else Nil
+    val all = Ingest.samples(zeros ++ series)
+    received.addAndGet(all.size.toLong)
+    // stale markers divert BEFORE the value pipeline: they are
+    // signals, not samples — F1 still sees (and drops) ordinary NaNs
+    val (staleMarkers, samples) = all.partition(s =>
+      java.lang.Double.doubleToRawLongBits(s.value) == StaleNaNBits)
+    if (staleMarkers.nonEmpty)
+      appendSide(stalePath, Ingest.staleMarkers(spark, staleMarkers))
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val rows = for (s <- series; h <- s.histograms) yield {
-      val name = s.labels.find(_.name == "__name__")
-        .map(_.value).getOrElse("")
-      (name,
-        s.labels.map(l => s"${l.name}=${l.value}").sorted,
-        h.timestampMs / 1000L, h.count, h.sum, h.zeroCount,
-        graft.codec.NativeHist.expandBuckets(h.positiveSpans,
-          h.positiveDeltas))
-    }
-    if (rows.nonEmpty) {
-      val df = rows
-        .toDF("name", "tags", "tsec", "h_count", "h_sum", "h_zero", "b")
-        .select(
-          to_date(timestamp_seconds(col("tsec"))).as("date"),
-          col("name"), col("tags"), col("tsec").as("ts"),
-          col("h_count"), col("h_sum"), col("h_zero"),
-          transform(col("b"), x => struct(x.getField("_1").as("idx"),
-            x.getField("_2").as("cnt"))).as("h_buckets"))
-      appendLock.synchronized {
-        WritePipeline.append(df, histPath, rowsHint = rows.size.toLong)
+    val flat = samples.toDF()
+    val table: (String, DataFrame => graft.sinks.Transport.WriteStats) =
+      "parquet" -> { df =>
+        // decode and the frame above stay concurrent; the commit
+        // (shared with whichever POSTs are queued with this one) runs
+        // under appendLock, and executors parallelize within it
+        committer.submit(WritePipeline.Batch(samples, df))
+        // The decoded request size IS the row count of `df` —
+        // counting it again would launch a second Spark job per
+        // micro-batch purely for the stat (the reference likewise
+        // reports len(samples), reference main.go:sendSamples).
+        graft.sinks.Transport.WriteStats(samples.size.toLong, 0L, None)
       }
+    val outcomes = FanOut.fanOutStats(flat, table +: extraSinks)
+    outcomes.foreach { o =>
+      sent.computeIfAbsent(o.sink, _ => new AtomicLong).addAndGet(o.sent)
+      failed.computeIfAbsent(o.sink, _ => new AtomicLong).addAndGet(o.failed)
+      sendDuration.computeIfAbsent(o.sink, _ => new Observability.DurationHistogram)
+        .observe(o.durationSec)
     }
-  }
-
-  /** Stale markers → value-less marker rows in the side table. */
-  private def appendStaleMarkers(
-      markers: Seq[graft.model.Schema.Sample]): Unit = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val rows = markers.map { m =>
-      (m.name, m.labels.toSeq.map { case (k, v) => s"$k=$v" }.sorted,
-        m.timestampMs)
-    }
-    val df = rows.toDF("name", "tags", "tsMs")
-      .select(
-        to_date(timestamp_seconds((col("tsMs") / 1000).cast("long")))
-          .as("date"),
-        col("name"), col("tags"),
-        timestamp_seconds((col("tsMs") / 1000).cast("long")).as("ts"))
-    appendLock.synchronized {
-      WritePipeline.append(df, stalePath, rowsHint = rows.size.toLong)
-    }
-  }
-
-  private def ingestDecoded(ex: HttpExchange,
-                            wr: Prompb.PWriteRequest,
-                            writtenStats: Option[(Long, Long, Long)] =
-                              None): Unit = {
-    // RW 2.0 written-stats: full counts only once the append committed,
-    // explicit zeros when anything below throws (partial-write honesty)
-    def setWritten(s: Long, h: Long, e: Long): Unit =
-      writtenStats.foreach { _ =>
-        ex.getResponseHeaders.set(
-          "X-Prometheus-Remote-Write-Samples-Written", s.toString)
-        ex.getResponseHeaders.set(
-          "X-Prometheus-Remote-Write-Histograms-Written", h.toString)
-        ex.getResponseHeaders.set(
-          "X-Prometheus-Remote-Write-Exemplars-Written", e.toString)
-      }
-    try {
-      val all = for (ts <- wr.timeseries; s <- ts.samples) yield {
-        val labels = ts.labels.map(l => l.name -> l.value).toMap
-        graft.model.Schema.Sample(labels.getOrElse("__name__", ""),
-          labels, s.value, s.timestampMs)
-      }
-      received.addAndGet(all.size.toLong)
-      // stale markers divert BEFORE the value pipeline: they are
-      // signals, not samples — F1 still sees (and drops) ordinary NaNs
-      val (staleMarkers, samples) = all.partition(s =>
-        java.lang.Double.doubleToRawLongBits(s.value) == StaleNaNBits)
-      if (staleMarkers.nonEmpty) appendStaleMarkers(staleMarkers)
-      import spark.implicits._
-      val flat = samples.toDF()
-      val table: (String, DataFrame => graft.sinks.Transport.WriteStats) =
-        "parquet" -> { df =>
-          // decode and the frame above stay concurrent; the commit
-          // (shared with whichever POSTs are queued with this one) runs
-          // under appendLock, and executors parallelize within it
-          committer.submit(WritePipeline.Batch(samples, df))
-          // The decoded request size IS the row count of `df` —
-          // counting it again would launch a second Spark job per
-          // micro-batch purely for the stat (the reference likewise
-          // reports len(samples), reference main.go:sendSamples).
-          graft.sinks.Transport.WriteStats(samples.size.toLong, 0L, None)
-        }
-      val outcomes = FanOut.fanOutStats(flat, table +: extraSinks)
-      outcomes.foreach { o =>
-        sent.computeIfAbsent(o.sink, _ => new AtomicLong).addAndGet(o.sent)
-        failed.computeIfAbsent(o.sink, _ => new AtomicLong).addAndGet(o.failed)
-        sendDuration.computeIfAbsent(o.sink, _ => new Observability.DurationHistogram)
-          .observe(o.durationSec)
-      }
-      // fan-out isolates per-sink failures (the request still answers
-      // 200, pinned by s3_fanout_isolation) — but the RW2 written
-      // headers speak for THIS receiver's storage: full counts only
-      // when the parquet append committed, zeros when it failed
-      val tableOk = outcomes.find(_.sink == "parquet")
-        .forall(o => o.error.isEmpty && o.failed == 0L)
-      writtenStats.foreach { case (s, h, e) =>
-        if (tableOk) setWritten(s, h, e) else setWritten(0L, 0L, 0L)
-      }
-      respond(ex, 200, Array.empty)
-    } catch {
-      case e: Throwable =>
-        setWritten(0L, 0L, 0L)
-        respond(ex, 400, Option(e.getMessage).getOrElse("decode error").getBytes("UTF-8"))
-    }
+    // fan-out isolates per-sink failures (the request still answers
+    // 200, pinned by s3_fanout_isolation); the store's own outcome is
+    // what the RW2 written headers and the scrape target's health report
+    (all.size.toLong, outcomes.find(_.sink == "parquet").flatMap(_.error))
   }
 
   /** Dashboard downsampling via URL query params on POST /read —
@@ -1701,22 +1542,19 @@ class Server(spark: SparkSession, tablePath: String,
 
   /** One scrape pass over every configured target (text-exposition
     * pages — a child's /federate, any /metrics); returns samples
-    * ingested. A failed target logs, records its error for
-    * /api/v1/targets, and the others proceed. */
+    * received. Each page is fetched and decoded outside every lock and
+    * lands through [[ingest]], so a slow target holds up no commit. A
+    * failed target — its fetch, its decode or its store commit — logs,
+    * records its error for /api/v1/targets, and the others proceed. */
   def scrapeOnce(): Long = scrapeTargets.map { url =>
     val nowSec = System.currentTimeMillis() / 1000
     try {
-      val n = try appendLock.synchronized {
-        val page = Scraper.scrape(url, ctZeroGate =
-          if (ctZeroIngestion) Some(ctZeroFilter(_, _)) else None)
-        val n = Scraper.append(spark, page, tablePath)
-        mergeCommitted(WritePipeline.partitionDates(spark, page.samples))
-        n
-      } finally invalidateTable()
+      val (n, storeError) = ingest(Scraper.page(url, ctZero = ctZeroIngestion))
+      storeError.foreach(m => throw new java.io.IOException(m))
       targetState.put(url, ("up", nowSec, ""))
       n
     } catch {
-      case e: Exception =>
+      case scala.util.control.NonFatal(e) =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         targetState.put(url, ("down", nowSec, msg))
         System.err.println(s"[graft] scrape of $url failed: $msg")

@@ -1871,4 +1871,116 @@ class ServerSpec extends SparkSpec {
       assert(metricValue(metrics, "graft_parquet_commits_total") == 5)
     } finally server.stop()
   }
+
+  test("serve: the scrape loop fetches outside the commit lock and lands " +
+       "its page through the ingest tail — metadata, the exemplar bound, " +
+       "the counters and the extra sinks") {
+    val table = Files.createTempDirectory("graft_srvscr").toString + "/metrics"
+    val t0s = 1700000000L
+    val delayMs = 10000L
+    @volatile var slow = true
+    val scrapes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val inDelay = new java.util.concurrent.CountDownLatch(1)
+    val target = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("localhost", 0), 0)
+    target.createContext("/metrics", (ex: com.sun.net.httpserver.HttpExchange) => {
+      val i = scrapes.incrementAndGet()
+      if (slow) { inDelay.countDown(); Thread.sleep(delayMs) }
+      val page = "# TYPE sc_reqs counter\n# HELP sc_reqs Scraped requests.\n" +
+        s"""sc_reqs_total{code="200"} $i ${t0s + i} # {trace_id="t$i"} 1.0 ${t0s + i}\n""" +
+        "# EOF\n"
+      ex.getResponseHeaders.set("Content-Type",
+        "application/openmetrics-text; version=1.0.0; charset=utf-8")
+      val bytes = page.getBytes("UTF-8")
+      ex.sendResponseHeaders(200, bytes.length.toLong)
+      ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    target.start()
+    val probed = new java.util.concurrent.atomic.AtomicLong(0)
+    val probe: (String, org.apache.spark.sql.DataFrame => graft.sinks.Transport.WriteStats) =
+      "probe" -> { df =>
+        val n = df.count()
+        probed.addAndGet(n)
+        graft.sinks.Transport.WriteStats(n, 0L, None)
+      }
+    val server = new Server(spark, table, extraSinks = Seq(probe),
+      scrapeTargets = Seq(s"http://localhost:${target.getAddress.getPort}/metrics"),
+      scrapeIntervalSec = 3600L, maxExemplarsPerSeries = 1).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val first = pool.submit(new java.util.concurrent.Callable[Long] {
+        def call(): Long = server.scrapeOnce()
+      })
+      assert(inDelay.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      // the target stalls its reply; a /write meanwhile must not wait for it
+      val begin = System.nanoTime()
+      val written = Seq(PTimeSeries(Seq(PLabel("__name__", "pushed")),
+        Seq(PSample(1.0, t0s * 1000L))))
+      assert(postWrite(base, written, v2 = false)._1 == 200)
+      val tookMs = (System.nanoTime() - begin) / 1000000L
+      assert(tookMs < delayMs / 2, s"/write waited $tookMs ms for the scrape")
+      assert(first.get(60, java.util.concurrent.TimeUnit.SECONDS) == 1L)
+      slow = false
+      assert(server.scrapeOnce() == 1L && server.scrapeOnce() == 1L)
+
+      assert(storedRows(table) == rowsOf(written) ++
+        (1 to 3).map(i => ("__name__=sc_reqs_total,code=200", i.toDouble, t0s + i)))
+      // TYPE/HELP of the scraped page reach the metadata API
+      assert(getAny(s"$base/api/v1/metadata")._2.contains(
+        """"sc_reqs":[{"type":"counter","help":"Scraped requests.","unit":""}]"""))
+      // three scraped exemplars of one series, bounded to the newest one
+      val ex = spark.read.parquet(table + "_exemplars")
+        .select("ex_tags").collect().map(_.getAs[scala.collection.Seq[String]](0).toSeq)
+      assert(ex.toSeq == Seq(Seq("trace_id=t3")))
+      // scraped samples count as received and reach every sink
+      val (_, metrics) = get(s"$base/metrics")
+      assert(metricValue(metrics, "received_samples_total") == 4)
+      assert(metricValue(metrics, """sent_samples_total{remote="probe"}""") == 4)
+      assert(probed.get == 4)
+      assert(getAny(s"$base/api/v1/targets")._2.contains(""""health":"up""""))
+    } finally { pool.shutdownNow(); server.stop(); target.stop(0) }
+  }
+
+  test("serve: an ingest failure answers 400, a fatal JVM error 500") {
+    import graft.serve.Ingest
+    assert(Ingest.failure(new IllegalArgumentException("text format line 3: x")) ==
+      (400, "text format line 3: x"))
+    assert(Ingest.failure(new java.io.IOException("store down")) == (400, "store down"))
+    assert(Ingest.failure(new NullPointerException()) == (400, "java.lang.NullPointerException"))
+    assert(Ingest.failure(new OutOfMemoryError("Java heap space")) ==
+      (500, "Java heap space"))
+    assert(Ingest.failure(new StackOverflowError()) == (500, "java.lang.StackOverflowError"))
+  }
+
+  test("serve: under --ct-zero-ingestion a CT zero is refused behind a " +
+       "sample that arrived through another front door") {
+    import graft.codec.Prompb2
+    val table = Files.createTempDirectory("graft_srvctx").toString + "/metrics"
+    val server = new Server(spark, table, ctZeroIngestion = true).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val labels = Seq(PLabel("__name__", "ctx_total"), PLabel("job", "a"))
+    try {
+      // an RW1 sample at t=100 s, then an RW2 sample at t=200 s whose
+      // series claims creation at t=50 s: a zero at 50 s would sit behind
+      // the stored t=100 s sample and fabricate a counter reset
+      assert(postWrite(base, Seq(PTimeSeries(labels, Seq(PSample(5.0, 100000L)))),
+        v2 = false)._1 == 200)
+      val req = Prompb2.P2Request(Seq("", "__name__", "ctx_total", "job", "a"),
+        Seq(Prompb2.P2TimeSeries(Seq(1, 2, 3, 4), Seq(PSample(7.0, 200000L)),
+          createdTimestampMs = 50000L)))
+      val conn = java.net.URI.create(s"$base/write").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setRequestProperty("Content-Type",
+        "application/x-protobuf;proto=io.prometheus.write.v2.Request")
+      conn.setDoOutput(true)
+      conn.getOutputStream.write(Prompb.snappyCompress(Prompb2.encodeRequest(req)))
+      assert(conn.getResponseCode == 200)
+      conn.disconnect()
+      assert(storedRows(table) == Seq(
+        ("__name__=ctx_total,job=a", 5.0, 100L), ("__name__=ctx_total,job=a", 7.0, 200L)))
+    } finally server.stop()
+  }
 }
