@@ -1983,4 +1983,134 @@ class ServerSpec extends SparkSpec {
         ("__name__=ctx_total,job=a", 5.0, 100L), ("__name__=ctx_total,job=a", 7.0, 200L)))
     } finally server.stop()
   }
+
+  test("serve: source=chunks forwards a scalar and a native-histogram " +
+       "chunk tier — stored, trimmed and forced re-encode bodies — and a " +
+       "plain streamed_xor_chunks read carries the _hist frames") {
+    import graft.codec.{ChunkedRead, FloatHistChunk, NativeHist, XorChunk}
+    import graft.engine.ChunkStore
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_srvchunks").toString
+    val d0 = 1704067200L // 2024-01-01T00:00Z
+    val d1 = d0 + 86400L
+    val scalar = Seq(
+      ("cpu", Seq("job=a"), d0 + 60, 1.5), ("cpu", Seq("job=a"), d0 + 3700, 2.25),
+      ("cpu", Seq("job=a"), d0 + 7300, 4.0), ("cpu", Seq("job=a"), d0 + 80000, -1.0),
+      ("cpu", Seq("job=a"), d1 + 100, 8.5), ("cpu", Seq("job=a"), d1 + 5000, 9.0),
+      ("cpu", Seq("job=a"), d1 + 9000, 9.75), ("cpu", Seq("job=b"), d0 + 10, 0.5),
+      ("cpu", Seq("job=b"), d0 + 20000, 100.0), ("cpu", Seq("job=b"), d1 + 30, 3.0))
+      .toDF("name", "tags", "t", "val")
+      .select(to_date(timestamp_seconds(col("t"))).as("date"), col("name"),
+        col("tags"), timestamp_seconds(col("t")).as("ts"), col("val"))
+    ChunkStore.toChunked(scalar).write.partitionBy("date")
+      .parquet(s"$dir/chunks")
+    val hist = Seq(
+      ("lat", Seq("job=a"), d0 + 60, 3L, 4.5, 0L, Seq(ChunkStore.HBkt(1, 2), ChunkStore.HBkt(2, 1))),
+      ("lat", Seq("job=a"), d0 + 3700, 7L, 11.0, 1L, Seq(ChunkStore.HBkt(1, 3), ChunkStore.HBkt(3, 3))),
+      ("lat", Seq("job=a"), d0 + 9000, 9L, 15.25, 1L, Seq(ChunkStore.HBkt(1, 4), ChunkStore.HBkt(3, 4))),
+      ("lat", Seq("job=a"), d1 + 50, 2L, 1.0, 2L, Seq.empty[ChunkStore.HBkt]),
+      ("lat", Seq("job=a"), d1 + 7300, 5L, 8.5, 2L, Seq(ChunkStore.HBkt(-1, 1), ChunkStore.HBkt(2, 2))))
+      .toDF("name", "tags", "ts", "h_count", "h_sum", "h_zero", "h_buckets")
+      .withColumn("date", to_date(timestamp_seconds(col("ts"))))
+    ChunkStore.toChunkedHist(hist).write.partitionBy("date")
+      .parquet(s"$dir/hchunks")
+    val server = new Server(spark, s"$dir/metrics",
+      chunkTierPath = Some(s"$dir/chunks"),
+      histChunkTierPath = Some(s"$dir/hchunks")).start()
+    val base = s"http://localhost:${server.boundPort}"
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b)
+        .map("%02x".format(_)).mkString
+    /** POST a two-query read (cpu, then lat) over [startMs, endMs]: the
+      * body and X-Graft-Chunk-Source. */
+    def read(query: String, startMs: Long, endMs: Long): (Array[Byte], String) = {
+      val rr = PReadRequest(Seq("cpu", "lat").map(n => PQuery(startMs, endMs,
+        Seq(PLabelMatcher(MatchType.EQ, "__name__", n)))))
+      val conn = java.net.URI.create(s"$base/read?$query").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      conn.getOutputStream.write(Prompb.snappyCompress(Prompb.encodeReadRequest(rr)))
+      assert(conn.getResponseCode == 200)
+      val body = conn.getInputStream.readAllBytes()
+      val src = conn.getHeaderField("X-Graft-Chunk-Source")
+      conn.disconnect()
+      (body, src)
+    }
+    /** Decoded frames: (query index, series labels, chunk type, points
+      * as (ms, value or count)). */
+    def points(body: Array[Byte]): Seq[(Long, String, Int, Seq[(Long, Double)])] =
+      for {
+        f <- ChunkedRead.readFrames(body)
+        (series, qi) = ChunkedRead.decodeResponse(f)
+        ser <- series
+        ch <- ser.chunks
+      } yield (qi, ser.labels.map(l => s"${l.name}=${l.value}").mkString(","),
+        ch.typ,
+        if (ch.typ == ChunkedRead.EncodingXor) XorChunk.decode(ch.data)
+        else FloatHistChunk.decode(ch.data)._1.map(p => (p.tsMs, p.count)))
+    try {
+      val chunks = "response_type=streamed_xor_chunks&source=chunks"
+      val (alignedLo, alignedHi) = (d0 * 1000L, (d1 + 86400L) * 1000L - 1000L)
+      val (stored, storedSrc) = read(chunks, alignedLo, alignedHi)
+      val (forced, forcedSrc) = read(chunks + "&chunk_path=reencode",
+        alignedLo, alignedHi)
+      val (lo, hi) = ((d0 + 3600L) * 1000L, (d1 + 7200L) * 1000L)
+      val (trimmed, trimmedSrc) = read(chunks, lo, hi)
+      assert(storedSrc == "store,store,store,store")
+      assert(forcedSrc == "reencode,reencode,reencode,reencode")
+      assert(trimmedSrc == "reencode,reencode,reencode,reencode")
+      assert(java.util.Arrays.equals(stored, forced))
+      assert(points(stored) == Seq(
+        (0L, "job=a", ChunkedRead.EncodingXor,
+          Seq((d0 * 1000 + 60000, 1.5), (d0 * 1000 + 3700000, 2.25),
+            (d0 * 1000 + 7300000, 4.0), (d0 * 1000 + 80000000, -1.0))),
+        (0L, "job=a", ChunkedRead.EncodingXor,
+          Seq((d1 * 1000 + 100000, 8.5), (d1 * 1000 + 5000000, 9.0),
+            (d1 * 1000 + 9000000, 9.75))),
+        (0L, "job=b", ChunkedRead.EncodingXor,
+          Seq((d0 * 1000 + 10000, 0.5), (d0 * 1000 + 20000000, 100.0))),
+        (0L, "job=b", ChunkedRead.EncodingXor, Seq((d1 * 1000 + 30000, 3.0))),
+        (1L, "job=a", ChunkedRead.EncodingFloatHistogram,
+          Seq((d0 * 1000 + 60000, 3.0), (d0 * 1000 + 3700000, 7.0),
+            (d0 * 1000 + 9000000, 9.0))),
+        (1L, "job=a", ChunkedRead.EncodingFloatHistogram,
+          Seq((d1 * 1000 + 50000, 2.0), (d1 * 1000 + 7300000, 5.0)))))
+      // the misaligned window keeps exactly the in-range points, and a
+      // chunk left empty by the trim is not sent
+      val inRange = points(stored).map { case (qi, l, typ, ps) =>
+        (qi, l, typ, ps.filter(p => p._1 >= lo && p._1 <= hi)) }
+        .filter(_._4.nonEmpty)
+      assert(points(trimmed) == inRange)
+      assert(sha(stored) ==
+        "6ccba311bab4a063be9ac669db15e35121b4d1e8626c6c430269a1f809a35b0b")
+      assert(sha(trimmed) ==
+        "ecf99ad4c1132ce4dfec99027d8ab1943e2754c5b2eb74eba1ac82197ce636ec")
+
+      // the plain chunked read answers the row store: aggregated XOR
+      // frames, then the native side table's FLOAT_HISTOGRAM frames
+      val (s0, s1) = (d0 * 1000L + 60000L, d0 * 1000L + 120000L)
+      val (spans, deltas) = (Seq(NativeHist.BucketSpan(1, 3)), Seq(2L, 1L, -1L))
+      assert(post(s"$base/write", Prompb.snappyCompress(NativeHist.encodeWriteRequest(
+        Seq(NativeHist.PHistSeries(Seq(PLabel("__name__", "lat"), PLabel("job", "a")),
+          Seq(NativeHist.PHistogram(7L, 9.5, 0, 1e-128, 0L, spans, deltas, Nil, Nil, s0),
+            NativeHist.PHistogram(9L, 12.0, 0, 1e-128, 2L, spans, deltas, Nil, Nil, s1)))))))
+        ._1 == 200)
+      assert(post(s"$base/write", Prompb.snappyCompress(Prompb.encodeWriteRequest(
+        PWriteRequest(Seq(PTimeSeries(Seq(PLabel("__name__", "up"), PLabel("job", "a")),
+          Seq(PSample(1.0, s0), PSample(0.0, s1))))))))._1 == 200)
+      val rr = PReadRequest(Seq(PQuery(d0 * 1000L, d0 * 1000L + 3600000L,
+        Seq(PLabelMatcher(MatchType.RE, "__name__", "lat|up")))))
+      val (code, plain) = post(s"$base/read?response_type=streamed_xor_chunks",
+        Prompb.snappyCompress(Prompb.encodeReadRequest(rr)))
+      assert(code == 200)
+      val hists = points(plain).filter(_._3 == ChunkedRead.EncodingFloatHistogram)
+      assert(hists == Seq((0L, "__name__=lat,job=a",
+        ChunkedRead.EncodingFloatHistogram, Seq((s0, 7.0), (s1, 9.0)))))
+      assert(points(plain).exists(_._2 == "__name__=up,job=a"))
+      assert(sha(plain) ==
+        "b0d8d54bd53256d479f85d40d2495c5f2442317993633628061be62a51b9fe4c")
+    } finally server.stop()
+  }
 }
