@@ -2549,7 +2549,7 @@ object SparkEntry {
     "serve_read_chunked_hist_store" -> ((s, dir) => {
       import s.implicits._
       val base = cachedInputDir(s"hchunk${math.abs(dir.hashCode)}") { d =>
-        graft.engine.ChunkStore.writeHist(
+        graft.engine.ChunkStore.write(
           nativeHistStore(s, dir)
             .select(to_date(timestamp_seconds(col("ts"))).as("date"),
               col("name"), col("tags"), col("ts"), col("h_count"),
@@ -6579,7 +6579,7 @@ object SparkEntry {
           col("h_buckets"))
       val tmp = java.nio.file.Files.createTempDirectory("graft_a7h")
         .toString + "/hchunks"
-      graft.engine.ChunkStore.writeHist(store, tmp)
+      graft.engine.ChunkStore.write(store, tmp)
       graft.engine.ChunkStore.fromChunkedHist(s.read.parquet(tmp))
         .select(LabelOps.labelValue(col("tags"), "event_type")
             .as("event_type"),

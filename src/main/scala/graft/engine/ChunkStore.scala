@@ -105,9 +105,11 @@ object ChunkStore {
     * h_zero, h_buckets): one row per (date, series) holding the day's
     * time-sorted histograms as a single [[graft.codec.FloatHistChunk]]
     * plus the same min/max/count metadata, with an `encoding` column
-    * (= 3, prompb FLOAT_HISTOGRAM) so mixed scalar+native tiers serve
-    * through one read path. Same ms-at-rest discipline: stored bytes
-    * forward VERBATIM into day-aligned streamed_xor_chunks responses.
+    * (= 3, prompb FLOAT_HISTOGRAM): the one stored-chunk forwarder
+    * ([[ResponseEdge.encodeChunkedFromStore]]) reads a row's chunk codec
+    * from it, and takes XOR for a tier without the column. Same
+    * ms-at-rest discipline: stored bytes forward VERBATIM into
+    * day-aligned streamed_xor_chunks responses.
     * Same scale shape: one partial-combined groupBy per (date, series),
     * per-row encode kernel, map-side decode inverse.
     */
@@ -157,14 +159,6 @@ object ChunkStore {
         "h_buckets")
   }
 
-  /** Write the native-histogram chunk tier, date-partitioned like the
-    * scalar tier. */
-  def writeHist(histStore: DataFrame, path: String): Unit =
-    toChunkedHist(histStore)
-      .repartitionByRange(col("date"), col("name"), col("tags"))
-      .sortWithinPartitions(col("name"), col("tags"), col("min_ts"))
-      .write.mode("overwrite").partitionBy("date").parquet(path)
-
   /** Whether the query's inclusive-second range [startMs, endMs] covers
     * whole UTC days — the precondition for forwarding stored series-day
     * chunks verbatim (every sample of every covered chunk is in range).
@@ -173,9 +167,12 @@ object ChunkStore {
     q.endMs > q.startMs &&
       q.startMs % 86400000L == 0L && (q.endMs + 1000L) % 86400000L == 0L
 
-  /** Write the chunked tier, date-partitioned like the row tier. */
-  def write(metrics: DataFrame, path: String): Unit =
-    toChunked(metrics)
+  /** Write a chunk tier, date-partitioned like the row tier: metric
+    * rows through [[toChunked]], native-histogram store rows (those
+    * carrying `h_buckets`) through [[toChunkedHist]]. */
+  def write(rows: DataFrame, path: String): Unit =
+    (if (rows.columns.contains("h_buckets")) toChunkedHist(rows)
+     else toChunked(rows))
       .repartitionByRange(col("date"), col("name"), col("tags"))
       .sortWithinPartitions(col("name"), col("tags"), col("min_ts"))
       .write.mode("overwrite").partitionBy("date").parquet(path)

@@ -1,8 +1,8 @@
 package graft.engine
 
-import graft.codec.Prompb
+import graft.codec.{ChunkedRead, FloatHistChunk, Prompb, XorChunk}
 import graft.codec.Prompb._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit, timestamp_seconds, to_date}
 
 /** S11: the read-response edge — assembled series collected at the driver
@@ -87,19 +87,12 @@ object ResponseEdge {
   def encode(assembled: DataFrame): Array[Byte] =
     Prompb.snappyCompress(Prompb.encodeReadResponse(toReadResponse(assembled)))
 
-  /** STREAMED_XOR_CHUNKS response body: each query's series become
-    * framed `ChunkedReadResponse` messages whose samples ride Gorilla
-    * [[graft.codec.XorChunk]]s (one frame per series — constant driver
-    * memory per frame at real scale, where the SAMPLES form must
-    * materialize the whole result; here both forms share the bounded
-    * collect because the series budget already applies). Chunks split at
-    * `maxSamplesPerChunk` samples, the TSDB's ~120-sample convention.
-    * Uncompressed on the wire per the remote-read spec (the chunk data
-    * is already Gorilla-compressed).
-    */
-  /** STREAMED_XOR_CHUNKS body answered from the at-rest chunk tier
+  /** STREAMED_XOR_CHUNKS body answered from an at-rest chunk tier
     * ([[ChunkStore]]) — raw samples, the Prometheus/Thanos remote-read
     * semantic, as opposed to the aggregating [[encodeChunked]] path.
+    * One forwarder serves every tier: a row's chunk encoding is its
+    * `encoding` column (FLOAT_HISTOGRAM on the native-histogram tier),
+    * XOR on a tier without one.
     *
     * Day-aligned queries ([[ChunkStore.dayAligned]]) take the Thanos
     * store-gateway ZERO-COPY path: every covered series-day chunk's
@@ -107,16 +100,16 @@ object ResponseEdge {
     * VERBATIM into the response frames — no decode, no re-encode, the
     * driver only moves byte arrays (chunks are ms-encoded at rest for
     * exactly this). Misaligned queries fall back to decode → trim to
-    * [startMs, endMs] → re-encode per stored chunk. Because XOR
-    * encoding is a pure function of the sample sequence, the two paths
-    * are BYTE-IDENTICAL on aligned queries (`forceReencode` exists so
-    * the serve entry can pin that equality over live HTTP).
+    * [startMs, endMs] → re-encode per stored chunk ([[trim]]). Because
+    * each encoding is a pure function of the sample sequence, the two
+    * paths are BYTE-IDENTICAL on aligned queries (`forceReencode` exists
+    * so the serve entries can pin that equality over live HTTP).
     *
     * Matchers and the date bounds push into the tier's parquet scan
     * (partition pruning + row-group stats on (name, tags)); the
-    * driver-side collect holds chunk rows — Gorilla-compressed, ~2-12
-    * bits a sample — and is bounded by the same `maxSeries` budget as
-    * the SAMPLES path. Returns the body plus the per-query path taken
+    * driver-side collect holds chunk rows — compressed, ~2-12 bits a
+    * sample — and is bounded by the same `maxSeries` budget as the
+    * SAMPLES path. Returns the body plus the per-query path taken
     * ("store" | "reencode"), surfaced as the X-Graft-Chunk-Source
     * header.
     */
@@ -126,54 +119,87 @@ object ResponseEdge {
                              forceReencode: Boolean = false,
                              strictCompat: Boolean = false)
       : (Array[Byte], Seq[String]) = {
-    import graft.codec.{ChunkedRead, XorChunk}
+    def verbatim(q: graft.compile.Matchers.PromQuery): Boolean =
+      ChunkStore.dayAligned(q) && !forceReencode
+    val encoding =
+      if (chunked.columns.contains("encoding")) col("encoding")
+      else lit(ChunkedRead.EncodingXor).as("encoding")
+    val body = frames(chunked, queries, maxSeries, strictCompat,
+        "min_ts", "max_ts",
+        Seq(col("min_ts"), col("max_ts"), encoding, col("chunk"))) {
+      (q, rows) =>
+        // (min_ts, max_ts) ordering is total for non-overlapping
+        // chunks of one series (the toChunked grouping guarantees it)
+        rows.sortBy(r => (r.getAs[Long]("min_ts"), r.getAs[Long]("max_ts")))
+          .flatMap { r =>
+            val enc = r.getAs[Int]("encoding")
+            val bytes = r.getAs[Array[Byte]]("chunk")
+            if (verbatim(q))
+              Some(ChunkedRead.PChunk(r.getAs[Long]("min_ts") * 1000L,
+                r.getAs[Long]("max_ts") * 1000L, enc, bytes))
+            else trim(enc, bytes, q.startMs, q.endMs)
+          }
+    }
+    (body, queries.map(q => if (verbatim(q)) "store" else "reencode"))
+  }
+
+  /** One stored chunk decoded, cut to the samples in [loMs, hiMs] and
+    * re-encoded in its own encoding; None when no sample is in range.
+    */
+  private def trim(encoding: Int, bytes: Array[Byte], loMs: Long,
+                   hiMs: Long): Option[ChunkedRead.PChunk] =
+    encoding match {
+      case ChunkedRead.EncodingXor =>
+        val pts = XorChunk.decode(bytes).filter(p => p._1 >= loMs && p._1 <= hiMs)
+        if (pts.isEmpty) None
+        else Some(ChunkedRead.PChunk(pts.head._1, pts.last._1, encoding,
+          XorChunk.encode(pts)))
+      case ChunkedRead.EncodingFloatHistogram =>
+        val (all, schema) = FloatHistChunk.decode(bytes)
+        val pts = all.filter(p => p.tsMs >= loMs && p.tsMs <= hiMs)
+        if (pts.isEmpty) None
+        else Some(ChunkedRead.PChunk(pts.head.tsMs, pts.last.tsMs, encoding,
+          FloatHistChunk.encode(pts, schema)))
+    }
+
+  /** The per-query loop of every chunk-frame encoder over a stored
+    * table: a query's matchers, date partitions and time bound (rows
+    * whose [`first`, `last`] seconds meet the query's) push into the
+    * scan of `store`; the matched `cols` collect at the driver, grouped
+    * by series under the `maxSeries` budget; each series, in tag order,
+    * becomes one frame of the chunks `chunks` makes from its rows (a
+    * series with none sends no frame).
+    */
+  private def frames(store: DataFrame,
+                     queries: Seq[graft.compile.Matchers.PromQuery],
+                     maxSeries: Int, strictCompat: Boolean, first: String,
+                     last: String, cols: Seq[Column])(
+      chunks: (graft.compile.Matchers.PromQuery, Seq[Row]) =>
+        Seq[ChunkedRead.PChunk]): Array[Byte] = {
     import graft.compile.Matchers
     val out = new java.io.ByteArrayOutputStream()
-    val modes = queries.zipWithIndex.map { case (q, qi) =>
+    queries.zipWithIndex.foreach { case (q, qi) =>
       val sSec = q.startMs / 1000; val eSec = q.endMs / 1000
       val pred = q.matchers.map(Matchers.compileMatcher(_, strictCompat))
         .foldLeft(
           col("date") >= to_date(timestamp_seconds(lit(sSec))) &&
             col("date") <= to_date(timestamp_seconds(lit(eSec))) &&
-            col("max_ts") >= sSec && col("min_ts") <= eSec)(_ && _)
-      val rows = chunked.filter(pred)
-        .select("name", "tags", "min_ts", "max_ts", "chunk").collect()
-      val bySeries = rows.groupBy(
-        _.getAs[scala.collection.Seq[String]]("tags").toSeq)
+            col(last) >= sSec && col(first) <= eSec)(_ && _)
+      val bySeries = store.filter(pred).select(col("tags") +: cols: _*)
+        .collect().toSeq
+        .groupBy(_.getAs[scala.collection.Seq[String]]("tags").toSeq)
       if (maxSeries > 0 && bySeries.size > maxSeries)
         throw new SeriesLimitExceeded(maxSeries)
-      val mode =
-        if (ChunkStore.dayAligned(q) && !forceReencode) "store"
-        else "reencode"
       bySeries.toSeq.sortBy(_._1.mkString("\u0000")).foreach {
         case (tags, rs) =>
-          // (min_ts, max_ts) ordering is total for non-overlapping
-          // chunks of one series (the toChunked grouping guarantees it)
-          val sorted = rs.sortBy(r =>
-            (r.getAs[Long]("min_ts"), r.getAs[Long]("max_ts")))
-          val chunks =
-            if (mode == "store")
-              sorted.map(r => ChunkedRead.PChunk(
-                r.getAs[Long]("min_ts") * 1000L,
-                r.getAs[Long]("max_ts") * 1000L,
-                ChunkedRead.EncodingXor,
-                r.getAs[Array[Byte]]("chunk"))).toSeq
-            else
-              sorted.flatMap { r =>
-                val pts = XorChunk.decode(r.getAs[Array[Byte]]("chunk"))
-                  .filter(p => p._1 >= q.startMs && p._1 <= q.endMs)
-                if (pts.isEmpty) None
-                else Some(ChunkedRead.PChunk(pts.head._1, pts.last._1,
-                  ChunkedRead.EncodingXor, XorChunk.encode(pts)))
-              }.toSeq
-          if (chunks.nonEmpty)
+          val cs = chunks(q, rs)
+          if (cs.nonEmpty)
             out.write(ChunkedRead.frame(ChunkedRead.encodeResponse(
-              Seq(ChunkedRead.PChunkedSeries(tagsToLabels(tags), chunks)),
+              Seq(ChunkedRead.PChunkedSeries(tagsToLabels(tags), cs)),
               qi.toLong)))
       }
-      mode
     }
-    (out.toByteArray, modes)
+    out.toByteArray
   }
 
   /** A PromQL grid result (tags, t, value) grouped to ONE row per series
@@ -209,133 +235,48 @@ object ResponseEdge {
     rows
   }
 
-  /** STREAMED_XOR_CHUNKS body answered from the NATIVE-HISTOGRAM chunk
-    * tier ([[ChunkStore.toChunkedHist]]) — the
-    * [[encodeChunkedFromStore]] twin: day-aligned queries forward the
-    * stored FLOAT_HISTOGRAM chunk bytes VERBATIM (ms-at-rest, the same
-    * zero-copy discipline); misaligned queries decode → trim →
-    * re-encode per chunk, byte-identical on aligned ranges because the
-    * encoding is a pure function of the sample sequence. Same pushdown
-    * (date partitions + (name, tags) row-group stats) and the same
-    * series budget.
-    */
-  def encodeChunkedHistFromStore(chunked: DataFrame,
-                                 queries: Seq[graft.compile.Matchers.PromQuery],
-                                 maxSeries: Int,
-                                 forceReencode: Boolean = false,
-                                 strictCompat: Boolean = false)
-      : (Array[Byte], Seq[String]) = {
-    import graft.codec.{ChunkedRead, FloatHistChunk}
-    import graft.compile.Matchers
-    val out = new java.io.ByteArrayOutputStream()
-    val modes = queries.zipWithIndex.map { case (q, qi) =>
-      val sSec = q.startMs / 1000; val eSec = q.endMs / 1000
-      val pred = q.matchers.map(Matchers.compileMatcher(_, strictCompat))
-        .foldLeft(
-          col("date") >= to_date(timestamp_seconds(lit(sSec))) &&
-            col("date") <= to_date(timestamp_seconds(lit(eSec))) &&
-            col("max_ts") >= sSec && col("min_ts") <= eSec)(_ && _)
-      val rows = chunked.filter(pred)
-        .select("name", "tags", "min_ts", "max_ts", "chunk").collect()
-      val bySeries = rows.groupBy(
-        _.getAs[scala.collection.Seq[String]]("tags").toSeq)
-      if (maxSeries > 0 && bySeries.size > maxSeries)
-        throw new SeriesLimitExceeded(maxSeries)
-      val mode =
-        if (ChunkStore.dayAligned(q) && !forceReencode) "store"
-        else "reencode"
-      bySeries.toSeq.sortBy(_._1.mkString("\u0000")).foreach {
-        case (tags, rs) =>
-          val sorted = rs.sortBy(r =>
-            (r.getAs[Long]("min_ts"), r.getAs[Long]("max_ts")))
-          val chunks =
-            if (mode == "store")
-              sorted.map(r => ChunkedRead.PChunk(
-                r.getAs[Long]("min_ts") * 1000L,
-                r.getAs[Long]("max_ts") * 1000L,
-                ChunkedRead.EncodingFloatHistogram,
-                r.getAs[Array[Byte]]("chunk"))).toSeq
-            else
-              sorted.flatMap { r =>
-                val (pts0, schema) =
-                  FloatHistChunk.decode(r.getAs[Array[Byte]]("chunk"))
-                val pts = pts0.filter(p =>
-                  p.tsMs >= q.startMs && p.tsMs <= q.endMs)
-                if (pts.isEmpty) None
-                else Some(ChunkedRead.PChunk(pts.head.tsMs,
-                  pts.last.tsMs, ChunkedRead.EncodingFloatHistogram,
-                  FloatHistChunk.encode(pts, schema)))
-              }.toSeq
-          if (chunks.nonEmpty)
-            out.write(ChunkedRead.frame(ChunkedRead.encodeResponse(
-              Seq(ChunkedRead.PChunkedSeries(tagsToLabels(tags), chunks)),
-              qi.toLong)))
-      }
-      mode
-    }
-    (out.toByteArray, modes)
-  }
-
   /** FLOAT_HISTOGRAM frames for native-histogram series at the chunked
     * edge: the hist side table's matched series become framed
     * ChunkedReadResponse messages whose samples ride
     * [[graft.codec.FloatHistChunk]]s (chunk Encoding = 3), the
     * native-histogram twin of [[encodeChunked]] — a native series
     * survives `streamed_xor_chunks` natively instead of answering only
-    * through its scalarized le-flatten. Matchers and the time bounds
-    * push into the side table's parquet scan (date partition pruning +
-    * (name, tags) row-group stats); the same series budget guards the
-    * collect.
+    * through its scalarized le-flatten. Same pushdown and series budget
+    * as [[encodeChunkedFromStore]] ([[frames]]).
     */
   def encodeChunkedHist(histStore: DataFrame,
                         queries: Seq[graft.compile.Matchers.PromQuery],
                         maxSeries: Int,
                         maxSamplesPerChunk: Int = 120,
-                        strictCompat: Boolean = false): Array[Byte] = {
-    import graft.codec.{ChunkedRead, FloatHistChunk}
-    import graft.compile.Matchers
-    val out = new java.io.ByteArrayOutputStream()
-    queries.zipWithIndex.foreach { case (q, qi) =>
-      val sSec = q.startMs / 1000; val eSec = q.endMs / 1000
-      val pred = q.matchers.map(Matchers.compileMatcher(_, strictCompat))
-        .foldLeft(
-          col("date") >= to_date(timestamp_seconds(lit(sSec))) &&
-            col("date") <= to_date(timestamp_seconds(lit(eSec))) &&
-            col("ts") >= sSec && col("ts") <= eSec)(_ && _)
-      val rows = histStore.filter(pred)
-        .select("tags", "ts", "h_count", "h_sum", "h_zero", "h_buckets")
-        .collect()
-      val bySeries = rows.groupBy(
-        _.getAs[scala.collection.Seq[String]]("tags").toSeq)
-      if (maxSeries > 0 && bySeries.size > maxSeries)
-        throw new SeriesLimitExceeded(maxSeries)
-      bySeries.toSeq.sortBy(_._1.mkString("\u0000")).foreach {
-        case (tags, rs) =>
-          val pts = rs.map { r =>
-            FloatHistChunk.HPoint(r.getAs[Long]("ts") * 1000L,
-              r.getAs[Long]("h_count").toDouble,
-              r.getAs[Double]("h_sum"),
-              r.getAs[Long]("h_zero").toDouble,
-              r.getAs[scala.collection.Seq[Row]]("h_buckets").toSeq
-                .map(b => (b.getInt(0), b.getLong(1).toDouble)))
-          }.sortBy(_.tsMs).toSeq
-          val chunks = pts.grouped(maxSamplesPerChunk).map { grp =>
-            ChunkedRead.PChunk(grp.head.tsMs, grp.last.tsMs,
-              ChunkedRead.EncodingFloatHistogram,
-              FloatHistChunk.encode(grp))
-          }.toSeq
-          if (chunks.nonEmpty)
-            out.write(ChunkedRead.frame(ChunkedRead.encodeResponse(
-              Seq(ChunkedRead.PChunkedSeries(tagsToLabels(tags), chunks)),
-              qi.toLong)))
-      }
+                        strictCompat: Boolean = false): Array[Byte] =
+    frames(histStore, queries, maxSeries, strictCompat, "ts", "ts",
+        Seq("ts", "h_count", "h_sum", "h_zero", "h_buckets").map(col)) {
+      (_, rows) =>
+        rows.map { r =>
+          FloatHistChunk.HPoint(r.getAs[Long]("ts") * 1000L,
+            r.getAs[Long]("h_count").toDouble,
+            r.getAs[Double]("h_sum"),
+            r.getAs[Long]("h_zero").toDouble,
+            r.getAs[scala.collection.Seq[Row]]("h_buckets").toSeq
+              .map(b => (b.getInt(0), b.getLong(1).toDouble)))
+        }.sortBy(_.tsMs).grouped(maxSamplesPerChunk).map { grp =>
+          ChunkedRead.PChunk(grp.head.tsMs, grp.last.tsMs,
+            ChunkedRead.EncodingFloatHistogram, FloatHistChunk.encode(grp))
+        }.toSeq
     }
-    out.toByteArray
-  }
 
+  /** STREAMED_XOR_CHUNKS response body: each query's series become
+    * framed `ChunkedReadResponse` messages whose samples ride Gorilla
+    * [[graft.codec.XorChunk]]s (one frame per series — constant driver
+    * memory per frame at real scale, where the SAMPLES form must
+    * materialize the whole result; here both forms share the bounded
+    * collect because the series budget already applies). Chunks split at
+    * `maxSamplesPerChunk` samples, the TSDB's ~120-sample convention.
+    * Uncompressed on the wire per the remote-read spec (the chunk data
+    * is already Gorilla-compressed).
+    */
   def encodeChunked(perQuery: Seq[DataFrame], maxSeries: Int,
                     maxSamplesPerChunk: Int = 120): Array[Byte] = {
-    import graft.codec.{ChunkedRead, XorChunk}
     val out = new java.io.ByteArrayOutputStream()
     perQuery.zipWithIndex.foreach { case (assembled, qi) =>
       toQueryResult(assembled, maxSeries).timeseries.foreach { ts =>

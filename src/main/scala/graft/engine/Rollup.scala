@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -125,18 +125,35 @@ object Rollup {
         sum(col("h_sum_fp")).as("h_sum_fp"),
         sum(col("h_zero")).as("h_zero"),
         collect_list(map_from_entries(col("h_buckets"))).as("_ms"))
-    val merged = aggregate(
-      slice(col("_ms"), lit(2), greatest(size(col("_ms")) - 1, lit(0))),
-      element_at(col("_ms"), 1),
-      (acc, mm) => map_zip_with(acc, mm,
-        (_, a, b) => coalesce(a, lit(0L)) + coalesce(b, lit(0L))))
     grouped.withColumn("h_buckets",
-      sort_array(transform(
-        filter(map_entries(merged), e => e.getField("value") > 0),
-        e => struct(e.getField("key").as("idx"),
-          e.getField("value").as("cnt")))))
+        bucketArray(sumBucketMaps(col("_ms"))))
       .drop("_ms")
   }
+
+  /** The bucket-by-bucket sum of sparse bucket maps (idx → cnt), a
+    * bucket missing from a map counting 0 (map_zip_with unions the
+    * keys): `first` plus every map of the array `maps`, or, with no
+    * `first`, the array's maps alone.
+    */
+  def sumBucketMaps(maps: Column, first: Option[Column] = None): Column = {
+    val (zero, rest) = first match {
+      case Some(f) => (f, maps)
+      case None => (element_at(maps, 1),
+        slice(maps, lit(2), greatest(size(maps) - 1, lit(0))))
+    }
+    aggregate(rest, zero, (acc, mm) => map_zip_with(acc, mm,
+      (_, a, b) => coalesce(a, lit(0L)) + coalesce(b, lit(0L))))
+  }
+
+  /** A bucket map back to the canonical `h_buckets` array: the entries
+    * whose count passes `keep` (by default: positive), as (idx, cnt)
+    * structs sorted by idx.
+    */
+  def bucketArray(buckets: Column, keep: Column => Column = _ > 0): Column =
+    sort_array(transform(
+      filter(map_entries(buckets), e => keep(e.getField("value"))),
+      e => struct(e.getField("key").as("idx"),
+        e.getField("value").as("cnt"))))
 
   /** Materialize a downsampled tier with the store's own layout
     * discipline: date-partitioned, range-split across (date, name, tags)

@@ -1,6 +1,7 @@
 package graft.promql
 
 import graft.GraftExtensions
+import graft.engine.Rollup
 import graft.model.Schema
 import graft.operators.LabelOps
 import org.apache.spark.sql.{Column, DataFrame}
@@ -250,6 +251,36 @@ object Eval {
     }
   }
 
+  /** A selector's rows of `source` (the store view `m`, or a narrower
+    * plan over it): the `date` partitions, the name and the matchers of
+    * `s`, and the time window (lo, hi] — bounded on the RAW ts column
+    * (not unix_timestamp(ts), which wraps the column in a function and
+    * kills parquet predicate pushdown), exact at the store's second
+    * grain (§1.2: ts is DateTime/seconds). Also returns the sample time
+    * in epoch seconds, whether `ts` is stored as seconds or as a
+    * timestamp.
+    */
+  private def selected(m: DataFrame, source: DataFrame, s: Selector,
+                       lo: Long, hi: Long): (DataFrame, Column) = {
+    val tsIsLong =
+      m.schema("ts").dataType == org.apache.spark.sql.types.LongType
+    val tCol = if (tsIsLong) col("ts") else unix_timestamp(col("ts"))
+    var df = source
+    if (m.columns.contains("date"))
+      df = df.filter(col("date") >= to_date(timestamp_seconds(lit(lo))) &&
+        col("date") <= to_date(timestamp_seconds(lit(hi))))
+    val tBound =
+      if (tsIsLong) col("ts") > lo && col("ts") <= hi
+      else col("ts") > timestamp_seconds(lit(lo)) &&
+        col("ts") <= timestamp_seconds(lit(hi))
+    val pred = s.matchers.map(matcherPred).foldLeft(tBound)(_ && _)
+    val named = s.name match {
+      case Some(n) => df.filter(col("name") === n)
+      case None => df
+    }
+    (named.filter(pred), tCol)
+  }
+
   /** Scan + normalize + dedup: (tags, t, v_fp), one row per (series,
     * second), greatest value wins on duplicates. Time bounds (and date
     * bounds when the store is date-partitioned) push into the scan.
@@ -264,28 +295,10 @@ object Eval {
   private def scan(m: DataFrame, s: Selector, spec: RangeSpec,
                    reachBackSec: Long, keepStale: Boolean = false)
       : DataFrame = {
-    val tsIsLong =
-      m.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tCol = if (tsIsLong) col("ts") else unix_timestamp(col("ts"))
     val lo = spec.startSec - reachBackSec - s.offsetSec
     val hi = spec.endSec - s.offsetSec
     val one = graft.engine.ReadPipeline.oneTask(m, lo, hi)
-    var df = one.getOrElse(m)
-    if (m.columns.contains("date"))
-      df = df.filter(col("date") >= to_date(timestamp_seconds(lit(lo))) &&
-        col("date") <= to_date(timestamp_seconds(lit(hi))))
-    // bound the RAW ts column (not unix_timestamp(ts), which wraps the
-    // column in a function and kills parquet predicate pushdown) —
-    // exact at the store's second grain (§1.2: ts is DateTime/seconds)
-    val tBound =
-      if (tsIsLong) col("ts") > lo && col("ts") <= hi
-      else col("ts") > timestamp_seconds(lit(lo)) &&
-        col("ts") <= timestamp_seconds(lit(hi))
-    val pred = s.matchers.map(matcherPred).foldLeft(tBound)(_ && _)
-    val named = s.name match {
-      case Some(n) => df.filter(col("name") === n)
-      case None => df
-    }
+    val (matched, tCol) = selected(m, one.getOrElse(m), s, lo, hi)
     // a store view may carry an already-quantized `val_fp` (the
     // downsampled-tier adapter does — its averages are exact longs and
     // the double round-trip could re-floor one grid step down)
@@ -300,7 +313,7 @@ object Eval {
     def bySeries(d: DataFrame): DataFrame =
       if (one.isDefined) d else d.repartition(col("tags"))
     if (!m.columns.contains("stale"))
-      bySeries(named.filter(pred)
+      bySeries(matched
         .select(col("tags"), tCol.as("t"), vfp.as("v_fp")))
         .groupBy(col("tags"), col("t"))
         .agg(max(col("v_fp")).as("v_fp"))
@@ -308,7 +321,7 @@ object Eval {
       // dedup rule with markers present: a LIVE sample at the same
       // (series, second) beats a marker (struct max orders live-first,
       // then greatest value) — a marker never shadows real data
-      val deduped = bySeries(named.filter(pred)
+      val deduped = bySeries(matched
         .select(col("tags"), tCol.as("t"), vfp.as("v_fp"),
           coalesce(col("stale"), lit(false)).as("_stale")))
         .groupBy(col("tags"), col("t"))
@@ -426,36 +439,22 @@ object Eval {
   private def hasNativeHist(m: DataFrame): Boolean =
     m.columns.contains("h_buckets")
 
-  /** scan()'s native-histogram twin: bounds + matchers pushed, one
-    * histogram per (series, second) (greatest (count, sum) wins on
+  /** scan()'s native-histogram twin over the same [[selected]] rows:
+    * one histogram per (series, second) (greatest (count, sum) wins on
     * duplicates — deterministic, and a histogram only ever grows within
-    * one scrape instant).
+    * one scrape instant). It keeps its exchange by tags even on a small
+    * read (no `oneTask`): the `promql_native_plan_audit` entry counts
+    * that exchange.
     */
   private def scanHist(m: DataFrame, s: Selector, spec: RangeSpec,
                        reachSec: Long = 0L): DataFrame = {
-    val tsIsLong =
-      m.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tCol = if (tsIsLong) col("ts") else unix_timestamp(col("ts"))
     // reach back the larger of the lookback and the range window — a
     // range selector's first grid instant reads samples from
     // start − w + 1, which can predate the lookback bound
     val lo = spec.startSec - math.max(spec.lookbackSec, reachSec) -
       s.offsetSec
-    val hi = spec.endSec - s.offsetSec
-    var df = m
-    if (m.columns.contains("date"))
-      df = df.filter(col("date") >= to_date(timestamp_seconds(lit(lo))) &&
-        col("date") <= to_date(timestamp_seconds(lit(hi))))
-    val tBound =
-      if (tsIsLong) col("ts") > lo && col("ts") <= hi
-      else col("ts") > timestamp_seconds(lit(lo)) &&
-        col("ts") <= timestamp_seconds(lit(hi))
-    val pred = s.matchers.map(matcherPred).foldLeft(tBound)(_ && _)
-    val named = s.name match {
-      case Some(n) => df.filter(col("name") === n)
-      case None => df
-    }
-    named.filter(pred)
+    val (matched, tCol) = selected(m, m, s, lo, spec.endSec - s.offsetSec)
+    matched
       .select(col("tags"), tCol.as("t"), struct(
         col("h_count").as("c"), col("h_sum_fp").as("s"),
         col("h_zero").as("z"), col("h_buckets").as("b")).as("_h"))
@@ -646,23 +645,16 @@ object Eval {
     // delta carries no observations)
     val negF = transform_values(map_from_entries(col("_f.b")),
       (_, v) => -v)
-    val merged = aggregate(
-      concat(array(negF), col("_rms")),
-      map_from_entries(col("_l.b")),
-      (acc, mm) => map_zip_with(acc, mm,
-        (_, a, b) => coalesce(a, lit(0L)) + coalesce(b, lit(0L))))
+    val merged = Rollup.sumBucketMaps(concat(array(negF), col("_rms")),
+      Some(map_from_entries(col("_l.b"))))
     // the delta frame wears the h-columns, so the SAME per-histogram
     // scalar derivations serve instants and windows alike
     val out = agg.select((gCols ++ Seq(col("tags"), col("t"),
       (col("_l.c") - col("_f.c") + col("_rc")).as("h_count"),
       (col("_l.s") - col("_f.s") + col("_rs")).as("h_sum_fp"),
       (col("_l.z") - col("_f.z") + col("_rz")).as("h_zero"),
-      sort_array(transform(
-        filter(map_entries(merged), e =>
-          if (isCounter) e.getField("value") > 0
-          else e.getField("value") =!= 0),
-        e => struct(e.getField("key").as("idx"),
-          e.getField("value").as("cnt")))).as("h_buckets"))): _*)
+      Rollup.bucketArray(merged,
+        v => if (isCounter) v > 0 else v =!= 0).as("h_buckets"))): _*)
     // counter forms drop no-growth windows (PromQL's empty-rate rule);
     // the gauge form emits every ≥2-sample window, zero or negative
     // deltas included, exactly as upstream's Sub + Compact does
@@ -784,18 +776,10 @@ object Eval {
       .agg(sum(col("h_count")).as("_tc"), sum(col("h_sum_fp")).as("_ts"),
         sum(col("h_zero")).as("_tz"), count(lit(1)).as("_n"),
         collect_list(map_from_entries(col("h_buckets"))).as("_ms"))
-    val mergedMap = aggregate(
-      slice(col("_ms"), lit(2), greatest(size(col("_ms")) - 1, lit(0))),
-      element_at(col("_ms"), 1),
-      (acc, mm) => map_zip_with(acc, mm,
-        (_, a, b) => coalesce(a, lit(0L)) + coalesce(b, lit(0L))))
     val hFrame = mergedRows.select(col("_g").as("tags"), col("t"),
       col("_tc").as("h_count"), col("_ts").as("h_sum_fp"),
       col("_tz").as("h_zero"),
-      sort_array(transform(
-        filter(map_entries(mergedMap), e => e.getField("value") > 0),
-        e => struct(e.getField("key").as("idx"),
-          e.getField("value").as("cnt")))).as("h_buckets"),
+      Rollup.bucketArray(Rollup.sumBucketMaps(col("_ms"))).as("h_buckets"),
       col("_n"))
     val scal = which match {
       case "count" if aggOp == "avg" =>

@@ -121,8 +121,13 @@ object Ingest {
   private def name(labels: Seq[Prompb.PLabel]): String =
     labels.find(_.name == "__name__").map(_.value).getOrElse("")
 
+  /** A series' labels as the store's `tags`: `k=v`, sorted. */
   private def tags(labels: Seq[Prompb.PLabel]): Seq[String] =
     labels.map(l => s"${l.name}=${l.value}").sorted
+
+  /** A series' identity as one string, its [[tags]] joined by `,`: the
+    * key of the receiver's per-series state. */
+  def seriesKey(labels: Seq[Prompb.PLabel]): String = tags(labels).mkString(",")
 
   /** One `_exemplars` row: name, series tags, exemplar tags, value,
     * epoch ms; tags sorted `k=v`. */

@@ -9,6 +9,7 @@ import graft.engine.{GroupCommit, Observability, ReadPipeline, ResponseEdge, Wri
 import graft.promql.AstJson.jsonStr
 import graft.serve.ApiEdge._
 import graft.sinks.FanOut
+import graft.streaming.DeltaToCumulative
 import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -372,36 +373,39 @@ class Server(spark: SparkSession, tablePath: String,
     new java.util.concurrent.ConcurrentHashMap[String,
       (Long, Double, Long)]()
 
+  /** An exp-histogram series' delta run, shaped as in [[deltaRuns]]:
+    * its level is the running count/sum/zero and per-bucket counts
+    * (OTLP indexes). */
+  private[graft] type ExpRun = (Long, DeltaToCumulative.HistDelta, Long)
+
+  private[graft] val deltaExpRuns =
+    new java.util.concurrent.ConcurrentHashMap[String, ExpRun]()
+
   /** Injectable wall clock for [[deltaRuns]] eviction (test seam). */
   private[graft] var deltaWallClock: () => Long =
     () => System.currentTimeMillis()
 
-  /** Same rules as DeltaToCumulative.statefulCumulate: accumulate in
-    * time order, reset the run after a gap over `otlpDeltaMaxStaleMs`,
-    * drop out-of-order points. Serialized — concurrent posts for one
-    * series must not interleave read-modify-write on the run.
+  /** One request's delta points → their cumulative levels, by
+    * [[DeltaToCumulative.cumulate]]: per series, in (time, value) order,
+    * a run resets after a gap over `otlpDeltaMaxStaleMs` and an
+    * out-of-order or repeated timestamp drops — so a request stores what
+    * the streaming form stores for the same points. Serialized —
+    * concurrent posts for one series must not interleave
+    * read-modify-write on the run.
     */
-  private def convertDeltaSeries(series: Seq[Prompb.PTimeSeries])
-      : Seq[Prompb.PTimeSeries] = deltaRuns.synchronized {
+  private def convertDeltas[P, V: DeltaToCumulative.RunValue](
+      runs: java.util.concurrent.ConcurrentHashMap[String, (Long, V, Long)],
+      points: Seq[P])(labels: P => Seq[Prompb.PLabel], tsMs: P => Long,
+                      delta: P => V): Seq[(P, V)] = runs.synchronized {
     val now = deltaWallClock()
-    val converted = series.flatMap { ts =>
-      val key = ts.labels.map(l => s"${l.name}=${l.value}").sorted
-        .mkString(",")
-      val out = ts.samples.sortBy(_.timestampMs).flatMap { s =>
-        Option(deltaRuns.get(key)) match {
-          case Some((lastTs, _, _)) if s.timestampMs <= lastTs => None
-          case Some((lastTs, run, _))
-              if s.timestampMs - lastTs <= otlpDeltaMaxStaleMs =>
-            val level = run + s.value
-            deltaRuns.put(key, (s.timestampMs, level, now))
-            Some(Prompb.PSample(level, s.timestampMs))
-          case _ =>
-            deltaRuns.put(key, (s.timestampMs, s.value, now))
-            Some(Prompb.PSample(s.value, s.timestampMs))
-        }
+    val converted = points.groupBy(p => Ingest.seriesKey(labels(p))).toSeq
+      .sortBy(_._1).flatMap { case (key, pts) =>
+        val (kept, run) = DeltaToCumulative.cumulate(
+          Option(runs.get(key)).map(r => (r._1, r._2)), pts,
+          otlpDeltaMaxStaleMs)(tsMs, delta)
+        if (kept.nonEmpty) run.foreach(r => runs.put(key, (r._1, r._2, now)))
+        kept
       }
-      if (out.isEmpty) None else Some(Prompb.PTimeSeries(ts.labels, out))
-    }
     // EVICT dead runs on each series' OWN staleness, measured in
     // WALL-CLOCK receipt time (the upstream deltatocumulative rule):
     // a series that has not POSTED for the staleness window can never
@@ -411,7 +415,7 @@ class Server(spark: SparkSession, tablePath: String,
     // posting, never losing it to another series' timestamps. Keeps
     // the map bounded by live delta-series cardinality (the streaming
     // form gets the same bound from its per-key state timeout).
-    val it = deltaRuns.entrySet().iterator()
+    val it = runs.entrySet().iterator()
     while (it.hasNext) {
       if (now - it.next().getValue._3 > otlpDeltaMaxStaleMs)
         it.remove()
@@ -419,70 +423,38 @@ class Server(spark: SparkSession, tablePath: String,
     converted
   }
 
-  /** Per-series exp-histogram delta run: last sample ts, running
-    * count/sum/zero, running per-bucket counts (OTLP indexes), and the
-    * wall-clock receipt time of the last update.
-    */
-  private[graft] case class ExpRun(lastTs: Long, count: Long, sum: Double,
-                                   zero: Long, buckets: Map[Int, Long],
-                                   wallMs: Long)
+  private def convertDeltaSeries(series: Seq[Prompb.PTimeSeries])
+      : Seq[Prompb.PTimeSeries] =
+    convertDeltas(deltaRuns, for (ts <- series; s <- ts.samples)
+        yield (ts.labels, s.timestampMs, s.value))(_._1, _._2, _._3)
+      .map { case ((labels, t, _), level) =>
+        Prompb.PTimeSeries(labels, Seq(Prompb.PSample(level, t)))
+      }
 
-  private[graft] val deltaExpRuns =
-    new java.util.concurrent.ConcurrentHashMap[String, ExpRun]()
-
-  /** [[convertDeltaSeries]]'s exponential-histogram twin: per series,
-    * time-ordered per-BUCKET cumulation with the identical gap-reset /
-    * out-of-order / wall-clock-eviction state discipline. Output points
-    * are CUMULATIVE exp-histograms ready for the native flatten. The
+  /** [[convertDeltaSeries]]'s exponential-histogram form: per-BUCKET
+    * cumulation under one series-level run. Output points are
+    * CUMULATIVE exp-histograms ready for the native flatten. The
     * posOffset/posCounts dense form re-derives from the running sparse
     * map each point (zero-count gaps inside the span stay, leading and
     * trailing zeros drop).
     */
   private def convertDeltaExpHist(points: Seq[graft.codec.Otlp.ExpHistPoint])
-      : Seq[graft.codec.Otlp.ExpHistPoint] = deltaExpRuns.synchronized {
-    val now = deltaWallClock()
-    val out = Seq.newBuilder[graft.codec.Otlp.ExpHistPoint]
-    points.groupBy(_.labels).toSeq
-      .sortBy(_._1.map(l => s"${l.name}=${l.value}").mkString(","))
-      .foreach { case (labels, pts) =>
-        val key = labels.map(l => s"${l.name}=${l.value}").mkString(",")
-        pts.sortBy(_.tsNano).foreach { p =>
-          val tsMs = Math.floorDiv(p.tsNano, 1000000L)
-          val incoming = p.posCounts.zipWithIndex.collect {
-            case (c, i) if c > 0L => (p.posOffset + i) -> c
-          }.toMap
-          val next = Option(deltaExpRuns.get(key)) match {
-            case Some(r) if tsMs <= r.lastTs => None // out-of-order: drop
-            case Some(r) if tsMs - r.lastTs <= otlpDeltaMaxStaleMs =>
-              val mergedB = incoming.foldLeft(r.buckets) {
-                case (acc, (i, c)) => acc + (i -> (acc.getOrElse(i, 0L) + c))
-              }
-              Some(ExpRun(tsMs, r.count + p.count, r.sum + p.sum,
-                r.zero + p.zeroCount, mergedB, now))
-            case _ => // fresh series or stale gap: restart the run
-              Some(ExpRun(tsMs, p.count, p.sum, p.zeroCount, incoming, now))
-          }
-          next.foreach { r =>
-            deltaExpRuns.put(key, r)
-            val (off, dense) =
-              if (r.buckets.isEmpty) (0, Seq.empty[Long])
-              else {
-                val lo = r.buckets.keys.min; val hi = r.buckets.keys.max
-                (lo, (lo to hi).map(i => r.buckets.getOrElse(i, 0L)))
-              }
-            out += graft.codec.Otlp.ExpHistPoint(labels, p.tsNano,
-              r.count, r.sum, p.hasSum, p.scale, r.zero, off, dense,
-              0, Nil)
-          }
+      : Seq[graft.codec.Otlp.ExpHistPoint] =
+    convertDeltas(deltaExpRuns, points)(_.labels,
+      p => Math.floorDiv(p.tsNano, 1000000L),
+      p => DeltaToCumulative.HistDelta(p.count, p.sum, p.zeroCount,
+        p.posCounts.zipWithIndex.collect {
+          case (c, i) if c > 0L => (p.posOffset + i) -> c
+        }.toMap)).map { case (p, r) =>
+      val (off, dense) =
+        if (r.buckets.isEmpty) (0, Seq.empty[Long])
+        else {
+          val lo = r.buckets.keys.min; val hi = r.buckets.keys.max
+          (lo, (lo to hi).map(i => r.buckets.getOrElse(i, 0L)))
         }
-      }
-    val it = deltaExpRuns.entrySet().iterator()
-    while (it.hasNext) {
-      if (now - it.next().getValue.wallMs > otlpDeltaMaxStaleMs)
-        it.remove()
+      graft.codec.Otlp.ExpHistPoint(p.labels, p.tsNano, r.count, r.sum,
+        p.hasSum, p.scale, r.zero, off, dense, 0, Nil)
     }
-    out.result()
-  }
 
   /** Per-series newest ingested sample timestamp, whichever front door
     * it came through, tracked only under --ct-zero-ingestion: a CT-zero
@@ -499,15 +471,13 @@ class Server(spark: SparkSession, tablePath: String,
   private def ctZeroFilter(candidates: Seq[Prompb.PTimeSeries],
                            ingesting: Seq[Prompb.PTimeSeries])
       : Seq[Prompb.PTimeSeries] = ctSeen.synchronized {
-    def key(labels: Seq[Prompb.PLabel]): String =
-      labels.map(l => s"${l.name}=${l.value}").sorted.mkString(",")
     val kept = candidates.filter { c =>
       val ct = c.samples.head.timestampMs
-      Option(ctSeen.get(key(c.labels))).forall(_ < ct)
+      Option(ctSeen.get(Ingest.seriesKey(c.labels))).forall(_ < ct)
     }
     ingesting.foreach { ts =>
       if (ts.samples.nonEmpty) {
-        val k = key(ts.labels)
+        val k = Ingest.seriesKey(ts.labels)
         val mx = ts.samples.map(_.timestampMs).max
         val prev = Option(ctSeen.get(k)).getOrElse(Long.MinValue)
         if (mx > prev) ctSeen.put(k, mx)
@@ -796,25 +766,17 @@ class Server(spark: SparkSession, tablePath: String,
         "no chunk tier configured (chunkTierPath)")
     val force = params.one("chunk_path").contains("reencode")
     val pqs = rr.queries.map(toPromQuery)
-    val (body, modes) = chunkTierPath match {
-      case Some(path) => ResponseEdge.encodeChunkedFromStore(
-        spark.read.parquet(path), pqs, readMaxSeries,
-        forceReencode = force)
-      case None => (Array.empty[Byte], Nil)
-    }
-    // the native-histogram tier serves beside the scalar one: same
-    // zero-copy day-aligned forwarding, FLOAT_HISTOGRAM frames
-    val (histBody, histModes) = histChunkTierPath match {
-      case Some(path) => ResponseEdge.encodeChunkedHistFromStore(
-        spark.read.parquet(path), pqs, readMaxSeries,
-        forceReencode = force)
-      case None => (Array.empty[Byte], Nil)
-    }
+    // the native-histogram tier serves beside the scalar one through
+    // the same forwarder: FLOAT_HISTOGRAM frames after the XOR ones
+    val (bodies, modes) = (chunkTierPath.toSeq ++ histChunkTierPath).map {
+      path => ResponseEdge.encodeChunkedFromStore(spark.read.parquet(path),
+        pqs, readMaxSeries, forceReencode = force)
+    }.unzip
     ex.getResponseHeaders.set("X-Graft-Chunk-Source",
-      (modes ++ histModes).mkString(","))
+      modes.flatten.mkString(","))
     ex.getResponseHeaders.set("Content-Type",
       "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
-    respond(ex, 200, body ++ histBody)
+    respond(ex, 200, bodies.flatten.toArray)
   }
 
   /** The default /read answer's body; its headers are set on `ex`. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -32,8 +32,108 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   - [[convertBatch]]: the batch twin over at-rest deltas — gap-break
   *     islands via lag(), running sum per island. Replay/backfill tool
   *     and the oracle the streaming form must match.
+  *
+  * The per-point rule itself is [[cumulate]], which the streaming forms
+  * and the live `/otlp` receiver (`serve.Server`) all call.
   */
 object DeltaToCumulative {
+
+  /** A run's value type: how a delta adds onto the running level, and
+    * an ordering under which, of two points at one timestamp, the
+    * smaller is the one a run keeps (every form breaks the tie alike).
+    */
+  trait RunValue[V] extends Ordering[V] { def add(level: V, delta: V): V }
+
+  /** A delta exp-histogram's increments: count/sum/zero companions and
+    * the sparse positive buckets (OTLP/native index → increment). Two
+    * points at one timestamp order by (count, sum).
+    */
+  case class HistDelta(count: Long, sum: Double, zero: Long,
+                       buckets: Map[Int, Long])
+
+  object RunValue {
+    implicit val scalar: RunValue[Double] = new RunValue[Double] {
+      def add(level: Double, delta: Double): Double = level + delta
+      def compare(a: Double, b: Double): Int = java.lang.Double.compare(a, b)
+    }
+    implicit val hist: RunValue[HistDelta] = new RunValue[HistDelta] {
+      def add(level: HistDelta, d: HistDelta): HistDelta =
+        HistDelta(level.count + d.count, level.sum + d.sum,
+          level.zero + d.zero, d.buckets.foldLeft(level.buckets) {
+            case (acc, (i, c)) => acc + (i -> (acc.getOrElse(i, 0L) + c))
+          })
+      def compare(a: HistDelta, b: HistDelta): Int = {
+        val c = java.lang.Long.compare(a.count, b.count)
+        if (c != 0) c else java.lang.Double.compare(a.sum, b.sum)
+      }
+    }
+  }
+
+  /** The per-point rule of a delta run, written once for the streaming
+    * forms and the live receiver: one series' `points`, taken in
+    * (ts, value) order from the run `(lastTs, level)` left by earlier
+    * points. A point at or before the last timestamp drops; one within
+    * `maxStaleMs` of it adds onto the level; any other starts a fresh
+    * run at its own delta. Returns each kept point with its cumulative
+    * level, and the run after the last point.
+    */
+  def cumulate[P, V](run: Option[(Long, V)], points: Seq[P],
+                     maxStaleMs: Long)(ts: P => Long, delta: P => V)
+                    (implicit rv: RunValue[V])
+      : (Seq[(P, V)], Option[(Long, V)]) = {
+    var st = run
+    val out = points.sortBy(p => (ts(p), delta(p)))(
+        Ordering.Tuple2(Ordering.Long, rv)).flatMap { p =>
+      val t = ts(p)
+      val level = st match {
+        case Some((lastTs, _)) if t <= lastTs => None
+        case Some((lastTs, l)) if t - lastTs <= maxStaleMs =>
+          Some(rv.add(l, delta(p)))
+        case _ => Some(delta(p))
+      }
+      level.foreach(l => st = Some((t, l)))
+      level.map(p -> _)
+    }
+    (out, st)
+  }
+
+  /** Keyed state per `series` across micro-batches, with an
+    * EventTimeTimeout TTL so state tracks LIVE cardinality, not
+    * all-time: each update arms a timeout `maxStaleMs` past the
+    * series' own last event time (never at or below the watermark —
+    * GroupState rejects that), and a fired timeout removes the state.
+    * Semantics are unchanged by eviction: a post-gap point restarts
+    * the run either way, and the eviction deadline is PER SERIES (its
+    * own lastTs), so a live-but-lagging exporter never loses its run
+    * to another series' clock — the watermark only gates when a silent
+    * series' state may be dropped. `step` runs one micro-batch of one
+    * series from its state.
+    */
+  private def keyedRuns[I: Encoder, S: Encoder, O: Encoder](
+      deltas: DataFrame, maxStaleMs: Long, series: I => String,
+      lastTs: S => Long)(step: (String, Seq[I], Option[S]) => (Seq[O], Option[S]))
+      : Dataset[O] =
+    deltas
+      .withColumn("_ets", timestamp_millis(col("ts")))
+      .withWatermark("_ets", s"$maxStaleMs milliseconds")
+      .as[I]
+      .groupByKey(series)(Encoders.STRING)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (key: String, rows: Iterator[I], state: GroupState[S]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            val (out, st) = step(key, rows.toSeq, state.getOption)
+            st.foreach { s =>
+              state.update(s)
+              // every invocation clears the registered timeout — re-arm
+              // the series' own staleness deadline each time
+              state.setTimeoutTimestamp(math.max(lastTs(s) + maxStaleMs,
+                state.getCurrentWatermarkMs() + 1))
+            }
+            out.iterator
+          }
+      }
 
   /** One flat delta sample: `series` is the full sorted `k=v` label
     * join (the series identity), `ts` epoch milliseconds, `value` the
@@ -43,57 +143,22 @@ object DeltaToCumulative {
   case class RunState(lastTs: Long, running: Double)
   case class Out(series: String, ts: Long, value: Double)
 
-  /** Streaming form: per-series keyed state across micro-batches, with
-    * an EventTimeTimeout TTL so state tracks LIVE cardinality, not
-    * all-time: each update arms a timeout `maxStaleMs` past the
-    * series' own last event time (never at or below the watermark —
-    * GroupState rejects that), and a fired timeout removes the state.
-    * Semantics are unchanged by eviction: a post-gap point restarts
-    * the run either way, and the eviction deadline is PER SERIES (its
-    * own lastTs), so a live-but-lagging exporter never loses its run
-    * to another series' clock — the watermark only gates when a silent
-    * series' state may be dropped. Duplicate timestamps within a
-    * series keep the smallest value (deterministic tiebreak shared
-    * with [[convertBatch]]); later same-ts points drop as out-of-order.
+  /** Streaming form: one (ts, runningSum) pair of keyed state per live
+    * series ([[keyedRuns]]), each micro-batch cumulated by
+    * [[cumulate]]. Duplicate timestamps within a series keep the
+    * smallest value (deterministic tiebreak shared with
+    * [[convertBatch]]); later same-ts points drop as out-of-order.
     */
   def statefulCumulate(deltas: DataFrame, maxStaleMs: Long): Dataset[Out] = {
     val spark = deltas.sparkSession
     import spark.implicits._
-    deltas
-      .withColumn("_ets", timestamp_millis(col("ts")))
-      .withWatermark("_ets", s"$maxStaleMs milliseconds")
-      .as[In]
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[RunState, Out](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (_, _, state: GroupState[RunState]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (series, rows, state: GroupState[RunState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts, r.value))
-          var st = state.getOption
-          val out = Seq.newBuilder[Out]
-          sorted.foreach { r =>
-            st match {
-              case Some(s) if r.ts <= s.lastTs => // out-of-order: drop
-              case Some(s) if r.ts - s.lastTs <= maxStaleMs =>
-                val run = s.running + r.value
-                st = Some(RunState(r.ts, run))
-                out += Out(series, r.ts, run)
-              case _ => // fresh series or stale gap: restart the run
-                st = Some(RunState(r.ts, r.value))
-                out += Out(series, r.ts, r.value)
-            }
-          }
-          st.foreach { s =>
-            state.update(s)
-            // every invocation clears the registered timeout — re-arm
-            // the series' own staleness deadline each time
-            state.setTimeoutTimestamp(math.max(s.lastTs + maxStaleMs,
-              state.getCurrentWatermarkMs() + 1))
-          }
-          out.result().iterator
-      }
+    keyedRuns[In, RunState, Out](deltas, maxStaleMs, _.series, _.lastTs) {
+      (series, rows, state) =>
+        val (out, run) = cumulate(state.map(s => (s.lastTs, s.running)),
+          rows, maxStaleMs)(_.ts, _.value)
+        (out.map { case (r, level) => Out(series, r.ts, level) },
+          run.map { case (t, level) => RunState(t, level) })
+    }
   }
 
   /** One flat delta EXP-HISTOGRAM sample: per-interval increments of
@@ -108,57 +173,26 @@ object DeltaToCumulative {
   case class HistOut(series: String, ts: Long, count: Long, sum: Double,
                      zero: Long, buckets: Map[Int, Long])
 
-  /** [[statefulCumulate]]'s exponential-histogram twin: the identical
-    * keyed-state discipline (gap reset, out-of-order drop, per-series
-    * EventTimeTimeout eviction), with the running value a sparse bucket
-    * map merged per point instead of one double. Duplicate timestamps
-    * keep the smallest (count, sum) — [[convertBatchExpHist]]'s rule.
+  /** [[statefulCumulate]]'s exponential-histogram twin: the same keyed
+    * state and the same [[cumulate]] rule, with the running value a
+    * [[HistDelta]] whose bucket map merges per point. Duplicate
+    * timestamps keep the smallest (count, sum) — [[convertBatchExpHist]]'s
+    * rule.
     */
   def statefulCumulateExpHist(deltas: DataFrame,
                               maxStaleMs: Long): Dataset[HistOut] = {
     val spark = deltas.sparkSession
     import spark.implicits._
-    deltas
-      .withColumn("_ets", timestamp_millis(col("ts")))
-      .withWatermark("_ets", s"$maxStaleMs milliseconds")
-      .as[HistIn]
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[HistRunState, HistOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (_, _, state: GroupState[HistRunState]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (series, rows, state: GroupState[HistRunState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts, r.count, r.sum))
-          var st = state.getOption
-          val out = Seq.newBuilder[HistOut]
-          sorted.foreach { r =>
-            st match {
-              case Some(s) if r.ts <= s.lastTs => // out-of-order: drop
-              case Some(s) if r.ts - s.lastTs <= maxStaleMs =>
-                val merged = r.buckets.foldLeft(s.buckets) {
-                  case (acc, (i, c)) =>
-                    acc + (i -> (acc.getOrElse(i, 0L) + c))
-                }
-                val n = HistRunState(r.ts, s.count + r.count,
-                  s.sum + r.sum, s.zero + r.zero, merged)
-                st = Some(n)
-                out += HistOut(series, r.ts, n.count, n.sum, n.zero,
-                  n.buckets)
-              case _ => // fresh series or stale gap: restart the run
-                st = Some(HistRunState(r.ts, r.count, r.sum, r.zero,
-                  r.buckets))
-                out += HistOut(series, r.ts, r.count, r.sum, r.zero,
-                  r.buckets)
-            }
-          }
-          st.foreach { s =>
-            state.update(s)
-            state.setTimeoutTimestamp(math.max(s.lastTs + maxStaleMs,
-              state.getCurrentWatermarkMs() + 1))
-          }
-          out.result().iterator
-      }
+    keyedRuns[HistIn, HistRunState, HistOut](deltas, maxStaleMs, _.series,
+        _.lastTs) { (series, rows, state) =>
+      val (out, run) = cumulate(
+        state.map(s => (s.lastTs, HistDelta(s.count, s.sum, s.zero, s.buckets))),
+        rows, maxStaleMs)(_.ts, r => HistDelta(r.count, r.sum, r.zero, r.buckets))
+      (out.map { case (r, h) =>
+          HistOut(series, r.ts, h.count, h.sum, h.zero, h.buckets) },
+        run.map { case (t, h) =>
+          HistRunState(t, h.count, h.sum, h.zero, h.buckets) })
+    }
   }
 
   /** [[convertBatch]]'s exponential-histogram twin over columns

@@ -218,4 +218,89 @@ class DeltaToCumulativeSpec extends SparkSpec {
         .select(col("val")).as[Double].collect().toSeq == Seq(77.0))
     } finally s1.stop()
   }
+
+  /** POST one OTLP body to a live receiver's /otlp/v1/metrics. */
+  private def postOtlp(port: Int, body: Array[Byte]): Int = {
+    val conn = java.net.URI.create(s"http://localhost:$port/otlp/v1/metrics")
+      .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setRequestProperty("Content-Type", "application/x-protobuf")
+    conn.setDoOutput(true)
+    conn.getOutputStream.write(body)
+    val code = conn.getResponseCode
+    conn.disconnect()
+    code
+  }
+
+  test("live /otlp receiver: one request's delta points cumulate in time " +
+      "order and a duplicate timestamp keeps the smallest value — the " +
+      "stream's answer for the same points") {
+    import graft.codec.Otlp
+    val t = Files.createTempDirectory("graft_od2").toString + "/metrics"
+    val server = new graft.serve.Server(spark, t,
+      otlpConvertDelta = true, otlpDeltaMaxStaleMs = 10000L).start()
+    // arrival order: reqs 3000 ms before 1000 ms; dup twice at 5000 ms
+    val points = Seq(("reqs", 3000L, 2.0), ("reqs", 1000L, 5.0),
+      ("dup", 5000L, 9.0), ("dup", 5000L, 2.0), ("dup", 6000L, 1.0))
+    try {
+      assert(postOtlp(server.boundPort, Otlp.encodeSumRequest(Seq("job" -> "j"),
+        points.map { case (n, ms, v) => (n, Seq("k" -> "v"), ms * 1000000L, v) },
+        temporality = 1)) == 200)
+      val stored = spark.read.parquet(t)
+        .select(col("name"), unix_millis(col("ts")).as("ts"), col("val"))
+        .as[(String, Long, Double)].collect().toSeq.sorted
+      assert(stored == Seq(("dup", 5000L, 2.0), ("dup", 6000L, 3.0),
+        ("reqs", 1000L, 5.0), ("reqs", 3000L, 7.0)))
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Long, Double)]
+      val q = DeltaToCumulative.statefulCumulate(
+          input.toDF.toDF("series", "ts", "value"), maxStaleMs = 10000L)
+        .writeStream.format("memory").queryName("d2c_order")
+        .outputMode("append")
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft_d2co").toString)
+        .start()
+      input.addData(points)
+      q.processAllAvailable()
+      q.stop()
+      assert(spark.table("d2c_order").as[(String, Long, Double)].collect()
+        .toSeq.sorted == stored)
+    } finally server.stop()
+  }
+
+  test("live /otlp receiver: one request's exp-histogram deltas cumulate " +
+      "in time order and a duplicate timestamp keeps the smallest " +
+      "(count, sum)") {
+    import graft.codec.Otlp
+    val t = Files.createTempDirectory("graft_od3").toString + "/metrics"
+    val server = new graft.serve.Server(spark, t,
+      otlpConvertDelta = true, otlpDeltaMaxStaleMs = 10000L).start()
+    def pt(ms: Long, count: Long, sum: Double, zero: Long, off: Int,
+           counts: Long*) =
+      (Seq("k" -> "v"), ms * 1000000L, count, sum, 0, zero, off, counts.toSeq)
+    try {
+      // lat arrives 3000 ms before 1000 ms; dlat twice at 5000 ms
+      assert(postOtlp(server.boundPort, Otlp.encodeExpHistogramRequest(
+        Seq("job" -> "j"), "lat", Seq(pt(3000L, 4L, 20.0, 0L, 1, 1L, 0L, 3L),
+          pt(1000L, 3L, 10.0, 1L, 1, 2L)), temporality = 1)) == 200)
+      assert(postOtlp(server.boundPort, Otlp.encodeExpHistogramRequest(
+        Seq("job" -> "j"), "dlat", Seq(pt(5000L, 9L, 9.0, 0L, 0, 9L),
+          pt(5000L, 1L, 1.0, 0L, 0, 1L), pt(6000L, 2L, 4.0, 0L, 0, 2L)),
+        temporality = 1)) == 200)
+      // the native side table, buckets at the OTLP index + 1
+      val stored = spark.read.parquet(t + "_hist")
+        .select(col("name"), col("ts"), col("h_count"), col("h_sum"),
+          col("h_zero"), explode(col("h_buckets")).as("b"))
+        .select(col("name"), col("ts"), col("h_count"), col("h_sum"),
+          col("h_zero"), col("b.idx"), col("b.cnt"))
+        .as[(String, Long, Long, Double, Long, Long, Long)]
+        .collect().toSeq.sorted
+      assert(stored == Seq(
+        ("dlat", 5L, 1L, 1.0, 0L, 1L, 1L),
+        ("dlat", 6L, 3L, 5.0, 0L, 1L, 3L),
+        ("lat", 1L, 3L, 10.0, 1L, 2L, 2L),
+        ("lat", 3L, 7L, 30.0, 1L, 2L, 3L),
+        ("lat", 3L, 7L, 30.0, 1L, 4L, 3L)))
+    } finally server.stop()
+  }
 }
