@@ -108,8 +108,8 @@ object ResponseEdge {
     * Matchers and the date bounds push into the tier's parquet scan
     * (partition pruning + row-group stats on (name, tags)); the
     * driver-side collect holds chunk rows — compressed, ~2-12 bits a
-    * sample — and is bounded by the same `maxSeries` budget as the
-    * SAMPLES path. Returns the body plus the per-query path taken
+    * sample — and its series count meets the same `maxSeries` budget as
+    * the SAMPLES path. Returns the body plus the per-query path taken
     * ("store" | "reencode"), surfaced as the X-Graft-Chunk-Source
     * header.
     */
