@@ -13,26 +13,28 @@ package graft.engine
   * amortization of Structured Streaming, with the batch boundary set by
   * contention instead of a trigger).
   *
-  * `write` must be atomic over its argument: it returns once every
-  * member landed and throws when none did. The group's members go to
-  * ONE `write`, except those `alone` names, which get one each. When a
-  * shared `write` throws, each of its members is written again alone,
-  * so a member whose own input makes the write fail (a timestamp out of
-  * range, say) fails only itself; a store failure fails them all.
+  * A group lands table by table, in the order of `tables`. Each
+  * table's write must be atomic over its argument: it returns once every
+  * member landed and throws when none did. A table's members go to ONE
+  * write, except those `alone` names, which get one each. When a shared
+  * write throws, each of its members is written again alone, so a member
+  * whose own input makes the write fail (a timestamp out of range, say)
+  * fails only itself; a store failure fails them all. A member that
+  * failed a table is written to no later table.
   *
   * `settle` runs once per group, after its writes, whatever their
   * outcome (the server's retention sweep and plan-cache invalidation).
   *
-  * [[submit]] returns only after its member's write landed and the
-  * group settled, so a caller that returns normally knows its member is
-  * durable (at-least-once). It rethrows its member's write failure, or
-  * else a `settle` failure. The next group commits independently.
+  * [[submit]] returns only after its member landed in every table and
+  * the group settled, so a caller that returns normally knows its member
+  * is durable (at-least-once). It rethrows its member's write failure,
+  * or else a `settle` failure. The next group commits independently.
   *
   * `lock` is shared with every other writer that must serialize with
   * these commits (the server's `appendLock`); writes and `settle` run
   * under it.
   */
-final class GroupCommit[M](lock: AnyRef, write: Seq[M] => Unit,
+final class GroupCommit[M](lock: AnyRef, tables: Seq[Seq[M] => Unit],
                            alone: M => Boolean = (_: M) => false,
                            settle: () => Unit = () => ()) {
 
@@ -58,9 +60,12 @@ final class GroupCommit[M](lock: AnyRef, write: Seq[M] => Unit,
       if (!p.done) {
         val group = Iterator.continually(queue.poll())
           .takeWhile(_ != null).toVector
-        val (solos, shared) = group.partition(q => alone(q.member))
-        if (shared.nonEmpty) land(shared)
-        solos.foreach(q => land(Seq(q)))
+        tables.foreach { write =>
+          val (solos, shared) = group.filter(_.error == null)
+            .partition(q => alone(q.member))
+          if (shared.nonEmpty) land(write, shared)
+          solos.foreach(q => land(write, Seq(q)))
+        }
         attempt(settle()).foreach(e => group.foreach(q =>
           if (q.error == null) q.error = e))
         group.foreach(_.done = true)
@@ -70,11 +75,11 @@ final class GroupCommit[M](lock: AnyRef, write: Seq[M] => Unit,
   }
 
   /** Write `ps` in one `write`; if that fails for several, each alone. */
-  private def land(ps: Seq[Pending]): Unit =
+  private def land(write: Seq[M] => Unit, ps: Seq[Pending]): Unit =
     attempt(write(ps.map(_.member))) match {
       case None => ()
       case Some(e) if ps.size == 1 => ps.head.error = e
-      case Some(_) => ps.foreach(q => land(Seq(q)))
+      case Some(_) => ps.foreach(q => land(write, Seq(q)))
     }
 
   // a fatal error too must reach its member: a member left drained but

@@ -26,6 +26,20 @@ object ResponseEdge {
       s"read result exceeds $limit series; narrow the matchers or raise " +
         "--read.max-series")
 
+  /** `df`'s rows, one per series, collected under the `maxSeries`
+    * budget: the bound goes INTO the plan as limit(maxSeries + 1), so
+    * CollectLimit truncates on the executors before anything reaches the
+    * driver; an over-limit (match-everything) result costs one extra row
+    * of driver memory and a clean [[SeriesLimitExceeded]], never an OOM.
+    * 0 = unlimited.
+    */
+  def collectBounded(df: DataFrame, maxSeries: Int): Array[Row] = {
+    val rows = (if (maxSeries > 0) df.limit(maxSeries + 1) else df).collect()
+    if (maxSeries > 0 && rows.length > maxSeries)
+      throw new SeriesLimitExceeded(maxSeries)
+    rows
+  }
+
   /** tags array → prompb labels. Malformed entries are dropped and empty
     * values are treated as absent labels, the reference's response-edge
     * rule (reference: clickhouse/tagvalue.go:32-49).
@@ -46,21 +60,13 @@ object ResponseEdge {
   def toQueryResult(assembled: DataFrame): PQueryResult =
     toQueryResult(assembled, 0)
 
-  /** Same, with a series budget: `maxSeries > 0` guards the collect — the
-    * bound goes INTO the plan as limit(maxSeries + 1), so CollectLimit
-    * truncates on the executors before anything reaches the driver; an
-    * over-limit (match-everything) query costs one extra row of driver
-    * memory and a clean [[SeriesLimitExceeded]], never an OOM. The A1
-    * divStep already bounds rows per series (≤ 8192 buckets); this bounds
-    * the series count, the other axis of the product. 0 = unlimited
+  /** Same, with a series budget ([[collectBounded]]). The A1 divStep
+    * already bounds rows per series (≤ 8192 buckets); this bounds the
+    * series count, the other axis of the product. 0 = unlimited
     * (embedded/batch callers that own their input).
     */
   def toQueryResult(assembled: DataFrame, maxSeries: Int): PQueryResult = {
-    val bounded =
-      if (maxSeries > 0) assembled.limit(maxSeries + 1) else assembled
-    val rows = bounded.select("tags", "samples").collect()
-    if (maxSeries > 0 && rows.length > maxSeries)
-      throw new SeriesLimitExceeded(maxSeries)
+    val rows = collectBounded(assembled.select("tags", "samples"), maxSeries)
     val series = rows.map { r =>
       val tags = r.getAs[scala.collection.Seq[String]]("tags").toSeq
       val samples = r.getAs[scala.collection.Seq[Row]]("samples").toSeq
@@ -165,10 +171,13 @@ object ResponseEdge {
   /** The per-query loop of every chunk-frame encoder over a stored
     * table: a query's matchers, date partitions and time bound (rows
     * whose [`first`, `last`] seconds meet the query's) push into the
-    * scan of `store`; the matched `cols` collect at the driver, grouped
-    * by series under the `maxSeries` budget; each series, in tag order,
-    * becomes one frame of the chunks `chunks` makes from its rows (a
-    * series with none sends no frame).
+    * scan of `store`; the matched `cols` group per series in the plan,
+    * under the `maxSeries` budget ([[collectBounded]]: an over-budget
+    * read collects maxSeries + 1 series, not every chunk); each series,
+    * in tag order, becomes one frame of the chunks `chunks` makes from
+    * its rows (a series with none sends no frame). A read of at most
+    * `openCostInBytes` scans as one task ([[ReadPipeline.oneTask]]), so
+    * the grouping adds no exchange.
     */
   private def frames(store: DataFrame,
                      queries: Seq[graft.compile.Matchers.PromQuery],
@@ -177,6 +186,7 @@ object ResponseEdge {
       chunks: (graft.compile.Matchers.PromQuery, Seq[Row]) =>
         Seq[ChunkedRead.PChunk]): Array[Byte] = {
     import graft.compile.Matchers
+    import org.apache.spark.sql.functions.{collect_list, struct}
     val out = new java.io.ByteArrayOutputStream()
     queries.zipWithIndex.foreach { case (q, qi) =>
       val sSec = q.startMs / 1000; val eSec = q.endMs / 1000
@@ -185,19 +195,18 @@ object ResponseEdge {
           col("date") >= to_date(timestamp_seconds(lit(sSec))) &&
             col("date") <= to_date(timestamp_seconds(lit(eSec))) &&
             col(last) >= sSec && col(first) <= eSec)(_ && _)
-      val bySeries = store.filter(pred).select(col("tags") +: cols: _*)
-        .collect().toSeq
-        .groupBy(_.getAs[scala.collection.Seq[String]]("tags").toSeq)
-      if (maxSeries > 0 && bySeries.size > maxSeries)
-        throw new SeriesLimitExceeded(maxSeries)
-      bySeries.toSeq.sortBy(_._1.mkString("\u0000")).foreach {
-        case (tags, rs) =>
+      collectBounded(ReadPipeline.oneTask(store, sSec, eSec).getOrElse(store)
+          .filter(pred).groupBy(col("tags"))
+          .agg(collect_list(struct(cols: _*)).as("rows")), maxSeries)
+        .map(r => r.getAs[scala.collection.Seq[String]]("tags").toSeq ->
+          r.getAs[scala.collection.Seq[Row]]("rows").toSeq)
+        .sortBy(_._1.mkString("\u0000")).foreach { case (tags, rs) =>
           val cs = chunks(q, rs)
           if (cs.nonEmpty)
             out.write(ChunkedRead.frame(ChunkedRead.encodeResponse(
               Seq(ChunkedRead.PChunkedSeries(tagsToLabels(tags), cs)),
               qi.toLong)))
-      }
+        }
     }
     out.toByteArray
   }
@@ -223,17 +232,12 @@ object ResponseEdge {
     if (maxSeries > 0) perSeries.limit(maxSeries + 1) else perSeries
   }
 
-  /** Collect [[boundedSeriesFrame]], throwing [[SeriesLimitExceeded]] on
-    * an over-budget result (rows.length is the bounded maxSeries + 1,
-    * not the true series count — the whole point).
+  /** Collect [[boundedSeriesFrame]] through [[collectBounded]] (rows.length
+    * is at most the bounded maxSeries + 1, not the true series count —
+    * the whole point).
     */
-  def collectBoundedSeries(gridResult: DataFrame,
-                           maxSeries: Int): Array[Row] = {
-    val rows = boundedSeriesFrame(gridResult, maxSeries).collect()
-    if (maxSeries > 0 && rows.length > maxSeries)
-      throw new SeriesLimitExceeded(maxSeries)
-    rows
-  }
+  def collectBoundedSeries(gridResult: DataFrame, maxSeries: Int): Array[Row] =
+    collectBounded(boundedSeriesFrame(gridResult, 0), maxSeries)
 
   /** FLOAT_HISTOGRAM frames for native-histogram series at the chunked
     * edge: the hist side table's matched series become framed

@@ -83,10 +83,11 @@ object Ingest {
     }
 
   /** How a failed ingest request answers: (status, body). A `NonFatal`
-    * failure (a malformed body, a failed side-table append) is 400; a
-    * fatal JVM error (`OutOfMemoryError`, `StackOverflowError`) is 500,
-    * because a Prometheus sender retries a 5xx and drops a 4xx. The body
-    * is the failure's message, else its class name.
+    * failure (a malformed body, a side-table write that failed on the
+    * request's rows) is 400; a fatal JVM error (`OutOfMemoryError`,
+    * `StackOverflowError`) is 500, because a Prometheus sender retries a
+    * 5xx and drops a 4xx. The body is the failure's message, else its
+    * class name. A failed sample commit is no failure here: it is 200.
     */
   def failure(e: Throwable): (Int, String) =
     (if (scala.util.control.NonFatal(e)) 400 else 500,
@@ -97,9 +98,11 @@ object Ingest {
   /** Rows for one side table beside the main table (`_exemplars`,
     * `_hist`, `_stale`) and their count. */
   final class Side private[Ingest] (frame: DataFrame, rows: Long) {
-    /** Append to the table at `path` with the main table's layout
-      * (date-partitioned, range-split, (name, tags, ts)-sorted). The
-      * caller serializes it with every other commit to `path`. */
+    /** Append to the table at `path` in one write job with the main
+      * table's layout (date-partitioned, range-split, (name, tags,
+      * ts)-sorted). The server's committer appends a whole group's rows
+      * at once under its commit lock; any other caller serializes it
+      * with every other commit to `path`. */
     def appendTo(path: String): Unit =
       graft.engine.WritePipeline.append(frame, path, rowsHint = rows)
   }

@@ -110,26 +110,48 @@ class Server(spark: SparkSession, tablePath: String,
     */
   private[serve] def stalePath: String = tablePath + "_stale"
 
-  /** Plan-cached stored table: /read requests reuse one resolved parquet
-    * relation (schema inference + file listing happen once) instead of
-    * re-planning `spark.read.parquet` per request. It is invalidated
-    * once per commit — once per ingest group commit, however many
-    * requests the group holds, and after each admin commit — so the
-    * next read lists the new files. The DATA is not pinned — only the
-    * relation — so executors still scan parquet with full predicate
-    * pushdown per query.
+  /** Plan-cached store relations: requests reuse one resolved parquet
+    * relation per table, the main table and each side table (schema
+    * inference + file listing happen once) instead of re-planning
+    * `spark.read.parquet` per request. The slot is dropped once per
+    * commit — once per ingest group commit, however many requests the
+    * group holds, and after each admin commit — so the next read lists
+    * the new files; every write to these tables ends in such a drop,
+    * since only [[committer]] writes the side tables. The DATA is not
+    * pinned — only the relation — so executors still scan parquet with
+    * full predicate pushdown per query.
     *
-    * Invalidating swaps in a fresh empty [[TableSlot]] without taking
-    * the Server monitor, so a commit never waits for a read that is
-    * rebuilding the relation; the rebuild installs its relation only if
-    * its slot is still current, so one that listed the files before a
-    * commit is never cached past it.
+    * Invalidating swaps in a fresh [[TableSlot]] without taking the
+    * Server monitor, so a commit never waits for a read that is
+    * resolving a relation; a read that fetched the old slot keeps the
+    * relation it listed, and every later read lists afresh.
     */
   private val cachedTable =
-    new java.util.concurrent.atomic.AtomicReference(new TableSlot(None))
+    new java.util.concurrent.atomic.AtomicReference(new TableSlot)
 
-  /** One generation of [[cachedTable]]; compared by identity. */
-  private final class TableSlot(val table: Option[DataFrame])
+  /** One generation of [[cachedTable]]: each relation resolves at most
+    * once per generation, on first use; a side table that holds no
+    * `date=` partition yet is None. */
+  private final class TableSlot {
+    // recorded tombstones mask deleted samples on EVERY read surface (a
+    // residual filter — admin-API-sized, never series-sized); both admin
+    // endpoints invalidate this cache, so the masked view is always
+    // current. Merges rename under the Server monitor, so the listing
+    // is taken under it.
+    lazy val table: DataFrame = Server.this.synchronized {
+      graft.engine.Tombstones.suppress(
+        graft.engine.Admin.readExcluding(spark, tablePath,
+          reads.retiredFiles),
+        graft.engine.Tombstones.load(spark, tablePath))
+    }
+    lazy val exemplars: Option[DataFrame] = side(exemplarPath)
+    lazy val hist: Option[DataFrame] = side(histPath)
+    lazy val stale: Option[DataFrame] = side(stalePath)
+
+    private def side(path: String): Option[DataFrame] =
+      Option(storeFs.globStatus(new org.apache.hadoop.fs.Path(path, "date=*")))
+        .filter(_.nonEmpty).map(_ => spark.read.parquet(path))
+  }
 
   /** Serializes every parquet COMMIT to the store and its side tables:
     * concurrent append jobs to one path share the Hadoop staging dir
@@ -137,7 +159,7 @@ class Server(spark: SparkSession, tablePath: String,
     * by the s3_remote_write_chain entry — concurrent remote-write
     * senders are the normal case, not the edge). Every ingest front door
     * commits through [[committer]], which holds this lock for a whole
-    * group; the admin rewrites and the side-table appends take it
+    * group, side tables included; only the admin rewrites take it
     * directly. Nothing holds it across a network fetch.
     */
   private[graft] val appendLock = new Object
@@ -162,17 +184,41 @@ class Server(spark: SparkSession, tablePath: String,
     * by its writes and drained by its settle, both under [[appendLock]]. */
   private val groupDates = scala.collection.mutable.Set[java.time.LocalDate]()
 
-  /** The ingest committer ([[ingest]]). Each request — a /write or
-    * /otlp POST, a scraped page — builds its samples outside the lock
-    * and submits them; whichever request takes [[appendLock]] commits
-    * every queued request's rows in ONE write job (each still in its own
-    * file per date, as sequential appends would leave them), then runs
-    * one retention sweep, the commit-file merges of the dates it wrote
+  /** One ingest request as [[committer]] lands it: its flat samples
+    * for the main table and its rows for each side table. */
+  private final class Commit(val batch: WritePipeline.Batch,
+                             val exemplars: Seq[Ingest.ExemplarRow],
+                             val histograms: Seq[graft.codec.NativeHist.PHistSeries],
+                             val staleMarkers: Seq[graft.model.Schema.Sample])
+
+  /** A side-table write's failure: the request answers it as a failed
+    * ingest step ([[Ingest.failure]]), not as a failed sample commit. */
+  private final class SideTableFailure(cause: Throwable) extends Exception(cause)
+
+  /** The committer's write of one side table: the members' `rows`, in
+    * one write job by `land`; members without any write nothing. */
+  private def sideTable[R](rows: Commit => Seq[R])(land: Seq[R] => Unit)
+      : Seq[Commit] => Unit = { ms =>
+    val rs = ms.flatMap(rows)
+    if (rs.nonEmpty)
+      try land(rs) catch { case e: Throwable => throw new SideTableFailure(e) }
+  }
+
+  /** The ingest committer ([[ingest]]), the one writer of the main and
+    * side tables' ingest rows. Each request — a /write or /otlp POST, a
+    * scraped page — builds its rows outside the lock and submits them;
+    * whichever request takes [[appendLock]] commits every queued
+    * request's rows table by table: exemplars, native histograms and
+    * stale markers in one write job per table (one file per date for the
+    * group), then samples in ONE write job (each request still in its own
+    * file per date, as sequential appends would leave them). It then runs
+    * one exemplar compaction if some series is over its bound, one
+    * retention sweep, the commit-file merges of the dates it wrote
     * ([[mergeCommitted]]) and one [[invalidateTable]], in that order,
     * before any member is answered. A request wider than one write task
-    * commits alone. When the shared job fails, each request is committed
-    * again alone, so one whose own samples fail the write fails only
-    * itself; a store failure fails every member.
+    * writes alone. When a shared job fails, each request is written again
+    * alone, so one whose own rows fail the write fails only itself and
+    * reaches no later table; a store failure fails every member.
     *
     * `updated`: members of one group share the commit's
     * `current_timestamp()`. Only POSTs in flight together share a group,
@@ -181,30 +227,40 @@ class Server(spark: SparkSession, tablePath: String,
     * ([[graft.engine.Rollup.dedupLatest]]) resolves every ordering a
     * client can observe as before.
     */
-  private val committer = new GroupCommit[WritePipeline.Batch](
-    appendLock,
-    write = { members =>
-      WritePipeline.appendGroup(spark, members, tablePath)
-      parquetCommits.incrementAndGet()
-      members.foreach(b =>
-        groupDates ++= WritePipeline.partitionDates(spark, b.samples))
+  private val committer = new GroupCommit[Commit](appendLock, Seq(
+    sideTable(_.exemplars) { rows =>
+      Ingest.exemplars(spark, rows).appendTo(exemplarPath)
+      if (maxExemplarsPerSeries > 0)
+        rows.groupBy(r => r._1 + "|" + r._2.mkString(",")).foreach {
+          case (k, rs) => exemplarCounts.merge(k, rs.size.toLong, _ + _)
+        }
     },
-    alone = b => !WritePipeline.groupable(spark, b.samples.size.toLong),
+    sideTable(_.histograms)(Ingest.histograms(spark, _).appendTo(histPath)),
+    sideTable(_.staleMarkers)(Ingest.staleMarkers(spark, _).appendTo(stalePath)),
+    { members =>
+      WritePipeline.appendGroup(spark, members.map(_.batch), tablePath)
+      parquetCommits.incrementAndGet()
+      members.foreach(m =>
+        groupDates ++= WritePipeline.partitionDates(spark, m.batch.samples))
+    }),
+    alone = m => !WritePipeline.groupable(spark, m.batch.samples.size.toLong),
     settle = () =>
       // the retention sweep is a directory listing + partition drops —
       // cheap enough to run on every commit, like Prometheus's
       // head-truncation cadence. The SIDE tables age on the same
       // horizon: exemplars and stale markers past retention are as
       // unreadable as the samples they annotate, and would otherwise
-      // grow forever.
+      // grow forever. A table with no directory yet sweeps nothing.
       try {
+        if (maxExemplarsPerSeries > 0 && exemplarCounts.values.stream()
+            .anyMatch(c => c > 2L * maxExemplarsPerSeries))
+          try compactExemplars()
+          catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[graft] exemplar compaction failed: $e") }
         if (retentionSec > 0) {
           val now = System.currentTimeMillis() / 1000
-          graft.engine.Admin.enforceRetention(tablePath, retentionSec, now)
-          Seq(exemplarPath, stalePath, histPath).foreach { p =>
-            if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
-              graft.engine.Admin.enforceRetention(p, retentionSec, now)
-          }
+          Seq(tablePath, exemplarPath, stalePath, histPath).foreach(
+            graft.engine.Admin.enforceRetention(_, retentionSec, now))
         }
         mergeCommitted(groupDates)
       } finally { groupDates.clear(); invalidateTable() })
@@ -239,21 +295,7 @@ class Server(spark: SparkSession, tablePath: String,
     }
   }
 
-  private[graft] def storedTable(): DataFrame = synchronized {
-    val slot = cachedTable.get
-    slot.table.getOrElse {
-      // recorded tombstones mask deleted samples on EVERY read surface
-      // (a residual filter — admin-API-sized, never series-sized); both
-      // admin endpoints invalidate this cache, so the masked view is
-      // always current
-      val df = graft.engine.Tombstones.suppress(
-        graft.engine.Admin.readExcluding(spark, tablePath,
-          reads.retiredFiles),
-        graft.engine.Tombstones.load(spark, tablePath))
-      cachedTable.compareAndSet(slot, new TableSlot(Some(df)))
-      df
-    }
-  }
+  private[graft] def storedTable(): DataFrame = cachedTable.get.table
 
   /** Every configured reader, primary first (= highest merge priority).
     * Extra readers are re-resolved per request — unlike the primary,
@@ -262,30 +304,25 @@ class Server(spark: SparkSession, tablePath: String,
     * out-of-band appends silently invisible; the per-request listing
     * cost is a driver-side directory scan, negligible against the read
     * itself. */
-  private[graft] def storedReaders(): Seq[DataFrame] = {
+  private[graft] def storedReaders(): Seq[DataFrame] =
     storedTable() +: extraReaderPaths.map(spark.read.parquet(_))
-  }
 
-  /** Drop the cached relation; then [[reads]] may delete the retired
+  /** Drop the cached relations; then [[reads]] may delete the retired
     * inputs only relations listed before this held. */
   private def invalidateTable(): Unit = {
-    cachedTable.set(new TableSlot(None))
+    cachedTable.set(new TableSlot)
     reads.advance()
   }
 
   /** The PromQL evaluator's store view: the raw table, with any stale
     * markers unioned in as flagged rows ([[graft.promql.Eval
     * .withStaleMarkers]]) so instant selectors stop extending dead
-    * series. The marker table re-resolves per request (markers arrive
-    * out of band relative to the cached relation); when no marker has
-    * ever arrived this is exactly [[storedTable]] — zero added cost.
+    * series. Both relations come from one [[TableSlot]]; when no marker
+    * has ever arrived this is exactly [[storedTable]] — zero added cost.
     */
   private[serve] def promqlTable(): DataFrame = {
-    val p = java.nio.file.Paths.get(stalePath)
-    if (java.nio.file.Files.exists(p))
-      graft.promql.Eval.withStaleMarkers(storedTable(),
-        spark.read.parquet(stalePath))
-    else storedTable()
+    val slot = cachedTable.get
+    slot.stale.fold(slot.table)(graft.promql.Eval.withStaleMarkers(slot.table, _))
   }
 
   private val http = HttpServer.create(new InetSocketAddress(port), 0)
@@ -492,28 +529,6 @@ class Server(spark: SparkSession, tablePath: String,
     */
   private val StaleNaNBits = 0x7ff0000000000002L
 
-  /** Exemplars → their side table, each counted toward its series'
-    * `maxExemplarsPerSeries` bound (Prometheus's max-exemplars
-    * circular-buffer discipline): a high-frequency exemplar producer
-    * must not grow the side table linearly between retention sweeps.
-    * Appends stay cheap — a driver-side counter per series triggers the
-    * rewrite only once some series doubles its budget, so the compaction
-    * cost amortizes over at least maxExemplarsPerSeries appends.
-    */
-  private def appendExemplars(
-      series: Seq[graft.codec.WriteWire.PExemplarSeries]): Unit = {
-    val rows = Ingest.exemplarRows(series)
-    appendSide(exemplarPath, Ingest.exemplars(spark, rows))
-    if (maxExemplarsPerSeries > 0) appendLock.synchronized {
-      rows.groupBy(r => r._1 + "|" + r._2.mkString(",")).foreach {
-        case (k, rs) => exemplarCounts.merge(k, rs.size.toLong, _ + _)
-      }
-      val overBudget = exemplarCounts.values.stream()
-        .anyMatch(c => c > 2L * maxExemplarsPerSeries)
-      if (overBudget) compactExemplars()
-    }
-  }
-
   /** Appended-exemplar tallies per series since the last compaction —
     * driver memory, bounded by live exemplar-series cardinality. */
   private val exemplarCounts =
@@ -522,9 +537,15 @@ class Server(spark: SparkSession, tablePath: String,
   /** Rewrite the exemplar side table keeping only the NEWEST
     * `maxExemplarsPerSeries` exemplars per series (ts, then value and
     * exemplar labels as deterministic tiebreaks) — the at-rest
-    * equivalent of Prometheus's per-series circular buffer, staged and
-    * swapped like [[graft.engine.Rollup.compact]]. Caller holds
-    * `appendLock`.
+    * equivalent of Prometheus's per-series circular buffer (the
+    * max-exemplars discipline: a high-frequency exemplar producer must
+    * not grow the side table linearly between retention sweeps), staged
+    * and swapped like [[graft.engine.Rollup.compact]]. The committer runs
+    * it in its settle only once some series doubles its budget, so the
+    * cost amortizes over at least maxExemplarsPerSeries appends; a
+    * failed rewrite is logged, not raised, like a failed merge: the
+    * exemplars it follows have landed, and the next group retries it.
+    * Caller holds `appendLock`.
     */
   private def compactExemplars(): Unit = {
     import org.apache.spark.sql.functions._
@@ -561,29 +582,23 @@ class Server(spark: SparkSession, tablePath: String,
         r.getLong(2)))
   }
 
-  /** Append a side table's rows under [[appendLock]]. */
-  private def appendSide(path: String, side: Ingest.Side): Unit =
-    appendLock.synchronized(side.appendTo(path))
-
   /** The one ingest tail. Every front door — /write's RW1, RW2, text
     * and OpenMetrics bodies, /otlp and the scrape loop — decodes its
     * request to an [[Ingest]] record outside every lock and lands it
-    * here, each step once: metadata to the metadata store; exemplars to
-    * their side table under the per-series bound; native histograms to
-    * the sparse `_hist` table and, flattened to their classic `le`
-    * series, to the store; the CT-zero splice; stale markers diverted to
-    * the `_stale` table; then the fan-out, whose store sink submits the
-    * samples to [[committer]] (which holds [[appendLock]] only for the
-    * commit). Returns the samples received and, when the store did not
-    * commit them, its error; a failure of any other step throws.
+    * here, each step once: metadata to the metadata store; native
+    * histograms flattened to their classic `le` series; the CT-zero
+    * splice; stale markers diverted from the samples; then the fan-out,
+    * whose store sink submits the samples with the request's exemplar,
+    * sparse native-histogram and stale-marker rows to [[committer]]
+    * (which holds [[appendLock]] only for the commit). Returns the
+    * samples received and, when the store did not commit them, its
+    * error; a failure of any other step, a side table's included,
+    * throws.
     */
   private def ingest(rec: Ingest): (Long, Option[String]) = {
     val dec = rec.write
     dec.metadata.foreach(md =>
       if (md.familyName.nonEmpty) metadataStore.put(md.familyName, md))
-    if (dec.exemplars.nonEmpty) appendExemplars(dec.exemplars)
-    if (dec.histograms.nonEmpty)
-      appendSide(histPath, Ingest.histograms(spark, dec.histograms))
     val series = dec.scalars.timeseries ++
       dec.histograms.flatMap(graft.codec.NativeHist.toClassicSeries)
     // --ct-zero-ingestion: admitted candidates become synthetic zeros at
@@ -596,16 +611,18 @@ class Server(spark: SparkSession, tablePath: String,
     // signals, not samples — F1 still sees (and drops) ordinary NaNs
     val (staleMarkers, samples) = all.partition(s =>
       java.lang.Double.doubleToRawLongBits(s.value) == StaleNaNBits)
-    if (staleMarkers.nonEmpty)
-      appendSide(stalePath, Ingest.staleMarkers(spark, staleMarkers))
     import spark.implicits._
     val flat = samples.toDF()
+    var sideFailure: Option[Throwable] = None
     val table: (String, DataFrame => graft.sinks.Transport.WriteStats) =
       "parquet" -> { df =>
         // decode and the frame above stay concurrent; the commit
         // (shared with whichever POSTs are queued with this one) runs
         // under appendLock, and executors parallelize within it
-        committer.submit(WritePipeline.Batch(samples, df))
+        try committer.submit(new Commit(WritePipeline.Batch(samples, df),
+          Ingest.exemplarRows(dec.exemplars), dec.histograms, staleMarkers))
+        catch { case f: SideTableFailure =>
+          sideFailure = Some(f.getCause); throw f.getCause }
         // The decoded request size IS the row count of `df` —
         // counting it again would launch a second Spark job per
         // micro-batch purely for the stat (the reference likewise
@@ -619,6 +636,9 @@ class Server(spark: SparkSession, tablePath: String,
       sendDuration.computeIfAbsent(o.sink, _ => new Observability.DurationHistogram)
         .observe(o.durationSec)
     }
+    // a side-table failure answers as any failed ingest step does (400,
+    // or 500 when fatal), not as the store sink's outcome
+    sideFailure.foreach(throw _)
     // fan-out isolates per-sink failures (the request still answers
     // 200, pinned by s3_fanout_isolation); the store's own outcome is
     // what the RW2 written headers and the scrape target's health report
@@ -694,8 +714,7 @@ class Server(spark: SparkSession, tablePath: String,
   private[serve] def chooseTier(q: PromQuery, resParam: Option[String],
                                 hintStepMs: Long = 0L,
                                 hintFunc: String = ""): Option[(Long, DataFrame)] = {
-    if (tierPaths.isEmpty) None
-    else resParam match {
+    val tier = if (tierPaths.isEmpty) None else resParam match {
       case Some("raw") => None
       // the COUNTER rail fires whenever no param was given, whatever
       // the step: a hinted/parsed rate must read raw. An explicit
@@ -707,28 +726,24 @@ class Server(spark: SparkSession, tablePath: String,
       // reads raw. Only when NO param is present — an explicit
       // ?resolution=auto asks for the range-based rule by name.
       case None if hintStepMs > 0 =>
-        val eligible = tierPaths.map(_._1)
-          .filter(_ * 1000L <= hintStepMs)
-        eligible.maxOption.flatMap(w => tierPaths.find(_._1 == w))
-          .map { case (sec, path) => sec -> spark.read.parquet(path) }
+        tierPaths.map(_._1).filter(_ * 1000L <= hintStepMs).maxOption
+          .flatMap(w => tierPaths.find(_._1 == w))
       case None | Some("auto") =>
         val rangeSec = (q.endMs - q.startMs) / 1000
         if (rangeSec <= 0) None
         else {
           val w = graft.engine.Rollup.chooseResolution(rangeSec,
             tierPaths.map(_._1), autoResTargetPoints)
-          tierPaths.find(_._1 == w).map { case (sec, path) =>
-            sec -> spark.read.parquet(path)
-          }
+          tierPaths.find(_._1 == w)
         }
       case Some(explicit) =>
         val w = explicit.toLong // NumberFormatException → 400
-        val (sec, path) = tierPaths.find(_._1 == w).getOrElse(
+        Some(tierPaths.find(_._1 == w).getOrElse(
           throw new IllegalArgumentException(
             s"no downsampled tier at ${w}s (configured: " +
-              s"${tierPaths.map(_._1).sorted.mkString(", ")})"))
-        Some(sec -> spark.read.parquet(path))
+              s"${tierPaths.map(_._1).sorted.mkString(", ")})")))
     }
+    tier.map { case (sec, path) => sec -> spark.read.parquet(path) }
   }
 
   /** Response-grid step for a tier read: the raw path's adaptive divStep
@@ -834,12 +849,9 @@ class Server(spark: SparkSession, tablePath: String,
       // through the classic le-flatten (whose *_bucket/_count/_sum
       // names don't collide with the native series' own name, so
       // the two frame sets are disjoint by construction)
-      val histBody =
-        if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(histPath)))
-          ResponseEdge.encodeChunkedHist(spark.read.parquet(histPath),
-            rr.queries.map(toPromQuery), readMaxSeries)
-        else Array.empty[Byte]
+      val histBody = cachedTable.get.hist.fold(Array.empty[Byte])(
+        ResponseEdge.encodeChunkedHist(_, rr.queries.map(toPromQuery),
+          readMaxSeries))
       ex.getResponseHeaders.set("Content-Type",
         "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
       scalarBody ++ histBody
@@ -955,13 +967,9 @@ class Server(spark: SparkSession, tablePath: String,
       val slice = p.duration("slice")
       val res = graft.promql.Eval.rangeQuery(promqlTable(), p.need("query"),
         graft.promql.Eval.RangeSpec(t, t, 1, lookback, slice))
-      // one grid instant ⇒ one row per series: the budget is literally
-      // limit(maxSeries + 1) pushed into the plan before the collect
-      // (the ResponseEdge.toQueryResult pattern) — sorting happens
-      // driver-side on the bounded rows
-      val rows = res.limit(readMaxSeries + 1).collect()
-      if (rows.length > readMaxSeries)
-        throw new ResponseEdge.SeriesLimitExceeded(readMaxSeries)
+      // one grid instant ⇒ one row per series, so the budget applies
+      // in-plan as on /read; sorting happens driver-side on the bounded rows
+      val rows = ResponseEdge.collectBounded(res, readMaxSeries)
       val out = rows.sortBy(
         _.getAs[scala.collection.Seq[String]]("tags").mkString("\u0000"))
         .iterator.map { r =>
@@ -996,48 +1004,41 @@ class Server(spark: SparkSession, tablePath: String,
       if (matches.nonEmpty)
         df = df.filter(matches.map(graft.promql.Eval.seriesPredicate)
           .reduce(_ || _))
-      val data: String =
-        if (path.endsWith("/labels")) {
-          capped(df
-            .select(explode(col("tags")).as("kv"))
-            .select(substring_index(col("kv"), "=", 1).as("k"))
-            .distinct().orderBy(col("k")))
-            .collect().map(r => jsonStr(r.getString(0)))
-            .mkString("[", ",", "]")
-        } else if (path.startsWith("/api/v1/label/") &&
-            path.endsWith("/values")) {
-          val label = path.stripPrefix("/api/v1/label/")
-            .stripSuffix("/values")
-          val prefix = label + "="
-          capped(df
-            .select(explode(col("tags")).as("kv"))
-            .filter(col("kv").startsWith(prefix))
-            .select(col("kv").substr(lit(prefix.length + 1),
-              lit(Int.MaxValue)).as("v"))
-            .distinct().orderBy(col("v")))
-            .collect().map(r => jsonStr(r.getString(0)))
-            .mkString("[", ",", "]")
-        } else if (path.endsWith("/series")) {
-          if (matches.isEmpty)
-            throw new IllegalArgumentException(
-              "series requires at least one match[]")
-          // distinct tags bounded IN-PLAN (limit after the distinct, so
-          // CollectLimit truncates on the executors); the deterministic
-          // order is applied driver-side on the bounded rows. A user
-          // ?limit= sorts FIRST (TakeOrdered) so the cut is stable.
-          val distinctTags = df.select(col("tags")).distinct()
-          val rows = userLimit match {
-            case Some(n) =>
-              distinctTags.orderBy(array_join(col("tags"), ","))
-                .limit(math.min(n, readMaxSeries + 1)).collect()
-            case None => distinctTags.limit(readMaxSeries + 1).collect()
-          }
-          if (rows.length > readMaxSeries)
-            throw new ResponseEdge.SeriesLimitExceeded(readMaxSeries)
-          rows.map(_.getAs[scala.collection.Seq[String]]("tags"))
-            .sortBy(_.mkString(",")).map(labelsJson).mkString("[", ",", "]")
-        } else throw new IllegalArgumentException(s"unknown path $path")
-      data
+      if (path.endsWith("/labels")) {
+        capped(df
+          .select(explode(col("tags")).as("kv"))
+          .select(substring_index(col("kv"), "=", 1).as("k"))
+          .distinct().orderBy(col("k")))
+          .collect().map(r => jsonStr(r.getString(0)))
+          .mkString("[", ",", "]")
+      } else if (path.startsWith("/api/v1/label/") &&
+          path.endsWith("/values")) {
+        val label = path.stripPrefix("/api/v1/label/")
+          .stripSuffix("/values")
+        val prefix = label + "="
+        capped(df
+          .select(explode(col("tags")).as("kv"))
+          .filter(col("kv").startsWith(prefix))
+          .select(col("kv").substr(lit(prefix.length + 1),
+            lit(Int.MaxValue)).as("v"))
+          .distinct().orderBy(col("v")))
+          .collect().map(r => jsonStr(r.getString(0)))
+          .mkString("[", ",", "]")
+      } else if (path.endsWith("/series")) {
+        if (matches.isEmpty)
+          throw new IllegalArgumentException(
+            "series requires at least one match[]")
+        // distinct tags bounded IN-PLAN (limit after the distinct, so
+        // CollectLimit truncates on the executors); the deterministic
+        // order is applied driver-side on the bounded rows. A user
+        // ?limit= sorts FIRST (TakeOrdered) so the cut is stable.
+        val distinctTags = df.select(col("tags")).distinct()
+        ResponseEdge.collectBounded(userLimit.fold(distinctTags)(n =>
+            distinctTags.orderBy(array_join(col("tags"), ",")).limit(n)),
+            readMaxSeries)
+          .map(_.getAs[scala.collection.Seq[String]]("tags"))
+          .sortBy(_.mkString(",")).map(labelsJson).mkString("[", ",", "]")
+      } else throw new IllegalArgumentException(s"unknown path $path")
     }
 
   /** `GET /api/v1/format_query?query=…` — parse + pretty-print (the
@@ -1065,23 +1066,16 @@ class Server(spark: SparkSession, tablePath: String,
       // for this endpoint — absent bounds mean "all time")
       val start = p.time("start").getOrElse(0L)
       val end = p.time("end").getOrElse(4102444800L) // year 2100: "unbounded"
-      val data: String =
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(exemplarPath)))
-          "[]"
-        else {
-          val perSeries = timeWindow(
-              spark.read.parquet(exemplarPath), start, end)
+      cachedTable.get.exemplars match {
+        case None => "[]"
+        case Some(exemplars) =>
+          val perSeries = timeWindow(exemplars, start, end)
             .filter(graft.promql.Eval.seriesPredicate(query))
             .groupBy(col("tags"))
             .agg(sort_array(collect_list(struct(
               unix_timestamp(col("ts")).as("t"),
               col("ex_tags"), col("val")))).as("exs"))
-            .limit(readMaxSeries + 1)
-          val rows = perSeries.collect()
-          if (rows.length > readMaxSeries)
-            throw new ResponseEdge.SeriesLimitExceeded(readMaxSeries)
-          rows.toSeq
+          ResponseEdge.collectBounded(perSeries, readMaxSeries).toSeq
             .map { r =>
               (r.getAs[scala.collection.Seq[String]]("tags"),
                 r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("exs"))
@@ -1096,8 +1090,7 @@ class Server(spark: SparkSession, tablePath: String,
               }.mkString("[", ",", "]")
               s"""{"seriesLabels":${labelsJson(tags)},"exemplars":$exJson}"""
             }.mkString("[", ",", "]")
-        }
-      data
+      }
     }
 
   /** `GET /api/v1/parse_query?query=…` — the AST as JSON (the endpoint
@@ -1150,14 +1143,12 @@ class Server(spark: SparkSession, tablePath: String,
         val perAlert = g.alerts.map { ar =>
           val states = graft.promql.Rules.alertStatesAt(
             store, ar, atSec, g.intervalSec, lookback)
-          val rows = states.limit(readMaxSeries + 1).collect()
-          if (rows.length > readMaxSeries)
-            throw new ResponseEdge.SeriesLimitExceeded(readMaxSeries)
-          val parsed = rows.toSeq.map { r =>
-            (r.getAs[scala.collection.Seq[String]]("tags").toSeq,
-              r.getAs[String]("state"), r.getAs[Double]("value"),
-              r.getAs[Long]("activeAt"))
-          }.sortBy(_._1.mkString(","))
+          val parsed = ResponseEdge.collectBounded(states, readMaxSeries)
+            .toSeq.map { r =>
+              (r.getAs[scala.collection.Seq[String]]("tags").toSeq,
+                r.getAs[String]("state"), r.getAs[Double]("value"),
+                r.getAs[Long]("activeAt"))
+            }.sortBy(_._1.mkString(","))
           val alertJsons = parsed.map { case (tags, st, v, act) =>
             val labels = tags.map { kv =>
               val i = kv.indexOf('=')
@@ -1230,17 +1221,14 @@ class Server(spark: SparkSession, tablePath: String,
           "federate requires at least one match[]")
       val timeSec = p.time("time").getOrElse(System.currentTimeMillis() / 1000)
       val lookback = p.lookback
-      val rows = timeWindow(storedTable(), timeSec - lookback, timeSec,
-          loOpen = true)
+      val rows = ResponseEdge.collectBounded(timeWindow(storedTable(),
+          timeSec - lookback, timeSec, loOpen = true)
         .filter(matches.map(graft.promql.Eval.seriesPredicate).reduce(_ || _))
         .groupBy(col("name"), col("tags"))
         .agg(max(struct(col("ts"), col("val"))).as("last"))
         .select(col("name"), col("tags"),
-          unix_millis(col("last.ts")).as("t_ms"), col("last.val").as("v"))
-        .limit(readMaxSeries + 1)
-        .collect()
-      if (rows.length > readMaxSeries)
-        throw new ResponseEdge.SeriesLimitExceeded(readMaxSeries)
+          unix_millis(col("last.ts")).as("t_ms"), col("last.val").as("v")),
+        readMaxSeries)
       def escape(v: String): String = v.flatMap {
         case '\\' => "\\\\"
         case '"' => "\\\""
@@ -1462,7 +1450,7 @@ class Server(spark: SparkSession, tablePath: String,
     * main.go:285-374), so concurrent remote-write POSTs and reads must
     * not queue behind each other here either. A bounded pool stands in
     * for goroutines — handlers submit Spark jobs, which are thread-safe;
-    * the plan cache is the one shared mutable and is synchronized.
+    * the plan cache is the one shared mutable and is swapped atomically.
     */
   private val handlerPool = java.util.concurrent.Executors.newFixedThreadPool(
     8,

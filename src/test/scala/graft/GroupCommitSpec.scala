@@ -22,14 +22,14 @@ class GroupCommitSpec extends SparkSpec {
     val release = new CountDownLatch(1)
     val writes = new ConcurrentLinkedQueue[Seq[String]]()
     val settles = new java.util.concurrent.atomic.AtomicInteger(0)
-    val committer = new GroupCommit[String](new Object, { ms =>
+    val committer = new GroupCommit[String](new Object, Seq({ ms =>
       writes.add(ms)
       if (ms.contains(holdOn)) {
         entered.countDown()
         assert(release.await(30, TimeUnit.SECONDS))
       }
       if (fail(ms)) throw new IllegalStateException(s"write of $ms failed")
-    }, alone, () => { settles.incrementAndGet(); () })
+    }), alone, () => { settles.incrementAndGet(); () })
 
     /** Submit on a new thread; the thread's outcome lands in the map. */
     def submitAsync(m: String,
@@ -75,9 +75,9 @@ class GroupCommitSpec extends SparkSpec {
     val threads = new ConcurrentLinkedQueue[Thread]()
     val groups = new ConcurrentLinkedQueue[Seq[Int]]()
     val settles = new java.util.concurrent.atomic.AtomicInteger(0)
-    val committer = new GroupCommit[Int](new Object, { ms =>
+    val committer = new GroupCommit[Int](new Object, Seq({ ms =>
       groups.add(ms); threads.add(Thread.currentThread())
-    }, settle = () => { settles.incrementAndGet(); () })
+    }), settle = () => { settles.incrementAndGet(); () })
     committer.submit(1)
     committer.submit(2)
     assert(groups.asScala.toSeq == Seq(Seq(1), Seq(2)))
@@ -129,10 +129,45 @@ class GroupCommitSpec extends SparkSpec {
   }
 
   test("group commit: a failing settle reaches every member") {
-    val committer = new GroupCommit[Int](new Object, _ => (),
+    val committer = new GroupCommit[Int](new Object, Seq(_ => ()),
       settle = () => throw new IllegalStateException("sweep failed"))
     val e = intercept[IllegalStateException](committer.submit(1))
     assert(e.getMessage == "sweep failed")
+  }
+
+  test("group commit: a group lands table by table, and a member that " +
+       "failed a table reaches no later one") {
+    val writes = new ConcurrentLinkedQueue[(Int, Seq[String])]()
+    val release = new CountDownLatch(1)
+    def table(i: Int): Seq[String] => Unit = { ms =>
+      writes.add(i -> ms)
+      if (ms.contains("a")) assert(release.await(30, TimeUnit.SECONDS))
+      if (i == 0 && ms.contains("bad"))
+        throw new IllegalStateException(s"table 0 of $ms failed")
+    }
+    val committer = new GroupCommit[String](new Object, Seq(table(0), table(1)))
+    val out = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def submitAsync(m: String): Thread = {
+      val t = new Thread(() => out.put(m,
+        try { committer.submit(m); "ok" }
+        catch { case e: IllegalStateException => e.getMessage }))
+      t.start()
+      t
+    }
+    val a = submitAsync("a")
+    while (writes.isEmpty) Thread.sleep(1)
+    val queued = Seq("b", "bad", "c").zipWithIndex.map { case (m, i) =>
+      val t = submitAsync(m)
+      while (committer.queued < i + 1) Thread.sleep(1)
+      t
+    }
+    release.countDown()
+    (a +: queued).foreach(_.join(30000))
+    assert(writes.asScala.toSeq == Seq(0 -> Seq("a"), 1 -> Seq("a"),
+      0 -> Seq("b", "bad", "c"), 0 -> Seq("b"), 0 -> Seq("bad"),
+      0 -> Seq("c"), 1 -> Seq("b", "c")))
+    assert(out.asScala.toMap == Map("a" -> "ok", "b" -> "ok",
+      "bad" -> "table 0 of List(bad) failed", "c" -> "ok"))
   }
 
   /** Per `date=` directory: each parquet file's rows in file order

@@ -1048,6 +1048,15 @@ class ServerSpec extends SparkSpec {
         "&start=100&end=200&step=100")._1 == 200)
       assert(getAny(s"$base/api/v1/query?query=$narrow&time=100")._1 == 200)
     } finally server.stop()
+    // a budget of 0 is unlimited on every collecting endpoint, as on /read
+    val unlimited = new Server(spark, table, readMaxSeries = 0).start()
+    val base0 = s"http://localhost:${unlimited.boundPort}"
+    try {
+      val wide = java.net.URLEncoder.encode("m", "UTF-8")
+      val (qc, qb) = getAny(s"$base0/api/v1/query?query=$wide&time=100")
+      assert(qc == 200 && (1 to 4).forall(i => qb.contains(s""""job":"j$i"""")), qb)
+      assert(getAny(s"$base0/api/v1/series?start=0&end=200&match[]=$wide")._1 == 200)
+    } finally unlimited.stop()
   }
 
   test("serve: exemplars ingest from v1 field 3 and serve back through " +
@@ -1348,6 +1357,56 @@ class ServerSpec extends SparkSpec {
       // exemplar side table: swept on the same horizon
       assert(dates(table + "_exemplars").size == 1)
     } finally server.stop()
+
+    // the stale-marker and native-histogram tables too, and every cached
+    // relation follows the sweep: a server that resolved its relations
+    // over an old date drops them in the settle of the commit whose
+    // sweep removes that date, so no read re-plans over a vanished file
+    val table2 = Files.createTempDirectory("graft_srvrt2").toString + "/metrics"
+    val recent = (System.currentTimeMillis() / 86400000L) * 86400000L + 3600000L
+    val old = recent - 100L * 86400000L
+    val writer = new Server(spark, table2).start()
+    try Seq(old -> 1.0, recent -> 2.0).foreach { case (t, v) =>
+      assert(postRaw(s"http://localhost:${writer.boundPort}",
+        sideRequest("j", v, t, t), v2 = true)._1 == 200)
+    } finally writer.stop()
+    val swept = new Server(spark, table2, retentionSec = 10L * 86400L).start()
+    val base2 = s"http://localhost:${swept.boundPort}"
+    def query(t: Long): String =
+      getAny(s"$base2/api/v1/query?query=side_m&time=${t / 1000 + 30}")._2
+    /** The FLOAT_HISTOGRAM points of a chunked /read of side_h. */
+    def histPoints(): Seq[Long] = {
+      import graft.codec.{ChunkedRead, FloatHistChunk}
+      val rr = PReadRequest(Seq(PQuery(old - 3600000L, recent + 3600000L,
+        Seq(PLabelMatcher(MatchType.EQ, "__name__", "side_h")))))
+      val (code, body) = post(s"$base2/read?response_type=streamed_xor_chunks",
+        Prompb.snappyCompress(Prompb.encodeReadRequest(rr)))
+      assert(code == 200)
+      for {
+        f <- ChunkedRead.readFrames(body)
+        ser <- ChunkedRead.decodeResponse(f)._1
+        ch <- ser.chunks if ch.typ == ChunkedRead.EncodingFloatHistogram
+        p <- FloatHistChunk.decode(ch.data)._1
+      } yield p.tsMs
+    }
+    def retries(): Long =
+      metricValue(get(s"$base2/metrics")._2, "graft_read_retries_total")
+    try {
+      assert(query(old).contains(""""sender":"j"""") &&
+        query(recent).contains(""""sender":"j""""))
+      assert(histPoints() == Seq(old, recent))
+      // a commit through this server sweeps every table's old date
+      assert(postWrite(base2, Seq(PTimeSeries(
+        Seq(PLabel("__name__", "side_m"), PLabel("sender", "k")),
+        Seq(PSample(3.0, recent)))), v2 = false)._1 == 200)
+      Seq("", "_exemplars", "_hist", "_stale").foreach(sfx =>
+        assert(filesPerDate(table2 + sfx).keySet ==
+          Set(s"date=${java.time.LocalDate.ofEpochDay(recent / 86400000L)}"), sfx))
+      assert(!query(old).contains(""""sender":"j""""))
+      assert(query(recent).contains(""""sender":"j""""))
+      assert(histPoints() == Seq(recent))
+      assert(retries() == 0)
+    } finally swept.stop()
   }
 
   test("serve: /-/reload swaps the live rule set from --rules.file; " +
@@ -1488,18 +1547,20 @@ class ServerSpec extends SparkSpec {
   /** POST `ts` to /write as RW2 when `v2`, else RW1: the status and,
     * for RW2, the Samples,Histograms,Exemplars written headers. */
   private def postWrite(base: String, ts: Seq[PTimeSeries], v2: Boolean)
+  : (Int, Option[String]) =
+    postRaw(base, if (!v2) Prompb.encodeWriteRequest(PWriteRequest(ts))
+      else graft.codec.Prompb2.encodeRequest(rw2(ts)), v2)
+
+  /** POST an encoded WriteRequest `body` (RW2 when `v2`), as
+    * [[postWrite]] does. */
+  private def postRaw(base: String, body: Array[Byte], v2: Boolean)
   : (Int, Option[String]) = {
     val conn = java.net.URI.create(s"$base/write").toURL
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("POST")
     conn.setDoOutput(true)
-    val body =
-      if (!v2) Prompb.encodeWriteRequest(PWriteRequest(ts))
-      else {
-        conn.setRequestProperty("Content-Type",
-          "application/x-protobuf;proto=io.prometheus.write.v2.Request")
-        graft.codec.Prompb2.encodeRequest(rw2(ts))
-      }
+    if (v2) conn.setRequestProperty("Content-Type",
+      "application/x-protobuf;proto=io.prometheus.write.v2.Request")
     conn.getOutputStream.write(Prompb.snappyCompress(body))
     val code = conn.getResponseCode
     val written = Seq("Samples", "Histograms", "Exemplars").map(k =>
@@ -1525,6 +1586,173 @@ class ServerSpec extends SparkSpec {
     metrics.linesIterator
       .collectFirst { case l if l.startsWith(k + " ") => l.drop(k.length + 1).toLong }
       .getOrElse(fail(s"no $k in /metrics"))
+
+  private val staleNaN = java.lang.Double.longBitsToDouble(0x7ff0000000000002L)
+
+  /** An RW2 request with a row for every table the server writes:
+    * `side_m{sender=s}` = `v` at `t` and a stale marker at t + 60 s, an
+    * exemplar on it at `exTs`, and one native histogram of
+    * `side_h{sender=s}` at `t` with count 3 and sum `v`. */
+  private def sideRequest(s: String, v: Double, t: Long, exTs: Long): Array[Byte] = {
+    import graft.codec.{NativeHist, Prompb2}
+    val syms = Seq("", "__name__", "side_m", "sender", s, "trace_id", s"tr$s",
+      "side_h")
+    Prompb2.encodeRequest(Prompb2.P2Request(syms, Seq(
+      Prompb2.P2TimeSeries(Seq(1, 2, 3, 4),
+        Seq(PSample(v, t), PSample(staleNaN, t + 60000L)),
+        exemplars = Seq(Prompb2.P2Exemplar(Seq(5, 6), v, exTs))),
+      Prompb2.P2TimeSeries(Seq(1, 7, 3, 4), Nil,
+        histograms = Seq(NativeHist.PHistogram(3L, v, 0, 0.0, 0L,
+          Seq(NativeHist.BucketSpan(1, 2)), Seq(1L, 1L), Nil, Nil, t))))))
+  }
+
+  /** The side-table rows [[sideRequest]]`(s, v, t, t)` sends: exemplars,
+    * native histograms and stale markers, as [[sideRows]] reads them. */
+  private def sideRowsOf(s: String, v: Double, t: Long): Seq[String] = Seq(
+    s"_exemplars side_m __name__=side_m,sender=$s trace_id=tr$s $v ${t / 1000}",
+    s"_hist side_h __name__=side_h,sender=$s 3 $v ${t / 1000}",
+    s"_stale side_m __name__=side_m,sender=$s ${t / 1000 + 60}")
+
+  /** Every row of the three side tables of `table`, sorted. */
+  private def sideRows(table: String): Seq[String] = {
+    def rows(sfx: String, cols: String*): Seq[String] =
+      if (!Files.isDirectory(java.nio.file.Paths.get(table + sfx))) Nil
+      else spark.read.parquet(table + sfx).selectExpr(cols: _*).collect()
+        .map(r => (sfx +: r.toSeq.map {
+          case a: scala.collection.Seq[_] => a.mkString(",")
+          case x => String.valueOf(x)
+        }).mkString(" ")).toSeq
+    (rows("_exemplars", "name", "tags", "ex_tags", "val", "unix_timestamp(ts)") ++
+      rows("_hist", "name", "tags", "h_count", "h_sum", "ts") ++
+      rows("_stale", "name", "tags", "unix_timestamp(ts)")).sorted
+  }
+
+  /** Parquet files per `date=` directory of `path`. */
+  private def filesPerDate(path: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(java.nio.file.Paths.get(path)).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("date=")).map { d =>
+        d.getFileName.toString -> Files.list(d).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet"))
+      }.toMap
+  }
+
+  /** POST each body concurrently while holding the server's commit
+    * lock until all are queued, so one commit drains them together; the
+    * answers in body order. */
+  private def postGrouped(server: Server, bodies: Seq[Array[Byte]])
+  : Seq[(Int, Option[String])] = {
+    val base = s"http://localhost:${server.boundPort}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
+    try {
+      val fs = server.appendLock.synchronized {
+        val fs = bodies.map { b =>
+          pool.submit(new java.util.concurrent.Callable[(Int, Option[String])] {
+            def call(): (Int, Option[String]) = postRaw(base, b, v2 = true)
+          })
+        }
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (server.queuedWrites < bodies.size) {
+          assert(System.nanoTime() < deadline,
+            s"the ${bodies.size} POSTs never queued")
+          Thread.sleep(5)
+        }
+        fs
+      }
+      fs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+  }
+
+  test("serve: four POSTs queued behind one commit land their exemplars, " +
+       "native histograms and stale markers with one file per side table " +
+       "per date") {
+    val table = Files.createTempDirectory("graft_srvside").toString + "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val t0 = 1700000000000L // 2023-11-14T22:13:20Z
+    val senders = (0 until 4).map(i => (s"s$i", i + 1.0))
+    try {
+      val answers = postGrouped(server,
+        senders.map { case (s, v) => sideRequest(s, v, t0, t0) })
+      assert(answers == Seq.fill(4)((200, Some("2,1,1"))))
+      // each side table holds exactly the multiset sent, in one write
+      assert(sideRows(table) ==
+        senders.flatMap { case (s, v) => sideRowsOf(s, v, t0) }.sorted)
+      Seq("_exemplars", "_hist", "_stale").foreach(sfx =>
+        assert(filesPerDate(table + sfx) == Map("date=2023-11-14" -> 1), sfx))
+      // the samples, each histogram's classic flatten beside them
+      val main = storedRows(table)
+      assert(main.size == 4 * 6)
+      assert(main.filter(_._1.startsWith("__name__=side_m,")) ==
+        senders.map { case (s, v) => (s"__name__=side_m,sender=$s", v, t0 / 1000) })
+      val (_, metrics) = get(s"$base/metrics")
+      assert(metricValue(metrics, "graft_parquet_commits_total") == 1)
+    } finally server.stop()
+  }
+
+  test("serve: a POST whose exemplar fails its side-table write answers " +
+       "400 alone and reaches no later table; the POST grouped with it " +
+       "lands every row once") {
+    val table = Files.createTempDirectory("graft_srvsidebad").toString + "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val t0 = 1700000000000L
+    try {
+      // ms past what a microsecond timestamp holds: timestamp_seconds
+      // overflows inside the exemplar write job
+      val answers = postGrouped(server, Seq(sideRequest("good", 1.0, t0, t0),
+        sideRequest("bad", 2.0, t0, Long.MaxValue / 100)))
+      assert(answers.map(_._1) == Seq(200, 400))
+      assert(answers.head._2 == Some("2,1,1"))
+      assert(sideRows(table) == sideRowsOf("good", 1.0, t0).sorted)
+      val main = storedRows(table)
+      assert(main.size == 6 && main.forall(_._1.endsWith("sender=good")))
+      assert(main.contains(("__name__=side_m,sender=good", 1.0, t0 / 1000)))
+      val (_, metrics) = get(s"$base/metrics")
+      assert(metricValue(metrics, "graft_parquet_commits_total") == 1)
+    } finally server.stop()
+  }
+
+  test("serve: the marker table resolves once per generation — a repeated " +
+       "PromQL query runs no schema-inference job until the next commit") {
+    val table = Files.createTempDirectory("graft_srvgen").toString + "/metrics"
+    val server = new Server(spark, table).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val t0 = 1700000000000L
+    val sc = spark.sparkContext
+    /** The request's answer and the call sites of the jobs it ran. */
+    def counted(url: String): ((Int, String), Seq[String]) = {
+      val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          sites.add(e.stageInfos.map(_.name).mkString("|"))
+      }
+      org.apache.spark.graft.BenchInternals.flushListenerBus(sc)
+      sc.addSparkListener(l)
+      try {
+        val a = getAny(url)
+        org.apache.spark.graft.BenchInternals.flushListenerBus(sc)
+        (a, sites.toArray(Array.empty[String]).toSeq)
+      } finally sc.removeSparkListener(l)
+    }
+    def schemaJobs(sites: Seq[String]) = sites.count(_.startsWith("parquet at"))
+    try {
+      assert(postRaw(base, sideRequest("a", 1.0, t0, t0), v2 = true)._1 == 200)
+      val q = s"$base/api/v1/query?query=side_m&time=${t0 / 1000 + 30}"
+      val (first, firstJobs) = counted(q)
+      val (second, secondJobs) = counted(q)
+      assert(first._1 == 200 && second == first, first)
+      // the first resolves the main table and the marker table, the
+      // second neither
+      assert(schemaJobs(firstJobs) == 2, firstJobs)
+      assert(schemaJobs(secondJobs) == 0, secondJobs)
+      assert(secondJobs.size == firstJobs.size - 2)
+      // a commit starts the next generation: both resolve again
+      assert(postRaw(base, sideRequest("b", 2.0, t0, t0), v2 = true)._1 == 200)
+      assert(schemaJobs(counted(q)._2) == 2)
+    } finally server.stop()
+  }
 
   test("serve: commit files merge by tier after each commit, and a read " +
        "whose cached relation lost its files to a merge re-plans and " +
@@ -2112,5 +2340,58 @@ class ServerSpec extends SparkSpec {
       assert(sha(plain) ==
         "b0d8d54bd53256d479f85d40d2495c5f2442317993633628061be62a51b9fe4c")
     } finally server.stop()
+  }
+
+  test("serve: chunk frames apply the series budget in the plan — a " +
+       "source=chunks read and the _hist frames of a chunked /read over " +
+       "budget answer 413 after collecting budget + 1 series") {
+    import graft.engine.ChunkStore
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_srvchbudget").toString
+    val d0 = 1704067200L // 2024-01-01T00:00Z
+    ChunkStore.toChunked(Seq(("cpu", Seq("job=a"), d0 + 60, 1.5),
+        ("cpu", Seq("job=b"), d0 + 60, 2.5)).toDF("name", "tags", "t", "val")
+      .select(to_date(timestamp_seconds(col("t"))).as("date"), col("name"),
+        col("tags"), timestamp_seconds(col("t")).as("ts"), col("val")))
+      .write.partitionBy("date").parquet(s"$dir/chunks")
+    val server = new Server(spark, s"$dir/metrics", readMaxSeries = 1,
+      chunkTierPath = Some(s"$dir/chunks")).start()
+    val base = s"http://localhost:${server.boundPort}"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = plans.add(qe.optimizedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    /** POST a read of `name` with `query`: the status and the plans the
+      * request ran. */
+    def read(query: String, name: String): (Int, Seq[String]) = {
+      plans.clear()
+      val rr = PReadRequest(Seq(PQuery(d0 * 1000L, (d0 + 86399L) * 1000L,
+        Seq(PLabelMatcher(MatchType.EQ, "__name__", name)))))
+      val (code, body) = post(s"$base/read?$query",
+        Prompb.snappyCompress(Prompb.encodeReadRequest(rr)))
+      if (code != 413) fail(s"$code ${new String(body, "UTF-8")}")
+      org.apache.spark.graft.BenchInternals.flushListenerBus(spark.sparkContext)
+      (code, plans.toArray(Array.empty[String]).toSeq)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(postRaw(base, sideRequest("a", 1.0, d0 * 1000L + 60000L,
+        d0 * 1000L), v2 = true)._1 == 200)
+      assert(postRaw(base, sideRequest("b", 2.0, d0 * 1000L + 60000L,
+        d0 * 1000L), v2 = true)._1 == 200)
+      val (_, chunkPlans) = read("response_type=streamed_xor_chunks&source=chunks", "cpu")
+      assert(chunkPlans.exists(p => p.contains("GlobalLimit 2") &&
+        p.contains("min_ts")), chunkPlans)
+      val (_, histPlans) = read("response_type=streamed_xor_chunks", "side_h")
+      assert(histPlans.exists(p => p.contains("GlobalLimit 2") &&
+        p.contains("h_buckets")), histPlans)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      server.stop()
+    }
   }
 }
